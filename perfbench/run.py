@@ -262,8 +262,13 @@ def end_to_end(res, inputs):
             "pairs_per_s": metric(pairs / p50, "pairs/s"),
             "cached_mb": metric(statistics.median(j["cached_bytes"] for j in ok) / 2**20, "MB"),
         }
+    # a checkpointed job's wall is shown as cold + resumed
+    parts = [f"{j['wall_s']:.2f}" + (f"+{j['resume_s']:.2f}" if "resume_s" in j else "")
+             for j in ok]
     print(f"{len(jobs)} jobs in {res['measured_s']:.1f} s; job walls (s): "
-          + ", ".join(f"{w:.2f}" for w in walls), file=sys.stderr)
+          + ", ".join(parts)
+          + f"; set-up {res['setup_s']:.2f} s (session {res['session_s']:.2f} s,"
+          f" warm job {res['warm_s']:.2f} s)", file=sys.stderr)
     return len(jobs), len(failures), metrics
 
 
@@ -364,7 +369,9 @@ def main():
             print(f"perfbench: JVM failed: {err}", file=sys.stderr)
             print(json.dumps({"correct": False, "attempted": 1, "failed": 1, "metrics": {}}))
             sys.exit(1)
-        bad_warm = check_summary(res["warm_summary"], warm[1], f1_band=False)
+        bad_warm = check_summary(res["warm"]["summary"], warm[1], f1_band=False)
+        if "resume_summary" in res["warm"] and res["warm"]["resume_summary"] != res["warm"]["summary"]:
+            bad_warm.append("resumed summary differs from the cold one")
         if args.trace:
             attempted, failed, metrics = per_layer(res, inputs, cores)
         else:
