@@ -2,19 +2,21 @@ package graft
 
 import scala.collection.mutable.LinkedHashMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.eval.Metrics
-import graft.pipe.{Blocking, Cluster, Normalize, Threshold}
+import graft.pipe.{Blocking, Cluster, Threshold}
 import graft.sim.Scorer
 
 /**
- * Optimization-round measurement harness (guide §1): times the SAME six
- * flagship stages as [[Bench]] — identical stage construction, identical
- * actions, identical session config — WITHOUT the scaling probes, so an
- * optimization iteration costs ~1 min instead of ~18. Never used by the
- * driver; [[Bench]] stays the frozen contract surface.
+ * Bench-shaped stage timer and plan dump at `local[SPARK_GRAFT_CPUS]`
+ * (default: every core of the host): times the six flagship stages
+ * [[Bench]] times, built from [[Pipeline]]'s stage definitions on the
+ * shared [[Sessions.local]] session, WITHOUT the scaling probes, so an
+ * optimization iteration costs ~1 min instead of ~18. [[Bench]] keeps
+ * its own frozen copy of these stages and of the session; it is the
+ * contract surface, this is not.
  *
  * Usage: `sbt "runMain graft.BenchExtra [repeats] [plansDir]"`.
  *  - repeats: stage sweep runs this many times in ONE JVM. Repeat 1 is
@@ -26,21 +28,6 @@ import graft.sim.Scorer
  */
 object BenchExtra {
 
-  /** Same session shape as Bench.session (kept in sync by BenchExtraSpec). */
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus * 2).toString)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", s"${512 * 1024}")
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -50,8 +37,7 @@ object BenchExtra {
     val repeats = if (args.length >= 1) args(0).toInt else 1
     val plansDir = if (args.length >= 2) Some(args(1)) else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = session(cpus)
+    val spark = Sessions.local()
 
     for (rep <- 1 to repeats) {
       val times = LinkedHashMap[String, Double]()
@@ -63,9 +49,8 @@ object BenchExtra {
         r
       }
 
-      // ----- the six timed stages, bit-identical to Bench.main -----
-      val keyed = Blocking.withBlockKey(Normalize(gen.Synth.records(spark, sfDir)))
-        .persist()
+      // ----- the six timed stages, as Bench.main times them -----
+      val keyed = Pipeline.keyRecords(gen.Synth.records(spark, sfDir)).persist()
       val nRecords = time("q_records_keyed")(keyed.count())
 
       val cand = Blocking.candidates(keyed)
@@ -74,21 +59,16 @@ object BenchExtra {
       val scored = Scorer.scoreDF(cand, Scorer.broadcastProjection(spark)).persist()
       time("q_score_pairs")(scored.count())
 
-      val dist = lit(1.0) - col("score")
-      val train = scored.filter(col("split_a") === "train" && col("split_b") === "train")
-      val theta = time("q_threshold_sweep")(
-        Threshold.bestThetaRobust(train, dist, col("label")))
+      val theta = time("q_threshold_sweep")(Pipeline.trainTheta(scored))
 
       val nClusters = time("q_connected_components") {
-        val edges = scored.filter(dist <= theta)
-          .select(col("idA").as("src"), col("idB").as("dst"))
-        Cluster.assign(keyed.select("id"), edges)
+        Cluster.assign(keyed.select("id"), Pipeline.matchEdges(scored, theta))
           .select(countDistinct("cluster")).head().getLong(0)
       }
 
-      val test = scored.filter(col("split_a") === "test" && col("split_b") === "test")
+      val test = EntryStages.testPairs(scored)
       val evalRow = time("q_eval_metrics") {
-        Metrics.fullEval(test, dist, col("label"), theta).head()
+        Metrics.fullEval(test, Pipeline.dist, col("label"), theta).head()
       }
       val f1 = evalRow.getAs[Double]("f1")
       val mrr = evalRow.getAs[Double]("mrr")
@@ -111,9 +91,10 @@ object BenchExtra {
         dump("q_blocking_join", cand)
         dump("q_score_pairs",
           Scorer.scoreDF(cand, Scorer.broadcastProjection(spark)))
-        dump("q_threshold_sweep",
-          Threshold.sweep(train, dist, col("label")))
-        dump("q_eval_metrics", Metrics.fullEval(test, dist, col("label"), theta))
+        dump("q_threshold_sweep", Threshold.sweep(
+          EntryStages.trainPairs(scored), Pipeline.dist, col("label")))
+        dump("q_eval_metrics",
+          Metrics.fullEval(test, Pipeline.dist, col("label"), theta))
       }
 
       keyed.unpersist(true)

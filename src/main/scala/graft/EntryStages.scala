@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.eval.Metrics
 import graft.functions.GraftFunctions
 import graft.gen.Synth
-import graft.pipe.{Blocking, Normalize, Threshold}
+import graft.pipe.{Blocking, Threshold}
 
 /**
  * Shared stage builders for [[SparkEntry.queries]]: the
@@ -96,7 +96,7 @@ object EntryStages {
 
   def keyed(spark: SparkSession, sfDir: String): DataFrame =
     cached(spark, sfDir, "keyed") {
-      Blocking.withBlockKey(Normalize(records(spark, sfDir)))
+      Pipeline.keyRecords(records(spark, sfDir))
     }
 
   // cached like keyed/scoredp: ~15 verify-surface queries re-derived

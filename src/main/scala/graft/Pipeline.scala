@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ckpt.Checkpoint
@@ -20,6 +20,12 @@ import graft.sim.Scorer
  *   test split.
  *
  * Stages checkpoint to Parquet with lineage when `ckptRoot` is given.
+ *
+ * The stage decisions of this chain — the keyed recipe, the pair
+ * distance, the train-split theta and the edge projection — are
+ * defined here once; [[BenchExtra]], `tools.CcProbe`, [[EntryStages]]
+ * and the JIT warm in [[Synth]] call them. [[Bench]] keeps a frozen
+ * copy.
  */
 object Pipeline {
 
@@ -27,6 +33,22 @@ object Pipeline {
       records: DataFrame, keyed: DataFrame, candidates: DataFrame,
       scored: DataFrame, theta: Double, edges: DataFrame,
       clusters: DataFrame, testMetrics: DataFrame, summary: DataFrame)
+
+  /** Records -> normalized content + block key. */
+  def keyRecords(records: DataFrame): DataFrame =
+    Blocking.withBlockKey(Normalize(records))
+
+  /** Pair distance `1 - score`: the threshold and the edges cut on it. */
+  val dist: Column = lit(1.0) - col("score")
+
+  /** The robust threshold swept over the train-split pairs. */
+  def trainTheta(scored: DataFrame): Double =
+    Threshold.bestThetaRobust(EntryStages.trainPairs(scored), dist, col("label"))
+
+  /** Match edges `(src, dst)`: the pairs at distance <= theta. */
+  def matchEdges(scored: DataFrame, theta: Double): DataFrame =
+    scored.filter(dist <= theta)
+      .select(col("idA").as("src"), col("idB").as("dst"))
 
   def run(spark: SparkSession, sfDir: String,
           ckptRoot: Option[String] = None, salts: Int = 64): Outputs = {
@@ -41,7 +63,7 @@ object Pipeline {
 
     val records = Synth.records(spark, sfDir)
     val keyed = ck("keyed", fpBase) {
-      Blocking.withBlockKey(Normalize(records))
+      keyRecords(records)
     }
     val candidates = ck("candidates", fpBase) {
       Blocking.candidates(keyed, salts)
@@ -51,18 +73,15 @@ object Pipeline {
       Scorer.scoreDF(candidates, proj)
     }.persist()
 
-    val dist = lit(1.0) - col("score")
-    val train = scored.filter(col("split_a") === "train" && col("split_b") === "train")
-    val theta = Threshold.bestThetaRobust(train, dist, col("label"))
+    val theta = trainTheta(scored)
 
-    val edges = scored.filter(dist <= theta)
-      .select(col("idA").as("src"), col("idB").as("dst"))
+    val edges = matchEdges(scored, theta)
     val clusters = ck("clusters", Checkpoint.fingerprint(fpBase, theta.toString)) {
       Cluster.assign(keyed.select("id"), edges)
     }
 
-    val test = scored.filter(col("split_a") === "test" && col("split_b") === "test")
-    val testMetrics = Metrics.pairMetrics(test, (dist <= theta).cast("int"), col("label"))
+    val testMetrics = Metrics.pairMetrics(EntryStages.testPairs(scored),
+      (dist <= theta).cast("int"), col("label"))
 
     val m = testMetrics.head()
     val nClusters = clusters.select(countDistinct("cluster")).head().getLong(0)

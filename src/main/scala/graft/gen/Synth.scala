@@ -1,5 +1,7 @@
 package graft.gen
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -126,7 +128,8 @@ object Synth {
    * whole-stage classes and their C2 compilations are shared via the
    * JVM-wide codegen cache), discards everything through the noop sink
    * and unpersists — nothing is kept, every timed stage still computes
-   * from parquet.
+   * from parquet. A non-fatal failure only skips the warm; fatal errors
+   * and interrupts propagate to the caller.
    */
   private val pipelineWarmed = new java.util.concurrent.atomic.AtomicBoolean(false)
 
@@ -135,14 +138,13 @@ object Synth {
     try {
       spark.sparkContext.setJobDescription(
         "warm: untimed keyed+blocking pass (JIT/codegen only)")
-      val keyed = graft.pipe.Blocking.withBlockKey(
-        graft.pipe.Normalize(df)).persist()
+      val keyed = graft.Pipeline.keyRecords(df).persist()
       keyed.count()
       graft.pipe.Blocking.candidates(keyed)
         .write.format("noop").mode("overwrite").save()
       keyed.unpersist(true)
       ()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     finally spark.sparkContext.setJobDescription(null)
   }
 

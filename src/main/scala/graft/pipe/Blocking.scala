@@ -85,13 +85,6 @@ object Blocking {
   }
 
   /**
-   * Convenience: records -> normalized -> keyed -> candidate pairs with
-   * per-pair payload columns used by the scorer.
-   */
-  def candidatePairs(records: DataFrame, salts: Int = 64): DataFrame =
-    candidates(withBlockKey(Normalize(records)), salts)
-
-  /**
    * Full-index (cartesian) candidate generation — the reference's CORA
    * mode, which pairs EVERY A record with every B record
    * (/root/reference/data/cora.py:116-118). First-class but GUARDED:

@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.pipe.{Blocking, Cluster, Normalize, Threshold}
+import graft.{Pipeline, Sessions}
+import graft.pipe.{Blocking, Cluster}
 import graft.sim.Scorer
 
 /** Scratch probe for the connected-components stage: decomposes
@@ -12,31 +12,21 @@ import graft.sim.Scorer
 object CcProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus * 2).toString)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", s"${512 * 1024}")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     def t[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime()
       val r = f
       println(f"CCPROBE $name ${(System.nanoTime() - t0) / 1e9}%.3f s")
       r
     }
-    val keyed = Blocking.withBlockKey(Normalize(graft.gen.Synth.records(spark, sfDir))).persist()
+    val keyed = Pipeline.keyRecords(graft.gen.Synth.records(spark, sfDir)).persist()
     keyed.count()
     val cand = Blocking.candidates(keyed)
     val scored = Scorer.scoreDF(cand, Scorer.broadcastProjection(spark)).persist()
     scored.count()
-    val dist = lit(1.0) - col("score")
-    val train = scored.filter(col("split_a") === "train" && col("split_b") === "train")
-    val theta = Threshold.bestThetaRobust(train, dist, col("label"))
+    val theta = Pipeline.trainTheta(scored)
     for (rep <- 1 to 3) {
-      val edges = scored.filter(dist <= theta)
-        .select(col("idA").as("src"), col("idB").as("dst"))
+      val edges = Pipeline.matchEdges(scored, theta)
       val n = t(s"rep$rep edges_count")(edges.count())
       println(s"CCPROBE rep$rep n_edges $n")
       val cc = t(s"rep$rep cc_loop")(

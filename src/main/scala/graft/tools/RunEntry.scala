@@ -1,17 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: drive SparkEntry.entry exactly as the driver's smoke check does. */
 object RunEntry {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local()
     val df = graft.SparkEntry.entry(spark)
     df.show(false)
     println(s"rows=${df.count()}")

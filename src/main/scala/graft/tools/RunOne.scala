@@ -1,19 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run ONE registered query and dump it like Verify does. */
 object RunOne {
   def main(args: Array[String]): Unit = {
     val (name, sf, out) = (args(0), args(1), args(2))
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local()
     val t0 = System.nanoTime()
     graft.SparkEntry.queries(name)(spark, sf)
       .write.mode("overwrite").parquet(s"$out/$name")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch probe: times TransE.train epochs in isolation (the per-epoch
@@ -9,14 +8,7 @@ import org.apache.spark.sql.functions._
 object TrainProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus * 2).toString)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", s"${512 * 1024}")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local()
     val ents = graft.graph.GraphBuild.erEntities(spark, sfDir)
     val nEnt = ents.count().toInt
     val nRel = graft.graph.GraphBuild.Relations.size
