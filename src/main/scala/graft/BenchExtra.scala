@@ -5,8 +5,7 @@ import scala.collection.mutable.LinkedHashMap
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.eval.Metrics
-import graft.pipe.{Blocking, Cluster, Threshold}
+import graft.pipe.{Blocking, Cluster, Splits, Threshold}
 import graft.sim.Scorer
 
 /**
@@ -59,16 +58,17 @@ object BenchExtra {
       val scored = Scorer.scoreDF(cand, Scorer.broadcastProjection(spark)).persist()
       time("q_score_pairs")(scored.count())
 
-      val theta = time("q_threshold_sweep")(Pipeline.trainTheta(scored))
+      val theta = time("q_threshold_sweep") {
+        Splits.theta(scored, Pipeline.dist, col("label"))
+      }
 
       val nClusters = time("q_connected_components") {
-        Cluster.assign(keyed.select("id"), Pipeline.matchEdges(scored, theta))
+        Cluster.assign(keyed.select("id"), Pipeline.edgesAt(scored, theta))
           .select(countDistinct("cluster")).head().getLong(0)
       }
 
-      val test = EntryStages.testPairs(scored)
       val evalRow = time("q_eval_metrics") {
-        Metrics.fullEval(test, Pipeline.dist, col("label"), theta).head()
+        Splits.testEval(scored, Pipeline.dist, col("label"), theta).head()
       }
       val f1 = evalRow.getAs[Double]("f1")
       val mrr = evalRow.getAs[Double]("mrr")
@@ -92,9 +92,9 @@ object BenchExtra {
         dump("q_score_pairs",
           Scorer.scoreDF(cand, Scorer.broadcastProjection(spark)))
         dump("q_threshold_sweep", Threshold.sweep(
-          EntryStages.trainPairs(scored), Pipeline.dist, col("label")))
+          Splits.train(scored), Pipeline.dist, col("label")))
         dump("q_eval_metrics",
-          Metrics.fullEval(test, Pipeline.dist, col("label"), theta))
+          Splits.testEval(scored, Pipeline.dist, col("label"), theta))
       }
 
       keyed.unpersist(true)

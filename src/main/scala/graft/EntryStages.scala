@@ -4,10 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.eval.Metrics
 import graft.functions.GraftFunctions
 import graft.gen.Synth
-import graft.pipe.{Blocking, Threshold}
+import graft.pipe.{Blocking, Splits, Threshold}
 
 /**
  * Shared stage builders for [[SparkEntry.queries]]: the
@@ -133,29 +132,25 @@ object EntryStages {
         lit(1.0) - (lit(0.4) * col("jw") + lit(0.6) * col("lev")))
     }
 
-  def trainPairs(df: DataFrame): DataFrame =
-    df.filter(col("split_a") === "train" && col("split_b") === "train")
-
-  def testPairs(df: DataFrame): DataFrame =
-    df.filter(col("split_a") === "test" && col("split_b") === "test")
+  /** [[SparkEntry]]'s name for [[Splits.test]]. */
+  def testPairs(df: DataFrame): DataFrame = Splits.test(df)
 
   def sweep(spark: SparkSession, sfDir: String): DataFrame =
-    Threshold.sweep(trainPairs(scoredp(spark, sfDir)), col("dist"), col("label"))
+    Threshold.sweep(Splits.train(scoredp(spark, sfDir)), col("dist"), col("label"))
 
   def bestRow(spark: SparkSession, sfDir: String): DataFrame =
-    Threshold.best(trainPairs(scoredp(spark, sfDir)), col("dist"), col("label"))
+    Threshold.best(Splits.train(scoredp(spark, sfDir)), col("dist"), col("label"))
 
   def theta(spark: SparkSession, sfDir: String): Double =
     thetaCache.getOrElseUpdate(
       (withEviction(spark), sfDir, "argmax"),
-      Threshold.bestTheta(trainPairs(scoredp(spark, sfDir)),
+      Threshold.bestTheta(Splits.train(scoredp(spark, sfDir)),
         col("dist"), col("label")))
 
   def thetaRobust(spark: SparkSession, sfDir: String): Double =
     thetaCache.getOrElseUpdate(
       (withEviction(spark), sfDir, "robust"),
-      Threshold.bestThetaRobust(trainPairs(scoredp(spark, sfDir)),
-        col("dist"), col("label")))
+      Splits.theta(scoredp(spark, sfDir), col("dist"), col("label")))
 
   def matchEdges(spark: SparkSession, sfDir: String): DataFrame = {
     val t = theta(spark, sfDir)
@@ -163,14 +158,12 @@ object EntryStages {
       .select(col("idA").as("src"), col("idB").as("dst"), col("dist"))
   }
 
-  def pairMetricsAtTheta(spark: SparkSession, sfDir: String): DataFrame = {
-    val t = theta(spark, sfDir)
-    Metrics.pairMetrics(testPairs(scoredp(spark, sfDir)),
-      (col("dist") <= t).cast("int"), col("label"))
-  }
+  def pairMetricsAtTheta(spark: SparkSession, sfDir: String): DataFrame =
+    Splits.testMetrics(scoredp(spark, sfDir), col("dist"), col("label"),
+      theta(spark, sfDir))
 
   def mutualNn(spark: SparkSession, sfDir: String, beta: Int = 100): DataFrame = {
-    val test = testPairs(scoredp(spark, sfDir))
+    val test = Splits.test(scoredp(spark, sfDir))
     val wa = Window.partitionBy("idA").orderBy(col("dist").asc, col("idB").asc)
     val wb = Window.partitionBy("idB").orderBy(col("dist").asc, col("idA").asc)
     test.withColumn("ra", row_number().over(wa))

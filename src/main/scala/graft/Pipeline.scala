@@ -4,9 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ckpt.Checkpoint
-import graft.eval.Metrics
 import graft.gen.Synth
-import graft.pipe.{Blocking, Cluster, Normalize, Threshold}
+import graft.pipe.{Blocking, Cluster, Normalize, Splits}
 import graft.sim.Scorer
 
 /**
@@ -22,10 +21,10 @@ import graft.sim.Scorer
  * Stages checkpoint to Parquet with lineage when `ckptRoot` is given.
  *
  * The stage decisions of this chain — the keyed recipe, the pair
- * distance, the train-split theta and the edge projection — are
- * defined here once; [[BenchExtra]], `tools.CcProbe`, [[EntryStages]]
- * and the JIT warm in [[Synth]] call them. [[Bench]] keeps a frozen
- * copy.
+ * distance and the edge projection — are defined here once;
+ * [[BenchExtra]], [[EntryStages]] and the JIT warm in [[Synth]] call
+ * them. The train-swept theta and the test metrics come from
+ * [[Splits]]. [[Bench]] keeps a frozen copy.
  */
 object Pipeline {
 
@@ -41,12 +40,8 @@ object Pipeline {
   /** Pair distance `1 - score`: the threshold and the edges cut on it. */
   val dist: Column = lit(1.0) - col("score")
 
-  /** The robust threshold swept over the train-split pairs. */
-  def trainTheta(scored: DataFrame): Double =
-    Threshold.bestThetaRobust(EntryStages.trainPairs(scored), dist, col("label"))
-
   /** Match edges `(src, dst)`: the pairs at distance <= theta. */
-  def matchEdges(scored: DataFrame, theta: Double): DataFrame =
+  def edgesAt(scored: DataFrame, theta: Double): DataFrame =
     scored.filter(dist <= theta)
       .select(col("idA").as("src"), col("idB").as("dst"))
 
@@ -73,15 +68,14 @@ object Pipeline {
       Scorer.scoreDF(candidates, proj)
     }.persist()
 
-    val theta = trainTheta(scored)
+    val theta = Splits.theta(scored, dist, col("label"))
 
-    val edges = matchEdges(scored, theta)
+    val edges = edgesAt(scored, theta)
     val clusters = ck("clusters", Checkpoint.fingerprint(fpBase, theta.toString)) {
       Cluster.assign(keyed.select("id"), edges)
     }
 
-    val testMetrics = Metrics.pairMetrics(EntryStages.testPairs(scored),
-      (dist <= theta).cast("int"), col("label"))
+    val testMetrics = Splits.testMetrics(scored, dist, col("label"), theta)
 
     val m = testMetrics.head()
     val nClusters = clusters.select(countDistinct("cluster")).head().getLong(0)

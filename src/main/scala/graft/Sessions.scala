@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /**
- * The local session every dev main builds ([[BenchExtra]], the probes,
- * `RunOne`, `RunEntry`): [[Bench]]'s session shape plus the
+ * The local session every dev main builds ([[BenchExtra]], `RunOne`,
+ * `RunEntry`): [[Bench]]'s session shape plus the
  * [[GraftExtensions]] SQL surface, so any registered query — `LINK
  * RECORDS FROM` included — runs as it does under [[Verify]]. The
  * frozen [[Bench]] and [[Verify]] build their own.

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.EntryStages
+import graft.pipe.Splits
 
 /**
  * Knowledge-graph encodings of the records table, the engine analogue
@@ -157,9 +158,8 @@ object GraphBuild {
    */
   def vegTrainTriples(spark: SparkSession, sfDir: String): DataFrame =
     vegPairs(spark, sfDir,
-      EntryStages.cand(spark, sfDir)
-        .filter(col("dni_a") === col("dni_b") &&
-          col("split_a") === "train" && col("split_b") === "train")
+      Splits.train(EntryStages.cand(spark, sfDir)
+        .filter(col("dni_a") === col("dni_b")))
         .select("idA", "idB"))
 
   // ------------------------- ERER (dual-KG) -------------------------

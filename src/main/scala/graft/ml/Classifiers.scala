@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.EntryStages
 import graft.eval.Metrics
+import graft.pipe.Splits
 
 /**
  * Fellegi-Sunter-style pairwise match classifiers over binary
@@ -124,7 +125,7 @@ object Classifiers {
     val matchPatterns = (0 until (1 << NFeatures))
       .filter(p => model.posterior(p) >= 0.5)
     val predicted = col("pattern").isin(matchPatterns: _*).cast("int")
-    Metrics.pairMetrics(EntryStages.testPairs(feats), predicted, col("label"))
+    Metrics.pairMetrics(Splits.test(feats), predicted, col("label"))
   }
 
   // ---- Deterministic histogram fits (bit-replayable in SQL) --------
@@ -238,7 +239,7 @@ object Classifiers {
     val feats = withFeatures(EntryStages.scoredp(spark, sfDir))
     val model = kmeansFit(spark, sfDir)
     val matchPatterns = (0 until (1 << NFeatures)).filter(model.isMatch)
-    Metrics.pairMetrics(EntryStages.testPairs(feats),
+    Metrics.pairMetrics(Splits.test(feats),
       col("pattern").isin(matchPatterns: _*).cast("int"), col("label"))
   }
 
@@ -322,7 +323,7 @@ object Classifiers {
   }
 
   private def trainCells(feats: DataFrame): Array[(Int, Int, Long)] =
-    EntryStages.trainPairs(feats)
+    Splits.train(feats)
       .groupBy("pattern", "label").count()
       .collect()
       .map(r => (r.getInt(0), r.getAs[Number](1).intValue, r.getLong(2)))
@@ -338,7 +339,7 @@ object Classifiers {
     val feats = withFeatures(EntryStages.scoredp(spark, sfDir))
     val model = logRegFit(spark, sfDir)
     val matchPatterns = (0 until (1 << NFeatures)).filter(model.isMatch)
-    Metrics.pairMetrics(EntryStages.testPairs(feats),
+    Metrics.pairMetrics(Splits.test(feats),
       col("pattern").isin(matchPatterns: _*).cast("int"), col("label"))
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.eval.Metrics
 import graft.graph.GraphBuild
+import graft.pipe.Splits
 import graft.sim.TransE
 
 /**
@@ -156,8 +157,7 @@ object EmbedLogistic {
     val spark = feats.sparkSession
     import spark.implicits._
     val dim = cfg.dim
-    val data = feats
-      .filter(col("split_a") === "train" && col("split_b") === "train")
+    val data = Splits.train(feats)
       .select(col("label"), col("feat"))
       .as[(Long, Seq[Double])].rdd
       .map { case (l, f) => (l, f.toArray) }
@@ -233,9 +233,7 @@ object EmbedLogistic {
            cfg: Config = Config()): DataFrame = {
     val feats = pairFeatures(spark, sfDir, cfg)
     val fit = fitBalanced(spark, sfDir, cfg)
-    val test = feats.filter(col("split_a") === "test" &&
-      col("split_b") === "test")
-    Metrics.pairMetrics(test,
+    Metrics.pairMetrics(Splits.test(feats),
       (logit(fit) >= 0.0).cast("int"), col("label"))
   }
 

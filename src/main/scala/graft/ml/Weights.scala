@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.EntryStages
 import graft.eval.Metrics
+import graft.pipe.Splits
 import graft.sim.{RLTransE, Scorer}
 
 /**
@@ -110,6 +111,12 @@ object Weights {
       .toDF("feature", "weight_nanos")
   }
 
+  /** A one-row metrics frame collected into a local DataFrame, so later
+    * actions on it can't re-trigger the scoring lineage. */
+  private def materialize(metrics: DataFrame): DataFrame =
+    metrics.sparkSession.createDataFrame(
+      java.util.Arrays.asList(metrics.collect(): _*), metrics.schema)
+
   /** Match-confidence distance of a fit: 1 - sigmoid(logit), in
     * [0, 1] — thresholdable by the standard 50-bucket train-split
     * sweep and rank-equivalent to -logit. */
@@ -132,16 +139,9 @@ object Weights {
       val fit = veerFit(spark, sfDir, VeerReg, VeerIters)
       val feats = veerFeatDf(spark, sfDir)
       val dist = veerDist(fit)
-      val theta = graft.pipe.Threshold.bestThetaTrainSplit(
-        feats, dist, col("label"))
-      val test = feats.filter(col("split_a") === "test" &&
-        col("split_b") === "test")
-      val metrics = Metrics.pairMetrics(test,
-        (dist <= lit(theta)).cast("int"), col("label"))
-      val rows = metrics.collect()
-      val local = spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), metrics.schema)
-      (weightRows(spark, VeerFeatures, fit.w, fit.b), local)
+      val theta = Splits.theta(feats, dist, col("label"))
+      (weightRows(spark, VeerFeatures, fit.w, fit.b),
+        materialize(Splits.testMetrics(feats, dist, col("label"), theta)))
     }
 
   /** VEER: learned weights over the raw (jw, lev, cos) channels. */
@@ -167,19 +167,13 @@ object Weights {
       val model = RLTransE.train(spark, sfDir)
       val fields = RLTransE.fieldScores(spark, sfDir, model, testOnly = false)
         .persist()
-      val train = withVec(fields.filter(col("split_a") === "train" &&
-        col("split_b") === "train"), WerlFeatures)
-      val m = fitLr(train)
-      val test = m.transform(withVec(fields.filter(col("split_a") === "test" &&
-        col("split_b") === "test"), WerlFeatures))
-      val metrics = Metrics.pairMetrics(test,
-        (col("prediction") === 1.0).cast("int"), col("label"))
-      val rows = metrics.collect()
+      val m = fitLr(withVec(Splits.train(fields), WerlFeatures))
+      val test = m.transform(withVec(Splits.test(fields), WerlFeatures))
+      val metrics = materialize(Metrics.pairMetrics(test,
+        (col("prediction") === 1.0).cast("int"), col("label")))
       fields.unpersist()
-      val local = spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), metrics.schema)
       (weightRows(spark, WerlFeatures, m.coefficients.toArray, m.intercept),
-        local)
+        metrics)
     }
 
   def werlWeights(spark: SparkSession, sfDir: String): DataFrame =
@@ -238,16 +232,9 @@ object Weights {
       val feats = werlBatchFeatDf(spark, sfDir)
       val fit = werlBatchFit(spark, sfDir, RLTransE.BatchCfg.epochs)
       val dist = veerDist(fit)
-      val theta = graft.pipe.Threshold.bestThetaTrainSplit(
-        feats, dist, col("label"))
-      val test = feats.filter(col("split_a") === "test" &&
-        col("split_b") === "test")
-      val metrics = Metrics.pairMetrics(test,
-        (dist <= lit(theta)).cast("int"), col("label"))
-      val rows = metrics.collect()
-      val local = spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), metrics.schema)
-      (weightRows(spark, WerlFeatures, fit.w, fit.b), local)
+      val theta = Splits.theta(feats, dist, col("label"))
+      (weightRows(spark, WerlFeatures, fit.w, fit.b),
+        materialize(Splits.testMetrics(feats, dist, col("label"), theta)))
     }
 
   /** grid_werl's epochs axis: half and full batch-fit training
@@ -266,15 +253,10 @@ object Weights {
     val feats = werlBatchFeatDf(spark, sfDir, epochs)
     val fit = werlBatchFit(spark, sfDir, epochs)
     val dist = veerDist(fit)
-    val theta = graft.pipe.Threshold.bestThetaTrainSplit(
-      feats, dist, col("label"))
-    val test = feats.filter(col("split_a") === "test" &&
-      col("split_b") === "test")
-    val pm = Metrics.pairMetrics(test, (dist <= lit(theta)).cast("int"),
-      col("label")).head()
-    val ir = Metrics.irMetrics(test, dist, col("label")).head()
-    Seq((pm.getAs[Double]("f1"), pm.getAs[Double]("precision"),
-      pm.getAs[Double]("recall"), ir.getAs[Double]("mrr")))
+    val theta = Splits.theta(feats, dist, col("label"))
+    val m = Splits.testEval(feats, dist, col("label"), theta).head()
+    Seq((m.getAs[Double]("f1"), m.getAs[Double]("precision"),
+      m.getAs[Double]("recall"), m.getAs[Double]("mrr")))
       .toDF("f1", "precision", "recall", "mrr")
   }
 
@@ -296,15 +278,11 @@ object Weights {
         .fieldScores(spark, sfDir, model, testOnly = false, l1 = l1)
         .persist()
       val dist = WerlFeatures.map(col).reduce(_ + _) / lit(WerlFeatures.length)
-      val theta = graft.pipe.Threshold.bestThetaTrainSplit(
-        fields, dist, col("label"))
-      val test = fields.filter(col("split_a") === "test" &&
-        col("split_b") === "test")
-      val metrics = Metrics.pairMetrics(test,
-        (dist <= lit(theta)).cast("int"), col("label"))
-      val rows = metrics.collect()
+      val theta = Splits.theta(fields, dist, col("label"))
+      val metrics = materialize(
+        Splits.testMetrics(fields, dist, col("label"), theta))
       fields.unpersist()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), metrics.schema)
+      metrics
     }
 
   /** Parameterized VEER eval for the grid harness
@@ -319,16 +297,11 @@ object Weights {
     val fit = veerFit(spark, sfDir, regParam, maxIter)
     val feats = veerFeatDf(spark, sfDir)
     val dist = veerDist(fit)
-    val theta = graft.pipe.Threshold.bestThetaTrainSplit(
-      feats, dist, col("label"))
-    val test = feats.filter(col("split_a") === "test" &&
-      col("split_b") === "test")
-    val pm = Metrics.pairMetrics(test, (dist <= lit(theta)).cast("int"),
-      col("label")).head()
-    val ir = Metrics.irMetrics(test, dist, col("label")).head()
-    Seq((regParam, maxIter.toLong, pm.getAs[Double]("f1"),
-      pm.getAs[Double]("precision"), pm.getAs[Double]("recall"),
-      ir.getAs[Double]("mrr")))
+    val theta = Splits.theta(feats, dist, col("label"))
+    val m = Splits.testEval(feats, dist, col("label"), theta).head()
+    Seq((regParam, maxIter.toLong, m.getAs[Double]("f1"),
+      m.getAs[Double]("precision"), m.getAs[Double]("recall"),
+      m.getAs[Double]("mrr")))
       .toDF("reg", "max_iter", "f1", "precision", "recall", "mrr")
   }
 
@@ -364,15 +337,12 @@ object Weights {
           org.apache.spark.ml.functions.array_to_vector(col("features")))
         .withColumn("label_d", col("label").cast("double"))
         .persist()
-      val m = fitLr(feats.filter(col("split_a") === "train" &&
-        col("split_b") === "train"))
-      val test = m.transform(feats.filter(col("split_a") === "test" &&
-        col("split_b") === "test"))
-      val metrics = Metrics.pairMetrics(test,
-        (col("prediction") === 1.0).cast("int"), col("label"))
-      val rows = metrics.collect()
+      val m = fitLr(Splits.train(feats))
+      val metrics = materialize(Metrics.pairMetrics(
+        m.transform(Splits.test(feats)),
+        (col("prediction") === 1.0).cast("int"), col("label")))
       feats.unpersist()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), metrics.schema)
+      metrics
     }
 
   // --- LogisticRLTransE over the BATCH fit: the dim-wide tier with
@@ -456,16 +426,9 @@ object Weights {
       val feats = logRltBatchFeatDf(spark, sfDir)
       val fit = logRltBatchFit(spark, sfDir)
       val dist = veerDist(fit)
-      val theta = graft.pipe.Threshold.bestThetaTrainSplit(
-        feats, dist, col("label"))
-      val test = feats.filter(col("split_a") === "test" &&
-        col("split_b") === "test")
-      val metrics = Metrics.pairMetrics(test,
-        (dist <= lit(theta)).cast("int"), col("label"))
-      val rows = metrics.collect()
-      val local = spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), metrics.schema)
-      (weightRows(spark, LogRltBatchFeatures, fit.w, fit.b), local)
+      val theta = Splits.theta(feats, dist, col("label"))
+      (weightRows(spark, LogRltBatchFeatures, fit.w, fit.b),
+        materialize(Splits.testMetrics(feats, dist, col("label"), theta)))
     }
 
   def logRltBatchWeights(spark: SparkSession, sfDir: String): DataFrame =

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.graph.GraphBuild
+import graft.pipe.Splits
 import graft.sim.RLTransE
 
 /**
@@ -42,13 +43,11 @@ object Seea {
     import spark.implicits._
     // alignment seed = the known train-split links (the reference seeds
     // SEEA with its prior alignment)
-    val seed = graft.EntryStages.cand(spark, sfDir)
-      .filter(col("dni_a") === col("dni_b") &&
-        col("split_a") === "train" && col("split_b") === "train")
+    val seed = Splits.train(graft.EntryStages.cand(spark, sfDir)
+        .filter(col("dni_a") === col("dni_b")))
       .select("idA", "idB").localCheckpoint()
     var links = seed
-    var remaining = graft.EntryStages.cand(spark, sfDir)
-      .filter(col("split_a") === "test" && col("split_b") === "test")
+    var remaining = Splits.test(graft.EntryStages.cand(spark, sfDir))
       .select(col("idA"), col("idB"),
         (col("dni_a") === col("dni_b")).cast("long").as("label"))
       .localCheckpoint()
@@ -105,8 +104,7 @@ object Seea {
                          beta: Int = 200, maxDist: Double = 0.5,
                          maxIter: Int = 10): DataFrame = {
     import spark.implicits._
-    var remaining = graft.EntryStages.scoredp(spark, sfDir)
-      .filter(col("split_a") === "test" && col("split_b") === "test")
+    var remaining = Splits.test(graft.EntryStages.scoredp(spark, sfDir))
       .select(col("idA"), col("idB"), col("dist"), col("label"))
       .filter(col("dist") <= maxDist)
       .localCheckpoint()

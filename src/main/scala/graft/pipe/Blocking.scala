@@ -1,6 +1,6 @@
 package graft.pipe
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
@@ -17,6 +17,17 @@ import org.apache.spark.sql.functions._
  * side by a deterministic hash (SURVEY.md §4.3).
  */
 object Blocking {
+
+  /** One side's records, renamed for the pair: `id` -> `idA`, then
+    * `keep` as is, then `content_a`, `dni_a`, `split_a` (for side "B":
+    * `idB`, `content_b`, ...). */
+  private def side(keyed: DataFrame, s: String, keep: Column*): DataFrame = {
+    val x = s.toLowerCase
+    keyed.filter(col("side") === s).select(
+      (col("id").as(s"id$s") +: keep) ++ Seq(
+        col("content_norm").as(s"content_$x"), col("dni").as(s"dni_$x"),
+        col("split").as(s"split_$x")): _*)
+  }
 
   /**
    * Block key = the first `c<digits>`/`c0` token of the normalized
@@ -50,14 +61,8 @@ object Blocking {
   def candidates(keyed: DataFrame, salts: Int = 64,
                  hotThreshold: Int = 500): DataFrame = {
     require(salts >= 1)
-    val a = keyed.filter(col("side") === "A")
-      .select(col("id").as("idA"), col("block_key"),
-        col("content_norm").as("content_a"), col("dni").as("dni_a"),
-        col("split").as("split_a"))
-    val b = keyed.filter(col("side") === "B")
-      .select(col("id").as("idB"), col("block_key"),
-        col("content_norm").as("content_b"), col("dni").as("dni_b"),
-        col("split").as("split_b"))
+    val a = side(keyed, "A", col("block_key"))
+    val b = side(keyed, "B", col("block_key"))
     if (salts == 1) {
       a.join(b.hint("shuffle_hash"), "block_key")
     } else {
@@ -94,12 +99,8 @@ object Blocking {
    * is the path; full index exists for small curated corpora.
    */
   def fullIndex(keyed: DataFrame, maxPairs: Long = 100000000L): DataFrame = {
-    val a = keyed.filter(col("side") === "A")
-      .select(col("id").as("idA"), col("content_norm").as("content_a"),
-        col("dni").as("dni_a"), col("split").as("split_a"))
-    val b = keyed.filter(col("side") === "B")
-      .select(col("id").as("idB"), col("content_norm").as("content_b"),
-        col("dni").as("dni_b"), col("split").as("split_b"))
+    val a = side(keyed, "A")
+    val b = side(keyed, "B")
     val nA = a.count()
     val nB = b.count()
     // overflow-safe: nA * nB wraps negative past ~3e9 x 3e9 — exactly

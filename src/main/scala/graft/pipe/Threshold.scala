@@ -70,7 +70,13 @@ object Threshold {
    * Integer bucket arithmetic -> deterministic.
    */
   def bestThetaRobust(scored: DataFrame, dist: Column, label: Column,
-                      invStep: Int = 50): Double = {
+                      invStep: Int = 50): Double =
+    plateauTheta(scored, dist, label, invStep).getOrElse(0.0)
+
+  /** [[bestThetaRobust]], or None when `scored` is empty: the sweep
+    * collects one row per non-empty bucket, so none for an empty input. */
+  private[pipe] def plateauTheta(scored: DataFrame, dist: Column,
+                                 label: Column, invStep: Int): Option[Double] = {
     // the sweep materializes only non-empty buckets; the F1-max plateau
     // extends from its first bucket to just before the next bucket
     // whose F1 degrades (empty buckets in between keep F1 constant).
@@ -82,46 +88,12 @@ object Threshold {
       .select(round(col("theta") * invStep).cast("long").as("b"), col("f1"))
       .orderBy("b").collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
-    if (rows.isEmpty) return 0.0
+    if (rows.isEmpty) return None
     val fmax = rows.map(_._2).max
     val blo = rows.find(_._2 == fmax).get._1
     val bhi = rows.collectFirst {
       case (b, f) if b > blo && f < fmax => b - 1
     }.getOrElse(blo)
-    ((blo + bhi) / 2) / invStep.toDouble
-  }
-
-  /**
-   * Train-split sweep with a degenerate-split guard for the trainer
-   * evals: sweep theta on the train-train pairs (never on the pairs
-   * being reported). If that slice is EMPTY (a dataset slice where no
-   * candidate pair has both sides in the train split), fall back to
-   * the NON-TEST pairs (train ∪ val on both sides) — never to a set
-   * containing the reported test pairs, which would leak test labels
-   * into threshold selection and inflate the reported test F1. If even
-   * the non-test slice is empty the sweep cannot be done without
-   * leakage: log loudly and sweep the full set so the caller still
-   * gets a number, but the metric is flagged as leaked in the log.
-   * Requires `split_a`/`split_b` columns on `scored`.
-   */
-  def bestThetaTrainSplit(scored: DataFrame, dist: Column,
-                          label: Column, invStep: Int = 50): Double = {
-    val train = scored.filter(
-      col("split_a") === "train" && col("split_b") === "train")
-    val use =
-      if (!train.isEmpty) train
-      else {
-        val nonTest = scored.filter(
-          col("split_a") =!= "test" && col("split_b") =!= "test")
-        if (!nonTest.isEmpty) nonTest
-        else {
-          System.err.println(
-            "[graft] WARN bestThetaTrainSplit: no non-test pairs — " +
-              "sweeping theta on the FULL score set (includes test " +
-              "pairs); treat downstream test metrics as LEAKED")
-          scored
-        }
-      }
-    bestThetaRobust(use, dist, label, invStep)
+    Some(((blo + bhi) / 2) / invStep.toDouble)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Assignment
+import graft.pipe.Splits
 
 /**
  * HTransE — the reference's household/block-assignment composite score
@@ -81,17 +82,11 @@ object HTransE {
            cfg: TransE.Config = TransE.Config()): DataFrame = {
     import spark.implicits._
     val all = pairScores(spark, sfDir, cfg) // memo-persisted
-    val theta = graft.pipe.Threshold.bestThetaTrainSplit(
-      all, col("dist"), col("label"))
-    val scores = all.filter(
-      col("split_a") === "test" && col("split_b") === "test")
-    val m = graft.eval.Metrics.pairMetrics(scores,
-      (col("dist") <= theta).cast("int"), col("label")).head()
-    val ir = graft.eval.Metrics.irMetrics(scores, col("dist"),
-      col("label")).head()
+    val theta = Splits.theta(all, col("dist"), col("label"))
+    val m = Splits.testEval(all, col("dist"), col("label"), theta).head()
     Seq((cfg.dim.toLong, cfg.epochs.toLong, theta,
       m.getAs[Double]("f1"), m.getAs[Double]("precision"),
-      m.getAs[Double]("recall"), ir.getAs[Double]("mrr")))
+      m.getAs[Double]("recall"), m.getAs[Double]("mrr")))
       .toDF("dim", "epochs", "theta", "f1", "precision", "recall", "mrr")
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.graph.GraphBuild
+import graft.pipe.Splits
 
 /**
  * RLTransE — the reference's flagship embedding method (census F1
@@ -202,15 +203,9 @@ object RLTransE {
       .withColumn("dist",
         ScoredRels.map(r => col(s"f_$r")).reduce(_ + _))
       .persist()
-    val theta = graft.pipe.Threshold.bestThetaTrainSplit(
-      all, col("dist"), col("label"))
-    val test = all.filter(
-      col("split_a") === "test" && col("split_b") === "test")
-    val m = graft.eval.Metrics.pairMetrics(test,
-      (col("dist") <= theta).cast("int"), col("label")).head()
-    val ir = graft.eval.Metrics.irMetrics(test, col("dist"), col("label"))
-      .head()
-    val st = test.filter(col("label") === 1)
+    val theta = Splits.theta(all, col("dist"), col("label"))
+    val m = Splits.testEval(all, col("dist"), col("label"), theta).head()
+    val st = Splits.test(all).filter(col("label") === 1)
       .agg(sum(floor(col("f_st") * 1e6 + lit(0.5)).cast("long")).as("s"),
         count(lit(1)).as("n")).head()
     val stMicros =
@@ -219,7 +214,7 @@ object RLTransE {
     all.unpersist()
     Seq((cfg.dim.toLong, cfg.epochs.toLong, theta,
       m.getAs[Double]("f1"), m.getAs[Double]("precision"),
-      m.getAs[Double]("recall"), ir.getAs[Double]("mrr"), stMicros))
+      m.getAs[Double]("recall"), m.getAs[Double]("mrr"), stMicros))
       .toDF("dim", "epochs", "theta", "f1", "precision", "recall", "mrr",
         "tp_st_dist_micros")
   }
@@ -441,9 +436,7 @@ object RLTransE {
       keyed.select(Seq(col("id").as(idCol)) ++
         ScoredRels.map(r => col(r).as(s"$prefix$r")): _*)
     val base = graft.EntryStages.cand(spark, sfDir)
-    val filtered = if (testOnly)
-      base.filter(col("split_a") === "test" && col("split_b") === "test")
-    else base
+    val filtered = if (testOnly) Splits.test(base) else base
     val cand = filtered
       .select(col("idA"), col("idB"),
         (col("dni_a") === col("dni_b")).cast("long").as("label"),
@@ -595,20 +588,14 @@ object RLTransE {
       .select(col("idA"), col("idB"), col("label"), col("dist"),
         col("f_st").as("st_dist"), col("split_a"), col("split_b"))
       .persist()
-    val theta = graft.pipe.Threshold.bestThetaTrainSplit(
-      all, col("dist"), col("label"))
-    val scores = all.filter(
-      col("split_a") === "test" && col("split_b") === "test")
-    val m = graft.eval.Metrics.pairMetrics(scores,
-      (col("dist") <= theta).cast("int"), col("label")).head()
-    val ir = graft.eval.Metrics.irMetrics(scores, col("dist"), col("label"))
-      .head()
-    val tpSt = scores.filter(col("label") === 1)
+    val theta = Splits.theta(all, col("dist"), col("label"))
+    val m = Splits.testEval(all, col("dist"), col("label"), theta).head()
+    val tpSt = Splits.test(all).filter(col("label") === 1)
       .agg(avg("st_dist")).head().getDouble(0)
     all.unpersist()
     Seq((cfg.dim.toLong, cfg.epochs.toLong, theta,
       m.getAs[Double]("f1"), m.getAs[Double]("precision"),
-      m.getAs[Double]("recall"), ir.getAs[Double]("mrr"),
+      m.getAs[Double]("recall"), m.getAs[Double]("mrr"),
       math.round(tpSt * 1000000)))
       .toDF("dim", "epochs", "theta", "f1", "precision", "recall", "mrr",
         "tp_st_dist_micros")

@@ -3,6 +3,8 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.pipe.Splits
+
 /**
  * Distributed TransE trainer (SURVEY.md §7.4 v2): margin ranking loss
  * `max(0, ||h+r-t||_1 - ||h+r-t'||_1 + margin)` with L1 subgradients —
@@ -511,16 +513,11 @@ object TransE {
     import spark.implicits._
     val all = pairScores(spark, sfDir, cfg) // memo-persisted
     val dist = lit(1.0) - col("cos")
-    val theta = graft.pipe.Threshold.bestThetaTrainSplit(
-      all, dist, col("label"))
-    val scores = all.filter(
-      col("split_a") === "test" && col("split_b") === "test")
-    val m = graft.eval.Metrics.pairMetrics(scores,
-      (dist <= theta).cast("int"), col("label")).head()
-    val ir = graft.eval.Metrics.irMetrics(scores, dist, col("label")).head()
+    val theta = Splits.theta(all, dist, col("label"))
+    val m = Splits.testEval(all, dist, col("label"), theta).head()
     Seq((cfg.dim.toLong, cfg.epochs.toLong, theta,
       m.getAs[Double]("f1"), m.getAs[Double]("precision"),
-      m.getAs[Double]("recall"), ir.getAs[Double]("mrr")))
+      m.getAs[Double]("recall"), m.getAs[Double]("mrr")))
       .toDF("dim", "epochs", "theta", "f1", "precision", "recall", "mrr")
   }
 }

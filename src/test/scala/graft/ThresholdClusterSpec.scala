@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.JobCount
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipe.{Cluster, Threshold}
+import graft.pipe.{Cluster, Splits, Threshold}
 
 class ThresholdClusterSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -22,6 +24,57 @@ class ThresholdClusterSpec extends AnyFunSuite {
     assert(best.getAs[Double]("theta") == 0.3)
     assert(best.getAs[Double]("f1") == 1.0)
     assert(Threshold.bestTheta(scored, col("dist"), col("label")) == 0.3)
+  }
+
+  /** (dist, label, split_a, split_b) pairs behind an RDD scan, so every
+    * probe of the frame is a Spark job. */
+  private def pairs(rows: (Double, Int, String, String)*): DataFrame =
+    spark.sparkContext.parallelize(rows, 2)
+      .toDF("dist", "label", "split_a", "split_b")
+
+  private def robust(df: DataFrame): Double =
+    Threshold.bestThetaRobust(df, col("dist"), col("label"))
+
+  private def splitTheta(df: DataFrame): Double =
+    Splits.theta(df, col("dist"), col("label"))
+
+  test("train-split theta: train pairs tune it, with no extra job") {
+    val df = pairs(
+      (0.1, 1, "train", "train"), (0.3, 1, "train", "train"),
+      (0.5, 0, "train", "train"), (0.9, 0, "train", "train"),
+      (0.6, 1, "val", "val"), (0.7, 1, "test", "test"),
+      (0.2, 0, "test", "test"))
+    val (onTrain, robustJobs) =
+      JobCount(spark.sparkContext)(robust(Splits.train(df)))
+    val (theta, thetaJobs) = JobCount(spark.sparkContext)(splitTheta(df))
+    // F1 plateau of the train pairs: buckets 15..24 -> midpoint 19
+    assert(onTrain == 0.38)
+    assert(theta == onTrain)
+    assert(theta != robust(df))
+    assert(robustJobs > 0)
+    assert(thetaJobs <= robustJobs)
+  }
+
+  test("train-split theta: no train pairs falls back to non-test pairs") {
+    val df = pairs(
+      (0.1, 1, "train", "val"), (0.5, 0, "val", "val"),
+      (0.7, 1, "test", "test"), (0.3, 0, "train", "test"))
+    val theta = splitTheta(df)
+    assert(theta == robust(Splits.nonTest(df)))
+    assert(theta == 0.28)
+    assert(theta != robust(df))
+  }
+
+  test("train-split theta: only test pairs sweeps all pairs and warns") {
+    val df = pairs(
+      (0.1, 1, "test", "test"), (0.5, 0, "test", "test"),
+      (0.3, 0, "test", "val"), (0.6, 1, "train", "test"))
+    val err = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val theta = try splitTheta(df) finally System.setErr(saved)
+    assert(theta == robust(df))
+    assert(err.toString.contains("WARN Splits.theta"))
   }
 
   test("connected components: chain, triangle, separate component, singleton") {
