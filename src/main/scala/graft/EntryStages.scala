@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,16 +33,16 @@ object EntryStages {
   /** Once-only cell: TrieMap.getOrElseUpdate may evaluate its default
     * more than once under a race (it computes, then putIfAbsent); the
     * verify harness submits queries from a thread pool, and a raced
-    * duplicate here would re-run a multi-second training fit (and leak
-    * a persisted duplicate DataFrame). The map stores the cheap cell;
-    * the lazy val inside guarantees one evaluation. */
+    * duplicate here would re-run a multi-second training fit or theta
+    * sweep (and leak a persisted duplicate DataFrame). The map stores
+    * the cheap cell; the lazy val inside guarantees one evaluation. */
   private final class Once[T](f: () => T) { lazy val value: T = f() }
 
-  private val dfCache =
-    scala.collection.concurrent.TrieMap[(String, String, String), Once[DataFrame]]()
-  private val thetaCache =
-    scala.collection.concurrent.TrieMap[(String, String, String), Double]()
-  private val modelCache =
+  /** Every memoized value — persisted DataFrames, trained models and
+    * thetas — one cell per (session, sfDir, kind-prefixed name); the
+    * `df:`/`model:`/`theta:` prefix keeps a name of one kind from ever
+    * serving a value of another. */
+  private val cells =
     scala.collection.concurrent.TrieMap[(String, String, String), Once[AnyRef]]()
   private val evictionHooked =
     scala.collection.concurrent.TrieMap[String, Unit]()
@@ -61,9 +61,7 @@ object EntryStages {
         new org.apache.spark.scheduler.SparkListener {
           override def onApplicationEnd(
               e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-            dfCache.filterInPlace { case ((k, _, _), _) => k != key }
-            thetaCache.filterInPlace { case ((k, _, _), _) => k != key }
-            modelCache.filterInPlace { case ((k, _, _), _) => k != key }
+            cells.filterInPlace { case ((k, _, _), _) => k != key }
             evictionHooked.remove(key)
             ()
           }
@@ -73,10 +71,14 @@ object EntryStages {
     key
   }
 
+  private def once[T <: AnyRef](spark: SparkSession, sfDir: String,
+                                name: String)(f: => T): T =
+    cells.getOrElseUpdate((withEviction(spark), sfDir, name),
+      new Once[AnyRef](() => f)).value.asInstanceOf[T]
+
   private def cached(spark: SparkSession, sfDir: String, name: String)
                     (f: => DataFrame): DataFrame =
-    dfCache.getOrElseUpdate((withEviction(spark), sfDir, name),
-      new Once(() => f.persist())).value
+    once(spark, sfDir, s"df:$name")(f.persist())
 
   /**
    * Train-once memo for model objects (the reference freezes and
@@ -87,8 +89,11 @@ object EntryStages {
    */
   private[graft] def memoModel[T <: AnyRef](spark: SparkSession, sfDir: String,
                                             name: String)(f: => T): T =
-    modelCache.getOrElseUpdate((withEviction(spark), sfDir, name),
-      new Once[AnyRef](() => f)).value.asInstanceOf[T]
+    once(spark, sfDir, s"model:$name")(f)
+
+  private def memoTheta(spark: SparkSession, sfDir: String, name: String)
+                       (f: => Double): Double =
+    once(spark, sfDir, s"theta:$name")(Double.box(f)).doubleValue
 
   def records(spark: SparkSession, sfDir: String): DataFrame =
     Synth.records(spark, sfDir)
@@ -142,15 +147,15 @@ object EntryStages {
     Threshold.best(Splits.train(scoredp(spark, sfDir)), col("dist"), col("label"))
 
   def theta(spark: SparkSession, sfDir: String): Double =
-    thetaCache.getOrElseUpdate(
-      (withEviction(spark), sfDir, "argmax"),
+    memoTheta(spark, sfDir, "argmax") {
       Threshold.bestTheta(Splits.train(scoredp(spark, sfDir)),
-        col("dist"), col("label")))
+        col("dist"), col("label"))
+    }
 
   def thetaRobust(spark: SparkSession, sfDir: String): Double =
-    thetaCache.getOrElseUpdate(
-      (withEviction(spark), sfDir, "robust"),
-      Splits.theta(scoredp(spark, sfDir), col("dist"), col("label")))
+    memoTheta(spark, sfDir, "robust") {
+      Splits.theta(scoredp(spark, sfDir), col("dist"), col("label"))
+    }
 
   def matchEdges(spark: SparkSession, sfDir: String): DataFrame = {
     val t = theta(spark, sfDir)
@@ -174,23 +179,19 @@ object EntryStages {
       .limit(beta)
   }
 
-  def topkFn(spark: SparkSession, sfDir: String, k: Int = 5): DataFrame = {
-    val t = theta(spark, sfDir)
-    scoredp(spark, sfDir)
-      .filter(col("label") === 1 && col("dist") > t)
-      .select("idA", "idB", "dist")
-      .orderBy(col("dist").asc, col("idA").asc, col("idB").asc)
-      .limit(k)
-  }
+  def topkFn(spark: SparkSession, sfDir: String, k: Int = 5): DataFrame =
+    topk(spark, sfDir, k)(t => col("label") === 1 && col("dist") > t)
 
-  def topkFp(spark: SparkSession, sfDir: String, k: Int = 5): DataFrame = {
-    val t = theta(spark, sfDir)
-    scoredp(spark, sfDir)
-      .filter(col("label") === 0 && col("dist") <= t)
+  def topkFp(spark: SparkSession, sfDir: String, k: Int = 5): DataFrame =
+    topk(spark, sfDir, k)(t => col("label") === 0 && col("dist") <= t)
+
+  /** The `k` closest pairs at theta that `miss` selects. */
+  private def topk(spark: SparkSession, sfDir: String, k: Int)
+                  (miss: Double => Column): DataFrame =
+    scoredp(spark, sfDir).filter(miss(theta(spark, sfDir)))
       .select("idA", "idB", "dist")
       .orderBy(col("dist").asc, col("idA").asc, col("idB").asc)
       .limit(k)
-  }
 
   def blockingStats(spark: SparkSession, sfDir: String): DataFrame =
     cand(spark, sfDir).groupBy("block_key").agg(

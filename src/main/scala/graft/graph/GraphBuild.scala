@@ -82,6 +82,26 @@ object GraphBuild {
     spark.createDataFrame(rows, schema)
   }
 
+  /** Record rows of an entity dictionary as (rid, ent_id): the record
+    * id parsed back out of its `r<id>` label. */
+  def recordIds(ents: DataFrame): DataFrame =
+    ents.filter(col("label").rlike("^r[0-9]+$"))
+      .select(substring(col("label"), 2, 20).cast("long").as("rid"),
+        col("ent_id"))
+
+  /** Labeled candidate pairs (idA, idB, block_key, label, split_a,
+    * split_b) with each record's entity id attached as `kA`/`kB` by
+    * JOIN on the sides' (rid, ent_id) maps ([[recordIds]]) — the maps
+    * are data-sized, never a driver map. */
+  def candidateEntities(spark: SparkSession, sfDir: String,
+                        recA: DataFrame, recB: DataFrame): DataFrame =
+    EntryStages.cand(spark, sfDir)
+      .select(col("idA"), col("idB"), col("block_key"),
+        (col("dni_a") === col("dni_b")).cast("long").as("label"),
+        col("split_a"), col("split_b"))
+      .join(recA.select(col("rid").as("idA"), col("ent_id").as("kA")), "idA")
+      .join(recB.select(col("rid").as("idB"), col("ent_id").as("kB")), "idB")
+
   /** Entity dictionary: dense ids by sorted label (deterministic).
     * Memoized per (session, sfDir): half a dozen queries and every
     * trainer re-derive it otherwise. */
@@ -205,10 +225,7 @@ object GraphBuild {
    * rel id = |Relations|.
    */
   def ererJointTriples(spark: SparkSession, sfDir: String): DataFrame = {
-    val ents = erEntities(spark, sfDir)
-    val recIds = ents.filter(col("label").rlike("^r[0-9]+$"))
-      .select(substring(col("label"), 2, 20).cast("long").as("rid"),
-        col("ent_id"))
+    val recIds = recordIds(erEntities(spark, sfDir))
     val sameAs = priorPairs(spark, sfDir)
       .join(recIds.select(col("rid").as("idA"), col("ent_id").as("h")), "idA")
       .join(recIds.select(col("rid").as("idB"), col("ent_id").as("t")), "idB")

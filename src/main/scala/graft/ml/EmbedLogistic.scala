@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.eval.Metrics
 import graft.graph.GraphBuild
 import graft.pipe.Splits
+import graft.sim.MicroGrad.microQ
 import graft.sim.TransE
 
 /**
@@ -63,7 +64,6 @@ object EmbedLogistic {
                           iters: Int = 60, lr: Double = 0.3,
                           reg: Double = 0.001)
 
-  private def microQ(x: Double): Long = math.floor(x * 1e6 + 0.5).toLong
   private def q9(x: Double): Double = math.floor(x * 1e9 + 0.5) / 1e9
   // Accepted residual risk (ADVICE r4): the GD sigmoid below — and
   // dist = 1 - sigmoid(logit) in Weights.veerDist / the wbsc/vsc CTEs
@@ -102,19 +102,12 @@ object EmbedLogistic {
       .withColumn("idx", TransE.packedIdx(nEnt.toLong, nRel.toLong))
     val model = TransE.train(spark, triples, nEnt, nRel,
       TransE.Config(dim = cfg.dim, epochs = cfg.epochs, transH = true))
-    val recEnt = ents.filter(col("label").rlike("^r[0-9]+$"))
-      .select(substring(col("label"), 2, 20).cast("long").as("rid"),
-        col("ent_id"))
+    val recEnt = GraphBuild.recordIds(ents)
     val entB = spark.sparkContext.broadcast(model.ent)
     val scale = cfg.gaussScale
-    graft.EntryStages.cand(spark, sfDir)
-      .select(col("idA"), col("idB"),
-        (col("dni_a") === col("dni_b")).cast("long").as("label"),
-        col("split_a"), col("split_b"))
-      .join(recEnt.select(col("rid").as("idA"), col("ent_id").as("ea")), "idA")
-      .join(recEnt.select(col("rid").as("idB"), col("ent_id").as("eb")), "idB")
+    GraphBuild.candidateEntities(spark, sfDir, recEnt, recEnt)
       .select(col("idA"), col("idB"), col("label"),
-        col("split_a"), col("split_b"), col("ea"), col("eb"))
+        col("split_a"), col("split_b"), col("kA"), col("kB"))
       .as[(Long, Long, Long, String, String, Long, Long)]
       .mapPartitions { it =>
         val e = entB.value

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.graph.GraphBuild
 import graft.pipe.Splits
+import graft.sim.MicroGrad.{Micro, microQ}
+import graft.sim.NegativeSampler.fnvMix
 
 /**
  * KR-EAR: knowledge embedding with separate RELATIONAL and
@@ -19,8 +21,8 @@ import graft.pipe.Splits
  *   :151-161), and the two losses run as ALTERNATING optimizers per
  *   epoch (kr_ear.py train loop).
  *
- * Spark shape mirrors [[TransE.train]]: the model (entity + value +
- * relation + attribute + projection matrices) broadcasts per epoch,
+ * Spark shape is [[MicroGrad]]'s exact step: the model (entity + value
+ * + relation + attribute + projection matrices) broadcasts per epoch,
  * each loss runs one mapPartitions pass emitting sparse gradients in
  * exact integer micro-units, gradients reduce by row id in one shuffle
  * (order-independent -> bit-deterministic), and only model-sized rows
@@ -29,7 +31,7 @@ import graft.pipe.Splits
  *
  * REPLAY DISCIPLINE (the DuckDB oracle re-runs the whole training,
  * [[graft.oracle.OracleSqlKrEar]]): FNV-seeded init
- * ([[TransE.initComponent]], matrix slots 0=ent 1=value 2=rel 3=attr
+ * ([[MicroGrad.init]], matrix slots 0=ent 1=value 2=rel 3=attr
  * 4=proj), fnvMix negative draws on integer keys, explicit-double
  * per-dim chains in loop order, per-contribution micro-quantization
  * before the order-free integer reduction, float-rounded model values
@@ -62,16 +64,6 @@ object KrEar {
       rel: Array[Array[Float]], attr: Array[Array[Float]],
       proj: Array[Array[Float]],
       relLoss: Array[Double], attrLoss: Array[Double])
-
-  /** The sampler-oracle hash stream ([[NegativeSampler.fnvMix]]) —
-    * SQL-replayable, unlike the round-3 custom mix. */
-  private def mix(a: Long, b: Long): Long = NegativeSampler.fnvMix(a, b)
-
-  private final val Micro = 1e6
-
-  /** floor(x*1e6+0.5) — quantizes per-triple gradient contributions to
-    * exact micro-units (see TransE.microQ). */
-  private def microQ(x: Double): Long = math.floor(x * Micro + 0.5).toLong
 
   /** Micro-quantized tanh via `1 - 2/(exp(2x)+1)` — DuckDB v1.0 has no
     * tanh builtin, so BOTH engines compute this exact formula (exp is
@@ -136,82 +128,29 @@ object KrEar {
     val nRel = GraphBuild.RelationalRels.size
     val nAttr = GraphBuild.AttributionalRels.size
     val dim = cfg.dim
-    def init(matId: Int, n: Int) = Array.tabulate(n)(row =>
-      Array.tabulate(dim)(j =>
-        TransE.initComponent(matId, row, j, cfg.seed, dim)))
-    val ent = init(0, nEnt); ent.foreach(Embed.l2normalize)
-    val value = init(1, nVal); value.foreach(Embed.l2normalize)
-    val rel = init(2, nRel)
-    val attr = init(3, nAttr)
-    val proj = init(4, nAttr); proj.foreach(Embed.l2normalize)
+    val ent = MicroGrad.init(0, nEnt, dim, cfg.seed)
+    ent.foreach(Embed.l2normalize)
+    val value = MicroGrad.init(1, nVal, dim, cfg.seed)
+    value.foreach(Embed.l2normalize)
+    val rel = MicroGrad.init(2, nRel, dim, cfg.seed)
+    val attr = MicroGrad.init(3, nAttr, dim, cfg.seed)
+    val proj = MicroGrad.init(4, nAttr, dim, cfg.seed)
+    proj.foreach(Embed.l2normalize)
+    // gradient rows: off(1) value, off(2) rel, off(3) attr, off(4) proj
+    val lay = new MicroGrad.Layout(ent, value, rel, attr, proj)
 
-    // gradient row-id layout
-    val offVal = nEnt.toLong
-    val offRel = offVal + nVal
-    val offAttr = offRel + nRel
-    val offProj = offAttr + nAttr
-
-    // 8 partitions: gradient rows duplicate per partition (see
-    // TransE.train) — keep the shuffle model-sized, not 64x model-sized.
-    // localCheckpoint truncates the logical plan to a leaf: without it
-    // every epoch re-analyzes the full upstream lineage (windows,
-    // dictionary joins), which dominates the epoch wall time.
-    val relData = relTriples.select(col("h").cast("long"),
-      col("t").cast("long"), col("r").cast("long"))
-      .as[(Long, Long, Long)].repartition(8).localCheckpoint()
-    val attrData = attrTriples.select(col("h").cast("long"),
-      col("v").cast("long"), col("a").cast("long"))
-      .as[(Long, Long, Long)].repartition(8).localCheckpoint()
-
-    // Packed rejection indexes for relation/attribute corruption
-    // (8 bytes/triple, broadcast once — see TransE.train)
-    val nRelL0 = nRel.toLong; val nAttrL0 = nAttr.toLong
-    val nEntL0 = nEnt.toLong; val nValL0 = nVal.toLong
-    val relPacked: Array[Long] =
-      if (cfg.negRelRate > 0)
-        relData.map { case (h, t, r) => (h * nRelL0 + r) * nEntL0 + t }
-          .collect().sorted
-      else Array.emptyLongArray
-    val attrPacked: Array[Long] =
-      if (cfg.negRelRate > 0)
-        attrData.map { case (h, v, a) => (h * nAttrL0 + a) * nValL0 + v }
-          .collect().sorted
-      else Array.emptyLongArray
-    val relPackedB = spark.sparkContext.broadcast(relPacked)
-    val attrPackedB = spark.sparkContext.broadcast(attrPacked)
+    val relData = MicroGrad.epochData(relTriples.select(col("h").cast("long"),
+      col("t").cast("long"), col("r").cast("long")).as[(Long, Long, Long)])
+    val attrData = MicroGrad.epochData(attrTriples.select(col("h").cast("long"),
+      col("v").cast("long"), col("a").cast("long")).as[(Long, Long, Long)])
+    // rejection indexes for relation/attribute corruption
+    val relPackedB = MicroGrad.rejectionIndex(relData, nRel.toLong,
+      nEnt.toLong, cfg.negRelRate > 0)
+    val attrPackedB = MicroGrad.rejectionIndex(attrData, nAttr.toLong,
+      nVal.toLong, cfg.negRelRate > 0)
 
     val relLoss = new Array[Double](cfg.epochs)
     val attrLoss = new Array[Double](cfg.epochs)
-
-    def reduceApply(rows: org.apache.spark.sql.Dataset[(Long, Array[Long])],
-                    lossSink: Long => Unit): Unit = {
-      // RDD reduceByKey at width 8 (map-side combine, exact long sums
-      // -> order-free) instead of the 64-partition typed shuffle; see
-      // TransE.train for the rationale
-      val reduced = rows.rdd.reduceByKey({ (a, b) =>
-        val s = new Array[Long](a.length)
-        var i = 0
-        while (i < s.length) { s(i) = a(i) + b(i); i += 1 }
-        s
-      }, 8).collect()
-      reduced.foreach { case (id, gv) =>
-        if (id == -1L) lossSink(gv(0))
-        else {
-          val target =
-            if (id < offVal) ent(id.toInt)
-            else if (id < offRel) value((id - offVal).toInt)
-            else if (id < offAttr) rel((id - offRel).toInt)
-            else if (id < offProj) attr((id - offAttr).toInt)
-            else proj((id - offProj).toInt)
-          var i = 0
-          while (i < dim) {
-            target(i) =
-              (target(i).toDouble - cfg.lr * (gv(i).toDouble / Micro)).toFloat
-            i += 1
-          }
-        }
-      }
-    }
 
     var epoch = 0
     while (epoch < cfg.epochs) {
@@ -229,28 +168,15 @@ object KrEar {
       val relRows = relData.mapPartitions { it =>
         val (e, _, r, _, _) = b.value
         val relSorted = relPackedB.value
-        val acc = new java.util.HashMap[Long, Array[Long]]()
-        var lossMicro = 0L
-        def g(id: Long): Array[Long] = {
-          var v = acc.get(id)
-          if (v == null) { v = new Array[Long](dim); acc.put(id, v) }
-          v
-        }
+        val acc = new MicroGrad.Acc(dim)
         it.foreach { case (h, t, rl) =>
           // relation corruption: (h, t, r') with r' != r, rejecting
           // real triples (seeded, replayable)
           var jr = 0
           while (jr < negRelRate && nRelL > 1) {
-            var rNeg = -1L
-            var att = 0
-            while (rNeg < 0 && att < 16) {
-              val d = mix(h * 31 + t,
-                0x27220a95L + (ep.toLong * negRelRate + jr) * 31 + att)
-              val c = ((d % nRelL) + nRelL) % nRelL
-              if (c != rl && java.util.Arrays.binarySearch(
-                  relSorted, (h * nRelL + c) * nEntL + t) < 0) rNeg = c
-              att += 1
-            }
+            val rNeg = MicroGrad.corruptRel(h * 31 + t,
+              att => 0x27220a95L + (ep.toLong * negRelRate + jr) * 31 + att,
+              h, t, rl, nRelL, nEntL, relSorted)
             if (rNeg >= 0) {
               val eh = e(h.toInt); val et = e(t.toInt)
               val er = r(rl.toInt); val ern = r(rNeg.toInt)
@@ -263,9 +189,10 @@ object KrEar {
               }
               val l = pos - neg + margin
               if (l > 0) {
-                lossMicro += microQ(l)
-                val gh = g(h); val gt = g(t)
-                val gr = g(offRel + rl); val grn = g(offRel + rNeg)
+                acc.addLoss(microQ(l))
+                val gh = acc.row(h); val gt = acc.row(t)
+                val gr = acc.row(lay.off(2) + rl)
+                val grn = acc.row(lay.off(2) + rNeg)
                 i = 0
                 while (i < dim) {
                   val sp = math.signum(eh(i).toDouble + er(i) - et(i))
@@ -283,7 +210,7 @@ object KrEar {
           var j = 0
           while (j < negRate) {
             val tNeg = {
-              val d = mix(h * 31 + t, ep.toLong * negRate + j)
+              val d = fnvMix(h * 31 + t, ep.toLong * negRate + j)
               ((d % nEntL) + nEntL) % nEntL
             }
             if (tNeg != t) {
@@ -298,9 +225,9 @@ object KrEar {
               }
               val l = pos - neg + margin
               if (l > 0) {
-                lossMicro += microQ(l)
-                val gh = g(h); val gt = g(t); val gn = g(tNeg)
-                val gr = g(offRel + rl)
+                acc.addLoss(microQ(l))
+                val gh = acc.row(h); val gt = acc.row(t)
+                val gn = acc.row(tNeg); val gr = acc.row(lay.off(2) + rl)
                 i = 0
                 while (i < dim) {
                   val sp = math.signum(eh(i).toDouble + er(i) - et(i))
@@ -316,29 +243,16 @@ object KrEar {
             j += 1
           }
         }
-        import scala.jdk.CollectionConverters._
-        val lossRow = {
-          val a = new Array[Long](dim)
-          a(0) = lossMicro
-          (-1L, a)
-        }
-        Iterator.single(lossRow) ++
-          acc.entrySet().asScala.iterator.map(kv => (kv.getKey, kv.getValue))
+        acc.rows
       }
-      reduceApply(relRows, m => relLoss(ep) = m / Micro)
+      relLoss(ep) = lay.step(relRows, cfg.lr)
       ent.foreach(Embed.l2normalize)
 
       // ---- attributional encoder: |tanh(h_proj + a) - v| hinge ----
       val b2 = spark.sparkContext.broadcast((ent, value, rel, attr, proj))
       val attrRows = attrData.mapPartitions { it =>
         val (e, vv, _, av, pj) = b2.value
-        val acc = new java.util.HashMap[Long, Array[Long]]()
-        var lossMicro = 0L
-        def g(id: Long): Array[Long] = {
-          var v = acc.get(id)
-          if (v == null) { v = new Array[Long](dim); acc.put(id, v) }
-          v
-        }
+        val acc = new MicroGrad.Acc(dim)
         // score of ||tanhQ(hp + a) - v||_1 (quantized tanh — see tanhQ)
         def attrScore(h: Array[Float], n: Array[Float], a: Array[Float],
                       v: Array[Float]): Double = {
@@ -362,8 +276,8 @@ object KrEar {
         def accumAttrGrad(h: Long, at: Long, v: Long, sign: Double): Unit = {
           val eh = e(h.toInt); val ev = vv(v.toInt)
           val ea = av(at.toInt); val nv = pj(at.toInt)
-          val gh = g(h); val gv = g(offVal + v)
-          val ga = g(offAttr + at); val gp = g(offProj + at)
+          val gh = acc.row(h); val gv = acc.row(lay.off(1) + v)
+          val ga = acc.row(lay.off(3) + at); val gp = acc.row(lay.off(4) + at)
           var hn = 0.0
           var i = 0
           while (i < dim) { hn += eh(i).toDouble * nv(i); i += 1 }
@@ -396,23 +310,16 @@ object KrEar {
           // real (h, v, a') triples
           var jr = 0
           while (jr < negRelRate && nAttrL > 1) {
-            var aNeg = -1L
-            var attTry = 0
-            while (aNeg < 0 && attTry < 16) {
-              val d = mix(h * 37 + v,
-                0x5851f42dL + (ep.toLong * negRelRate + jr) * 31 + attTry)
-              val c = ((d % nAttrL) + nAttrL) % nAttrL
-              if (c != at && java.util.Arrays.binarySearch(
-                  attrSorted, (h * nAttrL + c) * nValL + v) < 0) aNeg = c
-              attTry += 1
-            }
+            val aNeg = MicroGrad.corruptRel(h * 37 + v,
+              att => 0x5851f42dL + (ep.toLong * negRelRate + jr) * 31 + att,
+              h, v, at, nAttrL, nValL, attrSorted)
             if (aNeg >= 0) {
               val eh = e(h.toInt); val ev = vv(v.toInt)
               val pos = attrScore(eh, pj(at.toInt), av(at.toInt), ev)
               val neg = attrScore(eh, pj(aNeg.toInt), av(aNeg.toInt), ev)
               val l = pos - neg + margin
               if (l > 0) {
-                lossMicro += microQ(l)
+                acc.addLoss(microQ(l))
                 accumAttrGrad(h, at, v, 1.0)
                 accumAttrGrad(h, aNeg, v, -1.0)
               }
@@ -422,7 +329,7 @@ object KrEar {
           var j = 0
           while (j < negRate) {
             val vNeg = {
-              val d = mix(h * 37 + v, (ep.toLong + 7919) * negRate + j)
+              val d = fnvMix(h * 37 + v, (ep.toLong + 7919) * negRate + j)
               ((d % nValL) + nValL) % nValL
             }
             if (vNeg != v) {
@@ -433,9 +340,11 @@ object KrEar {
               val neg = attrScore(eh, nv, ea, en)
               val l = pos - neg + margin
               if (l > 0) {
-                lossMicro += microQ(l)
-                val gh = g(h); val gv = g(offVal + v); val gn = g(offVal + vNeg)
-                val ga = g(offAttr + at); val gp = g(offProj + at)
+                acc.addLoss(microQ(l))
+                val gh = acc.row(h); val gv = acc.row(lay.off(1) + v)
+                val gn = acc.row(lay.off(1) + vNeg)
+                val ga = acc.row(lay.off(3) + at)
+                val gp = acc.row(lay.off(4) + at)
                 var hn = 0.0
                 var i = 0
                 while (i < dim) { hn += eh(i).toDouble * nv(i); i += 1 }
@@ -471,16 +380,9 @@ object KrEar {
             j += 1
           }
         }
-        import scala.jdk.CollectionConverters._
-        val lossRow = {
-          val a = new Array[Long](dim)
-          a(0) = lossMicro
-          (-1L, a)
-        }
-        Iterator.single(lossRow) ++
-          acc.entrySet().asScala.iterator.map(kv => (kv.getKey, kv.getValue))
+        acc.rows
       }
-      reduceApply(attrRows, m => attrLoss(ep) = m / Micro)
+      attrLoss(ep) = lay.step(attrRows, cfg.lr)
       ent.foreach(Embed.l2normalize)
       value.foreach(Embed.l2normalize)
       proj.foreach(Embed.l2normalize)
@@ -505,24 +407,16 @@ object KrEar {
                  cfg: Config = Config()): DataFrame = {
     import spark.implicits._
     val (entIds, valIds, relT, attrT) = prepare(spark, sfDir)
-    val entP = entIds
-    val nEnt = entP.count().toInt
+    val nEnt = entIds.count().toInt
     val nVal = valIds.count().toInt
     val model = train(spark, relT, attrT, nEnt, nVal, cfg)
     // record rows of the ER dictionary -> kr entity ids, by join
-    val recs = GraphBuild.erEntities(spark, sfDir)
-      .filter(col("label").rlike("^r[0-9]+$"))
-      .select(substring(col("label"), 2, 20).cast("long").as("rid"),
-        col("ent_id").as("eid"))
-      .join(entP, "eid")
-      .select(col("rid"), col("kid"))
+    val recs = GraphBuild.recordIds(GraphBuild.erEntities(spark, sfDir))
+      .select(col("rid"), col("ent_id").as("eid"))
+      .join(entIds, "eid")
+      .select(col("rid"), col("kid").as("ent_id"))
     val entB = spark.sparkContext.broadcast(model.ent)
-    val out = graft.EntryStages.cand(spark, sfDir)
-      .select(col("idA"), col("idB"),
-        (col("dni_a") === col("dni_b")).cast("long").as("label"),
-        col("split_a"), col("split_b"))
-      .join(recs.select(col("rid").as("idA"), col("kid").as("kA")), "idA")
-      .join(recs.select(col("rid").as("idB"), col("kid").as("kB")), "idB")
+    val out = GraphBuild.candidateEntities(spark, sfDir, recs, recs)
       .select(col("idA"), col("idB"), col("kA"), col("kB"), col("label"),
         col("split_a"), col("split_b"))
       .as[(Long, Long, Long, Long, Long, String, String)]
@@ -532,7 +426,7 @@ object KrEar {
           (a, bb, Embed.cosine(e(ka.toInt), e(kb.toInt)), lbl, sa, sb)
         }
       }.toDF("idA", "idB", "cos", "label", "split_a", "split_b")
-    entP.unpersist(); valIds.unpersist(); relT.unpersist(); attrT.unpersist()
+    entIds.unpersist(); valIds.unpersist(); relT.unpersist(); attrT.unpersist()
     out
   }
 

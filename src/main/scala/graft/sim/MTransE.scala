@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.graph.GraphBuild
 import graft.pipe.Splits
+import graft.sim.MicroGrad.{Micro, microQ}
+import graft.sim.NegativeSampler.fnvMix
 
 /**
  * MTransE / ETransE — dual-KG alignment embedding
@@ -23,8 +25,8 @@ import graft.pipe.Splits
  *
  * The epoch alternates the optimizers exactly like the reference's
  * train loop (A pass, B pass, alignment pass, evolution pass). Spark
- * shape matches [[TransE.train]]: model broadcast per epoch, sparse
- * gradients in integer micro-units, one groupByKey shuffle per pass,
+ * shape is [[MicroGrad]]'s exact step: model broadcast per epoch, sparse
+ * gradients in integer micro-units, one reduce-by-row shuffle per pass,
  * only model-sized rows on the driver.
  */
 object MTransE {
@@ -47,15 +49,6 @@ object MTransE {
       relA: Array[Array[Float]], relB: Array[Array[Float]],
       m: Array[Array[Float]], evolveVec: Array[Array[Float]],
       lossByEpoch: Array[Double])
-
-  /** The sampler-oracle hash stream ([[NegativeSampler.fnvMix]]) —
-    * SQL-replayable, unlike the round-3 custom mix. */
-  private def mix(a: Long, b: Long): Long = NegativeSampler.fnvMix(a, b)
-
-  private final val Micro = 1e6
-
-  /** floor(x*1e6+0.5) — per-contribution micro quantizer (TransE). */
-  private def microQ(x: Double): Long = math.floor(x * Micro + 0.5).toLong
 
   /** M v for a dim x dim row-major matrix. */
   private def matVec(m: Array[Array[Float]], v: Array[Float]): Array[Float] = {
@@ -84,89 +77,35 @@ object MTransE {
             cfg: Config = Config()): Model = {
     import spark.implicits._
     val dim = cfg.dim
-    // FNV-seeded init (TransE.initComponent), matrix slots 0..5 —
-    // SQL-replayable, order-independent
-    def init(matId: Int, n: Int) = Array.tabulate(n)(row =>
-      Array.tabulate(dim)(j =>
-        TransE.initComponent(matId, row, j, cfg.seed, dim)))
-    val entA = init(0, nEntA); entA.foreach(Embed.l2normalize)
-    val entB = init(1, nEntB); entB.foreach(Embed.l2normalize)
-    val relA = init(2, nRel)
-    val relB = init(3, nRel)
-    val m = init(4, dim) // dim x dim alignment matrix, one row per id
-    val evolveVec = init(5, nRel)
+    // FNV-seeded init, matrix slots 0..5 — SQL-replayable,
+    // order-independent
+    val entA = MicroGrad.init(0, nEntA, dim, cfg.seed)
+    entA.foreach(Embed.l2normalize)
+    val entB = MicroGrad.init(1, nEntB, dim, cfg.seed)
+    entB.foreach(Embed.l2normalize)
+    val relA = MicroGrad.init(2, nRel, dim, cfg.seed)
+    val relB = MicroGrad.init(3, nRel, dim, cfg.seed)
+    // dim x dim alignment matrix, one row per id
+    val m = MicroGrad.init(4, dim, dim, cfg.seed)
+    val evolveVec = MicroGrad.init(5, nRel, dim, cfg.seed)
+    // gradient rows: off(side) entities and off(2 + side) relations of
+    // KG A (side 0) / B (side 1), off(4) rows of M, off(5) evolution
+    val lay = new MicroGrad.Layout(entA, entB, relA, relB, m, evolveVec)
 
-    val offB = nEntA.toLong
-    val offRelA = offB + nEntB
-    val offRelB = offRelA + nRel
-    val offM = offRelB + nRel
-    val offEvo = offM + dim
-
-    // 8 partitions: gradient rows duplicate per partition (see
-    // TransE.train) — keep the shuffle model-sized, not 64x model-sized.
-    // localCheckpoint truncates lineage so epochs don't re-analyze the
-    // full upstream plan.
     def ds(df: DataFrame): Dataset[(Long, Long, Long)] =
-      df.select(col(df.columns(0)).cast("long"), col(df.columns(1)).cast("long"),
-        col(df.columns(2)).cast("long")).as[(Long, Long, Long)]
-        .repartition(8).localCheckpoint()
+      MicroGrad.epochData(df.select(col(df.columns(0)).cast("long"),
+        col(df.columns(1)).cast("long"), col(df.columns(2)).cast("long"))
+        .as[(Long, Long, Long)])
     val dataA = ds(triplesA); val dataB = ds(triplesB)
     val dataAl = ds(aligned)
 
-    // per-side packed rejection indexes for relation corruption
-    val nRelL0 = nRel.toLong
-    def packed(data: Dataset[(Long, Long, Long)], nEnt: Long): Array[Long] =
-      if (cfg.negRelRate > 0)
-        data.map { case (h, t, r) => (h * nRelL0 + r) * nEnt + t }
-          .collect().sorted
-      else Array.emptyLongArray
-    val packedAB = spark.sparkContext.broadcast(
-      (packed(dataA, nEntA.toLong), packed(dataB, nEntB.toLong)))
+    // per-side rejection indexes for relation corruption
+    val packedA = MicroGrad.rejectionIndex(dataA, nRel.toLong, nEntA.toLong,
+      cfg.negRelRate > 0)
+    val packedB = MicroGrad.rejectionIndex(dataB, nRel.toLong, nEntB.toLong,
+      cfg.negRelRate > 0)
 
     val losses = new Array[Double](cfg.epochs)
-
-    def reduceApply(rows: Dataset[(Long, Array[Long])]): Double = {
-      var loss = 0.0
-      // RDD reduceByKey at width 8 (map-side combine, exact long sums
-      // -> order-free) instead of the 64-partition typed shuffle; see
-      // TransE.train for the rationale
-      val reduced = rows.rdd.reduceByKey({ (x, y) =>
-        val s = new Array[Long](x.length)
-        var i = 0
-        while (i < s.length) { s(i) = x(i) + y(i); i += 1 }
-        s
-      }, 8).collect()
-      reduced.foreach { case (id, gv) =>
-        if (id == -1L) loss = gv(0) / Micro
-        else {
-          val target =
-            if (id < offB) entA(id.toInt)
-            else if (id < offRelA) entB((id - offB).toInt)
-            else if (id < offRelB) relA((id - offRelA).toInt)
-            else if (id < offM) relB((id - offRelB).toInt)
-            else if (id < offEvo) m((id - offM).toInt)
-            else evolveVec((id - offEvo).toInt)
-          var i = 0
-          while (i < dim) {
-            target(i) =
-              (target(i).toDouble - cfg.lr * (gv(i).toDouble / Micro)).toFloat
-            i += 1
-          }
-        }
-      }
-      loss
-    }
-
-    def emit(acc: java.util.HashMap[Long, Array[Long]], lossMicro: Long) = {
-      import scala.jdk.CollectionConverters._
-      val lossRow = {
-        val a = new Array[Long](dim)
-        a(0) = lossMicro
-        (-1L, a)
-      }
-      Iterator.single(lossRow) ++
-        acc.entrySet().asScala.iterator.map(kv => (kv.getKey, kv.getValue))
-    }
 
     var epoch = 0
     while (epoch < cfg.epochs) {
@@ -181,35 +120,20 @@ object MTransE {
       def kgPass(data: Dataset[(Long, Long, Long)], side: Int): Double = {
         val bb = spark.sparkContext.broadcast((entA, entB, relA, relB))
         val nEntL = (if (side == 0) nEntA else nEntB).toLong
-        val entOff = if (side == 0) 0L else offB
-        val relOff = if (side == 0) offRelA else offRelB
+        val packed = if (side == 0) packedA else packedB
         val rows = data.mapPartitions { it =>
           val (ea, eb, ra, rb) = bb.value
           val e = if (side == 0) ea else eb
           val r = if (side == 0) ra else rb
-          val acc = new java.util.HashMap[Long, Array[Long]]()
-          var lossMicro = 0L
-          def g(id: Long): Array[Long] = {
-            var v = acc.get(id)
-            if (v == null) { v = new Array[Long](dim); acc.put(id, v) }
-            v
-          }
-          val sorted =
-            if (side == 0) packedAB.value._1 else packedAB.value._2
+          val acc = new MicroGrad.Acc(dim)
+          val sorted = packed.value
           it.foreach { case (h, t, rl) =>
             // relation corruption: (h, t, r'), rejecting real triples
             var jr = 0
             while (jr < negRelRate && nRelL > 1) {
-              var rNeg = -1L
-              var att = 0
-              while (rNeg < 0 && att < 16) {
-                val d = mix(h * 31 + t + side * 131,
-                  0x9e3779b9L + (ep.toLong * negRelRate + jr) * 31 + att)
-                val c = ((d % nRelL) + nRelL) % nRelL
-                if (c != rl && java.util.Arrays.binarySearch(
-                    sorted, (h * nRelL + c) * nEntL + t) < 0) rNeg = c
-                att += 1
-              }
+              val rNeg = MicroGrad.corruptRel(h * 31 + t + side * 131,
+                att => 0x9e3779b9L + (ep.toLong * negRelRate + jr) * 31 + att,
+                h, t, rl, nRelL, nEntL, sorted)
               if (rNeg >= 0) {
                 val eh = e(h.toInt); val et = e(t.toInt)
                 val er = r(rl.toInt); val ern = r(rNeg.toInt)
@@ -222,9 +146,11 @@ object MTransE {
                 }
                 val l = pos - neg + margin
                 if (l > 0) {
-                  lossMicro += microQ(l)
-                  val gh = g(entOff + h); val gt = g(entOff + t)
-                  val gr = g(relOff + rl); val grn = g(relOff + rNeg)
+                  acc.addLoss(microQ(l))
+                  val gh = acc.row(lay.off(side) + h)
+                  val gt = acc.row(lay.off(side) + t)
+                  val gr = acc.row(lay.off(2 + side) + rl)
+                  val grn = acc.row(lay.off(2 + side) + rNeg)
                   i = 0
                   while (i < dim) {
                     val sp = math.signum(eh(i).toDouble + er(i) - et(i))
@@ -241,7 +167,7 @@ object MTransE {
             }
             var j = 0
             while (j < negRate) {
-              val d = mix(h * 31 + t + side * 131, ep.toLong * negRate + j)
+              val d = fnvMix(h * 31 + t + side * 131, ep.toLong * negRate + j)
               val tNeg = ((d % nEntL) + nEntL) % nEntL
               if (tNeg != t) {
                 val eh = e(h.toInt); val et = e(t.toInt)
@@ -255,9 +181,11 @@ object MTransE {
                 }
                 val l = pos - neg + margin
                 if (l > 0) {
-                  lossMicro += microQ(l)
-                  val gh = g(entOff + h); val gt = g(entOff + t)
-                  val gn = g(entOff + tNeg); val gr = g(relOff + rl)
+                  acc.addLoss(microQ(l))
+                  val gh = acc.row(lay.off(side) + h)
+                  val gt = acc.row(lay.off(side) + t)
+                  val gn = acc.row(lay.off(side) + tNeg)
+                  val gr = acc.row(lay.off(2 + side) + rl)
                   i = 0
                   while (i < dim) {
                     val sp = math.signum(eh(i).toDouble + er(i) - et(i))
@@ -273,9 +201,9 @@ object MTransE {
               j += 1
             }
           }
-          emit(acc, lossMicro)
+          acc.rows
         }
-        val l = reduceApply(rows)
+        val l = lay.step(rows, cfg.lr)
         bb.destroy()
         l
       }
@@ -297,13 +225,7 @@ object MTransE {
       val nEntBL = nEntB.toLong
       val rows = dataAl.mapPartitions { it =>
         val (ea, eb, mm, ev) = bb.value
-        val acc = new java.util.HashMap[Long, Array[Long]]()
-        var lossMicro = 0L
-        def g(id: Long): Array[Long] = {
-          var v = acc.get(id)
-          if (v == null) { v = new Array[Long](dim); acc.put(id, v) }
-          v
-        }
+        val acc = new MicroGrad.Acc(dim)
         it.foreach { case (a, b, rl) =>
           val va = ea(a.toInt)
           val ma = matVec(mm, va)
@@ -333,7 +255,7 @@ object MTransE {
           val negIds = new Array[Long](negRate)
           var nNeg = 0
           while (j < negRate) {
-            val d = mix(a * 53 + b, (ep.toLong + 104729) * negRate + j)
+            val d = fnvMix(a * 53 + b, (ep.toLong + 104729) * negRate + j)
             val bNeg = ((d % nEntBL) + nEntBL) % nEntBL
             if (bNeg != b) { negIds(nNeg) = bNeg; nNeg += 1; negSum += score(bNeg) }
             j += 1
@@ -343,7 +265,7 @@ object MTransE {
             val negMean = negSum / nNeg
             val l = pos - negMean + margin
             if (l > 0) {
-              lossMicro += microQ(l)
+              acc.addLoss(microQ(l))
               val inv = 1.0 / nNeg
               // effective sign vector: sigma_pos - mean_j sigma_negj —
               // exact multiples of 1/nNeg (nNeg <= 2), so every
@@ -354,7 +276,7 @@ object MTransE {
               j = 0
               while (j < nNeg) {
                 val vn = eb(negIds(j).toInt)
-                val gn = g(offB + negIds(j))
+                val gn = acc.row(lay.off(1) + negIds(j))
                 i = 0
                 while (i < dim) {
                   val sn = math.signum(ma(i).toDouble +
@@ -365,9 +287,9 @@ object MTransE {
                 }
                 j += 1
               }
-              val gb = g(offB + b)
-              val gaRow = g(a)
-              val gv = if (vec != null) g(offEvo + rl) else null
+              val gb = acc.row(lay.off(1) + b)
+              val gaRow = acc.row(a)
+              val gv = if (vec != null) acc.row(lay.off(5) + rl) else null
               i = 0
               while (i < dim) {
                 gb(i) -= microQ(sigma(i))
@@ -377,7 +299,7 @@ object MTransE {
                 var k2 = 0
                 while (k2 < dim) { s += mm(k2)(i).toDouble * eff(k2); k2 += 1 }
                 gaRow(i) += microQ(s)
-                val gm = g(offM + i)
+                val gm = acc.row(lay.off(4) + i)
                 k2 = 0
                 while (k2 < dim) { gm(k2) += microQ(eff(i) * va(k2)); k2 += 1 }
                 i += 1
@@ -385,9 +307,9 @@ object MTransE {
             }
           }
         }
-        emit(acc, lossMicro)
+        acc.rows
       }
-      val lossAl = reduceApply(rows)
+      val lossAl = lay.step(rows, cfg.lr)
       bb.destroy()
       entA.foreach(Embed.l2normalize)
       entB.foreach(Embed.l2normalize)
@@ -395,7 +317,7 @@ object MTransE {
       epoch += 1
     }
     dataA.unpersist(); dataB.unpersist(); dataAl.unpersist()
-    packedAB.destroy()
+    packedA.destroy(); packedB.destroy()
     Model(entA, entB, relA, relB, m, evolveVec, losses)
   }
 
@@ -409,11 +331,8 @@ object MTransE {
     val nB = entsB.count().toInt
     val triplesA = GraphBuild.ererTriples(spark, sfDir, "A")
     val triplesB = GraphBuild.ererTriples(spark, sfDir, "B")
-    def recIds(ents: DataFrame) = ents
-      .filter(col("label").rlike("^r[0-9]+$"))
-      .select(substring(col("label"), 2, 20).cast("long").as("rid"),
-        col("ent_id"))
-    val recA = recIds(entsA); val recB = recIds(entsB)
+    val recA = GraphBuild.recordIds(entsA)
+    val recB = GraphBuild.recordIds(entsB)
     val priors = GraphBuild.priorPairs(spark, sfDir)
       .join(recA.select(col("rid").as("idA"), col("ent_id").as("a")), "idA")
       .join(recB.select(col("rid").as("idB"), col("ent_id").as("b")), "idB")
@@ -435,13 +354,8 @@ object MTransE {
     val model = train(spark, triplesA, triplesB, aligned, nA, nB,
       GraphBuild.Relations.size, cfg)
     val mB = spark.sparkContext.broadcast((model.entA, model.entB, model.m))
-    val out = graft.EntryStages.cand(spark, sfDir)
-      .select(col("idA"), col("idB"),
-        (col("dni_a") === col("dni_b")).cast("long").as("label"),
-        col("split_a"), col("split_b"))
-      .join(recA.select(col("rid").as("idA"), col("ent_id").as("ka")), "idA")
-      .join(recB.select(col("rid").as("idB"), col("ent_id").as("kb")), "idB")
-      .select(col("idA"), col("idB"), col("ka"), col("kb"), col("label"),
+    val out = GraphBuild.candidateEntities(spark, sfDir, recA, recB)
+      .select(col("idA"), col("idB"), col("kA"), col("kB"), col("label"),
         col("split_a"), col("split_b"))
       .as[(Long, Long, Long, Long, Long, String, String)]
       .mapPartitions { it =>

@@ -1,0 +1,170 @@
+package graft.sim
+
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.Dataset
+
+/**
+ * The one exact gradient step of the distributed trainers ([[TransE]],
+ * [[KrEar]], [[MTransE]]): per pass the model is BROADCAST, each
+ * partition runs the trainer's loss-and-gradient kernel over its
+ * triples into an [[Acc]], the sparse gradient rows REDUCE BY MODEL ROW
+ * in one shuffle, and only the reduced (model-sized) rows reach the
+ * driver, which applies one float update per touched row
+ * ([[Layout.step]]). The kernels stay in their trainers; this module
+ * owns the replay discipline they share with the DuckDB oracles:
+ *  - init is FNV-seeded per (matrix, row, dim) — [[TransE.initComponent]];
+ *  - every per-triple gradient contribution is quantized to integer
+ *    MICRO-UNITS ([[microQ]]) before the cross-triple sum, so the
+ *    reduction is exact long addition — associative and commutative,
+ *    hence order-free under any partitioning, and the trained floats
+ *    bit-identical in both engines;
+ *  - model values are FLOAT-rounded after each update, the same
+ *    CAST(.. AS REAL) the oracles apply.
+ */
+object MicroGrad {
+
+  /** Gradients ship as exact integer micro-units. */
+  final val Micro = 1e6
+
+  /** Integer micro-unit quantizer (floor(x*1e6 + 0.5), NOT rint:
+    * half-up ties replay as `floor(x*1000000.0 + 0.5)` in SQL, where
+    * rint's half-even would not). */
+  def microQ(x: Double): Long = math.floor(x * Micro + 0.5).toLong
+
+  /** Matrix `slot` of a trainer: `n` rows of FNV-seeded uniform init
+    * ([[TransE.initComponent]]); slots are per-trainer stream ids. */
+  def init(slot: Int, n: Int, dim: Int, seed: Long): Array[Array[Float]] =
+    Array.tabulate(n)(row =>
+      Array.tabulate(dim)(j => TransE.initComponent(slot, row, j, seed, dim)))
+
+  /**
+   * A trainer's epoch data, pinned once for the whole training.
+   * Few wide partitions: each partition emits one dense gradient row
+   * per model row it touches, so gradient-shuffle volume scales with
+   * (partitions x touched rows) — 8 partitions keep the epoch CPU
+   * parallel while bounding duplicate gradient rows; [[Layout.step]]
+   * reduces at the same width, read back from the data.
+   * localCheckpoint truncates the logical plan: otherwise every epoch
+   * re-analyzes the full upstream lineage (dictionary windows/joins),
+   * which dominates the epoch wall time.
+   */
+  def epochData[T](data: Dataset[T]): Dataset[T] =
+    data.repartition(8).localCheckpoint()
+
+  /**
+   * Rejection index for relation corruption: the sorted packed ids
+   * `(h*nRel + r)*nEnt + t` of `data`, whose first three fields are
+   * (head, tail, relation). 8 bytes per triple, broadcast ONCE for the
+   * whole training (the graph is the same order as the entity matrix
+   * already broadcast every epoch); empty unless `enabled`.
+   */
+  def rejectionIndex(data: Dataset[_ <: Product], nRel: Long, nEnt: Long,
+                     enabled: Boolean): Broadcast[Array[Long]] = {
+    val packed =
+      if (enabled)
+        data.rdd.map { p =>
+          val h = p.productElement(0).asInstanceOf[Long]
+          val t = p.productElement(1).asInstanceOf[Long]
+          val r = p.productElement(2).asInstanceOf[Long]
+          (h * nRel + r) * nEnt + t
+        }.collect().sorted
+      else Array.emptyLongArray
+    data.sparkSession.sparkContext.broadcast(packed)
+  }
+
+  /**
+   * Seeded relation corruption (neg_rel_rate): the first of up to 16
+   * draws `c = fnvMix(x, y(att)) mod nRel` with `c != r` whose
+   * corrupted triple `(h, t, c)` is not in `index` ([[rejectionIndex]]),
+   * or -1 when all 16 are rejected.
+   */
+  def corruptRel(x: Long, y: Int => Long, h: Long, t: Long, r: Long,
+                 nRel: Long, nEnt: Long, index: Array[Long]): Long = {
+    var neg = -1L
+    var att = 0
+    while (neg < 0 && att < 16) {
+      val d = NegativeSampler.fnvMix(x, y(att))
+      val c = ((d % nRel) + nRel) % nRel
+      if (c != r && java.util.Arrays.binarySearch(
+          index, (h * nRel + c) * nEnt + t) < 0) neg = c
+      att += 1
+    }
+    neg
+  }
+
+  /**
+   * One partition's sparse gradient accumulator: one micro-unit row per
+   * touched model row (head- and tail-role gradients MERGE here, so
+   * the driver applies exactly one update per touched row — no
+   * order-dependent double-rounding of the same float row) plus the
+   * micro-unit loss.
+   */
+  final class Acc(dim: Int) {
+    private val acc = new java.util.HashMap[Long, Array[Long]]()
+    private var lossMicro = 0L
+
+    def row(id: Long): Array[Long] = {
+      var v = acc.get(id)
+      if (v == null) { v = new Array[Long](dim); acc.put(id, v) }
+      v
+    }
+
+    def addLoss(micros: Long): Unit = lossMicro += micros
+
+    /** The loss row at key -1 (loss in slot 0), then the touched rows. */
+    def rows: Iterator[(Long, Array[Long])] = {
+      import scala.jdk.CollectionConverters._
+      val lossRow = new Array[Long](dim)
+      lossRow(0) = lossMicro
+      Iterator.single((-1L, lossRow)) ++
+        acc.entrySet().asScala.iterator.map(kv => (kv.getKey, kv.getValue))
+    }
+  }
+
+  /**
+   * Global gradient row ids over a trainer's matrices, laid end to end
+   * in argument order: row `i` of matrix `k` is `off(k) + i`. Kernels
+   * capture the layout for [[off]]; only the offsets ship, the
+   * matrices stay on the driver for [[step]].
+   */
+  final class Layout(@transient private val mats: Array[Array[Float]]*)
+      extends Serializable {
+    private val offs: Array[Long] = mats.scanLeft(0L)(_ + _.length).toArray
+
+    def off(k: Int): Long = offs(k)
+
+    /**
+     * ONE shuffle: exact element-wise long sums per model row — RDD
+     * reduceByKey at the epoch data's own width (map-side combine, no
+     * session-wide encoder shuffle); long sums are commutative and
+     * associative, so the reduced values are bit-identical under any
+     * partitioning. Applies `x = x - lr * g` to each touched row
+     * exactly once, float-rounded, and returns the pass's loss.
+     */
+    def step(rows: Dataset[(Long, Array[Long])], lr: Double): Double = {
+      val grads = rows.rdd
+      val reduced = grads.reduceByKey({ (a, b) =>
+        val s = new Array[Long](a.length)
+        var i = 0
+        while (i < s.length) { s(i) = a(i) + b(i); i += 1 }
+        s
+      }, grads.getNumPartitions).collect()
+      var loss = 0.0
+      reduced.foreach { case (id, gv) =>
+        if (id == -1L) loss = gv(0) / Micro
+        else {
+          var k = 0
+          while (k + 1 < mats.length && id >= offs(k + 1)) k += 1
+          val target = mats(k)((id - offs(k)).toInt)
+          var i = 0
+          while (i < target.length) {
+            target(i) =
+              (target(i).toDouble - lr * (gv(i).toDouble / Micro)).toFloat
+            i += 1
+          }
+        }
+      }
+      loss
+    }
+  }
+}

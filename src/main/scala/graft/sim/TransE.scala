@@ -4,19 +4,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.pipe.Splits
+import graft.sim.MicroGrad.{Micro, microQ}
+import graft.sim.NegativeSampler.fnvMix
 
 /**
  * Distributed TransE trainer (SURVEY.md §7.4 v2): margin ranking loss
  * `max(0, ||h+r-t||_1 - ||h+r-t'||_1 + margin)` with L1 subgradients —
  * the reference's objective (/root/reference/ER/transe.py:76-108) —
- * trained as parameter-averaged SGD: per epoch the weight matrices are
- * BROADCAST, each partition accumulates sparse gradients over its
- * triples with HASH-seeded (replayable) negative tail corruption
+ * trained as parameter-averaged SGD through [[MicroGrad]]'s exact step:
+ * per epoch the weight matrices are BROADCAST, each partition
+ * accumulates sparse gradients over its triples with HASH-seeded
+ * (replayable) negative tail corruption
  * (/root/reference/common.py:72-129), gradients REDUCE BY MODEL ROW in
- * one shuffle (exact integer micro-units, so the reduction is
- * order-independent and the training bit-deterministic), and only the
- * reduced model-sized rows reach the driver, which applies the update
- * + L2-normalizes entity rows (/root/reference/ER/transe.py:41-44).
+ * one shuffle, and only the reduced model-sized rows reach the driver,
+ * which applies the update + L2-normalizes entity rows
+ * (/root/reference/ER/transe.py:41-44).
  *
  * Scale shape: broadcast size is O(|entities| x dim) — the model, not
  * the data; gradient traffic is one shuffle of touched-row gradients
@@ -26,19 +28,16 @@ import graft.pipe.Splits
  * decision path.
  *
  * REPLAY DISCIPLINE (the DuckDB oracle re-runs the whole training,
- * [[graft.oracle.OracleSqlTransE]]):
- *  - init is FNV-seeded per (matrix, row, dim) — [[initComponent]] —
- *    not a sequential java.util.Random stream;
+ * [[graft.oracle.OracleSqlTransE]]): [[MicroGrad]]'s FNV-seeded init
+ * ([[initComponent]], not a sequential java.util.Random stream),
+ * micro-unit gradients and float-rounded updates, plus:
  *  - all per-dim arithmetic is EXPLICIT DOUBLE with left-to-right
  *    accumulation order (the SQL unrolls the same literal chains);
- *  - every per-triple gradient contribution is quantized to integer
- *    MICRO-UNITS before the cross-triple sum, so the reduction is
- *    exact integer addition — order-free in both engines (for plain
- *    TransE the contributions are signum sums, already integers; the
- *    floor(x*1e6+0.5) quantizer only matters for TransH);
- *  - model values are FLOAT-rounded after each update/normalize —
- *    IEEE round-to-nearest, the same CAST(.. AS REAL) the oracle
- *    applies — so both engines walk the identical float lattice.
+ *  - for plain TransE the gradient contributions are signum sums,
+ *    already integers; the floor(x*1e6+0.5) quantizer only matters for
+ *    TransH;
+ *  - model values are also FLOAT-rounded after each normalize, so both
+ *    engines walk the identical float lattice.
  *
  * Negative sampling can be restricted PER RELATION via
  * [[Config.tailRanges]]: corrupted tails are drawn from the relation's
@@ -77,14 +76,10 @@ object TransE {
                          wRel: Array[Array[Float]],
                          lossByEpoch: Array[Double])
 
-  /** Seeded mix shared with the sampler oracles — the ONE hash stream
-    * the DuckDB side already replays ([[NegativeSampler.fnvMix]] /
-    * OracleSql.fnvMixChainW). */
-  private def mix(a: Long, b: Long): Long = NegativeSampler.fnvMix(a, b)
-
   /** Salt separating the relation-corruption draw stream from the tail
-    * stream (same `mix`, disjoint y inputs) — shared verbatim with the
-    * DuckDB replay. */
+    * stream (same [[NegativeSampler.fnvMix]] — the ONE hash stream the
+    * DuckDB side replays, OracleSql.fnvMixChainW — disjoint y inputs),
+    * shared verbatim with the DuckDB replay. */
   private[graft] final val RelCorruptSalt = 0x517cc1b727220a95L
 
   /** grid_transe axes — single-sourced into SparkEntry's sweep and the
@@ -108,20 +103,10 @@ object TransE {
     // alias, weakening init independence (ADVICE r4)
     require(j < 64 && dim <= 64, s"init stream packing needs dim <= 64 (dim=$dim)")
     require(matId < 8, s"init stream packing needs matId < 8 (matId=$matId)")
-    val h = mix(row.toLong * 8L + matId, seed * 64L + j)
+    val h = fnvMix(row.toLong * 8L + matId, seed * 64L + j)
     val u = (h >>> 11).toDouble / 9007199254740992.0
     ((u * 2.0 - 1.0) * (6.0 / math.sqrt(dim))).toFloat
   }
-
-  /** Gradients ship as exact integer micro-units: long addition is
-    * associative+commutative, so the shuffle reduction is
-    * order-independent and training deterministic. */
-  private final val Micro = 1e6
-
-  /** Integer micro-unit quantizer (floor(x*1e6 + 0.5), NOT rint:
-    * half-up ties replay as `floor(x*1000000.0 + 0.5)` in SQL, where
-    * rint's half-even would not). */
-  private def microQ(x: Double): Long = math.floor(x * Micro + 0.5).toLong
 
   /**
    * @param triples (h, t, r, idx) with dense ids in [0, nEnt) /
@@ -134,37 +119,21 @@ object TransE {
   def train(spark: SparkSession, triples: DataFrame, nEnt: Int, nRel: Int,
             cfg: Config = Config()): Model = {
     import spark.implicits._
-    def init(matId: Int, n: Int) = Array.tabulate(n)(row =>
-      Array.tabulate(cfg.dim)(j => initComponent(matId, row, j, cfg.seed,
-        cfg.dim)))
-    val ent = init(0, nEnt)
+    val ent = MicroGrad.init(0, nEnt, cfg.dim, cfg.seed)
     ent.foreach(Embed.l2normalize)
-    val rel = init(1, nRel)
+    val rel = MicroGrad.init(1, nRel, cfg.dim, cfg.seed)
     // TransH per-relation hyperplane normals (unit length,
     // /root/reference/ER/transh.py:114-122)
-    val wRel = init(2, nRel)
+    val wRel = MicroGrad.init(2, nRel, cfg.dim, cfg.seed)
     wRel.foreach(Embed.l2normalize)
-    // Few wide partitions: each partition emits one dense gradient row
-    // per entity it touches, so gradient-shuffle volume scales with
-    // (partitions x touched entities) — 8 partitions keeps the epoch
-    // CPU parallel while bounding duplicate gradient rows.
-    // localCheckpoint truncates the logical plan: otherwise every epoch
-    // re-analyzes the full upstream lineage (dictionary windows/joins),
-    // which dominates the epoch wall time.
-    val data = triples.select(col("h").cast("long"), col("t").cast("long"),
-      col("r").cast("long"), col("idx").cast("long"))
-      .as[(Long, Long, Long, Long)].repartition(8).localCheckpoint()
-    // Packed-triple rejection index for relation corruption: 8 bytes
-    // per triple, broadcast ONCE for the whole training (the graph is
-    // O(records x fields) — the same order as the entity matrix already
-    // broadcast every epoch).
-    val nEntL0 = nEnt.toLong; val nRelL0 = nRel.toLong
-    val packedTriples: Array[Long] =
-      if (cfg.negRelRate > 0)
-        data.map { case (h, t, r, _) => (h * nRelL0 + r) * nEntL0 + t }
-          .collect().sorted
-      else Array.emptyLongArray
-    val packedB = spark.sparkContext.broadcast(packedTriples)
+    // gradient rows: entity id in [0, nEnt); relation row at off(1) + r;
+    // hyperplane row at off(2) + r
+    val lay = new MicroGrad.Layout(ent, rel, wRel)
+    val data = MicroGrad.epochData(triples.select(col("h").cast("long"),
+      col("t").cast("long"), col("r").cast("long"), col("idx").cast("long"))
+      .as[(Long, Long, Long, Long)])
+    val packedB = MicroGrad.rejectionIndex(data, nRel.toLong, nEnt.toLong,
+      cfg.negRelRate > 0)
     val losses = new Array[Double](cfg.epochs)
 
     var epoch = 0
@@ -179,26 +148,14 @@ object TransE {
       val tailRanges = cfg.tailRanges
       val nEntL = nEnt.toLong
       val nRelL = nRel.toLong
-      // per-partition sparse gradients + loss, as micro-unit long rows;
-      // keys: entity id in [0, nEnt); relation row at nEnt + r;
-      // hyperplane row at nEnt + nRel + r; loss at -1. One key per
-      // model row (head- and tail-role gradients MERGE here), so the
-      // driver applies exactly one update per touched row — no
-      // order-dependent double-rounding of the same float row.
       val grads = data.mapPartitions { it =>
         val (e, r, wv) = entB.value
         val sortedPacked = packedB.value
-        val acc = new java.util.HashMap[Long, Array[Long]]()
-        var lossMicro = 0L
-        def g(id: Long): Array[Long] = {
-          var v = acc.get(id)
-          if (v == null) { v = new Array[Long](dim); acc.put(id, v) }
-          v
-        }
+        val acc = new MicroGrad.Acc(dim)
         it.foreach { case (h, t, rl, idx) =>
           var j = 0
           while (j < negRate) {
-            val draw = mix(idx, ep.toLong * negRate + j)
+            val draw = fnvMix(idx, ep.toLong * negRate + j)
             val tNeg = tailRanges match {
               case Some(rs) =>
                 val (base, cnt) = rs(rl.toInt)
@@ -218,9 +175,10 @@ object TransE {
                 }
                 val l = pos - neg + margin
                 if (l > 0) {
-                  lossMicro += microQ(l)
-                  val gh = g(h); val gt = g(t); val gn = g(tNeg)
-                  val gr = g(nEntL + rl)
+                  acc.addLoss(microQ(l))
+                  val gh = acc.row(h); val gt = acc.row(t)
+                  val gn = acc.row(tNeg)
+                  val gr = acc.row(lay.off(1) + rl)
                   i = 0
                   while (i < dim) {
                     // exact integers: signum of nonzero doubles is ±1
@@ -252,7 +210,7 @@ object TransE {
                 }
                 val l = pos - neg + margin
                 if (l > 0) {
-                  lossMicro += microQ(l)
+                  acc.addLoss(microQ(l))
                   var swP = 0.0; var swN = 0.0
                   i = 0
                   while (i < dim) {
@@ -262,9 +220,10 @@ object TransE {
                       eh(i).toDouble - en(i) - wduN * w(i) + er(i)) * w(i)
                     i += 1
                   }
-                  val gh = g(h); val gt = g(t); val gn = g(tNeg)
-                  val gr = g(nEntL + rl)
-                  val gw = g(nEntL + nRelL + rl)
+                  val gh = acc.row(h); val gt = acc.row(t)
+                  val gn = acc.row(tNeg)
+                  val gr = acc.row(lay.off(1) + rl)
+                  val gw = acc.row(lay.off(2) + rl)
                   i = 0
                   while (i < dim) {
                     val sp = math.signum(
@@ -291,16 +250,9 @@ object TransE {
           // rejection against the broadcast packed index)
           var jr = 0
           while (jr < negRelRate && nRelL > 1) {
-            var rNeg = -1L
-            var att = 0
-            while (rNeg < 0 && att < 16) {
-              val d = mix(idx,
-                RelCorruptSalt ^ (ep.toLong * negRelRate + jr) * 31 + att)
-              val c = ((d % nRelL) + nRelL) % nRelL
-              if (c != rl && java.util.Arrays.binarySearch(
-                  sortedPacked, (h * nRelL + c) * nEntL + t) < 0) rNeg = c
-              att += 1
-            }
+            val rNeg = MicroGrad.corruptRel(idx,
+              att => RelCorruptSalt ^ (ep.toLong * negRelRate + jr) * 31 + att,
+              h, t, rl, nRelL, nEntL, sortedPacked)
             if (rNeg >= 0) {
               val eh = e(h.toInt); val et = e(t.toInt)
               val er = r(rl.toInt); val ern = r(rNeg.toInt)
@@ -314,9 +266,10 @@ object TransE {
                 }
                 val l = pos - neg + margin
                 if (l > 0) {
-                  lossMicro += microQ(l)
-                  val gh = g(h); val gt = g(t)
-                  val gr = g(nEntL + rl); val grn = g(nEntL + rNeg)
+                  acc.addLoss(microQ(l))
+                  val gh = acc.row(h); val gt = acc.row(t)
+                  val gr = acc.row(lay.off(1) + rl)
+                  val grn = acc.row(lay.off(1) + rNeg)
                   i = 0
                   while (i < dim) {
                     val sp = math.signum(eh(i).toDouble + er(i) - et(i))
@@ -348,7 +301,7 @@ object TransE {
                 }
                 val l = pos - neg + margin
                 if (l > 0) {
-                  lossMicro += microQ(l)
+                  acc.addLoss(microQ(l))
                   var swP = 0.0; var swN = 0.0
                   i = 0
                   while (i < dim) {
@@ -358,10 +311,11 @@ object TransE {
                       eh(i).toDouble - et(i) - wduN * w2(i) + ern(i)) * w2(i)
                     i += 1
                   }
-                  val gh = g(h); val gt = g(t)
-                  val gr = g(nEntL + rl); val grn = g(nEntL + rNeg)
-                  val gw = g(nEntL + nRelL + rl)
-                  val gw2 = g(nEntL + nRelL + rNeg)
+                  val gh = acc.row(h); val gt = acc.row(t)
+                  val gr = acc.row(lay.off(1) + rl)
+                  val grn = acc.row(lay.off(1) + rNeg)
+                  val gw = acc.row(lay.off(2) + rl)
+                  val gw2 = acc.row(lay.off(2) + rNeg)
                   i = 0
                   while (i < dim) {
                     val sp = math.signum(
@@ -384,44 +338,9 @@ object TransE {
             jr += 1
           }
         }
-        import scala.jdk.CollectionConverters._
-        val lossRow = {
-          val a = new Array[Long](dim)
-          a(0) = lossMicro
-          (-1L, a)
-        }
-        Iterator.single(lossRow) ++
-          acc.entrySet().asScala.iterator.map(kv => (kv.getKey, kv.getValue))
+        acc.rows
       }
-      // ONE shuffle: exact element-wise long sums per model row; only
-      // the reduced (model-sized) rows reach the driver. RDD
-      // reduceByKey at the trainer's own width (8) instead of the
-      // typed groupByKey path: map-side combine plus 8 reduce tasks
-      // per epoch, not a session-wide 64-partition encoder shuffle —
-      // long sums are commutative/associative, so the reduced values
-      // are bit-identical under any partitioning.
-      val reduced = grads.rdd.reduceByKey({ (a, b) =>
-        val s = new Array[Long](a.length)
-        var i = 0
-        while (i < s.length) { s(i) = a(i) + b(i); i += 1 }
-        s
-      }, 8).collect()
-
-      reduced.foreach { case (id, gv) =>
-        if (id == -1L) losses(epoch) = gv(0) / Micro
-        else {
-          val target =
-            if (id < nEntL) ent(id.toInt)
-            else if (id < nEntL + nRelL) rel((id - nEntL).toInt)
-            else wRel((id - nEntL - nRelL).toInt)
-          var i = 0
-          while (i < cfg.dim) {
-            target(i) =
-              (target(i).toDouble - cfg.lr * (gv(i).toDouble / Micro)).toFloat
-            i += 1
-          }
-        }
-      }
+      losses(epoch) = lay.step(grads, cfg.lr)
       ent.foreach(Embed.l2normalize)
       // forced under relation corruption: every relation row receives
       // a hinge term from EVERY triple of that relation per epoch
@@ -483,19 +402,11 @@ object TransE {
     val triples = graft.graph.GraphBuild.erTriples(spark, sfDir)
       .withColumn("idx", packedIdx(nEnt.toLong, nRel.toLong))
     val model = train(spark, triples, nEnt, nRel, cfg)
-    // record label -> entity id resolved by join, not a driver map
-    val recEnt = ents.filter(col("label").rlike("^r[0-9]+$"))
-      .select(substring(col("label"), 2, 20).cast("long").as("rid"),
-        col("ent_id"))
+    val recEnt = graft.graph.GraphBuild.recordIds(ents)
     val entB = spark.sparkContext.broadcast(model.ent)
-    graft.EntryStages.cand(spark, sfDir)
-      .select(col("idA"), col("idB"), col("block_key"),
-        (col("dni_a") === col("dni_b")).cast("long").as("label"),
-        col("split_a"), col("split_b"))
-      .join(recEnt.select(col("rid").as("idA"), col("ent_id").as("entA")), "idA")
-      .join(recEnt.select(col("rid").as("idB"), col("ent_id").as("entB")), "idB")
-      .select(col("idA"), col("idB"), col("block_key"), col("entA"),
-        col("entB"), col("label"), col("split_a"), col("split_b"))
+    graft.graph.GraphBuild.candidateEntities(spark, sfDir, recEnt, recEnt)
+      .select(col("idA"), col("idB"), col("block_key"), col("kA"),
+        col("kB"), col("label"), col("split_a"), col("split_b"))
       .as[(Long, Long, String, Long, Long, Long, String, String)]
       .mapPartitions { it =>
         val e = entB.value

@@ -17,6 +17,10 @@ class KrEarSpec extends AnyFunSuite {
     assert(relT.count() > 0 && attrT.count() > 0)
     val model = KrEar.train(spark, relT, attrT, nEnt, nVal,
       KrEar.Config(epochs = 5))
+    // bit-exact pin of the trained floats and losses (TrainPins)
+    assert(TrainPins.sha(Seq(model.ent, model.value, model.rel, model.attr, model.proj),
+      Seq(model.relLoss, model.attrLoss)) ==
+      "d046b8225cbd102ccabb9db5089322c8fd3f04e5cdb85e0ecf86fcc67a0395b0")
     assert(model.relLoss.head > model.relLoss.last,
       s"rel loss did not decrease: ${model.relLoss.toSeq}")
     assert(model.attrLoss.head > model.attrLoss.last,
@@ -41,6 +45,12 @@ class KrEarSpec extends AnyFunSuite {
       KrEar.Config(epochs = 4))
     val m = KrEar.train(spark, relT, attrT, nEnt, nVal,
       KrEar.Config(epochs = 4, negRelRate = 1))
+    assert(TrainPins.sha(Seq(base.ent, base.value, base.rel, base.attr, base.proj),
+      Seq(base.relLoss, base.attrLoss)) ==
+      "31e43209b8750c10c7b5d8cac4ef709d5ac3a03e48374d251dccb199e0dfc36d")
+    assert(TrainPins.sha(Seq(m.ent, m.value, m.rel, m.attr, m.proj),
+      Seq(m.relLoss, m.attrLoss)) ==
+      "df23d7d9ab281856c40e31b5034ef04e8bca76153a96782404893bd9b46a9d00")
     // corruption adds hinge terms from epoch 0, in both encoders
     assert(m.relLoss.head > base.relLoss.head,
       s"rel: ${m.relLoss.head} vs ${base.relLoss.head}")

@@ -30,12 +30,19 @@ class MTransESpec extends AnyFunSuite {
 
   test("MTransE aligns the two KGs; ETransE adds evolution vectors") {
     val row = MTransE.eval(spark, sf, MTransE.Config(epochs = 6)).head()
+    // bit-exact pin of theta, f1, precision, recall, mrr (TrainPins)
+    assert(TrainPins.evalBits(row) == TrainPins.bits(
+      0.56, 0.18652849740932642, 0.3050847457627119,
+      0.13432835820895522, 0.6822138843283583))
     // reference's ERER tier is weak on census (F1 <= 0.2); assert a
     // usable ranking signal in that tier
     assert(row.getAs[Double]("f1") > 0.05, s"mtranse f1 ${row.get(4)}")
     assert(row.getAs[Double]("mrr") > 0.1)
     val evoRow = MTransE.eval(spark, sf,
       MTransE.Config(epochs = 6, evolve = true)).head()
+    assert(TrainPins.evalBits(evoRow) == TrainPins.bits(
+      0.58, 0.1907356948228883, 0.35353535353535354,
+      0.13059701492537312, 0.6756840373134327))
     assert(evoRow.getAs[Double]("f1") > 0.05, s"etranse f1 ${evoRow.get(4)}")
     assert(evoRow.getAs[Long]("evolve") == 1L)
   }
@@ -43,6 +50,9 @@ class MTransESpec extends AnyFunSuite {
   test("MTransE neg_rel_rate: per-KG relation corruption, bounded and additive") {
     val nrr = MTransE.eval(spark, sf,
       MTransE.Config(epochs = 4, negRelRate = 1)).head()
+    assert(TrainPins.evalBits(nrr) == TrainPins.bits(
+      0.64, 0.2541966426858513, 0.35570469798657717,
+      0.19776119402985073, 0.6719526940298508))
     // quality stays in the ERER tier with relation corruption on
     assert(nrr.getAs[Double]("f1") > 0.05, s"f1 ${nrr.get(4)}")
     assert(nrr.getAs[Double]("mrr") > 0.1)

@@ -23,6 +23,9 @@ class TransESpec extends AnyFunSuite {
     // entity rows stay L2-normalized
     val norm = math.sqrt(model.ent(0).map(x => x.toDouble * x).sum)
     assert(math.abs(norm - 1.0) < 1e-4)
+    // bit-exact pin of the trained floats and losses (TrainPins)
+    assert(TrainPins.sha(Seq(model.ent, model.rel, model.wRel), Seq(model.lossByEpoch)) ==
+      "73c9d9b8bd2d59472388a658f2d72b210cb90481cfeba232f104e9cac6c375c3")
   }
 
   test("TransH (hyperplane projection) converges with unit normals") {
@@ -36,6 +39,8 @@ class TransESpec extends AnyFunSuite {
       s"TransH loss did not decrease: ${model.lossByEpoch.toSeq}")
     val wNorm = math.sqrt(model.wRel(0).map(x => x.toDouble * x).sum)
     assert(math.abs(wNorm - 1.0) < 1e-4)
+    assert(TrainPins.sha(Seq(model.ent, model.rel, model.wRel), Seq(model.lossByEpoch)) ==
+      "c54936b812fa140f5e16eaae618f2de6723751ab6aae6433b519edb447126f1c")
   }
 
   test("TransE linkage eval produces reference-tier quality") {
@@ -148,6 +153,10 @@ class TransESpec extends AnyFunSuite {
     val base = TransE.train(spark, triples, nEnt,
       graph.GraphBuild.Relations.size,
       TransE.Config(epochs = 6, negRelRate = 0))
+    assert(TrainPins.sha(Seq(model.ent, model.rel, model.wRel), Seq(model.lossByEpoch)) ==
+      "9105495ed90616ce5c289350bc5fc1b487f63eaa72a585954fe9acf9adb7e78a")
+    assert(TrainPins.sha(Seq(base.ent, base.rel, base.wRel), Seq(base.lossByEpoch)) ==
+      "73c9d9b8bd2d59472388a658f2d72b210cb90481cfeba232f104e9cac6c375c3")
     assert(model.lossByEpoch.head > base.lossByEpoch.head,
       s"negRelRate=1 must add hinge terms: ${model.lossByEpoch.head} " +
         s"vs ${base.lossByEpoch.head}")
