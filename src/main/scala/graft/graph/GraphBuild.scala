@@ -185,14 +185,17 @@ object GraphBuild {
   // ------------------------- ERER (dual-KG) -------------------------
 
   /** Per-side entity dictionary (disjoint KGs A and B,
-    * /root/reference/ERER/model.py:18-41). */
+    * /root/reference/ERER/model.py:18-41). Memoized per (session,
+    * sfDir, side) like [[erEntities]]: the side's triples and its
+    * record ids read the same one. */
   def ererEntities(spark: SparkSession, sfDir: String,
-                   side: String): DataFrame = {
-    val t = rawTriples(spark, sfDir, Some(side))
-    val labels = t.select(col("rec").as("label"))
-      .union(t.select(col("value").as("label"))).distinct()
-    denseIds(labels, "label", "ent_id")
-  }
+                   side: String): DataFrame =
+    EntryStages.memo(spark, sfDir, s"ererEntities:$side") {
+      val t = rawTriples(spark, sfDir, Some(side))
+      val labels = t.select(col("rec").as("label"))
+        .union(t.select(col("value").as("label"))).distinct()
+      denseIds(labels, "label", "ent_id")
+    }
 
   /** Per-side ER triples with the side's own dictionary. */
   def ererTriples(spark: SparkSession, sfDir: String,

@@ -65,4 +65,19 @@ object Splits {
   def testEval(scored: DataFrame, dist: Column, label: Column,
                theta: Double): DataFrame =
     Metrics.fullEval(test(scored), dist, label, theta)
+
+  /** The trainer evals' one-row summary (dim, epochs, theta, f1,
+    * precision, recall, mrr) of `scored`'s `label` column: [[theta]] on
+    * the train pairs, [[testEval]] on the test pairs at that theta. */
+  def summary(scored: DataFrame, dist: Column, dim: Int,
+              epochs: Int): DataFrame = {
+    val spark = scored.sparkSession
+    import spark.implicits._
+    val th = theta(scored, dist, col("label"))
+    val m = testEval(scored, dist, col("label"), th).head()
+    Seq((dim.toLong, epochs.toLong, th, m.getAs[Double]("f1"),
+      m.getAs[Double]("precision"), m.getAs[Double]("recall"),
+      m.getAs[Double]("mrr")))
+      .toDF("dim", "epochs", "theta", "f1", "precision", "recall", "mrr")
+  }
 }

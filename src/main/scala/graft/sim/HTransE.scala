@@ -57,8 +57,10 @@ object HTransE {
         maxSide, topR)
       val blockCost = cells.groupBy("block_key")
         .agg(sum("cell_micros").as("block_cost_micros"))
+      // block costs are one row per block — broadcastable at any SF
+      // where blocks fit a task (they must, for the solver)
       base
-        .join(broadcastIfSmall(blockCost), Seq("block_key"), "left")
+        .join(broadcast(blockCost), Seq("block_key"), "left")
         .join(cells.select(col("block_key"), col("idA"), col("idB"),
           lit(1L).as("in_assignment")),
           Seq("block_key", "idA", "idB"), "left")
@@ -69,24 +71,10 @@ object HTransE {
           col("label"), col("split_a"), col("split_b"))
     }
 
-  /** block costs are one row per block — broadcastable at any SF where
-    * blocks fit a task (they must, for the solver); at 100 TB the
-    * optimizer's size estimate falls back to a shuffle join on the
-    * block key, which is also fine (same key as the cells shuffle). */
-  private def broadcastIfSmall(df: DataFrame): DataFrame =
-    broadcast(df)
-
   /** Summary row (same shape as transe_eval): theta swept on the
     * TRAIN split, F1/MRR on the TEST split. */
   def eval(spark: SparkSession, sfDir: String,
-           cfg: TransE.Config = TransE.Config()): DataFrame = {
-    import spark.implicits._
-    val all = pairScores(spark, sfDir, cfg) // memo-persisted
-    val theta = Splits.theta(all, col("dist"), col("label"))
-    val m = Splits.testEval(all, col("dist"), col("label"), theta).head()
-    Seq((cfg.dim.toLong, cfg.epochs.toLong, theta,
-      m.getAs[Double]("f1"), m.getAs[Double]("precision"),
-      m.getAs[Double]("recall"), m.getAs[Double]("mrr")))
-      .toDF("dim", "epochs", "theta", "f1", "precision", "recall", "mrr")
-  }
+           cfg: TransE.Config = TransE.Config()): DataFrame =
+    Splits.summary(pairScores(spark, sfDir, cfg), // memo-persisted
+      col("dist"), cfg.dim, cfg.epochs)
 }

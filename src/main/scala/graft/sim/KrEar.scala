@@ -13,7 +13,8 @@ import graft.sim.NegativeSampler.fnvMix
  * ATTRIBUTIONAL encoders (/root/reference/EAR/kr_ear.py:148-224):
  *
  * - relational triples (record -> shared entity) train with the plain
- *   TransE margin loss `max(0, ||h+r-t||_1 - mean||h+r-t'||_1 + m)`;
+ *   TransE margin loss `max(0, ||h+r-t||_1 - ||h+r-t'||_1 + m)`, one
+ *   hinge per corrupted tail or relation: [[MicroGrad.hinge]];
  * - attributional triples (record -> literal value) train with
  *   `score = ||tanh(h_proj + a) - v||_1` hinged against corrupted
  *   VALUES, where `h_proj = h - (h.n_a) n_a` projects the record onto
@@ -93,14 +94,15 @@ object KrEar {
     val relT = ear.filter(col("is_attr") === 0)
     val attrT = ear.filter(col("is_attr") === 1)
     // entity ids: heads (records) + relational tails, densely packed —
-    // distributed sort+zipWithIndex, not a single-task global window
+    // distributed sort+zipWithIndex, not a single-task global window;
+    // cached before the remap joins and the callers' counts read them
     val entIds = GraphBuild.denseIds(
       relT.select(col("h").as("eid"))
         .union(attrT.select(col("h").as("eid")))
         .union(relT.select(col("t").as("eid"))).distinct(),
-      "eid", "kid")
+      "eid", "kid").persist()
     val valIds = GraphBuild.denseIds(
-      attrT.select(col("t").as("eid")).distinct(), "eid", "kid")
+      attrT.select(col("t").as("eid")).distinct(), "eid", "kid").persist()
     def remapRel(df: DataFrame, idx: Map[Long, Int]): DataFrame = {
       val m = typedLit(idx.map { case (k, v) => (k, v.toLong) })
       df.withColumn("rk", element_at(m, col("r")))
@@ -118,7 +120,7 @@ object KrEar {
     val relP = relOut.persist(); val attrP = attrOut.persist()
     relP.count(); attrP.count()
     ear.unpersist()
-    (entIds.persist(), valIds.persist(), relP, attrP)
+    (entIds, valIds, relP, attrP)
   }
 
   def train(spark: SparkSession, relTriples: DataFrame,
@@ -177,34 +179,10 @@ object KrEar {
             val rNeg = MicroGrad.corruptRel(h * 31 + t,
               att => 0x27220a95L + (ep.toLong * negRelRate + jr) * 31 + att,
               h, t, rl, nRelL, nEntL, relSorted)
-            if (rNeg >= 0) {
-              val eh = e(h.toInt); val et = e(t.toInt)
-              val er = r(rl.toInt); val ern = r(rNeg.toInt)
-              var pos = 0.0; var neg = 0.0
-              var i = 0
-              while (i < dim) {
-                pos += math.abs(eh(i).toDouble + er(i) - et(i))
-                neg += math.abs(eh(i).toDouble + ern(i) - et(i))
-                i += 1
-              }
-              val l = pos - neg + margin
-              if (l > 0) {
-                acc.addLoss(microQ(l))
-                val gh = acc.row(h); val gt = acc.row(t)
-                val gr = acc.row(lay.off(2) + rl)
-                val grn = acc.row(lay.off(2) + rNeg)
-                i = 0
-                while (i < dim) {
-                  val sp = math.signum(eh(i).toDouble + er(i) - et(i))
-                  val sn = math.signum(eh(i).toDouble + ern(i) - et(i))
-                  val dm = ((sp - sn) * Micro).toLong
-                  gh(i) += dm; gt(i) -= dm
-                  gr(i) += (sp * Micro).toLong
-                  grn(i) -= (sn * Micro).toLong
-                  i += 1
-                }
-              }
-            }
+            if (rNeg >= 0)
+              MicroGrad.hinge(acc, margin, lay.off(0), lay.off(2),
+                h, rl, t, rNeg, t, e(h.toInt), r(rl.toInt), e(t.toInt),
+                r(rNeg.toInt), e(t.toInt))
             jr += 1
           }
           var j = 0
@@ -213,33 +191,10 @@ object KrEar {
               val d = fnvMix(h * 31 + t, ep.toLong * negRate + j)
               ((d % nEntL) + nEntL) % nEntL
             }
-            if (tNeg != t) {
-              val eh = e(h.toInt); val et = e(t.toInt)
-              val en = e(tNeg.toInt); val er = r(rl.toInt)
-              var pos = 0.0; var neg = 0.0
-              var i = 0
-              while (i < dim) {
-                pos += math.abs(eh(i).toDouble + er(i) - et(i))
-                neg += math.abs(eh(i).toDouble + er(i) - en(i))
-                i += 1
-              }
-              val l = pos - neg + margin
-              if (l > 0) {
-                acc.addLoss(microQ(l))
-                val gh = acc.row(h); val gt = acc.row(t)
-                val gn = acc.row(tNeg); val gr = acc.row(lay.off(2) + rl)
-                i = 0
-                while (i < dim) {
-                  val sp = math.signum(eh(i).toDouble + er(i) - et(i))
-                  val sn = math.signum(eh(i).toDouble + er(i) - en(i))
-                  val dm = ((sp - sn) * Micro).toLong
-                  gh(i) += dm; gr(i) += dm
-                  gt(i) -= (sp * Micro).toLong
-                  gn(i) += (sn * Micro).toLong
-                  i += 1
-                }
-              }
-            }
+            if (tNeg != t)
+              MicroGrad.hinge(acc, margin, lay.off(0), lay.off(2),
+                h, rl, t, rl, tNeg, e(h.toInt), r(rl.toInt), e(t.toInt),
+                r(rl.toInt), e(tNeg.toInt))
             j += 1
           }
         }
@@ -401,22 +356,25 @@ object KrEar {
     Model(ent, value, rel, attr, proj, relLoss, attrLoss)
   }
 
-  /** Cosine pair scores over trained RECORD embeddings (the EAR census
-    * eval shape, /root/reference/tests/ear/test_kr_ear.py). */
-  def pairScores(spark: SparkSession, sfDir: String,
-                 cfg: Config = Config()): DataFrame = {
+  /** Summary row of cosine pair scores over trained RECORD embeddings
+    * (the EAR census eval shape, /root/reference/tests/ear/test_kr_ear.py):
+    * theta swept on the TRAIN-split pairs only, F1/P/R and MRR reported
+    * on the TEST split (never tuned on the reported set). The
+    * dictionaries stay cached until the row is collected. */
+  def eval(spark: SparkSession, sfDir: String,
+           cfg: Config = Config()): DataFrame = {
     import spark.implicits._
     val (entIds, valIds, relT, attrT) = prepare(spark, sfDir)
-    val nEnt = entIds.count().toInt
-    val nVal = valIds.count().toInt
-    val model = train(spark, relT, attrT, nEnt, nVal, cfg)
+    val model = train(spark, relT, attrT, entIds.count().toInt,
+      valIds.count().toInt, cfg)
+    relT.unpersist(); attrT.unpersist()
     // record rows of the ER dictionary -> kr entity ids, by join
     val recs = GraphBuild.recordIds(GraphBuild.erEntities(spark, sfDir))
       .select(col("rid"), col("ent_id").as("eid"))
       .join(entIds, "eid")
       .select(col("rid"), col("kid").as("ent_id"))
     val entB = spark.sparkContext.broadcast(model.ent)
-    val out = GraphBuild.candidateEntities(spark, sfDir, recs, recs)
+    val all = GraphBuild.candidateEntities(spark, sfDir, recs, recs)
       .select(col("idA"), col("idB"), col("kA"), col("kB"), col("label"),
         col("split_a"), col("split_b"))
       .as[(Long, Long, Long, Long, Long, String, String)]
@@ -425,24 +383,9 @@ object KrEar {
         it.map { case (a, bb, ka, kb, lbl, sa, sb) =>
           (a, bb, Embed.cosine(e(ka.toInt), e(kb.toInt)), lbl, sa, sb)
         }
-      }.toDF("idA", "idB", "cos", "label", "split_a", "split_b")
-    entIds.unpersist(); valIds.unpersist(); relT.unpersist(); attrT.unpersist()
-    out
-  }
-
-  /** Summary row: theta swept on the TRAIN-split pairs only, F1/P/R and
-    * MRR reported on the TEST split (never tuned on the reported set). */
-  def eval(spark: SparkSession, sfDir: String,
-           cfg: Config = Config()): DataFrame = {
-    import spark.implicits._
-    val all = pairScores(spark, sfDir, cfg).persist()
-    val dist = lit(1.0) - col("cos")
-    val theta = Splits.theta(all, dist, col("label"))
-    val m = Splits.testEval(all, dist, col("label"), theta).head()
-    all.unpersist()
-    Seq((cfg.dim.toLong, cfg.epochs.toLong, theta,
-      m.getAs[Double]("f1"), m.getAs[Double]("precision"),
-      m.getAs[Double]("recall"), m.getAs[Double]("mrr")))
-      .toDF("dim", "epochs", "theta", "f1", "precision", "recall", "mrr")
+      }.toDF("idA", "idB", "cos", "label", "split_a", "split_b").persist()
+    val row = Splits.summary(all, lit(1.0) - col("cos"), cfg.dim, cfg.epochs)
+    all.unpersist(); entIds.unpersist(); valIds.unpersist()
+    row
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.graph.GraphBuild
 import graft.pipe.Splits
-import graft.sim.MicroGrad.{Micro, microQ}
+import graft.sim.MicroGrad.microQ
 import graft.sim.NegativeSampler.fnvMix
 
 /**
@@ -14,7 +14,8 @@ import graft.sim.NegativeSampler.fnvMix
  * /root/reference/ERER/etranse.py:60-110,300-340):
  *
  * - KG A and KG B each train a plain TransE margin loss over their OWN
- *   entity/relation tables (disjoint dictionaries);
+ *   entity/relation tables (disjoint dictionaries): [[MicroGrad.hinge]]
+ *   at each side's row offsets;
  * - an ALIGNMENT model learns a dim x dim translation matrix M over
  *   the prior pairs: hinge on ||M e_a - e_b||_1 against corrupted
  *   partners (mtranse.py _calc_alignment);
@@ -134,70 +135,20 @@ object MTransE {
               val rNeg = MicroGrad.corruptRel(h * 31 + t + side * 131,
                 att => 0x9e3779b9L + (ep.toLong * negRelRate + jr) * 31 + att,
                 h, t, rl, nRelL, nEntL, sorted)
-              if (rNeg >= 0) {
-                val eh = e(h.toInt); val et = e(t.toInt)
-                val er = r(rl.toInt); val ern = r(rNeg.toInt)
-                var pos = 0.0; var neg = 0.0
-                var i = 0
-                while (i < dim) {
-                  pos += math.abs(eh(i).toDouble + er(i) - et(i))
-                  neg += math.abs(eh(i).toDouble + ern(i) - et(i))
-                  i += 1
-                }
-                val l = pos - neg + margin
-                if (l > 0) {
-                  acc.addLoss(microQ(l))
-                  val gh = acc.row(lay.off(side) + h)
-                  val gt = acc.row(lay.off(side) + t)
-                  val gr = acc.row(lay.off(2 + side) + rl)
-                  val grn = acc.row(lay.off(2 + side) + rNeg)
-                  i = 0
-                  while (i < dim) {
-                    val sp = math.signum(eh(i).toDouble + er(i) - et(i))
-                    val sn = math.signum(eh(i).toDouble + ern(i) - et(i))
-                    val dm = ((sp - sn) * Micro).toLong
-                    gh(i) += dm; gt(i) -= dm
-                    gr(i) += (sp * Micro).toLong
-                    grn(i) -= (sn * Micro).toLong
-                    i += 1
-                  }
-                }
-              }
+              if (rNeg >= 0)
+                MicroGrad.hinge(acc, margin, lay.off(side), lay.off(2 + side),
+                  h, rl, t, rNeg, t, e(h.toInt), r(rl.toInt), e(t.toInt),
+                  r(rNeg.toInt), e(t.toInt))
               jr += 1
             }
             var j = 0
             while (j < negRate) {
               val d = fnvMix(h * 31 + t + side * 131, ep.toLong * negRate + j)
               val tNeg = ((d % nEntL) + nEntL) % nEntL
-              if (tNeg != t) {
-                val eh = e(h.toInt); val et = e(t.toInt)
-                val en = e(tNeg.toInt); val er = r(rl.toInt)
-                var pos = 0.0; var neg = 0.0
-                var i = 0
-                while (i < dim) {
-                  pos += math.abs(eh(i).toDouble + er(i) - et(i))
-                  neg += math.abs(eh(i).toDouble + er(i) - en(i))
-                  i += 1
-                }
-                val l = pos - neg + margin
-                if (l > 0) {
-                  acc.addLoss(microQ(l))
-                  val gh = acc.row(lay.off(side) + h)
-                  val gt = acc.row(lay.off(side) + t)
-                  val gn = acc.row(lay.off(side) + tNeg)
-                  val gr = acc.row(lay.off(2 + side) + rl)
-                  i = 0
-                  while (i < dim) {
-                    val sp = math.signum(eh(i).toDouble + er(i) - et(i))
-                    val sn = math.signum(eh(i).toDouble + er(i) - en(i))
-                    val dm = ((sp - sn) * Micro).toLong
-                    gh(i) += dm; gr(i) += dm
-                    gt(i) -= (sp * Micro).toLong
-                    gn(i) += (sn * Micro).toLong
-                    i += 1
-                  }
-                }
-              }
+              if (tNeg != t)
+                MicroGrad.hinge(acc, margin, lay.off(side), lay.off(2 + side),
+                  h, rl, t, rl, tNeg, e(h.toInt), r(rl.toInt), e(t.toInt),
+                  r(rl.toInt), e(tNeg.toInt))
               j += 1
             }
           }
@@ -325,8 +276,8 @@ object MTransE {
   def pairScores(spark: SparkSession, sfDir: String,
                  cfg: Config = Config()): DataFrame = {
     import spark.implicits._
-    val entsA = GraphBuild.ererEntities(spark, sfDir, "A").persist()
-    val entsB = GraphBuild.ererEntities(spark, sfDir, "B").persist()
+    val entsA = GraphBuild.ererEntities(spark, sfDir, "A")
+    val entsB = GraphBuild.ererEntities(spark, sfDir, "B")
     val nA = entsA.count().toInt
     val nB = entsB.count().toInt
     val triplesA = GraphBuild.ererTriples(spark, sfDir, "A")
@@ -354,7 +305,7 @@ object MTransE {
     val model = train(spark, triplesA, triplesB, aligned, nA, nB,
       GraphBuild.Relations.size, cfg)
     val mB = spark.sparkContext.broadcast((model.entA, model.entB, model.m))
-    val out = GraphBuild.candidateEntities(spark, sfDir, recA, recB)
+    GraphBuild.candidateEntities(spark, sfDir, recA, recB)
       .select(col("idA"), col("idB"), col("kA"), col("kB"), col("label"),
         col("split_a"), col("split_b"))
       .as[(Long, Long, Long, Long, Long, String, String)]
@@ -365,24 +316,18 @@ object MTransE {
             sa, sb)
         }
       }.toDF("idA", "idB", "cos", "label", "split_a", "split_b")
-    entsA.unpersist(); entsB.unpersist()
-    out
   }
 
   /** Summary row (shared by mtranse_eval / etranse_eval): theta swept
     * on the TRAIN-split pairs only, metrics reported on the TEST split. */
   def eval(spark: SparkSession, sfDir: String,
            cfg: Config = Config()): DataFrame = {
-    import spark.implicits._
     val all = pairScores(spark, sfDir, cfg).persist()
-    val dist = lit(1.0) - col("cos")
-    val theta = Splits.theta(all, dist, col("label"))
-    val m = Splits.testEval(all, dist, col("label"), theta).head()
+    val row = Splits.summary(all, lit(1.0) - col("cos"), cfg.dim, cfg.epochs)
+      .select(col("dim"), col("epochs"),
+        lit(if (cfg.evolve) 1L else 0L).as("evolve"), col("theta"),
+        col("f1"), col("precision"), col("recall"), col("mrr"))
     all.unpersist()
-    Seq((cfg.dim.toLong, cfg.epochs.toLong, if (cfg.evolve) 1L else 0L, theta,
-      m.getAs[Double]("f1"), m.getAs[Double]("precision"),
-      m.getAs[Double]("recall"), m.getAs[Double]("mrr")))
-      .toDF("dim", "epochs", "evolve", "theta", "f1", "precision", "recall",
-        "mrr")
+    row
   }
 }

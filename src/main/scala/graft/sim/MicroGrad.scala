@@ -10,7 +10,8 @@ import org.apache.spark.sql.Dataset
  * triples into an [[Acc]], the sparse gradient rows REDUCE BY MODEL ROW
  * in one shuffle, and only the reduced (model-sized) rows reach the
  * driver, which applies one float update per touched row
- * ([[Layout.step]]). The kernels stay in their trainers; this module
+ * ([[Layout.step]]). The plain TransE hinge all three train is here
+ * ([[hinge]]); their other kernels stay in their trainers. This module
  * owns the replay discipline they share with the DuckDB oracles:
  *  - init is FNV-seeded per (matrix, row, dim) — [[TransE.initComponent]];
  *  - every per-triple gradient contribution is quantized to integer
@@ -90,6 +91,51 @@ object MicroGrad {
       att += 1
     }
     neg
+  }
+
+  /**
+   * The plain TransE hinge `max(0, |h+r-t|_1 - |h+r'-t'|_1 + margin)`
+   * of the true triple (h, r, t) against one corruption, its loss and
+   * L1 subgradients added to `acc` in micro-units (exact integers: the
+   * signum of a nonzero double is ±1). Entity `x` is gradient row
+   * `entOff + x`, relation `x` is row `relOff + x` ([[Layout.off]]). The
+   * two arms are the two corruptions:
+   *  - tail (h, r, t'): pass `rNeg = r`, `ern = er`; h and r get
+   *    `sp - sn`, t gets `-sp`, t' gets `+sn`;
+   *  - relation (h, r', t): pass `tNeg = t`, `etn = et`; h gets
+   *    `sp - sn`, t gets `sn - sp`, r gets `+sp`, r' gets `-sn`.
+   * The id a corruption keeps names one gradient row, where the two
+   * integer terms merge. The negative draws (seeds, salts, tail ranges)
+   * stay with each trainer: each is its own oracle-replayed stream.
+   */
+  def hinge(acc: Acc, margin: Double, entOff: Long, relOff: Long,
+            h: Long, r: Long, t: Long, rNeg: Long, tNeg: Long,
+            eh: Array[Float], er: Array[Float], et: Array[Float],
+            ern: Array[Float], etn: Array[Float]): Unit = {
+    val dim = eh.length
+    var pos = 0.0; var neg = 0.0
+    var i = 0
+    while (i < dim) {
+      pos += math.abs(eh(i).toDouble + er(i) - et(i))
+      neg += math.abs(eh(i).toDouble + ern(i) - etn(i))
+      i += 1
+    }
+    val l = pos - neg + margin
+    if (l > 0) {
+      acc.addLoss(microQ(l))
+      val gh = acc.row(entOff + h); val gt = acc.row(entOff + t)
+      val gtn = acc.row(entOff + tNeg)
+      val gr = acc.row(relOff + r); val grn = acc.row(relOff + rNeg)
+      i = 0
+      while (i < dim) {
+        val sp = (math.signum(eh(i).toDouble + er(i) - et(i)) * Micro).toLong
+        val sn = (math.signum(eh(i).toDouble + ern(i) - etn(i)) * Micro).toLong
+        gh(i) += sp - sn
+        gr(i) += sp; grn(i) -= sn
+        gt(i) -= sp; gtn(i) += sn
+        i += 1
+      }
+    }
   }
 
   /**

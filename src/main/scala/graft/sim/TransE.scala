@@ -33,9 +33,9 @@ import graft.sim.NegativeSampler.fnvMix
  * micro-unit gradients and float-rounded updates, plus:
  *  - all per-dim arithmetic is EXPLICIT DOUBLE with left-to-right
  *    accumulation order (the SQL unrolls the same literal chains);
- *  - for plain TransE the gradient contributions are signum sums,
- *    already integers; the floor(x*1e6+0.5) quantizer only matters for
- *    TransH;
+ *  - for plain TransE ([[MicroGrad.hinge]]) the gradient contributions
+ *    are signum sums, already integers; the floor(x*1e6+0.5) quantizer
+ *    only matters for TransH;
  *  - model values are also FLOAT-rounded after each normalize, so both
  *    engines walk the identical float lattice.
  *
@@ -165,33 +165,10 @@ object TransE {
             if (tNeg >= 0 && tNeg != t) {
               val eh = e(h.toInt); val et = e(t.toInt)
               val en = e(tNeg.toInt); val er = r(rl.toInt)
-              if (!transH) {
-                var pos = 0.0; var neg = 0.0
-                var i = 0
-                while (i < dim) {
-                  pos += math.abs(eh(i).toDouble + er(i) - et(i))
-                  neg += math.abs(eh(i).toDouble + er(i) - en(i))
-                  i += 1
-                }
-                val l = pos - neg + margin
-                if (l > 0) {
-                  acc.addLoss(microQ(l))
-                  val gh = acc.row(h); val gt = acc.row(t)
-                  val gn = acc.row(tNeg)
-                  val gr = acc.row(lay.off(1) + rl)
-                  i = 0
-                  while (i < dim) {
-                    // exact integers: signum of nonzero doubles is ±1
-                    val sp = math.signum(eh(i).toDouble + er(i) - et(i))
-                    val sn = math.signum(eh(i).toDouble + er(i) - en(i))
-                    val d = ((sp - sn) * Micro).toLong
-                    gh(i) += d; gr(i) += d
-                    gt(i) -= (sp * Micro).toLong
-                    gn(i) += (sn * Micro).toLong
-                    i += 1
-                  }
-                }
-              } else {
+              if (!transH)
+                MicroGrad.hinge(acc, margin, lay.off(0), lay.off(1),
+                  h, rl, t, rl, tNeg, eh, er, et, er, en)
+              else {
                 // TransH: v = (h - t) - (w.(h - t)) w + d_r, L1 margin
                 val w = wv(rl.toInt)
                 var wduP = 0.0; var wduN = 0.0
@@ -256,32 +233,10 @@ object TransE {
             if (rNeg >= 0) {
               val eh = e(h.toInt); val et = e(t.toInt)
               val er = r(rl.toInt); val ern = r(rNeg.toInt)
-              if (!transH) {
-                var pos = 0.0; var neg = 0.0
-                var i = 0
-                while (i < dim) {
-                  pos += math.abs(eh(i).toDouble + er(i) - et(i))
-                  neg += math.abs(eh(i).toDouble + ern(i) - et(i))
-                  i += 1
-                }
-                val l = pos - neg + margin
-                if (l > 0) {
-                  acc.addLoss(microQ(l))
-                  val gh = acc.row(h); val gt = acc.row(t)
-                  val gr = acc.row(lay.off(1) + rl)
-                  val grn = acc.row(lay.off(1) + rNeg)
-                  i = 0
-                  while (i < dim) {
-                    val sp = math.signum(eh(i).toDouble + er(i) - et(i))
-                    val sn = math.signum(eh(i).toDouble + ern(i) - et(i))
-                    val d = ((sp - sn) * Micro).toLong
-                    gh(i) += d; gt(i) -= d
-                    gr(i) += (sp * Micro).toLong
-                    grn(i) -= (sn * Micro).toLong
-                    i += 1
-                  }
-                }
-              } else {
+              if (!transH)
+                MicroGrad.hinge(acc, margin, lay.off(0), lay.off(1),
+                  h, rl, t, rNeg, t, eh, er, et, ern, et)
+              else {
                 // TransH with relation-corrupted negative: pos uses
                 // (w_r, d_r), neg uses (w_r', d_r') on the SAME (h, t)
                 val w = wv(rl.toInt); val w2 = wv(rNeg.toInt)
@@ -420,15 +375,7 @@ object TransE {
   /** Summary row: theta swept on the TRAIN-split pairs only, F1/MRR
     * reported on the TEST split (never tuned on the reported set). */
   def eval(spark: SparkSession, sfDir: String,
-           cfg: Config = Config()): DataFrame = {
-    import spark.implicits._
-    val all = pairScores(spark, sfDir, cfg) // memo-persisted
-    val dist = lit(1.0) - col("cos")
-    val theta = Splits.theta(all, dist, col("label"))
-    val m = Splits.testEval(all, dist, col("label"), theta).head()
-    Seq((cfg.dim.toLong, cfg.epochs.toLong, theta,
-      m.getAs[Double]("f1"), m.getAs[Double]("precision"),
-      m.getAs[Double]("recall"), m.getAs[Double]("mrr")))
-      .toDF("dim", "epochs", "theta", "f1", "precision", "recall", "mrr")
-  }
+           cfg: Config = Config()): DataFrame =
+    Splits.summary(pairScores(spark, sfDir, cfg), // memo-persisted
+      lit(1.0) - col("cos"), cfg.dim, cfg.epochs)
 }

@@ -9,9 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One local-session builder: the dev mains take [[Sessions.local]];
   * only the frozen driver surfaces [[Bench]] and [[Verify]] build their
-  * own sessions. One gradient step: the distributed trainers reduce and
-  * quantize through [[graft.sim.MicroGrad]] only. Stops per-file copies
-  * from growing back. */
+  * own sessions. One gradient step: the distributed trainers reduce,
+  * quantize and take the plain TransE hinge through
+  * [[graft.sim.MicroGrad]] only. Stops per-file copies from growing
+  * back. */
 class SessionBuilderSpec extends AnyFunSuite {
 
   /** Paths, relative to `src/main/scala`, of the sources matching `re`. */
@@ -41,5 +42,14 @@ class SessionBuilderSpec extends AnyFunSuite {
     assert(found.contains(home))
     assert((found - home).isEmpty,
       s"step through graft.sim.MicroGrad instead: ${(found - home).toSeq.sorted}")
+  }
+
+  test("the plain TransE hinge term appears under sim/ only in MicroGrad") {
+    val found = scan(Regex.quote("eh(i).toDouble + er(i) - et(i)").r)
+      .filter(_.startsWith("graft/sim/"))
+    val home = "graft/sim/MicroGrad.scala"
+    assert(found.contains(home))
+    assert((found - home).isEmpty,
+      s"call graft.sim.MicroGrad.hinge instead: ${(found - home).toSeq.sorted}")
   }
 }
