@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
@@ -167,17 +166,9 @@ object EntryStages {
     Splits.testMetrics(scoredp(spark, sfDir), col("dist"), col("label"),
       theta(spark, sfDir))
 
-  def mutualNn(spark: SparkSession, sfDir: String, beta: Int = 100): DataFrame = {
-    val test = Splits.test(scoredp(spark, sfDir))
-    val wa = Window.partitionBy("idA").orderBy(col("dist").asc, col("idB").asc)
-    val wb = Window.partitionBy("idB").orderBy(col("dist").asc, col("idA").asc)
-    test.withColumn("ra", row_number().over(wa))
-      .withColumn("rb", row_number().over(wb))
-      .filter(col("ra") === 1 && col("rb") === 1)
+  def mutualNn(spark: SparkSession, sfDir: String, beta: Int = 100): DataFrame =
+    graft.ops.Seea.mutualBest(Splits.test(scoredp(spark, sfDir)), beta)
       .select("idA", "idB", "dist")
-      .orderBy(col("dist").asc, col("idA").asc)
-      .limit(beta)
-  }
 
   def topkFn(spark: SparkSession, sfDir: String, k: Int = 5): DataFrame =
     topk(spark, sfDir, k)(t => col("label") === 1 && col("dist") > t)

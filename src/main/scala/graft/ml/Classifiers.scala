@@ -152,6 +152,11 @@ object Classifiers {
   @inline private[graft] def q9(x: Double): Double =
     math.floor(x * 1e9 + 0.5) / 1e9
 
+  /** The nano-integer export of a q9 value: `floor(x * 1e9 + 0.5)`,
+    * the same two IEEE ops as [[q9]], so `nanos(x) / 1e9` reproduces
+    * a q9-lattice `x` exactly. */
+  private[graft] def nanos(x: Double): Long = math.floor(x * 1e9 + 0.5).toLong
+
   private def bitsOf(pattern: Int): Array[Double] = {
     val b = new Array[Double](NFeatures)
     var i = 0
@@ -253,8 +258,7 @@ object Classifiers {
     // BIGINTs are EXACT and invertible (nanos / 1e9 reproduces the
     // identical doubles) — what lets fs_kmeans_metrics' staged oracle
     // reconstruct the fit instead of re-replaying Lloyd
-    def nanos(c: Array[Double]) = c.map(x => math.floor(x * 1e9 + 0.5).toLong)
-    val (u, mm) = (nanos(m.cu), nanos(m.cm))
+    val (u, mm) = (m.cu.map(nanos), m.cm.map(nanos))
     Seq((0L, u(0), u(1), u(2), u(3), u(4)),
         (1L, mm(0), mm(1), mm(2), mm(3), mm(4)))
       .toDF("cluster", "c0_nanos", "c1_nanos", "c2_nanos", "c3_nanos",
@@ -351,9 +355,8 @@ object Classifiers {
     val spark0 = spark
     import spark0.implicits._
     val m = logRegFit(spark, sfDir)
-    ((0 until NFeatures).map(i =>
-      (s"f$i", math.floor(m.w(i) * 1e9 + 0.5).toLong)) :+
-      ("intercept", math.floor(m.b * 1e9 + 0.5).toLong))
+    ((0 until NFeatures).map(i => (s"f$i", nanos(m.w(i)))) :+
+      ("intercept", nanos(m.b)))
       .toDF("feature", "weight_nanos")
   }
 }

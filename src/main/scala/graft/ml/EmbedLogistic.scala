@@ -64,7 +64,6 @@ object EmbedLogistic {
                           iters: Int = 60, lr: Double = 0.3,
                           reg: Double = 0.001)
 
-  private def q9(x: Double): Double = math.floor(x * 1e9 + 0.5) / 1e9
   // Accepted residual risk (ADVICE r4): the GD sigmoid below — and
   // dist = 1 - sigmoid(logit) in Weights.veerDist / the wbsc/vsc CTEs
   // — feeds RAW math.exp output into microQ and the ceil(dist*50)
@@ -196,12 +195,12 @@ object EmbedLogistic {
       while (i < dim) {
         val gi = 0.5 * (gp(i).toDouble / 1e6) / nPos +
           0.5 * (gn(i).toDouble / 1e6) / nNeg
-        w(i) = q9(w(i) - cfg.lr * (gi + cfg.reg * w(i)))
+        w(i) = Classifiers.q9(w(i) - cfg.lr * (gi + cfg.reg * w(i)))
         i += 1
       }
       val gb = 0.5 * (gp(dim).toDouble / 1e6) / nPos +
         0.5 * (gn(dim).toDouble / 1e6) / nNeg
-      b = q9(b - cfg.lr * gb)
+      b = Classifiers.q9(b - cfg.lr * gb)
       wB.destroy()
       it += 1
     }

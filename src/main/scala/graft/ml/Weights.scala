@@ -1,8 +1,7 @@
 package graft.ml
 
-import org.apache.spark.ml.classification.LogisticRegression
-import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.EntryStages
@@ -70,32 +69,80 @@ object Weights {
       veerScored(spark, sfDir).select(
         Seq(col("idA"), col("idB"), col("label"),
           col("split_a"), col("split_b"),
-          array(VeerFeatures.map(f =>
-            floor(col(f) * 1e6 + lit(0.5)) / 1e6): _*).as("feat")): _*)
+          array(VeerFeatures.map(f => mq6(col(f))): _*).as("feat")): _*)
     }
+
+  /** The 1e-6 grid, half-up: floor(x*1e6 + 0.5)/1e6 — the lattice
+    * every balanced-GD tier feeds its channels on. */
+  private def mq6(x: Column): Column = floor(x * 1e6 + lit(0.5)) / 1e6
 
   /** One deterministic class-balanced GD fit over the channels,
     * memoized per (session, sfDir, reg, iters) — grid cells and the
     * default fit each train once. */
   def veerFit(spark: SparkSession, sfDir: String, reg: Double,
               iters: Int): EmbedLogistic.Fit =
-    EntryStages.memoModel(spark, sfDir, s"veer_fit:$reg:$iters") {
-      EmbedLogistic.fitBalancedOn(veerFeatDf(spark, sfDir),
-        EmbedLogistic.Config(dim = VeerFeatures.length, iters = iters,
-          lr = VeerLr, reg = reg))
+    gdFit(spark, sfDir, s"veer_fit:$reg:$iters", veerFeatDf(spark, sfDir),
+      VeerFeatures.length, iters, VeerLr, reg)
+
+  /** The balanced-GD fit of one tier over its `feat` channels,
+    * memoized per (session, sfDir, key): a grid cell with the default
+    * hyperparameters reuses the default fit. */
+  private def gdFit(spark: SparkSession, sfDir: String, key: String,
+                    feats: => DataFrame, dim: Int, iters: Int, lr: Double,
+                    reg: Double): EmbedLogistic.Fit =
+    EntryStages.memoModel(spark, sfDir, key) {
+      EmbedLogistic.fitBalancedOn(feats,
+        EmbedLogistic.Config(dim = dim, iters = iters, lr = lr, reg = reg))
     }
 
-  private def withVec(df: DataFrame, feats: Seq[String]): DataFrame =
-    df.withColumn("features",
-      org.apache.spark.ml.functions.array_to_vector(
-        array(feats.map(f => col(f).cast("double")): _*)))
-      .withColumn("label_d", col("label").cast("double"))
+  /** A GD tier's weights and test metrics, memoized per (session,
+    * sfDir, key). The operating point is the engine's standard
+    * discipline: theta swept on the TRAIN split over
+    * dist = 1 - sigmoid(logit) (the balanced GD's logit >= 0 point is
+    * recall-heavy on the ~3%-positive pair distribution; the swept
+    * threshold recovers the F1-optimal point without touching test
+    * labels). */
+  private def gdWeightsAndMetrics(spark: SparkSession, sfDir: String,
+                                  key: String, feats: => DataFrame,
+                                  names: Seq[String],
+                                  fit: => EmbedLogistic.Fit): (DataFrame, DataFrame) =
+    EntryStages.memoModel(spark, sfDir, key) {
+      val (fs, f) = (feats, fit)
+      val dist = veerDist(f)
+      val theta = Splits.theta(fs, dist, col("label"))
+      (weightRows(spark, names, f.w, f.b),
+        materialize(Splits.testMetrics(fs, dist, col("label"), theta)))
+    }
 
-  private def fitLr(train: DataFrame) =
-    new LogisticRegression()
+  /** A GD tier's test F1/P/R and MRR at the train-swept theta — the
+    * row a grid cell reports. */
+  private def gdTestEval(feats: DataFrame, fit: EmbedLogistic.Fit): Row = {
+    val dist = veerDist(fit)
+    val theta = Splits.theta(feats, dist, col("label"))
+    Splits.testEval(feats, dist, col("label"), theta).head()
+  }
+
+  /** MLlib logistic regression (maxIter 100, reg 0.001) over the
+    * `features` vector of the train split of `vecs`, and its test-split
+    * pair metrics, materialized; `vecs` stays cached while both run. */
+  private def mllibFit(vecs: DataFrame): (LogisticRegressionModel, DataFrame) = {
+    val data = vecs.persist()
+    val m = new LogisticRegression()
       .setLabelCol("label_d").setFeaturesCol("features")
       .setMaxIter(100).setRegParam(0.001).setTol(1e-9)
-      .fit(train)
+      .fit(Splits.train(data))
+    val metrics = materialize(Metrics.pairMetrics(m.transform(Splits.test(data)),
+      (col("prediction") === 1.0).cast("int"), col("label")))
+    data.unpersist()
+    (m, metrics)
+  }
+
+  /** `df` with its `feats` array as the MLlib `features` vector and
+    * the double `label_d`. */
+  private def withVec(df: DataFrame, feats: Column): DataFrame =
+    df.withColumn("features",
+      org.apache.spark.ml.functions.array_to_vector(feats))
+      .withColumn("label_d", col("label").cast("double"))
 
   /** (feature, weight_nanos) rows + the intercept row. Nano-integer
     * export: GD-fit weights live on the q9 lattice, so these BIGINTs
@@ -105,9 +152,8 @@ object Weights {
   private def weightRows(spark: SparkSession, feats: Seq[String],
                          coefs: Array[Double], intercept: Double): DataFrame = {
     import spark.implicits._
-    (feats.zip(coefs).map { case (f, w) =>
-      (f, math.floor(w * 1e9 + 0.5).toLong) } :+
-      ("intercept", math.floor(intercept * 1e9 + 0.5).toLong))
+    (feats.zip(coefs).map { case (f, w) => (f, Classifiers.nanos(w)) } :+
+      ("intercept", Classifiers.nanos(intercept)))
       .toDF("feature", "weight_nanos")
   }
 
@@ -125,24 +171,11 @@ object Weights {
       exp(-EmbedLogistic.logitCol(fit, col("feat"))))
 
   /** VEER weights + test metrics from ONE scoring pass and ONE
-    * deterministic GD fit, memoized per (session, sfDir). The
-    * operating point is the engine's standard discipline: theta swept
-    * on the TRAIN split over dist = 1 - sigmoid(logit) (the balanced
-    * GD's logit >= 0 point is recall-heavy on the ~3%-positive pair
-    * distribution; the swept threshold recovers the F1-optimal point
-    * without touching test labels). The metrics row is materialized
-    * into a local DataFrame so later actions on it can't re-trigger
-    * the scoring lineage. */
+    * deterministic GD fit, memoized per (session, sfDir). */
   def veerWeightsAndMetrics(spark: SparkSession, sfDir: String):
       (DataFrame, DataFrame) =
-    EntryStages.memoModel(spark, sfDir, "veer") {
-      val fit = veerFit(spark, sfDir, VeerReg, VeerIters)
-      val feats = veerFeatDf(spark, sfDir)
-      val dist = veerDist(fit)
-      val theta = Splits.theta(feats, dist, col("label"))
-      (weightRows(spark, VeerFeatures, fit.w, fit.b),
-        materialize(Splits.testMetrics(feats, dist, col("label"), theta)))
-    }
+    gdWeightsAndMetrics(spark, sfDir, "veer", veerFeatDf(spark, sfDir),
+      VeerFeatures, veerFit(spark, sfDir, VeerReg, VeerIters))
 
   /** VEER: learned weights over the raw (jw, lev, cos) channels. */
   def veerWeights(spark: SparkSession, sfDir: String): DataFrame =
@@ -163,15 +196,11 @@ object Weights {
     * re-trigger the scoring lineage. */
   def werlWeightsAndMetrics(spark: SparkSession, sfDir: String):
       (DataFrame, DataFrame) =
-    graft.EntryStages.memoModel(spark, sfDir, "werl") {
+    EntryStages.memoModel(spark, sfDir, "werl") {
       val model = RLTransE.train(spark, sfDir)
-      val fields = RLTransE.fieldScores(spark, sfDir, model, testOnly = false)
-        .persist()
-      val m = fitLr(withVec(Splits.train(fields), WerlFeatures))
-      val test = m.transform(withVec(Splits.test(fields), WerlFeatures))
-      val metrics = materialize(Metrics.pairMetrics(test,
-        (col("prediction") === 1.0).cast("int"), col("label")))
-      fields.unpersist()
+      val (m, metrics) = mllibFit(withVec(
+        RLTransE.fieldScores(spark, sfDir, model, testOnly = false),
+        array(WerlFeatures.map(f => col(f).cast("double")): _*)))
       (weightRows(spark, WerlFeatures, m.coefficients.toArray, m.intercept),
         metrics)
     }
@@ -207,8 +236,7 @@ object Weights {
       RLTransE.fieldScores(spark, sfDir, model, testOnly = false)
         .select(Seq(col("idA"), col("idB"), col("label"),
           col("split_a"), col("split_b"),
-          array(WerlFeatures.map(f =>
-            floor(col(f) * 1e6 + lit(0.5)) / 1e6): _*).as("feat")): _*)
+          array(WerlFeatures.map(f => mq6(col(f))): _*).as("feat")): _*)
     }
 
   /** The batch tier's balanced-GD fit over the frozen `epochs`-fit
@@ -216,11 +244,9 @@ object Weights {
     * werl_batch_* queries. */
   private def werlBatchFit(spark: SparkSession, sfDir: String,
                            epochs: Int): EmbedLogistic.Fit =
-    EntryStages.memoModel(spark, sfDir, s"werl_batch_fit:$epochs") {
-      EmbedLogistic.fitBalancedOn(werlBatchFeatDf(spark, sfDir, epochs),
-        EmbedLogistic.Config(dim = WerlFeatures.length,
-          iters = WerlBatchIters, lr = WerlBatchLr, reg = WerlBatchReg))
-    }
+    gdFit(spark, sfDir, s"werl_batch_fit:$epochs",
+      werlBatchFeatDf(spark, sfDir, epochs), WerlFeatures.length,
+      WerlBatchIters, WerlBatchLr, WerlBatchReg)
 
   /** WERL batch tier: deterministic balanced GD over the frozen batch
     * channels, theta swept on the TRAIN split over
@@ -228,14 +254,9 @@ object Weights {
     * [[graft.oracle.OracleSqlRLTransEBatch]]. */
   def werlBatchWeightsAndMetrics(spark: SparkSession, sfDir: String):
       (DataFrame, DataFrame) =
-    EntryStages.memoModel(spark, sfDir, "werl_batch") {
-      val feats = werlBatchFeatDf(spark, sfDir)
-      val fit = werlBatchFit(spark, sfDir, RLTransE.BatchCfg.epochs)
-      val dist = veerDist(fit)
-      val theta = Splits.theta(feats, dist, col("label"))
-      (weightRows(spark, WerlFeatures, fit.w, fit.b),
-        materialize(Splits.testMetrics(feats, dist, col("label"), theta)))
-    }
+    gdWeightsAndMetrics(spark, sfDir, "werl_batch",
+      werlBatchFeatDf(spark, sfDir), WerlFeatures,
+      werlBatchFit(spark, sfDir, RLTransE.BatchCfg.epochs))
 
   /** grid_werl's epochs axis: half and full batch-fit training
     * (/root/reference/tests/test_werl.py:223-260's epochs loop over
@@ -248,13 +269,9 @@ object Weights {
     * F1/P/R + test-ranking MRR, the GridSearch.sweep row shape. */
   def werlBatchEval(spark: SparkSession, sfDir: String,
                     epochs: Int): DataFrame = {
-    val spark0 = spark
-    import spark0.implicits._
-    val feats = werlBatchFeatDf(spark, sfDir, epochs)
-    val fit = werlBatchFit(spark, sfDir, epochs)
-    val dist = veerDist(fit)
-    val theta = Splits.theta(feats, dist, col("label"))
-    val m = Splits.testEval(feats, dist, col("label"), theta).head()
+    import spark.implicits._
+    val m = gdTestEval(werlBatchFeatDf(spark, sfDir, epochs),
+      werlBatchFit(spark, sfDir, epochs))
     Seq((m.getAs[Double]("f1"), m.getAs[Double]("precision"),
       m.getAs[Double]("recall"), m.getAs[Double]("mrr")))
       .toDF("f1", "precision", "recall", "mrr")
@@ -294,11 +311,8 @@ object Weights {
   def veerEval(spark: SparkSession, sfDir: String,
                regParam: Double, maxIter: Int): DataFrame = {
     import spark.implicits._
-    val fit = veerFit(spark, sfDir, regParam, maxIter)
-    val feats = veerFeatDf(spark, sfDir)
-    val dist = veerDist(fit)
-    val theta = Splits.theta(feats, dist, col("label"))
-    val m = Splits.testEval(feats, dist, col("label"), theta).head()
+    val m = gdTestEval(veerFeatDf(spark, sfDir),
+      veerFit(spark, sfDir, regParam, maxIter))
     Seq((regParam, maxIter.toLong, m.getAs[Double]("f1"),
       m.getAs[Double]("precision"), m.getAs[Double]("recall"),
       m.getAs[Double]("mrr")))
@@ -332,17 +346,8 @@ object Weights {
   def logisticRlTransEMetrics(spark: SparkSession, sfDir: String): DataFrame =
     EntryStages.memoModel(spark, sfDir, "logistic_rltranse") {
       val model = RLTransE.train(spark, sfDir)
-      val feats = RLTransE.fieldDiffFeatures(spark, sfDir, model)
-        .withColumn("features",
-          org.apache.spark.ml.functions.array_to_vector(col("features")))
-        .withColumn("label_d", col("label").cast("double"))
-        .persist()
-      val m = fitLr(Splits.train(feats))
-      val metrics = materialize(Metrics.pairMetrics(
-        m.transform(Splits.test(feats)),
-        (col("prediction") === 1.0).cast("int"), col("label")))
-      feats.unpersist()
-      metrics
+      mllibFit(withVec(RLTransE.fieldDiffFeatures(spark, sfDir, model),
+        col("features")))._2
     }
 
   // --- LogisticRLTransE over the BATCH fit: the dim-wide tier with
@@ -390,8 +395,7 @@ object Weights {
     EntryStages.memo(spark, sfDir, "logrlt_batch_feats") {
       val model = RLTransE.trainBatch(spark, sfDir, RLTransE.BatchCfg)
       RLTransE.fieldDiffFeatures(spark, sfDir, model)
-        .withColumn("feat", transform(col("features"),
-          x => floor(x * lit(1e6) + lit(0.5)) / lit(1e6)))
+        .withColumn("feat", transform(col("features"), mq6(_)))
         .drop("features")
     }
 
@@ -409,12 +413,8 @@ object Weights {
 
   private def logRltBatchFit(spark: SparkSession,
                              sfDir: String): EmbedLogistic.Fit =
-    EntryStages.memoModel(spark, sfDir, "logrlt_batch_fit") {
-      EmbedLogistic.fitBalancedOn(logRltBatchFeatDf(spark, sfDir),
-        EmbedLogistic.Config(dim = LogRltBatchDim,
-          iters = LogRltBatchIters, lr = LogRltBatchLr,
-          reg = LogRltBatchReg))
-    }
+    gdFit(spark, sfDir, "logrlt_batch_fit", logRltBatchFeatDf(spark, sfDir),
+      LogRltBatchDim, LogRltBatchIters, LogRltBatchLr, LogRltBatchReg)
 
   /** LogisticRLTransE batch tier: nano-exact weights + test metrics
     * (train-swept theta over dist = 1 - sigmoid(logit)) — the
@@ -422,14 +422,9 @@ object Weights {
     * serving both registered queries. */
   def logRltBatchWeightsAndMetrics(spark: SparkSession, sfDir: String):
       (DataFrame, DataFrame) =
-    EntryStages.memoModel(spark, sfDir, "logrlt_batch") {
-      val feats = logRltBatchFeatDf(spark, sfDir)
-      val fit = logRltBatchFit(spark, sfDir)
-      val dist = veerDist(fit)
-      val theta = Splits.theta(feats, dist, col("label"))
-      (weightRows(spark, LogRltBatchFeatures, fit.w, fit.b),
-        materialize(Splits.testMetrics(feats, dist, col("label"), theta)))
-    }
+    gdWeightsAndMetrics(spark, sfDir, "logrlt_batch",
+      logRltBatchFeatDf(spark, sfDir), LogRltBatchFeatures,
+      logRltBatchFit(spark, sfDir))
 
   def logRltBatchWeights(spark: SparkSession, sfDir: String): DataFrame =
     logRltBatchWeightsAndMetrics(spark, sfDir)._1

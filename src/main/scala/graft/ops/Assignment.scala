@@ -207,6 +207,8 @@ object Assignment {
       .withColumn("n_pairs", count(lit(1)).over(wBlock))
       .withColumn("ra", row_number().over(wA))
       .withColumn("rb", row_number().over(wB))
+      // small blocks keep every pair (exact Hungarian needs the full
+      // matrix); big blocks keep each endpoint's topR cheapest edges
       .filter(col("n_pairs") <= maxPairs ||
         col("ra") <= topR || col("rb") <= topR)
       .select(col("block_key"), col("idA"), col("idB"), col("dist"))
@@ -218,24 +220,7 @@ object Assignment {
   def assignPairs(pairs: DataFrame, maxSide: Int = 30,
                   topR: Int = 5): DataFrame = {
     import pairs.sparkSession.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val wBlock = Window.partitionBy("block_key")
-    val wA = Window.partitionBy("block_key", "idA")
-      .orderBy(col("dist").asc, col("idB").asc)
-    val wB = Window.partitionBy("block_key", "idB")
-      .orderBy(col("dist").asc, col("idA").asc)
-    val maxPairs = maxSide.toLong * maxSide
-    val pruned = pairs
-      .withColumn("n_pairs", count(lit(1)).over(wBlock))
-      .withColumn("ra", row_number().over(wA))
-      .withColumn("rb", row_number().over(wB))
-      // small blocks keep every pair (exact Hungarian needs the full
-      // matrix); big blocks keep each endpoint's topR cheapest edges
-      .filter(col("n_pairs") <= maxPairs ||
-        col("ra") <= topR || col("rb") <= topR)
-      .select(col("block_key"), col("idA"), col("idB"), col("dist"))
-      .as[(String, Long, Long, Double)]
-    pruned.groupByKey(_._1).mapGroups { (key, it) =>
+    prunedPairs(pairs, maxSide, topR).groupByKey(_._1).mapGroups { (key, it) =>
       val ps = it.map { case (_, a, b, d) => (a, b, d) }.toArray
       val as = ps.map(_._1).distinct.sorted
       val bs = ps.map(_._2).distinct.sorted

@@ -32,6 +32,21 @@ import graft.sim.RLTransE
  */
 object Seea {
 
+  /** The mutually nearest pairs of `pairs` (idA, idB, dist, ...): each
+    * is rank 1 by (dist, other id) from both its idA and its idB side
+    * (seea.py:252-286) — the `beta` closest of them, by (dist, idA). */
+  def mutualBest(pairs: DataFrame, beta: Int): DataFrame = {
+    val wa = Window.partitionBy("idA").orderBy(col("dist").asc, col("idB").asc)
+    val wb = Window.partitionBy("idB").orderBy(col("dist").asc, col("idA").asc)
+    pairs
+      .withColumn("ra", row_number().over(wa))
+      .withColumn("rb", row_number().over(wb))
+      .filter(col("ra") === 1 && col("rb") === 1)
+      .drop("ra", "rb")
+      .orderBy(col("dist").asc, col("idA").asc)
+      .limit(beta)
+  }
+
   /**
    * Self-learning loop with per-round retraining.
    *
@@ -65,14 +80,7 @@ object Seea {
         .select("idA", "idB", "dist")
       val scored = remaining.join(scores, Seq("idA", "idB"))
         .filter(col("dist") <= maxDist)
-      val wa = Window.partitionBy("idA").orderBy(col("dist").asc, col("idB").asc)
-      val wb = Window.partitionBy("idB").orderBy(col("dist").asc, col("idA").asc)
-      val mutual = scored
-        .withColumn("ra", row_number().over(wa))
-        .withColumn("rb", row_number().over(wb))
-        .filter(col("ra") === 1 && col("rb") === 1)
-        .orderBy(col("dist").asc, col("idA").asc)
-        .limit(beta)
+      val mutual = mutualBest(scored, beta)
         .select(col("idA"), col("idB"), col("dist"), col("label"),
           lit(iter.toLong).as("iteration"))
         .localCheckpoint()
@@ -112,14 +120,7 @@ object Seea {
     var iter = 0
     var done = false
     while (iter < maxIter && !done) {
-      val wa = Window.partitionBy("idA").orderBy(col("dist").asc, col("idB").asc)
-      val wb = Window.partitionBy("idB").orderBy(col("dist").asc, col("idA").asc)
-      val mutual = remaining
-        .withColumn("ra", row_number().over(wa))
-        .withColumn("rb", row_number().over(wb))
-        .filter(col("ra") === 1 && col("rb") === 1)
-        .orderBy(col("dist").asc, col("idA").asc)
-        .limit(beta)
+      val mutual = mutualBest(remaining, beta)
         .select(col("idA"), col("idB"), col("dist"), col("label"),
           lit(iter.toLong).as("iteration"))
         .localCheckpoint()

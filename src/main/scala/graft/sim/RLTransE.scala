@@ -55,9 +55,12 @@ object RLTransE {
       ent: Array[Array[Float]], rel: Array[Array[Float]],
       vocab: Array[Map[String, Int]], maxValCount: Int,
       lossByEpoch: Array[Double]) {
+    /** Packed table row of value index `vidx` of relation `rid`. */
+    def offset(rid: Int, vidx: Int): Int = rid * maxValCount + vidx
+
     /** Packed embedding row for (relation, value), if in vocabulary. */
     def valueRow(rid: Int, value: String): Option[Array[Float]] =
-      vocab(rid).get(value).map(v => ent(rid * maxValCount + v))
+      vocab(rid).get(value).map(v => ent(offset(rid, v)))
   }
 
   /** Per-relation value dictionary over the TRAIN VEG graph:
@@ -69,6 +72,62 @@ object RLTransE {
     vals.withColumn("vidx",
       (row_number().over(Window.partitionBy("r").orderBy("value")) - 1)
         .cast("long"))
+  }
+
+  /** The offset value table over a VEG triple set: the per-relation
+    * vocabularies, the widest relation's value count `maxVal`, each
+    * relation's negative tail range (first row, value count) and the
+    * offset-indexed (h, t, r) triples. */
+  private final case class ValueTable(
+      vocab: Array[Map[String, Int]], maxVal: Int,
+      tailRanges: Array[(Long, Long)], triples: DataFrame) {
+    def nEnt: Int = vocab.length * maxVal
+  }
+
+  /** Builds the [[ValueTable]] of `veg` and hands it to `use`, keeping
+    * the triples' inputs cached until `use` returns. */
+  private def withValueTable[A](veg: DataFrame, maxDriverTriples: Long)
+                               (use: ValueTable => A): A = {
+    val nRel = GraphBuild.Relations.size
+    val vegTrain = veg.persist()
+    val vocabDf = vocabulary(vegTrain).persist()
+    try {
+      // the dictionary IS the model's row index: model-sized by
+      // construction, so collecting it costs what broadcasting the
+      // embedding matrix already costs — GUARDED: if the value
+      // vocabulary is data-sized (per-field cardinality ~ record count),
+      // the offset-table premise is broken and we fail loudly here
+      // instead of OOMing the driver on the collect below.
+      val vocabCount = vocabDf.count()
+      require(vocabCount <= maxDriverTriples,
+        s"RLTransE value vocabulary has $vocabCount rows, over the " +
+          s"driver-side model bound ($maxDriverTriples): per-field " +
+          "value cardinality is data-sized, so the offset-value-table " +
+          "model does not apply — raise Config.maxDriverTriples only if " +
+          "the driver heap is sized for it")
+      val vocabRows = vocabDf.collect()
+        .map(r => (r.getLong(0).toInt, r.getString(1), r.getLong(2).toInt))
+      val vocab = Array.tabulate(nRel) { rid =>
+        vocabRows.filter(_._1 == rid).map(v => v._2 -> v._3).toMap
+      }
+      val counts = vocab.map(_.size)
+      val maxVal = counts.max
+      val tailRanges = Array.tabulate(nRel)(rid =>
+        (rid.toLong * maxVal, counts(rid).toLong))
+      val va = vocabDf.select(col("r"), col("value").as("val_a"),
+        col("vidx").as("ia"))
+      val vb = vocabDf.select(col("r"), col("value").as("val_b"),
+        col("vidx").as("ib"))
+      val triples = vegTrain
+        .join(va, Seq("r", "val_a")).join(vb, Seq("r", "val_b"))
+        .select(
+          (col("r") * maxVal + col("ia")).cast("long").as("h"),
+          (col("r") * maxVal + col("ib")).cast("long").as("t"),
+          col("r").cast("long"))
+      use(ValueTable(vocab, maxVal, tailRanges, triples))
+    } finally {
+      vegTrain.unpersist(); vocabDf.unpersist()
+    }
   }
 
   /** Train-once per (session, sfDir, cfg): every consumer of the
@@ -106,39 +165,15 @@ object RLTransE {
   def trainBatch(spark: SparkSession, sfDir: String,
                  cfg: TransE.Config = BatchCfg): Model =
     graft.EntryStages.memoModel(spark, sfDir, s"rltranse_batch:$cfg") {
-      val nRel = GraphBuild.Relations.size
-      val vegTrain = GraphBuild.vegTrainTriples(spark, sfDir).persist()
-      val vocabDf = vocabulary(vegTrain).persist()
-      val vocabCount = vocabDf.count()
-      val bound = Config().maxDriverTriples
-      require(vocabCount <= bound,
-        s"RLTransE value vocabulary has $vocabCount rows, over the " +
-          s"model bound ($bound) — see trainOn's guard")
-      val vocabRows = vocabDf.collect()
-        .map(r => (r.getLong(0).toInt, r.getString(1), r.getLong(2).toInt))
-      val vocab = Array.tabulate(nRel) { rid =>
-        vocabRows.filter(_._1 == rid).map(v => v._2 -> v._3).toMap
+      withValueTable(GraphBuild.vegTrainTriples(spark, sfDir),
+          Config().maxDriverTriples) { vt =>
+        val nRel = GraphBuild.Relations.size
+        val m = TransE.train(spark,
+          vt.triples.withColumn("idx",
+            TransE.packedIdx(vt.nEnt.toLong, nRel.toLong)),
+          vt.nEnt, nRel, cfg.copy(tailRanges = Some(vt.tailRanges)))
+        Model(m.ent, m.rel, vt.vocab, vt.maxVal, m.lossByEpoch)
       }
-      val counts = vocab.map(_.size)
-      val maxVal = counts.max
-      val ranges = Array.tabulate(nRel)(rid =>
-        (rid.toLong * maxVal, counts(rid).toLong))
-      val nEnt = nRel * maxVal
-      val va = vocabDf.select(col("r"), col("value").as("val_a"),
-        col("vidx").as("ia"))
-      val vb = vocabDf.select(col("r"), col("value").as("val_b"),
-        col("vidx").as("ib"))
-      val triples = vegTrain
-        .join(va, Seq("r", "val_a")).join(vb, Seq("r", "val_b"))
-        .select(
-          (col("r") * maxVal + col("ia")).cast("long").as("h"),
-          (col("r") * maxVal + col("ib")).cast("long").as("t"),
-          col("r").cast("long"))
-        .withColumn("idx", TransE.packedIdx(nEnt.toLong, nRel.toLong))
-      val m = TransE.train(spark, triples, nEnt, nRel,
-        cfg.copy(tailRanges = Some(ranges)))
-      vegTrain.unpersist(); vocabDf.unpersist()
-      Model(m.ent, m.rel, vocab, maxVal, m.lossByEpoch)
     }
 
   /** The trained batch model MATRICES themselves, at the full- and
@@ -164,8 +199,8 @@ object RLTransE {
         rid <- m.vocab.indices
         vidx <- m.vocab(rid).values.toSeq.sorted
       } yield Row.fromSeq(
-        Seq("ent", ep.toLong, rid.toLong * m.maxValCount + vidx) ++
-          m.ent(rid * m.maxValCount + vidx).toSeq)
+        Seq("ent", ep.toLong, m.offset(rid, vidx).toLong) ++
+          m.ent(m.offset(rid, vidx)).toSeq)
       val rel = m.rel.indices.map(rid => Row.fromSeq(
         Seq("rel", ep.toLong, rid.toLong) ++ m.rel(rid).toSeq))
       ent ++ rel
@@ -222,32 +257,6 @@ object RLTransE {
   /** Train over an explicit VEG triple set (val_a, val_b, r, n). */
   def trainOn(spark: SparkSession, veg: DataFrame,
               cfg: Config = Config()): Model = {
-    val nRel = GraphBuild.Relations.size
-    val vegTrain = veg.persist()
-    val vocabDf = vocabulary(vegTrain).persist()
-    // the dictionary IS the model's row index: model-sized by
-    // construction, so collecting it costs what broadcasting the
-    // embedding matrix already costs — GUARDED: if the value
-    // vocabulary is data-sized (per-field cardinality ~ record count),
-    // the offset-table premise is broken and we fail loudly here
-    // instead of OOMing the driver on the collect below.
-    val vocabCount = vocabDf.count()
-    require(vocabCount <= cfg.maxDriverTriples,
-      s"RLTransE value vocabulary has $vocabCount rows, over the " +
-        s"driver-side model bound (${cfg.maxDriverTriples}): per-field " +
-        "value cardinality is data-sized, so the offset-value-table " +
-        "model does not apply — raise Config.maxDriverTriples only if " +
-        "the driver heap is sized for it")
-    val vocabRows = vocabDf.collect()
-      .map(r => (r.getLong(0).toInt, r.getString(1), r.getLong(2).toInt))
-    val vocab = Array.tabulate(nRel) { rid =>
-      vocabRows.filter(_._1 == rid).map(v => v._2 -> v._3).toMap
-    }
-    val counts = vocab.map(_.size)
-    val maxVal = counts.max
-    val tailRanges = Array.tabulate(nRel)(rid =>
-      (rid.toLong * maxVal, counts(rid).toLong))
-
     // Offset-indexed triples over the DISTINCT value-pair graph —
     // vocab-pair-sized (the evolution structure itself), NOT
     // data-sized: Spark distributes the heavy part (deriving the graph
@@ -256,31 +265,24 @@ object RLTransE {
     // mini-batch scheme (batchSize 128, lr 0.1,
     // /root/reference/VEG/rltranse.py:22-27), which converges where a
     // full-batch distributed epoch oscillates.
-    val va = vocabDf.select(col("r"), col("value").as("val_a"),
-      col("vidx").as("ia"))
-    val vb = vocabDf.select(col("r"), col("value").as("val_b"),
-      col("vidx").as("ib"))
-    val tripleDf = vegTrain
-      .join(va, Seq("r", "val_a")).join(vb, Seq("r", "val_b"))
-      .select(
-        (col("r") * maxVal + col("ia")).cast("long").as("h"),
-        (col("r") * maxVal + col("ib")).cast("long").as("t"),
-        col("r").cast("long"))
-      .persist()
-    val tripleCount = tripleDf.count()
-    require(tripleCount <= cfg.maxDriverTriples,
-      s"RLTransE has $tripleCount distinct value-pair triples, over " +
-        s"the driver-side SGD bound (${cfg.maxDriverTriples}): the " +
-        "evolution graph is data-sized, not vocabulary-sized — raise " +
-        "Config.maxDriverTriples only if the driver heap is sized for it")
-    val triples = tripleDf
-      .collect().map(r => (r.getLong(0).toInt, r.getLong(1).toInt,
-        r.getLong(2).toInt))
-      .sortBy(t => (t._3, t._1, t._2)) // deterministic base order
-    tripleDf.unpersist(); vegTrain.unpersist(); vocabDf.unpersist()
-    val (ent, rel, losses) = sgd(triples, nRel * maxVal, nRel,
-      tailRanges, cfg)
-    Model(ent, rel, vocab, maxVal, losses)
+    val (vt, triples) = withValueTable(veg, cfg.maxDriverTriples) { vt =>
+      val tripleDf = vt.triples.persist()
+      val tripleCount = tripleDf.count()
+      require(tripleCount <= cfg.maxDriverTriples,
+        s"RLTransE has $tripleCount distinct value-pair triples, over " +
+          s"the driver-side SGD bound (${cfg.maxDriverTriples}): the " +
+          "evolution graph is data-sized, not vocabulary-sized — raise " +
+          "Config.maxDriverTriples only if the driver heap is sized for it")
+      val triples = tripleDf
+        .collect().map(r => (r.getLong(0).toInt, r.getLong(1).toInt,
+          r.getLong(2).toInt))
+        .sortBy(t => (t._3, t._1, t._2)) // deterministic base order
+      tripleDf.unpersist()
+      (vt, triples)
+    }
+    val (ent, rel, losses) = sgd(triples, vt.nEnt,
+      GraphBuild.Relations.size, vt.tailRanges, cfg)
+    Model(ent, rel, vt.vocab, vt.maxVal, losses)
   }
 
   /**
@@ -386,36 +388,24 @@ object RLTransE {
     (ent, rel, losses)
   }
 
-  /**
-   * Per-field translated-cosine distances for candidate pairs:
-   * (idA, idB, label, f_<rel>...) — one column per scored field. The
-   * building block for [[pairScores]] and for WERL's learned
-   * per-column weights. With `l1 = true` the per-field metric is the
-   * mean elementwise |a + r - b| instead of cosine distance — the
-   * reference's unweighted "mean embedding" record distance
-   * (/root/reference/werl.py:335-358).
-   */
-  /** Per-pair per-field distances of the BATCH fit, micro-quantized —
-    * the staged-oracle ANCHOR for the werl_batch_* family: the 1e-6
-    * grid is exactly the mq6 lattice the WERL channels quantize on, so
-    * the DuckDB replay compares these BIGINTs exactly and downstream
-    * oracles reconstruct the channels as `micros / 1e6`. */
   /** The staged-oracle anchor: per-pair per-field micro distances of
     * the full batch fit AND of the half-epochs fit (grid_werl's other
-    * sweep cell). Exporting both from ONE query lets the DuckDB twin
-    * verify the half-trained model as an intermediate readout of the
-    * same training chain it already unrolls for the full fit, instead
-    * of replaying the chain a second time (~35 s/gate run). The
-    * half-epochs model is the SAME memoized fit grid_werl's Scala
-    * side scores through ([[graft.ml.Weights.werlBatchEval]]). */
+    * sweep cell), on the 1e-6 grid the WERL channels quantize on, so the
+    * DuckDB replay compares these BIGINTs exactly and downstream oracles
+    * reconstruct the channels as `micros / 1e6`. Exporting both from
+    * ONE query lets the DuckDB twin verify the half-trained model as an
+    * intermediate readout of the same training chain it already unrolls
+    * for the full fit, instead of replaying the chain a second time
+    * (~35 s/gate run). The half-epochs model is the SAME memoized fit
+    * grid_werl's Scala side scores through
+    * ([[graft.ml.Weights.werlBatchEval]]). */
   def batchPairFields(spark: SparkSession, sfDir: String,
                       cfg: TransE.Config = BatchCfg): DataFrame = {
     val model = trainBatch(spark, sfDir, cfg)
     val half = cfg.copy(epochs = cfg.epochs / 2)
     val mHalf = trainBatch(spark, sfDir, half)
     val full = fieldScores(spark, sfDir, model, testOnly = false)
-      .select(Seq(col("idA"), col("idB"), col("label"),
-        col("split_a"), col("split_b")) ++
+      .select(PairCols.map(col) ++
         ScoredRels.map(r =>
           floor(col(s"f_$r") * 1e6 + lit(0.5)).cast("long")
             .as(s"f_${r}_micros")): _*)
@@ -427,65 +417,85 @@ object RLTransE {
     full.join(halfDf, Seq("idA", "idB"))
   }
 
-  def fieldScores(spark: SparkSession, sfDir: String, model: Model,
-                  testOnly: Boolean = true,
-                  l1: Boolean = false): DataFrame = {
+  private val PairCols = Seq("idA", "idB", "label", "split_a", "split_b")
+
+  /**
+   * The per-field decode both [[fieldScores]] and [[fieldDiffFeatures]]
+   * run: candidate pairs (all, or the test split) with `width` doubles
+   * per scored field in the array column `out`. A field whose two
+   * values are equal keeps its zero block; a value missing from the
+   * TRAIN vocabulary fills the block with ones; otherwise
+   * `kernel(ea, er, eb, out, off)` writes the block at `off` from the
+   * two value rows and the relation row.
+   */
+  private def decodeFields(spark: SparkSession, sfDir: String,
+                           model: Model, testOnly: Boolean, width: Int,
+                           out: String)(
+      kernel: (Array[Float], Array[Float], Array[Float], Array[Double],
+        Int) => Unit): DataFrame = {
     import spark.implicits._
     val keyed = graft.EntryStages.keyed(spark, sfDir)
     def sideFields(idCol: String, prefix: String) =
       keyed.select(Seq(col("id").as(idCol)) ++
         ScoredRels.map(r => col(r).as(s"$prefix$r")): _*)
     val base = graft.EntryStages.cand(spark, sfDir)
-    val filtered = if (testOnly) Splits.test(base) else base
-    val cand = filtered
+    val cand = (if (testOnly) Splits.test(base) else base)
       .select(col("idA"), col("idB"),
         (col("dni_a") === col("dni_b")).cast("long").as("label"),
         col("split_a"), col("split_b"))
       .join(sideFields("idA", "a_"), "idA")
       .join(sideFields("idB", "b_"), "idB")
+      .select(PairCols.map(col) ++
+        ScoredRels.flatMap(r => Seq(col(s"a_$r"), col(s"b_$r"))): _*)
     val relIds = ScoredRels.map(GraphBuild.Relations.indexOf).toArray
-    val bcast = spark.sparkContext.broadcast(
-      (model.ent, model.rel, model.vocab, model.maxValCount))
-    val cols = Seq(col("idA"), col("idB"), col("label"),
-      col("split_a"), col("split_b")) ++
-      ScoredRels.flatMap(r => Seq(col(s"a_$r"), col(s"b_$r")))
-    val nMeta = 5
-    cand.select(cols: _*).map { row =>
-      val (ent, rel, vocab, maxVal) = bcast.value
-      val dds = new Array[Double](relIds.length)
+    val bcast = spark.sparkContext.broadcast(model)
+    val nMeta = PairCols.length
+    cand.map { row =>
+      val m = bcast.value
+      val acc = new Array[Double](relIds.length * width)
       var f = 0
       while (f < relIds.length) {
         val va = row.getString(nMeta + 2 * f)
         val vb = row.getString(nMeta + 2 * f + 1)
         val rid = relIds(f)
-        dds(f) =
-          if (va == vb) 0.0
-          else {
-            val ia = vocab(rid).get(va)
-            val ib = vocab(rid).get(vb)
-            if (ia.isEmpty || ib.isEmpty) 1.0
-            else {
-              val ea = ent(rid * maxVal + ia.get)
-              val eb = ent(rid * maxVal + ib.get)
-              val er = rel(rid)
-              val shifted = new Array[Float](ea.length)
-              var i = 0
-              while (i < ea.length) { shifted(i) = ea(i) + er(i); i += 1 }
-              if (l1) Embed.l1Mean(shifted, eb)
-              else Embed.cosineDistance(shifted, eb)
-            }
+        val off = f * width
+        if (va != vb) {
+          (m.valueRow(rid, va), m.valueRow(rid, vb)) match {
+            case (Some(ea), Some(eb)) => kernel(ea, m.rel(rid), eb, acc, off)
+            case _ => java.util.Arrays.fill(acc, off, off + width, 1.0)
           }
+        }
         f += 1
       }
       (row.getLong(0), row.getLong(1), row.getLong(2),
-        row.getString(3), row.getString(4), dds)
-    }.toDF("idA", "idB", "label", "split_a", "split_b", "dds")
-      .select(Seq(col("idA"), col("idB"), col("label"),
-        col("split_a"), col("split_b")) ++
-        ScoredRels.zipWithIndex.map { case (r, i) =>
-          element_at(col("dds"), i + 1).as(s"f_$r")
-        }: _*)
+        row.getString(3), row.getString(4), acc)
+    }.toDF(PairCols :+ out: _*)
   }
+
+  /**
+   * Per-field translated-cosine distances for candidate pairs:
+   * (idA, idB, label, split_a, split_b, f_<rel>...) — one column per
+   * scored field, the building block of the RLTransE evals and of
+   * WERL's learned per-column weights. With `l1 = true` the per-field
+   * metric is the mean elementwise |a + r - b| instead of cosine
+   * distance — the reference's unweighted "mean embedding" record
+   * distance (/root/reference/werl.py:335-358).
+   */
+  def fieldScores(spark: SparkSession, sfDir: String, model: Model,
+                  testOnly: Boolean = true,
+                  l1: Boolean = false): DataFrame =
+    decodeFields(spark, sfDir, model, testOnly, width = 1, out = "dds") {
+      (ea, er, eb, acc, off) =>
+        val shifted = new Array[Float](ea.length)
+        var i = 0
+        while (i < ea.length) { shifted(i) = ea(i) + er(i); i += 1 }
+        acc(off) =
+          if (l1) Embed.l1Mean(shifted, eb)
+          else Embed.cosineDistance(shifted, eb)
+    }.select(PairCols.map(col) ++
+      ScoredRels.zipWithIndex.map { case (r, i) =>
+        element_at(col("dds"), i + 1).as(s"f_$r")
+      }: _*)
 
   /**
    * Dim-wide per-field translated DIFFERENCE VECTORS for candidate
@@ -508,69 +518,12 @@ object RLTransE {
    */
   def fieldDiffFeatures(spark: SparkSession, sfDir: String,
                         model: Model): DataFrame = {
-    import spark.implicits._
-    val keyed = graft.EntryStages.keyed(spark, sfDir)
-    def sideFields(idCol: String, prefix: String) =
-      keyed.select(Seq(col("id").as(idCol)) ++
-        ScoredRels.map(r => col(r).as(s"$prefix$r")): _*)
-    val cand = graft.EntryStages.cand(spark, sfDir)
-      .select(col("idA"), col("idB"),
-        (col("dni_a") === col("dni_b")).cast("long").as("label"),
-        col("split_a"), col("split_b"))
-      .join(sideFields("idA", "a_"), "idA")
-      .join(sideFields("idB", "b_"), "idB")
-    val relIds = ScoredRels.map(GraphBuild.Relations.indexOf).toArray
-    val bcast = spark.sparkContext.broadcast(
-      (model.ent, model.rel, model.vocab, model.maxValCount))
-    val cols = Seq(col("idA"), col("idB"), col("label"),
-      col("split_a"), col("split_b")) ++
-      ScoredRels.flatMap(r => Seq(col(s"a_$r"), col(s"b_$r")))
-    val nMeta = 5
-    cand.select(cols: _*).map { row =>
-      val (ent, rel, vocab, maxVal) = bcast.value
-      val dim = rel(0).length
-      val out = new Array[Double](relIds.length * dim)
-      var f = 0
-      while (f < relIds.length) {
-        val va = row.getString(nMeta + 2 * f)
-        val vb = row.getString(nMeta + 2 * f + 1)
-        val rid = relIds(f)
-        val off = f * dim
-        if (va != vb) {
-          val ia = vocab(rid).get(va)
-          val ib = vocab(rid).get(vb)
-          if (ia.isEmpty || ib.isEmpty) {
-            java.util.Arrays.fill(out, off, off + dim, 1.0)
-          } else {
-            val ea = ent(rid * maxVal + ia.get)
-            val eb = ent(rid * maxVal + ib.get)
-            val er = rel(rid)
-            var i = 0
-            while (i < dim) {
-              out(off + i) = ea(i).toDouble + er(i) - eb(i); i += 1
-            }
-          }
-        } // equal values: zero block
-        f += 1
-      }
-      (row.getLong(0), row.getLong(1), row.getLong(2),
-        row.getString(3), row.getString(4), out)
-    }.toDF("idA", "idB", "label", "split_a", "split_b", "features")
-  }
-
-  /**
-   * Per-field translated-cosine scores for the TEST candidate pairs:
-   * (idA, idB, label, dist, st_dist). `st_dist` isolates the evolving
-   * field — the direct evidence that the trainer learned the
-   * fin->done / open->live / pend->wait value translations.
-   */
-  def pairScores(spark: SparkSession, sfDir: String,
-                 model: Model): DataFrame = {
-    val fieldCols = ScoredRels.map(r => col(s"f_$r"))
-    fieldScores(spark, sfDir, model)
-      .withColumn("dist", fieldCols.reduce(_ + _))
-      .select(col("idA"), col("idB"), col("label"), col("dist"),
-        col("f_st").as("st_dist"))
+    val dim = model.rel(0).length
+    decodeFields(spark, sfDir, model, testOnly = false, width = dim,
+        out = "features") { (ea, er, eb, acc, off) =>
+      var i = 0
+      while (i < dim) { acc(off + i) = ea(i).toDouble + er(i) - eb(i); i += 1 }
+    }
   }
 
   /** Summary row: config, threshold (swept on the TRAIN split — never

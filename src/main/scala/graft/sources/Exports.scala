@@ -52,7 +52,7 @@ object Exports {
       (rel, rid) <- rels.zipWithIndex
       (value, vidx) <- model.vocab(rid).toSeq.sortBy(_._2)
     } yield (rel, value,
-      model.ent(rid * model.maxValCount + vidx).mkString(","))
+      model.ent(model.offset(rid, vidx)).mkString(","))
     rows.toDF("relation", "value", "vec")
   }
 

@@ -43,10 +43,11 @@ class ModelIOSpec extends AnyFunSuite {
     val trained = RLTransE.train(spark, SparkTestSession.sf0001, cfg)
     ModelIO.saveRLTransE(spark, dir, trained, "fp-test")
     val restored = ModelIO.loadRLTransE(spark, dir)
-    val a = RLTransE.pairScores(spark, SparkTestSession.sf0001, trained)
-      .orderBy("idA", "idB").collect()
-    val b = RLTransE.pairScores(spark, SparkTestSession.sf0001, restored)
-      .orderBy("idA", "idB").collect()
+    // every scored field of every candidate pair
+    val a = RLTransE.fieldScores(spark, SparkTestSession.sf0001, trained,
+      testOnly = false).orderBy("idA", "idB").collect()
+    val b = RLTransE.fieldScores(spark, SparkTestSession.sf0001, restored,
+      testOnly = false).orderBy("idA", "idB").collect()
     assert(a.length == b.length && a.nonEmpty)
     assert(a.sameElements(b))
   }

@@ -11,20 +11,26 @@ import org.scalatest.funsuite.AnyFunSuite
   * only the frozen driver surfaces [[Bench]] and [[Verify]] build their
   * own sessions. One gradient step: the distributed trainers reduce,
   * quantize and take the plain TransE hinge through
-  * [[graft.sim.MicroGrad]] only. Stops per-file copies from growing
-  * back. */
+  * [[graft.sim.MicroGrad]] only. One RLTransE value table with its
+  * offset term in `RLTransE.Model`, and one balanced-GD fit site in
+  * `Weights`. Stops per-file copies from growing back. */
 class SessionBuilderSpec extends AnyFunSuite {
 
   /** Paths, relative to `src/main/scala`, of the sources matching `re`. */
-  private def scan(re: Regex): Set[String] = {
+  private def scan(re: Regex): Set[String] = counts(re).keySet
+
+  /** Matches of `re` per source, keyed as in [[scan]]; sources without
+    * a match are left out. */
+  private def counts(re: Regex): Map[String, Int] = {
     val root = Paths.get(sys.props.getOrElse("user.dir", "."), "src", "main", "scala")
     assert(Files.isDirectory(root), s"no sources under $root")
     val walk = Files.walk(root)
     try walk.iterator().asScala
         .filter(_.toString.endsWith(".scala"))
-        .filter(p => re.findFirstIn(Files.readString(p)).isDefined)
-        .map(p => root.relativize(p).toString.replace('\\', '/'))
-        .toSet
+        .map(p => root.relativize(p).toString.replace('\\', '/') ->
+          re.findAllIn(Files.readString(p)).size)
+        .filter(_._2 > 0)
+        .toMap
       finally walk.close()
   }
 
@@ -51,5 +57,21 @@ class SessionBuilderSpec extends AnyFunSuite {
     assert(found.contains(home))
     assert((found - home).isEmpty,
       s"call graft.sim.MicroGrad.hinge instead: ${(found - home).toSeq.sorted}")
+  }
+
+  test("the RLTransE value table, its offset term and the balanced-GD fit have one site each") {
+    val rlt = "graft/sim/RLTransE.scala"
+    val vocab = counts("""(?<!def )\bvocabulary\(""".r).getOrElse(rlt, 0)
+    val fits = counts(Regex.quote("EmbedLogistic.fitBalancedOn(").r)
+      .getOrElse("graft/ml/Weights.scala", 0)
+    val offset = scan("""\*\s*(?:\w+\.)?maxValCount\s*\+""".r)
+    assert(offset.contains(rlt))
+    val faults = Seq(
+      (vocab > 1) -> s"$vocab vocabulary( calls in $rlt: build the value table once",
+      (fits > 1) -> s"$fits EmbedLogistic.fitBalancedOn( sites in Weights: fit through one helper",
+      (offset - rlt).nonEmpty ->
+        s"offset term in ${(offset - rlt).toSeq.sorted}: address value rows through RLTransE.Model")
+      .collect { case (true, msg) => msg }
+    assert(faults.isEmpty, faults.mkString("; "))
   }
 }

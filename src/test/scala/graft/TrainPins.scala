@@ -21,8 +21,26 @@ object TrainPins {
       buf.clear(); buf.putLong(java.lang.Double.doubleToRawLongBits(x))
       md.update(buf.array(), 0, 8)
     }
-    md.digest().map(b => f"${b & 0xff}%02x").mkString
+    hex(md.digest())
   }
+
+  /** sha256 over the rows sorted as text, each cell written exactly:
+    * doubles and floats as raw bits, arrays cell by cell. */
+  def rowsSha(rows: Seq[org.apache.spark.sql.Row]): String = {
+    def cell(x: Any): String = x match {
+      case d: Double => java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(d))
+      case f: Float => Integer.toHexString(java.lang.Float.floatToRawIntBits(f))
+      case xs: scala.collection.Seq[_] => xs.map(cell).mkString("[", ",", "]")
+      case null => "null"
+      case o => o.toString
+    }
+    val md = MessageDigest.getInstance("SHA-256")
+    rows.map(_.toSeq.map(cell).mkString("|")).sorted
+      .foreach(l => md.update((l + "\n").getBytes("UTF-8")))
+    hex(md.digest())
+  }
+
+  private def hex(bytes: Array[Byte]): String = bytes.map(b => f"${b & 0xff}%02x").mkString
 
   /** Raw bits of an eval row's theta, f1, precision, recall and mrr. */
   def evalBits(row: org.apache.spark.sql.Row): Seq[Long] =

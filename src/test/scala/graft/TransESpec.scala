@@ -54,6 +54,8 @@ class TransESpec extends AnyFunSuite {
 
   test("RLTransE learns the value evolution and reaches the top tier") {
     val model = RLTransE.train(spark, sf, RLTransE.Config(epochs = 30))
+    assert(TrainPins.sha(Seq(model.ent, model.rel), Seq(model.lossByEpoch)) ==
+      "3154250ddeef979ca3c2610aa0674ab1a5c186564b3841441657c92097a465d5")
     // the st relation must have learned fin -> done as a translation:
     // emb(fin) + rel_st is closer to emb(done) than to the other
     // evolved values (live, wait)
@@ -86,6 +88,16 @@ class TransESpec extends AnyFunSuite {
     // train-once memo: the registered query and repeated evals share one fit
     val m1 = RLTransE.trainBatch(spark, sf)
     assert(RLTransE.trainBatch(spark, sf) eq m1)
+    assert(TrainPins.sha(Seq(m1.ent, m1.rel), Seq(m1.lossByEpoch)) ==
+      "aebd6b51f8259194b56065ccf95e537a1a18eb743c62243c49469ab3a45884d7")
+    // every field of every candidate pair, and the dim-wide features
+    val fields = TrainPins.rowsSha(
+      RLTransE.fieldScores(spark, sf, m1, testOnly = false).collect().toSeq)
+    val diffs = TrainPins.rowsSha(
+      RLTransE.fieldDiffFeatures(spark, sf, m1).collect().toSeq)
+    assert((fields, diffs) ==
+      (("0c8690ec1d659fc70b3bb7a711dc996d313dff12ea71bc2fd92063cf532d2e68",
+        "b93d633c81abfff15a7ec40567477d89fb86870c397d3b06df8ac446241e6f2e")))
   }
 
   test("batch model dump: both epoch readouts, unit rows, vocab-complete") {

@@ -14,6 +14,10 @@ class WeightsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   lazy val sf = SparkTestSession.sf0001
 
+  /** (feature, weight_nanos) rows, sorted by feature. */
+  private def nanos(w: org.apache.spark.sql.DataFrame): Seq[(String, Long)] =
+    w.collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+
   test("MERL and no-weight variants land in a real F1 band on frozen channels") {
     val merl = ml.Weights.merlMetrics(spark, sf).head()
     val now = ml.Weights.noweightMetrics(spark, sf).head()
@@ -37,6 +41,8 @@ class WeightsSpec extends AnyFunSuite {
     val (w2, m2) = ml.Weights.veerWeightsAndMetrics(spark, sf)
     assert((w1 eq w2) && (m1 eq m2))
     assert(m1.head().getAs[Double]("f1") >= 0.99)
+    assert(nanos(w1) == Seq(("cos", 3240666833L), ("intercept", -3264272792L),
+      ("jw", -1631502423L), ("lev", 4042144088L)))
   }
 
   test("VEER grid eval carries per-combo MRR and a sane F1") {
@@ -53,6 +59,9 @@ class WeightsSpec extends AnyFunSuite {
     assert(m1.head().getAs[Double]("f1") >= 0.9,
       s"werl_batch f1 ${m1.head().getAs[Double]("f1")}")
     assert(w1.count() == ml.Weights.WerlFeatures.length + 1)
+    assert(nanos(w1) == Seq(("f_lang", -1077160916L), ("f_prif", -1101035244L),
+      ("f_repo", 0L), ("f_st", -544376347L), ("f_valf", -1421977390L),
+      ("f_w1f", -1393167544L), ("intercept", 1898870447L)))
   }
 
   test("grid_werl sweeps the batch-fit epochs axis: one row per combo, " +
@@ -94,6 +103,8 @@ class WeightsSpec extends AnyFunSuite {
     // band at 0.95 to absorb future synth-table tweaks, not noise
     assert(f1 >= 0.95, s"logistic_rltranse_batch f1 $f1")
     assert(w1.count() == ml.Weights.LogRltBatchDim + 1)
+    assert(TrainPins.rowsSha(w1.collect().toSeq) ==
+      "85a9f66bb95305f0340d40fa5a1b60b292ebd5cd5e84cac14d077da371775149")
     // anchor export is the exact mq6 lattice: micros/1e6 must
     // reproduce the GD input doubles bit-for-bit (spot-check a row)
     val feats = ml.Weights.logRltBatchFeats(spark, sf)
