@@ -29,7 +29,7 @@ import graft.sim.Scorer
 object Pipeline {
 
   final case class Outputs(
-      records: DataFrame, keyed: DataFrame, candidates: DataFrame,
+      keyed: DataFrame, candidates: DataFrame,
       scored: DataFrame, theta: Double, edges: DataFrame,
       clusters: DataFrame, testMetrics: DataFrame, summary: DataFrame)
 
@@ -56,9 +56,10 @@ object Pipeline {
 
     val fpBase = Checkpoint.fingerprint(sfDir, "v1", s"salts=$salts")
 
-    val records = Synth.records(spark, sfDir)
+    // the records are read inside the stage, so a resumed run does not
+    // touch the source
     val keyed = ck("keyed", fpBase) {
-      keyRecords(records)
+      keyRecords(Synth.records(spark, sfDir))
     }
     val candidates = ck("candidates", fpBase) {
       Blocking.candidates(keyed, salts)
@@ -88,7 +89,7 @@ object Pipeline {
       .toDF("theta", "test_f1", "test_precision", "test_recall",
         "tp", "fp", "fn", "n_candidate_pairs", "n_records", "n_clusters")
 
-    Outputs(records, keyed, candidates, scored, theta, edges, clusters,
+    Outputs(keyed, candidates, scored, theta, edges, clusters,
       testMetrics, summary)
   }
 

@@ -36,9 +36,11 @@ case class FnvMix(left: Expression, right: Expression)
     graft.sim.NegativeSampler.fnvMix(
       l.asInstanceOf[Long], r.asInstanceOf[Long])
 
+  // `fnvMix` is `private[graft]`, so Scala emits no static forwarder:
+  // the generated Java calls it on the module instance.
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (l, r) =>
-      s"${ev.value} = graft.sim.NegativeSampler.fnvMix($l, $r);")
+      s"${ev.value} = graft.sim.NegativeSampler$$.MODULE$$.fnvMix($l, $r);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): FnvMix =

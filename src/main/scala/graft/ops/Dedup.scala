@@ -160,9 +160,10 @@ object Dedup {
    * Near-dup document CLUSTERING — the "collapse near-dups, keep one"
    * step of a training-data pipeline (the per-pair views above only
    * rank): verified minhash edges (jaccard >= [[ClusterMinJaccard]])
-   * -> large-star/small-star connected components
-   * ([[graft.pipe.Cluster.assign]], the same 100-TB-safe loop as the
-   * flagship) -> cluster = min doc_id, canonical flag, cluster size.
+   * -> connected components ([[graft.pipe.Cluster.assign]], as in the
+   * flagship: a driver union-find while the edges fit the driver heap,
+   * the 100-TB-safe large-star/small-star loop above that bound) ->
+   * cluster = min doc_id, canonical flag, cluster size.
    * Keeping `is_canonical = 1` rows is the dedup; the size column is
    * the dedup-rate audit.
    */

@@ -1,0 +1,50 @@
+package graft
+
+import java.nio.file.{Files, Path}
+import java.util.Comparator
+
+import org.apache.spark.JobCount
+import org.apache.spark.sql.Row
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.gen.Synth
+
+/**
+ * The Spark-job budget of one `Pipeline.run` at sf0.001, in its three
+ * modes: no checkpoint, a cold checkpointed run, and a resumed run
+ * over the same root. Each run starts from an empty cache, after the
+ * once-per-JVM warm in `Synth.records`. A change that cuts jobs lowers
+ * its pin; one that adds jobs must say why.
+ */
+class PipelineJobsSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+  private val sf = SparkTestSession.sf0001
+
+  private def counted(ckpt: Option[String]): (Seq[Row], Int) = {
+    spark.catalog.clearCache()
+    JobCount(spark.sparkContext)(Pipeline.run(spark, sf, ckpt).summary.collect().toSeq)
+  }
+
+  private def deleteRecursively(p: Path): Unit =
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.sorted(Comparator.reverseOrder[Path]())
+        .forEach(f => { Files.delete(f); () })
+      finally walk.close()
+    }
+
+  test("Pipeline.run job budget: no checkpoint, cold checkpoint, resumed") {
+    Synth.records(spark, sf)
+    val root = Files.createTempDirectory("graft-jobs")
+    try {
+      val (plain, plainJobs) = counted(None)
+      val (cold, coldJobs) = counted(Some(root.toString))
+      val (resumed, resumedJobs) = counted(Some(root.toString))
+      info(s"jobs: plain $plainJobs, cold $coldJobs, resumed $resumedJobs")
+      assert(cold == plain && resumed == plain)
+      assert(plainJobs <= 28, s"no checkpoint: $plainJobs jobs")
+      assert(coldJobs <= 44, s"cold checkpoint: $coldJobs jobs")
+      assert(resumedJobs <= 17, s"resumed: $resumedJobs jobs")
+    } finally deleteRecursively(root)
+  }
+}
