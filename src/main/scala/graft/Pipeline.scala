@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ckpt.Checkpoint
 import graft.gen.Synth
 import graft.pipe.{Blocking, Cluster, Normalize, Splits}
-import graft.sim.Scorer
+import graft.sim.{Embed, Scorer}
 
 /**
  * The flagship end-to-end linkage pipeline (SURVEY.md §7.2, mirroring
@@ -45,6 +45,22 @@ object Pipeline {
     scored.filter(dist <= theta)
       .select(col("idA").as("src"), col("idB").as("dst"))
 
+  /** What the scored stage computes with beyond its input: the score
+    * weights and the projection's seed and width. */
+  private[graft] val ScorerKey: Seq[String] = Seq(
+    s"w_jw=${Scorer.WJw}", s"w_lev=${Scorer.WLev}", s"w_cos=${Scorer.WCos}",
+    s"proj_seed=${Embed.ProjSeed}", s"dim=${Embed.DefaultDim}")
+
+  /** Checkpoint fingerprints `(keyed and candidates, scored)`: the
+    * first covers the source and the salts, the second also folds in
+    * `scorer`, so a scorer change recomputes `scored` (and `clusters`,
+    * keyed on it) while the stages before it are served. */
+  private[graft] def fingerprints(sfDir: String, salts: Int,
+                                  scorer: Seq[String] = ScorerKey): (String, String) = {
+    val input = Checkpoint.fingerprint(sfDir, s"salts=$salts")
+    (input, Checkpoint.fingerprint(input +: scorer: _*))
+  }
+
   def run(spark: SparkSession, sfDir: String,
           ckptRoot: Option[String] = None, salts: Int = 64): Outputs = {
 
@@ -54,34 +70,35 @@ object Pipeline {
         case None => df
       }
 
-    val fpBase = Checkpoint.fingerprint(sfDir, "v1", s"salts=$salts")
+    val (fpInput, fpScored) = fingerprints(sfDir, salts)
 
     // the records are read inside the stage, so a resumed run does not
     // touch the source
-    val keyed = ck("keyed", fpBase) {
+    val keyed = ck("keyed", fpInput) {
       keyRecords(Synth.records(spark, sfDir))
     }
-    val candidates = ck("candidates", fpBase) {
+    val candidates = ck("candidates", fpInput) {
       Blocking.candidates(keyed, salts)
     }
     val proj = Scorer.broadcastProjection(spark)
-    val scored = ck("scored", fpBase) {
+    val scored = ck("scored", fpScored) {
       Scorer.scoreDF(candidates, proj)
     }.persist()
 
     val theta = Splits.theta(scored, dist, col("label"))
 
     val edges = edgesAt(scored, theta)
-    val clusters = ck("clusters", Checkpoint.fingerprint(fpBase, theta.toString)) {
+    val clusters = ck("clusters", Checkpoint.fingerprint(fpScored, theta.toString)) {
       Cluster.assign(keyed.select("id"), edges)
     }
 
-    val testMetrics = Splits.testMetrics(scored, dist, col("label"), theta)
-
-    val m = testMetrics.head()
-    val nClusters = clusters.select(countDistinct("cluster")).head().getLong(0)
-    val nRecords = keyed.count()
-    val nPairs = scored.count()
+    // the summary takes two actions: the test metrics count every pair
+    // on the way through, and clusters has one row per record
+    def testMetricsOf(s: DataFrame) = Splits.testMetrics(s, dist, col("label"), theta)
+    val testMetrics = testMetricsOf(scored)
+    val (m, nPairs) = Observed.rows(scored)(testMetricsOf(_).head())
+    val c = clusters.agg(count(lit(1)), countDistinct("cluster")).head()
+    val (nRecords, nClusters) = (c.getLong(0), c.getLong(1))
     import spark.implicits._
     val summary = Seq((theta, m.getAs[Double]("f1"), m.getAs[Double]("precision"),
         m.getAs[Double]("recall"), m.getAs[Long]("tp"), m.getAs[Long]("fp"),

@@ -1,9 +1,14 @@
 package graft.ckpt
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
+
+import graft.Observed
 
 /**
  * Per-stage Parquet checkpoints with lineage + metrics, making runs
@@ -13,10 +18,24 @@ import org.apache.spark.sql.functions._
  * partition-tagged Parquet).
  *
  * Layout: `<root>/<stage>/` holds the stage output plus lineage
- * columns `_stage`, `_run_id`, `_part_id`, `_input_fingerprint`;
- * `<root>/<stage>._meta.json` records fingerprint + row count + wall
- * time. A stage is skipped iff its checkpoint exists and the input
- * fingerprint matches; otherwise it is recomputed and rewritten.
+ * columns `_stage`, `_run_id`, `_part_id`, `_input_fingerprint`.
+ * `<root>/<stage>._meta.json` is the stage's commit record: stage,
+ * run id, input fingerprint, row count, wall time and the read-back
+ * schema (DDL: the data columns, then the `partitionBy` columns, as a
+ * hive-layout read returns them; no lineage columns).
+ *
+ * Commit order of a (re)computed stage:
+ *  1. delete the meta, so a run that dies from here on leaves no
+ *     record that serves the directory it was overwriting;
+ *  2. write the data; Spark's committer writes `<dir>/_SUCCESS` last;
+ *  3. write the meta to a temp file and move it into place atomically.
+ *
+ * A stage is served iff its meta parses whole, carries the matching
+ * fingerprint and a schema, and `<dir>/_SUCCESS` exists; anything else
+ * (a failed write, a truncated meta, a meta without a schema) is
+ * recomputed. Both paths return `spark.read.schema(s).parquet(dir)`,
+ * so no footer job infers the schema, and the row count is observed
+ * on the write ([[graft.Observed]]), not taken by a read-back count.
  */
 object Checkpoint {
 
@@ -25,21 +44,16 @@ object Checkpoint {
   private def metaPath(root: String, stage: String) =
     Paths.get(s"$root/$stage._meta.json")
 
-  /** The recorded lineage sidecar of a stage (run_id, fingerprint,
-    * rows, wall_ms), if the stage has been checkpointed. */
-  def meta(root: String, stage: String): Option[Map[String, String]] =
-    readMeta(root, stage)
+  // the flat-JSON meta: one object of string fields, nothing else
+  private val Field = "\"([^\"]+)\"\\s*:\\s*\"([^\"]*)\"".r
+  private val WholeMeta = raw"""\{\s*(?:$Field(?:\s*,\s*$Field)*)?\s*\}""".r
 
-  private def readMeta(root: String, stage: String): Option[Map[String, String]] = {
-    val p = metaPath(root, stage)
-    if (!Files.exists(p)) None
-    else {
-      val txt = Files.readString(p)
-      // minimal flat-json parse (we wrote it ourselves)
-      val kv = "\"([^\"]+)\"\\s*:\\s*\"([^\"]*)\"".r
-      Some(kv.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2)).toMap)
-    }
-  }
+  /** The commit record of a stage (stage, run_id, input_fingerprint,
+    * rows, wall_ms, schema), if a whole one is on disk. */
+  def meta(root: String, stage: String): Option[Map[String, String]] =
+    Try(Files.readString(metaPath(root, stage)).trim).toOption
+      .filter(WholeMeta.matches)
+      .map(txt => Field.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2)).toMap)
 
   private def writeMeta(root: String, stage: String,
                         fields: Map[String, String]): Unit = {
@@ -53,15 +67,36 @@ object Checkpoint {
     }
     val json = fields.map { case (k, v) => s""""$k": "$v"""" }
       .mkString("{", ", ", "}")
-    Files.createDirectories(Paths.get(root))
-    Files.writeString(metaPath(root, stage), json)
+    val tmp = Paths.get(s"$root/$stage._meta.json.tmp-${fields("run_id")}")
+    Files.writeString(tmp, json)
+    Files.move(tmp, metaPath(root, stage), StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** The schema to read a committed stage back with, if `stage` is
+    * committed under `fingerprint`. */
+  private def committed(root: String, stage: String,
+                        fingerprint: String): Option[StructType] =
+    meta(root, stage)
+      .filter(_.get("input_fingerprint").contains(fingerprint))
+      .flatMap(_.get("schema"))
+      .filter(_ => Files.exists(Paths.get(s"$root/$stage/_SUCCESS")))
+      .flatMap(ddl => Try(StructType.fromDDL(ddl)).toOption)
+
+  /** The columns a hive-layout read of `data` written with
+    * `partitionBy` returns, in its order, all nullable as file reads
+    * are. */
+  private def readBackSchema(data: StructType,
+                             partitionBy: Seq[String]): StructType = {
+    val ordered = data.fields.filterNot(f => partitionBy.contains(f.name)) ++
+      partitionBy.map(data(_))
+    StructType(ordered.map(f => StructField(f.name, f.dataType)))
   }
 
   /**
-   * Run `compute` through the checkpoint: skip when a matching
-   * checkpoint exists; else compute, persist with lineage columns, and
-   * record metrics. The returned DataFrame always reads from the
-   * checkpoint (stable lineage for downstream stages).
+   * Run `compute` through the checkpoint: serve the stage when it is
+   * committed under `inputFingerprint`; else compute, persist with
+   * lineage columns, and commit its meta. The returned DataFrame always
+   * reads from the checkpoint (stable lineage for downstream stages).
    *
    * @param partitionBy Iceberg-style partition columns for the stage
    *                    output (hive layout); downstream reads with
@@ -72,35 +107,35 @@ object Checkpoint {
             inputFingerprint: String, partitionBy: Seq[String] = Nil)
            (compute: => DataFrame): StageResult = {
     val dir = s"$root/$stageName"
-    val cached = readMeta(root, stageName) match {
-      case Some(meta) if meta.get("input_fingerprint").contains(inputFingerprint)
-          && Files.exists(Paths.get(dir)) => true
-      case _ => false
-    }
-    if (cached) {
-      StageResult(spark.read.parquet(dir).drop(
-        "_stage", "_run_id", "_part_id", "_input_fingerprint"), fromCache = true)
-    } else {
-      val runId = java.util.UUID.randomUUID().toString
-      val t0 = System.nanoTime()
-      val out = compute
-        .withColumn("_stage", lit(stageName))
-        .withColumn("_run_id", lit(runId))
-        .withColumn("_part_id", spark_partition_id())
-        .withColumn("_input_fingerprint", lit(inputFingerprint))
-      val writer = out.write.mode("overwrite")
-      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*)
-       else writer).parquet(dir)
-      val rows = spark.read.parquet(dir).count()
-      val wallMs = (System.nanoTime() - t0) / 1000000
-      writeMeta(root, stageName, Map(
-        "stage" -> stageName,
-        "run_id" -> runId,
-        "input_fingerprint" -> inputFingerprint,
-        "rows" -> rows.toString,
-        "wall_ms" -> wallMs.toString))
-      StageResult(spark.read.parquet(dir).drop(
-        "_stage", "_run_id", "_part_id", "_input_fingerprint"), fromCache = false)
+    committed(root, stageName, inputFingerprint) match {
+      case Some(schema) =>
+        StageResult(spark.read.schema(schema).parquet(dir), fromCache = true)
+      case None =>
+        Files.createDirectories(Paths.get(root))
+        Files.deleteIfExists(metaPath(root, stageName))
+        val runId = java.util.UUID.randomUUID().toString
+        val t0 = System.nanoTime()
+        val data = compute
+        val schema = readBackSchema(data.schema, partitionBy)
+        val out = data
+          .withColumn("_stage", lit(stageName))
+          .withColumn("_run_id", lit(runId))
+          .withColumn("_part_id", spark_partition_id())
+          .withColumn("_input_fingerprint", lit(inputFingerprint))
+        val (_, nRows) = Observed.rows(out) { o =>
+          val writer = o.write.mode("overwrite")
+          (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*)
+           else writer).parquet(dir)
+        }
+        val wallMs = (System.nanoTime() - t0) / 1000000
+        writeMeta(root, stageName, Map(
+          "stage" -> stageName,
+          "run_id" -> runId,
+          "input_fingerprint" -> inputFingerprint,
+          "rows" -> nRows.toString,
+          "wall_ms" -> wallMs.toString,
+          "schema" -> schema.toDDL))
+        StageResult(spark.read.schema(schema).parquet(dir), fromCache = false)
     }
   }
 

@@ -20,9 +20,15 @@ class PipelineJobsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   private val sf = SparkTestSession.sf0001
 
-  private def counted(ckpt: Option[String]): (Seq[Row], Int) = {
+  /** The summary rows and the Spark jobs of one run, and its
+    * `keyed.count()`, taken outside the count. */
+  private def counted(ckpt: Option[String]): (Seq[Row], Int, Long) = {
     spark.catalog.clearCache()
-    JobCount(spark.sparkContext)(Pipeline.run(spark, sf, ckpt).summary.collect().toSeq)
+    val ((out, rows), jobs) = JobCount(spark.sparkContext) {
+      val out = Pipeline.run(spark, sf, ckpt)
+      (out, out.summary.collect().toSeq)
+    }
+    (rows, jobs, out.keyed.count())
   }
 
   private def deleteRecursively(p: Path): Unit =
@@ -37,14 +43,18 @@ class PipelineJobsSpec extends AnyFunSuite {
     Synth.records(spark, sf)
     val root = Files.createTempDirectory("graft-jobs")
     try {
-      val (plain, plainJobs) = counted(None)
-      val (cold, coldJobs) = counted(Some(root.toString))
-      val (resumed, resumedJobs) = counted(Some(root.toString))
+      val (plain, plainJobs, plainKeyed) = counted(None)
+      val (cold, coldJobs, coldKeyed) = counted(Some(root.toString))
+      val (resumed, resumedJobs, resumedKeyed) = counted(Some(root.toString))
       info(s"jobs: plain $plainJobs, cold $coldJobs, resumed $resumedJobs")
       assert(cold == plain && resumed == plain)
-      assert(plainJobs <= 28, s"no checkpoint: $plainJobs jobs")
-      assert(coldJobs <= 44, s"cold checkpoint: $coldJobs jobs")
-      assert(resumedJobs <= 17, s"resumed: $resumedJobs jobs")
+      // n_records is counted over clusters, one row per keyed record
+      for ((rows, keyed) <- Seq(plain -> plainKeyed, cold -> coldKeyed,
+                                resumed -> resumedKeyed))
+        assert(rows.head.getAs[Long]("n_records") == keyed)
+      assert(plainJobs <= 22, s"no checkpoint: $plainJobs jobs")
+      assert(coldJobs <= 24, s"cold checkpoint: $coldJobs jobs")
+      assert(resumedJobs <= 9, s"resumed: $resumedJobs jobs")
     } finally deleteRecursively(root)
   }
 }

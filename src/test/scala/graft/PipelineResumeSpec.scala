@@ -58,4 +58,36 @@ class PipelineResumeSpec extends AnyFunSuite {
     assert(out2.summary.collect().toSeq == summary1,
       "resumed run must reproduce the first run bit-for-bit")
   }
+
+  test("a scored checkpoint from another scorer is recomputed; keyed and candidates are served") {
+    val root = Files.createTempDirectory("graft-resume-fp").toString
+    val sf = SparkTestSession.sf0001
+    def runId(stage: String): String = Checkpoint.meta(root, stage).get("run_id")
+
+    // every folded scorer value moves the scored fingerprint, and only it
+    val (input, scored) = Pipeline.fingerprints(sf, 64)
+    for (i <- Pipeline.ScorerKey.indices) {
+      val (otherInput, otherScored) = Pipeline.fingerprints(sf, 64,
+        Pipeline.ScorerKey.updated(i, Pipeline.ScorerKey(i) + "1"))
+      assert(otherInput == input && otherScored != scored, Pipeline.ScorerKey(i))
+    }
+
+    try {
+      val summary1 = Pipeline.run(spark, sf, Some(root)).summary.collect().toSeq
+      val (keyed1, cand1, scored1) = (runId("keyed"), runId("candidates"), runId("scored"))
+      // the scored commit as a build with another JW weight would have left it
+      val stale = Pipeline.fingerprints(sf, 64,
+        Pipeline.ScorerKey.updated(0, s"w_jw=${graft.sim.Scorer.WJw + 0.05}"))._2
+      val meta = java.nio.file.Paths.get(s"$root/scored._meta.json")
+      Files.writeString(meta, Files.readString(meta).replace(scored, stale))
+      assert(Checkpoint.meta(root, "scored").get("input_fingerprint") == stale)
+
+      val summary2 = Pipeline.run(spark, sf, Some(root)).summary.collect().toSeq
+      assert(runId("keyed") == keyed1 && runId("candidates") == cand1,
+        "keyed and candidates must be served")
+      assert(runId("scored") != scored1, "scored must be recomputed")
+      assert(Checkpoint.meta(root, "scored").get("input_fingerprint") == scored)
+      assert(summary2 == summary1)
+    } finally deleteRecursively(java.nio.file.Paths.get(root))
+  }
 }

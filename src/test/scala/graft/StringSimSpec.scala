@@ -156,6 +156,42 @@ class StringSimSpec extends AnyFunSuite {
     rows.foreach(r => assert(r.getInt(0) == r.getInt(1), r.toString))
   }
 
+  test("graft_levenshtein counts UTF-16 code units on astral input; Spark's built-in counts code points") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, levenshtein}
+    // astral (non-BMP) letters are surrogate pairs: two code units each
+    val alpha = Seq("a", "b", " ", "é", "日", "\uD83D\uDE00", "\uD83D\uDE01",
+      "\uD835\uDC9C", "\uD840\uDC0B")
+    val rnd = new scala.util.Random(31)
+    def mk(len: Int) = Seq.fill(len)(alpha(rnd.nextInt(alpha.length))).mkString
+    val pairs = (0 until 3000).map { _ =>
+      val a = mk(rnd.nextInt(60))
+      val b = if (rnd.nextBoolean()) {
+        val cps = a.codePoints().toArray.map(cp => new String(Character.toChars(cp)))
+        if (cps.nonEmpty) cps(rnd.nextInt(cps.length)) = alpha(rnd.nextInt(alpha.length))
+        cps.mkString
+      } else mk(rnd.nextInt(60))
+      (a, b)
+    } :+ (("\uD83D\uDE00", "a")) :+ (("\uD83D\uDE00", "\uD83D\uDE01")) :+ (("", "\uD835\uDC9C"))
+    // one BMP stand-in per code point turns the UTF-16 DP into a code-point DP
+    def perCodePoint(s: String) =
+      s.codePoints().toArray.map(cp => (0xE000 + alpha.indexOf(new String(Character.toChars(cp)))).toChar).mkString
+    val rows = pairs.toDF("a", "b").select(col("a"), col("b"),
+      graft.functions.GraftFunctions.graft_levenshtein(col("a"), col("b")),
+      levenshtein(col("a"), col("b"))).as[(String, String, Int, Int)].collect()
+    rows.foreach { case (a, b, got, builtin) =>
+      assert(got == StringSim.levenshtein(a, b) && got == StringSim.levenshteinDP(a, b),
+        s"graft_levenshtein=$got is not the UTF-16 distance of $a vs $b")
+      assert(builtin == StringSim.levenshteinDP(perCodePoint(a), perCodePoint(b)),
+        s"built-in levenshtein=$builtin is not the code-point distance of $a vs $b")
+    }
+    // the intended divergence: an astral letter against a BMP letter is
+    // a substitution plus a deletion in code units, one edit in code points
+    val pinned = rows.takeRight(3).map(r => (r._3, r._4)).toSeq
+    assert(pinned == Seq((2, 1), (1, 1), (2, 1)), pinned)
+  }
+
   test("jaro_winkler Catalyst expression equals the Scala kernel and works in SQL") {
     val spark = SparkTestSession.spark
     import spark.implicits._
