@@ -45,6 +45,12 @@ object Pipeline {
     scored.filter(dist <= theta)
       .select(col("idA").as("src"), col("idB").as("dst"))
 
+  /** What the keyed and candidates stages compute with beyond the
+    * source: the normalization's whitespace pattern and the block-key
+    * pattern. */
+  private[graft] val InputKey: Seq[String] = Seq(
+    s"norm_ws=${Normalize.Whitespace}", s"block_key=${Blocking.KeyPattern}")
+
   /** What the scored stage computes with beyond its input: the score
     * weights and the projection's seed and width. */
   private[graft] val ScorerKey: Seq[String] = Seq(
@@ -52,13 +58,14 @@ object Pipeline {
     s"proj_seed=${Embed.ProjSeed}", s"dim=${Embed.DefaultDim}")
 
   /** Checkpoint fingerprints `(keyed and candidates, scored)`: the
-    * first covers the source and the salts, the second also folds in
-    * `scorer`, so a scorer change recomputes `scored` (and `clusters`,
-    * keyed on it) while the stages before it are served. */
+    * first covers the source, the salts and `input`, the second also
+    * folds in `scorer`, so a scorer change recomputes `scored` (and
+    * `clusters`, keyed on it) while the stages before it are served. */
   private[graft] def fingerprints(sfDir: String, salts: Int,
-                                  scorer: Seq[String] = ScorerKey): (String, String) = {
-    val input = Checkpoint.fingerprint(sfDir, s"salts=$salts")
-    (input, Checkpoint.fingerprint(input +: scorer: _*))
+                                  scorer: Seq[String] = ScorerKey,
+                                  input: Seq[String] = InputKey): (String, String) = {
+    val fpInput = Checkpoint.fingerprint(sfDir +: s"salts=$salts" +: input: _*)
+    (fpInput, Checkpoint.fingerprint(fpInput +: scorer: _*))
   }
 
   def run(spark: SparkSession, sfDir: String,

@@ -30,12 +30,16 @@ import graft.Observed
  *  2. write the data; Spark's committer writes `<dir>/_SUCCESS` last;
  *  3. write the meta to a temp file and move it into place atomically.
  *
- * A stage is served iff its meta parses whole, carries the matching
- * fingerprint and a schema, and `<dir>/_SUCCESS` exists; anything else
- * (a failed write, a truncated meta, a meta without a schema) is
- * recomputed. Both paths return `spark.read.schema(s).parquet(dir)`,
- * so no footer job infers the schema, and the row count is observed
- * on the write ([[graft.Observed]]), not taken by a read-back count.
+ * A stage is served iff it is [[committed]]: its meta parses whole,
+ * carries the matching fingerprint and a schema, and `<dir>/_SUCCESS`
+ * exists; anything else (a failed write, a truncated meta, a meta
+ * without a schema) is recomputed. Both paths return
+ * `spark.read.schema(s).parquet(dir)`, so no footer job infers the
+ * schema, and the row count is observed on the write
+ * ([[graft.Observed]]), not taken by a read-back count.
+ *
+ * This is the one commit protocol on disk: [[ModelIO]] saves each part
+ * of a trained model as a stage of its own.
  */
 object Checkpoint {
 
@@ -57,9 +61,9 @@ object Checkpoint {
 
   private def writeMeta(root: String, stage: String,
                         fields: Map[String, String]): Unit = {
-    // same write-time guard as ModelIO.writeMeta: the minimal flat-JSON
-    // reader cannot round-trip these characters, so reject them loudly
-    // here instead of silently corrupting the fingerprint gate later
+    // `meta`'s flat-JSON reader cannot round-trip these characters, so
+    // reject them loudly here instead of silently corrupting the
+    // fingerprint gate later
     fields.foreach { case (k, v) =>
       require(!(k + v).exists(c => c == '"' || c == '\\' || c < ' '),
         s"checkpoint meta field $k contains characters the flat-JSON " +
@@ -74,8 +78,8 @@ object Checkpoint {
 
   /** The schema to read a committed stage back with, if `stage` is
     * committed under `fingerprint`. */
-  private def committed(root: String, stage: String,
-                        fingerprint: String): Option[StructType] =
+  def committed(root: String, stage: String,
+                fingerprint: String): Option[StructType] =
     meta(root, stage)
       .filter(_.get("input_fingerprint").contains(fingerprint))
       .flatMap(_.get("schema"))

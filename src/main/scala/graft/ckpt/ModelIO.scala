@@ -1,9 +1,7 @@
 package graft.ckpt
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types._
 
 import graft.sim.{RLTransE, TransE}
 
@@ -15,159 +13,130 @@ import graft.sim.{RLTransE, TransE}
  * across JVMs. In-session reuse is already covered by
  * `EntryStages.memoModel`; this adds the cross-session half.
  *
- * Layout under `<dir>/`:
- *   matrices/  (name: string, row: bigint, vec: array<float>)
+ * Each part of a saved model is a [[Checkpoint.stage]] under `<dir>/`,
+ * committed under the caller's fingerprint:
+ *   matrices/  (row: bigint, vec: array<float>, name: string),
+ *              partitioned by name
  *   vocab/     (rid: bigint, value: string, vidx: bigint)  [RLTransE]
- *   meta.json  {"fingerprint": ..., model-shape scalars, loss arrays}
+ *   scalars/   (kind: string, loss_by_epoch: array<double>,
+ *               max_val_count: int, n_rel: int), one row
+ * plus each stage's `<part>._meta.json` commit record. A model is
+ * restored only if every one of its parts is committed under one
+ * fingerprint; a save that dies part-way leaves a part uncommitted or
+ * committed under another fingerprint, so the next restore-or-train
+ * retrains. A fingerprint names one model: a part already committed
+ * under it is kept, not rewritten.
  *
- * Floats round-trip bit-exactly through Parquet, so a restored model
- * scores candidate pairs IDENTICALLY to the freshly trained one
- * (asserted by ModelIOSpec). The matrices table is written and read
- * through Spark — model-sized (the same thing that is broadcast for
- * scoring), so the driver-side collect on load costs what every
- * scoring pass already pays.
+ * Floats and doubles round-trip bit-exactly through Parquet, so a
+ * restored model scores candidate pairs IDENTICALLY to the freshly
+ * trained one (asserted by ModelIOSpec). The matrices table is written
+ * and read through Spark — model-sized (the same thing that is
+ * broadcast for scoring), so the driver-side collect on load costs
+ * what every scoring pass already pays.
  */
 object ModelIO {
 
-  private def matRows(name: String, m: Array[Array[Float]]): Seq[Row] =
-    m.iterator.zipWithIndex.map { case (v, i) =>
-      Row(name, i.toLong, v.toSeq)
-    }.toSeq
+  private val Scalars = "scalars"
+  private val RLTransEParts = Seq("matrices", "vocab", Scalars)
+  private val TransEParts = Seq("matrices", Scalars)
 
-  private val matSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("name",
-      org.apache.spark.sql.types.StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("row",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("vec",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType, containsNull = false),
+  private val matSchema = StructType(Seq(
+    StructField("name", StringType, nullable = false),
+    StructField("row", LongType, nullable = false),
+    StructField("vec", ArrayType(FloatType, containsNull = false),
       nullable = false)))
 
-  /** Write named matrices as one partitioned-by-name parquet table. */
-  def saveMatrices(spark: SparkSession, dir: String,
-                   matrices: Map[String, Array[Array[Float]]]): Unit = {
-    val rows = matrices.toSeq.sortBy(_._1).flatMap { case (n, m) =>
-      matRows(n, m)
-    }
-    spark.createDataFrame(
+  private def saveMatrices(spark: SparkSession, dir: String, fingerprint: String,
+                           matrices: Map[String, Array[Array[Float]]]): Unit =
+    Checkpoint.stage(spark, dir, "matrices", fingerprint, Seq("name")) {
+      val rows = matrices.toSeq.sortBy(_._1).flatMap { case (n, m) =>
+        m.indices.map(i => Row(n, i.toLong, m(i)))
+      }
+      spark.createDataFrame(
         spark.sparkContext.parallelize(rows, math.max(1, rows.size / 65536)),
         matSchema)
-      .write.mode("overwrite").partitionBy("name")
-      .parquet(s"$dir/matrices")
-  }
+    }
 
-  /** Read every named matrix back, rows in index order. */
-  def loadMatrices(spark: SparkSession, dir: String)
-      : Map[String, Array[Array[Float]]] = {
-    val collected = spark.read.parquet(s"$dir/matrices")
-      .select("name", "row", "vec").collect()
-    collected.groupBy(_.getString(0)).map { case (n, rs) =>
-      val m = new Array[Array[Float]](rs.length)
-      rs.foreach { r =>
-        m(r.getLong(1).toInt) = r.getSeq[Float](2).toArray
-      }
-      n -> m
+  private def saveScalars(spark: SparkSession, dir: String, fingerprint: String,
+                          kind: String, lossByEpoch: Array[Double],
+                          maxValCount: Int = 0, nRel: Int = 0): Unit = {
+    import spark.implicits._
+    Checkpoint.stage(spark, dir, Scalars, fingerprint) {
+      Seq((kind, lossByEpoch, maxValCount, nRel))
+        .toDF("kind", "loss_by_epoch", "max_val_count", "n_rel")
     }
   }
 
-  private def writeMeta(dir: String, fields: Map[String, String]): Unit = {
-    // The reader is a flat one-line key/value regex that stops a value
-    // at the first ',' or '}' and strips outer quotes — a value
-    // containing those characters would round-trip CORRUPTED (e.g. a
-    // truncated fingerprint silently defeating the restore gate).
-    // Reject such values at write time so a non-conforming field fails
-    // loudly here instead.
-    fields.foreach { case (k, v) =>
-      val inner =
-        if (v.length >= 2 && v.head == '"' && v.last == '"')
-          v.substring(1, v.length - 1)
-        else v
-      require(!inner.exists(c => c == ',' || c == '}' || c == '"'),
-        s"meta field '$k' contains ',', '}' or an inner '\"' — not " +
-          s"representable in flat meta.json (value: $v)")
-    }
-    val json = fields.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}")
-    Files.createDirectories(Paths.get(dir))
-    Files.writeString(Paths.get(s"$dir/meta.json"), json)
-  }
+  /** The fingerprint every one of `parts` is committed under, if any. */
+  private def committedUnder(dir: String, parts: Seq[String]): Option[String] =
+    Checkpoint.meta(dir, Scalars).flatMap(_.get("input_fingerprint"))
+      .filter(fp => parts.forall(Checkpoint.committed(dir, _, fp).isDefined))
 
-  private def readMeta(dir: String): Option[Map[String, String]] = {
-    val p = Paths.get(s"$dir/meta.json")
-    if (!Files.exists(p)) None
-    else {
-      // flat json we wrote ourselves: "key": <raw value up to , or }>
-      val kv = "\"([^\"]+)\"\\s*:\\s*([^,}]+)".r
-      Some(kv.findAllMatchIn(Files.readString(p))
-        .map(m => m.group(1) -> m.group(2).trim.stripPrefix("\"")
-          .stripSuffix("\"")).toMap)
-    }
-  }
-
-  /** Exact round-trip encoding (Double.toString is lossless), with ';'
-    * separators so the flat meta.json stays parseable by the one-line
-    * key/value regex (',' would split the quoted value). */
-  private def jsonArr(xs: Array[Double]): String =
-    xs.map(_.toString).mkString("[", ";", "]")
-
-  private def parseArr(s: String): Array[Double] = {
-    val body = s.trim.stripPrefix("[").stripSuffix("]")
-    if (body.isEmpty) Array.empty else body.split(';').map(_.toDouble)
-  }
-
-  /** The fingerprint a saved model was trained under, if any. */
+  /** The fingerprint the model saved at `dir` is committed under, if
+    * its matrices and scalars are committed under one. */
   def savedFingerprint(dir: String): Option[String] =
-    readMeta(dir).flatMap(_.get("fingerprint"))
+    committedUnder(dir, TransEParts)
+
+  /** The committed `parts` of the `kind` model at `dir`, read back, with
+    * its named matrices (rows in index order) and its scalars row. */
+  private def load(spark: SparkSession, dir: String, kind: String,
+                   parts: Seq[String])
+      : (String => DataFrame, Map[String, Array[Array[Float]]], Row) = {
+    val fp = committedUnder(dir, parts).getOrElse(
+      sys.error(s"no $kind model is committed at $dir"))
+    def part(p: String): DataFrame =
+      spark.read.schema(Checkpoint.committed(dir, p, fp).get).parquet(s"$dir/$p")
+    val scalars = part(Scalars).head()
+    require(scalars.getAs[String]("kind") == kind,
+      s"checkpoint at $dir is not a $kind model")
+    val mats = part("matrices").select("name", "row", "vec").collect()
+      .groupBy(_.getString(0)).map { case (n, rs) =>
+        val m = new Array[Array[Float]](rs.length)
+        rs.foreach(r => m(r.getLong(1).toInt) = r.getSeq[Float](2).toArray)
+        n -> m
+      }
+    (part, mats, scalars)
+  }
+
+  private def lossOf(scalars: Row): Array[Double] =
+    scalars.getAs[Seq[Double]]("loss_by_epoch").toArray
 
   // ---------------------------------------------------------------- RLTransE
 
   def saveRLTransE(spark: SparkSession, dir: String, model: RLTransE.Model,
                    fingerprint: String): Unit = {
-    saveMatrices(spark, dir, Map("ent" -> model.ent, "rel" -> model.rel))
     import spark.implicits._
-    model.vocab.iterator.zipWithIndex.flatMap { case (vm, rid) =>
-      vm.iterator.map { case (value, vidx) =>
-        (rid.toLong, value, vidx.toLong)
-      }
-    }.toSeq.toDF("rid", "value", "vidx")
-      .write.mode("overwrite").parquet(s"$dir/vocab")
-    writeMeta(dir, Map(
-      "model" -> "\"rltranse\"",
-      "fingerprint" -> ("\"" + fingerprint + "\""),
-      "max_val_count" -> model.maxValCount.toString,
-      "n_rel" -> model.vocab.length.toString,
-      "loss_by_epoch" -> ("\"" + jsonArr(model.lossByEpoch) + "\"")))
+    saveMatrices(spark, dir, fingerprint, Map("ent" -> model.ent, "rel" -> model.rel))
+    Checkpoint.stage(spark, dir, "vocab", fingerprint) {
+      model.vocab.iterator.zipWithIndex.flatMap { case (vm, rid) =>
+        vm.iterator.map { case (value, vidx) => (rid.toLong, value, vidx.toLong) }
+      }.toSeq.toDF("rid", "value", "vidx")
+    }
+    saveScalars(spark, dir, fingerprint, "rltranse", model.lossByEpoch,
+      model.maxValCount, model.vocab.length)
   }
 
   def loadRLTransE(spark: SparkSession, dir: String): RLTransE.Model = {
-    val meta = readMeta(dir).getOrElse(
-      sys.error(s"no model meta at $dir/meta.json"))
-    require(meta.get("model").contains("rltranse"),
-      s"checkpoint at $dir is not an RLTransE model")
-    val mats = loadMatrices(spark, dir)
-    val nRel = meta("n_rel").toInt
-    val vocabRows = spark.read.parquet(s"$dir/vocab")
-      .select("rid", "value", "vidx").collect()
-    val vocab = Array.fill(nRel)(Map.newBuilder[String, Int])
-    vocabRows.foreach { r =>
+    val (part, mats, scalars) = load(spark, dir, "rltranse", RLTransEParts)
+    val vocab = Array.fill(scalars.getAs[Int]("n_rel"))(Map.newBuilder[String, Int])
+    part("vocab").select("rid", "value", "vidx").collect().foreach { r =>
       vocab(r.getLong(0).toInt) += (r.getString(1) -> r.getLong(2).toInt)
     }
     RLTransE.Model(mats("ent"), mats("rel"), vocab.map(_.result()),
-      meta("max_val_count").toInt, parseArr(meta("loss_by_epoch")))
+      scalars.getAs[Int]("max_val_count"), lossOf(scalars))
   }
 
   /**
-   * `Saver.restore`-or-train: reuse the saved model iff its recorded
-   * fingerprint matches `Checkpoint.fingerprint(sfDir, cfg)`; else
-   * train (through the in-session memo) and save. Returns the model
-   * plus whether it came from disk.
+   * `Saver.restore`-or-train: reuse the saved model iff every part is
+   * committed under `Checkpoint.fingerprint(sfDir, cfg)`; else train
+   * (through the in-session memo) and save. Returns the model plus
+   * whether it came from disk.
    */
   def rlTransEOrTrain(spark: SparkSession, sfDir: String, ckptDir: String,
                       cfg: RLTransE.Config = RLTransE.Config())
       : (RLTransE.Model, Boolean) = {
     val fp = Checkpoint.fingerprint("rltranse", sfDir, cfg.toString)
-    if (savedFingerprint(ckptDir).contains(fp))
+    if (committedUnder(ckptDir, RLTransEParts).contains(fp))
       (loadRLTransE(spark, ckptDir), true)
     else {
       val model = RLTransE.train(spark, sfDir, cfg)
@@ -180,21 +149,13 @@ object ModelIO {
 
   def saveTransE(spark: SparkSession, dir: String, model: TransE.Model,
                  fingerprint: String): Unit = {
-    saveMatrices(spark, dir, Map(
-      "ent" -> model.ent, "rel" -> model.rel, "w_rel" -> model.wRel))
-    writeMeta(dir, Map(
-      "model" -> "\"transe\"",
-      "fingerprint" -> ("\"" + fingerprint + "\""),
-      "loss_by_epoch" -> ("\"" + jsonArr(model.lossByEpoch) + "\"")))
+    saveMatrices(spark, dir, fingerprint,
+      Map("ent" -> model.ent, "rel" -> model.rel, "w_rel" -> model.wRel))
+    saveScalars(spark, dir, fingerprint, "transe", model.lossByEpoch)
   }
 
   def loadTransE(spark: SparkSession, dir: String): TransE.Model = {
-    val meta = readMeta(dir).getOrElse(
-      sys.error(s"no model meta at $dir/meta.json"))
-    require(meta.get("model").contains("transe"),
-      s"checkpoint at $dir is not a TransE model")
-    val mats = loadMatrices(spark, dir)
-    TransE.Model(mats("ent"), mats("rel"), mats("w_rel"),
-      parseArr(meta("loss_by_epoch")))
+    val (_, mats, scalars) = load(spark, dir, "transe", TransEParts)
+    TransE.Model(mats("ent"), mats("rel"), mats("w_rel"), lossOf(scalars))
   }
 }

@@ -37,7 +37,10 @@ object Blocking {
    */
   def withBlockKey(normalized: DataFrame): DataFrame =
     normalized.withColumn("block_key",
-      regexp_extract(col("content_norm"), "c[0-9]+", 0))
+      regexp_extract(col("content_norm"), KeyPattern, 0))
+
+  /** The block-key token [[withBlockKey]] extracts. */
+  final val KeyPattern = "c[0-9]+"
 
   /**
    * Candidate pairs (idA, idB, block_key) from a salted A x B equi-join.

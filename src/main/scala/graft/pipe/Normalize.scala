@@ -13,9 +13,12 @@ import org.apache.spark.sql.functions._
  */
 object Normalize {
 
+  /** The whitespace runs [[normContent]] collapses to one space. */
+  final val Whitespace = "\\s+"
+
   /** lower + collapse whitespace + trim, as a reusable Column recipe. */
   def normContent(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    trim(regexp_replace(lower(c), "\\s+", " "))
+    trim(regexp_replace(lower(c), Whitespace, " "))
 
   /**
    * Adds `content_norm` and `sha` (sha256 of the RAW content — the

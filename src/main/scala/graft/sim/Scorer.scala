@@ -31,7 +31,8 @@ case class ScoredPair(
  *
  * Per-partition embedding cache: within a block, each record's content
  * appears in many pairs; vectors are memoized per partition so hot
- * (salted) blocks don't recompute trigram hashes per pair.
+ * (salted) blocks don't recompute trigram hashes per pair. The memo is
+ * keyed on (side, record id), so the A and B id spaces may overlap.
  */
 object Scorer {
 
@@ -88,12 +89,12 @@ object Scorer {
     warmKernels()
     pairs.mapPartitions { it =>
       val mat = proj.value
-      // record vectors memoized per partition, keyed by record id (ids
-      // are unique per record and the A/B id spaces are disjoint) — a
+      // record vectors memoized per partition, keyed by side and record
+      // id (`id << 1 | side`: an id is unique within its side only) — a
       // long key skips rehashing the ~250-char content per lookup
       val cache = new java.util.HashMap[java.lang.Long, Array[Double]](1 << 12)
-      def vec(id: Long, s: String): Array[Double] = {
-        val k = java.lang.Long.valueOf(id)
+      def vec(side: Int, id: Long, s: String): Array[Double] = {
+        val k = java.lang.Long.valueOf(id << 1 | side)
         var v = cache.get(k)
         if (v == null) {
           v = Embed.vector(s, mat)
@@ -108,7 +109,7 @@ object Scorer {
         } else {
           val jw = StringSim.jaroWinkler(p.content_a, p.content_b)
           val lev = StringSim.levSim(p.content_a, p.content_b)
-          val cos = Embed.cosine(vec(p.idA, p.content_a), vec(p.idB, p.content_b))
+          val cos = Embed.cosine(vec(0, p.idA, p.content_a), vec(1, p.idB, p.content_b))
           val s = WJw * jw + WLev * lev + WCos * cos
           ScoredPair(p.idA, p.idB, jw, lev, cos, s, label, p.split_a, p.split_b)
         }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -34,7 +36,8 @@ object Scan {
 
   /** True iff the path's total parquet row-group count is < `par`.
     * Reads at most `par` footers (driver-side, metadata only); any
-    * metadata hiccup returns false so the scan is left untouched. */
+    * non-fatal metadata hiccup returns false so the scan is left
+    * untouched. */
   private def rowGroupsBelow(spark: SparkSession, path: String,
                              par: Int): Boolean =
     try {
@@ -60,5 +63,5 @@ object Scan {
         i += 1
       }
       groups < par
-    } catch { case _: Throwable => false }
+    } catch { case NonFatal(_) => false }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +13,9 @@ import graft.sim.RLTransE
  * /root/reference/werl.py:364-374,
  * /root/reference/tests/test_werl.py:52-59). A restored model must be
  * BIT-IDENTICAL to the trained one, so every consumer (eval, WERL,
- * export) scores the same pairs to the same values.
+ * export) scores the same pairs to the same values. A save damaged
+ * part-way (a failed write, a lost `_SUCCESS`, a torn commit record)
+ * is retrained, never restored.
  */
 class ModelIOSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -70,6 +72,7 @@ class ModelIOSpec extends AnyFunSuite {
     assert(restored.wRel.indices.forall(i =>
       java.util.Arrays.equals(restored.wRel(i), trained.wRel(i))))
     assert(ModelIO.savedFingerprint(dir).contains("fp-te"))
+    intercept[RuntimeException](ModelIO.loadRLTransE(spark, dir))
   }
 
   test("rlTransEOrTrain restores on fingerprint match, retrains on change") {
@@ -87,5 +90,47 @@ class ModelIOSpec extends AnyFunSuite {
       spark, SparkTestSession.sf0001, dir, cfg.copy(epochs = 13))
     assert(!fromDisk3)
     assert(ModelIO.savedFingerprint(dir).isDefined)
+  }
+
+  private def sameRows(a: Array[Array[Float]], b: Array[Array[Float]]): Boolean =
+    a.length == b.length && a.indices.forall(i => java.util.Arrays.equals(a(i), b(i)))
+
+  /** A fit in a session of its own, so the in-session memo cannot serve it. */
+  private lazy val freshFit = RLTransE.train(spark.newSession(), SparkTestSession.sf0001, cfg)
+
+  /** After `corrupt` damages the save that `rlTransEOrTrain` committed
+    * under fp A, the next fp-A call retrains, returns matrices
+    * bit-identical to a fresh fit, and commits again. */
+  private def retrainsAfter(corrupt: String => Unit): Unit = {
+    val dir = Files.createTempDirectory("graft-model-fault").toString
+    assert(!ModelIO.rlTransEOrTrain(spark, SparkTestSession.sf0001, dir, cfg)._2)
+    corrupt(dir)
+    val (m, fromDisk) = ModelIO.rlTransEOrTrain(spark, SparkTestSession.sf0001, dir, cfg)
+    assert(!fromDisk, "a damaged save must not be restored")
+    assert(sameRows(m.ent, freshFit.ent) && sameRows(m.rel, freshFit.rel))
+    assert(ModelIO.rlTransEOrTrain(spark, SparkTestSession.sf0001, dir, cfg)._2)
+  }
+
+  test("a save under another fingerprint that fails in a task is not restored") {
+    retrainsAfter { dir =>
+      // Spark ships no brotli codec: every parquet write task of this session fails
+      val failing = spark.newSession()
+      failing.conf.set("spark.sql.parquet.compression.codec", "brotli")
+      intercept[Exception](ModelIO.saveRLTransE(failing, dir, freshFit, "fp-B"))
+    }
+  }
+
+  test("a matrices table without _SUCCESS is not restored") {
+    retrainsAfter(dir => Files.delete(Paths.get(s"$dir/matrices/_SUCCESS")))
+  }
+
+  test("a truncated commit record is not restored") {
+    retrainsAfter { dir =>
+      val fp = graft.ckpt.Checkpoint.fingerprint("rltranse", SparkTestSession.sf0001, cfg.toString)
+      val meta = Paths.get(s"$dir/matrices._meta.json")
+      val txt = Files.readString(meta)
+      // keep the fingerprint field whole, cut the rest of the record
+      Files.writeString(meta, txt.take(txt.indexOf(fp) + fp.length + 1))
+    }
   }
 }

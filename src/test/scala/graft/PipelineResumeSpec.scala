@@ -64,12 +64,18 @@ class PipelineResumeSpec extends AnyFunSuite {
     val sf = SparkTestSession.sf0001
     def runId(stage: String): String = Checkpoint.meta(root, stage).get("run_id")
 
-    // every folded scorer value moves the scored fingerprint, and only it
+    // every folded scorer value moves the scored fingerprint, and only
+    // it; every folded input value moves both
     val (input, scored) = Pipeline.fingerprints(sf, 64)
     for (i <- Pipeline.ScorerKey.indices) {
       val (otherInput, otherScored) = Pipeline.fingerprints(sf, 64,
         Pipeline.ScorerKey.updated(i, Pipeline.ScorerKey(i) + "1"))
       assert(otherInput == input && otherScored != scored, Pipeline.ScorerKey(i))
+    }
+    for (i <- Pipeline.InputKey.indices) {
+      val (otherInput, otherScored) = Pipeline.fingerprints(sf, 64, input =
+        Pipeline.InputKey.updated(i, Pipeline.InputKey(i) + "1"))
+      assert(otherInput != input && otherScored != scored, Pipeline.InputKey(i))
     }
 
     try {

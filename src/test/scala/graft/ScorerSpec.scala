@@ -38,6 +38,23 @@ class ScorerSpec extends AnyFunSuite {
     assert(near.getAs[Double]("score") < 1.0 && near.getAs[Double]("score") > 0.5)
   }
 
+  test("the vector memo keeps an A record and a B record with the same id apart") {
+    import spark.implicits._
+    // one partition: the B record 2 is memoized before the A record 2 is scored
+    val cand = Seq(
+      (1L, 2L, "b", "fn c1 alpha fin", "fn c1 bravo done", 7L, 8L, "test", "test"),
+      (2L, 1L, "b", "fn c1 cedar open", "fn c1 delta dwell", 9L, 6L, "test", "test"))
+      .toDF("idA", "idB", "block_key", "content_a", "content_b",
+        "dni_a", "dni_b", "split_a", "split_b").coalesce(1)
+    val proj = Embed.projection()
+    val cos = Scorer.scoreDF(cand, Scorer.broadcastProjection(spark))
+      .orderBy("idA").select("cos").as[Double].collect().toSeq
+    val expected = Seq(("fn c1 alpha fin", "fn c1 bravo done"),
+                       ("fn c1 cedar open", "fn c1 delta dwell"))
+      .map { case (a, b) => Embed.cosine(Embed.vector(a, proj), Embed.vector(b, proj)) }
+    assert(cos == expected)
+  }
+
   test("embedding vectors: deterministic, unit-norm, cosine sane") {
     val proj = Embed.projection()
     val v1 = Embed.vector("fn c370 alpha fin 1 urgent anvil val 105367 k 1", proj)

@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * quantize and take the plain TransE hinge through
   * [[graft.sim.MicroGrad]] only. One RLTransE value table with its
   * offset term in `RLTransE.Model`, and one balanced-GD fit site in
-  * `Weights`. Stops per-file copies from growing back. */
+  * `Weights`. One commit-record writer under `ckpt/`: [[graft.ckpt.Checkpoint]].
+  * Stops per-file copies from growing back. */
 class SessionBuilderSpec extends AnyFunSuite {
 
   /** Paths, relative to `src/main/scala`, of the sources matching `re`. */
@@ -73,5 +74,13 @@ class SessionBuilderSpec extends AnyFunSuite {
         s"offset term in ${(offset - rlt).toSeq.sorted}: address value rows through RLTransE.Model")
       .collect { case (true, msg) => msg }
     assert(faults.isEmpty, faults.mkString("; "))
+  }
+
+  test("only Checkpoint writes commit records under ckpt/") {
+    val home = "graft/ckpt/Checkpoint.scala"
+    val found = scan("""Files\.writeString\(|ATOMIC_MOVE""".r).filter(_.startsWith("graft/ckpt/"))
+    assert(found.contains(home))
+    assert((found - home).isEmpty,
+      s"commit through graft.ckpt.Checkpoint.stage instead: ${(found - home).toSeq.sorted}")
   }
 }
