@@ -91,7 +91,7 @@ object BenchExtra {
         dump("q_blocking_join", cand)
         dump("q_score_pairs",
           Scorer.scoreDF(cand, Scorer.broadcastProjection(spark)))
-        dump("q_threshold_sweep", Threshold.sweep(
+        dump("q_threshold_sweep", Threshold.perBucket(
           Splits.train(scored), Pipeline.dist, col("label")))
         dump("q_eval_metrics",
           Splits.testEval(scored, Pipeline.dist, col("label"), theta))

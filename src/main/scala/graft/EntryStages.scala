@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import java.util.Comparator
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -199,24 +204,37 @@ object EntryStages {
    * meta with row count + wall time) and emits each stage's RECORDED
    * row count — the oracle recomputes the same counts from SQL, so a
    * checkpoint that dropped or duplicated rows cannot hash-match.
-   * The root is per-application (a driver run always computes fresh);
-   * the mid-pipeline skip/recompute contract itself is proven by
+   * The root is per-application (a driver run always computes fresh)
+   * and is deleted once the metas are read; the rows are memoized. The
+   * mid-pipeline skip/recompute contract itself is proven by
    * [[graft.PipelineResumeSpec]].
    */
   def ckptLineage(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = memoModel(spark, sfDir, "ckptLineageRoot") {
-      val r = s"${System.getProperty("java.io.tmpdir")}/graft-ckpt-" +
-        s"${spark.sparkContext.applicationId}-" +
-        graft.ckpt.Checkpoint.fingerprint(sfDir)
-      Pipeline.run(spark, sfDir, Some(r))
-      r
+    val rows = memoModel(spark, sfDir, "ckptLineage") {
+      val root = ckptLineageRoot(spark, sfDir)
+      try {
+        Pipeline.run(spark, sfDir, Some(root.toString)).scored.unpersist()
+        Seq("keyed", "candidates", "scored", "clusters").flatMap { st =>
+          graft.ckpt.Checkpoint.meta(root.toString, st).map(m => (st, m("rows").toLong))
+        }
+      } finally deleteTree(root)
     }
-    Seq("keyed", "candidates", "scored", "clusters")
-      .flatMap { st =>
-        graft.ckpt.Checkpoint.meta(root, st).map(m => (st, m("rows").toLong))
-      }.toDF("stage", "n_rows").orderBy("stage")
+    rows.toDF("stage", "n_rows").orderBy("stage")
   }
+
+  private[graft] def ckptLineageRoot(spark: SparkSession, sfDir: String): Path =
+    Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft-ckpt-${spark.sparkContext.applicationId}-" +
+        graft.ckpt.Checkpoint.fingerprint(sfDir))
+
+  private def deleteTree(root: Path): Unit =
+    if (Files.exists(root)) {
+      val walk = Files.walk(root)
+      try walk.sorted(Comparator.reverseOrder[Path]()).iterator().asScala
+        .foreach(Files.delete)
+      finally walk.close()
+    }
 
   def harmonizeLang(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._

@@ -92,24 +92,24 @@ object Pipeline {
       Scorer.scoreDF(candidates, proj)
     }.persist()
 
-    val theta = Splits.theta(scored, dist, col("label"))
+    // one aggregate over scored gives theta, the test counts at it and
+    // the pair count
+    val d = Splits.decide(scored, dist, col("label"))
+    val theta = d.theta
 
     val edges = edgesAt(scored, theta)
     val clusters = ck("clusters", Checkpoint.fingerprint(fpScored, theta.toString)) {
       Cluster.assign(keyed.select("id"), edges)
     }
 
-    // the summary takes two actions: the test metrics count every pair
-    // on the way through, and clusters has one row per record
-    def testMetricsOf(s: DataFrame) = Splits.testMetrics(s, dist, col("label"), theta)
-    val testMetrics = testMetricsOf(scored)
-    val (m, nPairs) = Observed.rows(scored)(testMetricsOf(_).head())
-    val c = clusters.agg(count(lit(1)), countDistinct("cluster")).head()
+    val testMetrics = Splits.testMetrics(scored, dist, col("label"), theta)
+    // clusters has one row per record, and each cluster's label is one
+    // of its members' ids (the component minimum, or a singleton's own)
+    val c = clusters.agg(count(lit(1)), count(when(col("id") === col("cluster"), 1))).head()
     val (nRecords, nClusters) = (c.getLong(0), c.getLong(1))
     import spark.implicits._
-    val summary = Seq((theta, m.getAs[Double]("f1"), m.getAs[Double]("precision"),
-        m.getAs[Double]("recall"), m.getAs[Long]("tp"), m.getAs[Long]("fp"),
-        m.getAs[Long]("fn"), nPairs, nRecords, nClusters))
+    val summary = Seq((theta, d.f1, d.precision, d.recall, d.tp, d.fp, d.fn,
+        d.pairs, nRecords, nClusters))
       .toDF("theta", "test_f1", "test_precision", "test_recall",
         "tp", "fp", "fn", "n_candidate_pairs", "n_records", "n_clusters")
 

@@ -29,7 +29,8 @@ class BenchDocSpec extends AnyFunSuite {
         s"BENCH.md claims a section for $n but the artifact is gone")
     }
     assert(onDisk == RenderBenchDoc.renderFor(dir, claimed),
-      "BENCH.md drifted from the bench JSONs it claims — rerun graft.tools.RenderBenchDoc")
+      "BENCH.md drifted from the bench JSONs it claims — rerun " +
+        "sbt \"Test/runMain graft.tools.RenderBenchDoc <repo dir>\"")
     // Builder-side runs are written and rendered by the same actor in
     // the same commit, so ALL of them must be claimed; only driver
     // rounds may post-date the render.

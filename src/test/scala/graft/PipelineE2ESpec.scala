@@ -1,5 +1,7 @@
 package graft
 
+import java.lang.Double.doubleToLongBits
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -46,5 +48,20 @@ class PipelineE2ESpec extends AnyFunSuite {
       .filter(col("n") === 2 && col("c") > 1).count()
     assert(split <= math.max(1L, nDni / 50),
       s"$split entities split across clusters of $nDni")
+  }
+
+  test("the sf0.1 summary row is pinned bit for bit") {
+    val out = Pipeline.run(spark, SparkTestSession.sf01)
+    val s = try out.summary.head() finally out.scored.unpersist()
+    val doubles = Seq("theta" -> 0.12, "test_f1" -> 0.9962878248153286,
+      "test_precision" -> 0.9992854187822031, "test_recall" -> 0.9933081610527497)
+    for ((name, want) <- doubles)
+      assert(doubleToLongBits(s.getAs[Double](name)) == doubleToLongBits(want),
+        s"$name ${s.getAs[Double](name)} != $want")
+    val longs = Seq("tp" -> 26570L, "fp" -> 19L, "fn" -> 179L,
+      "n_candidate_pairs" -> 3542323L, "n_records" -> 283281L, "n_clusters" -> 150084L)
+    for ((name, want) <- longs)
+      assert(s.getAs[Long](name) == want, s"$name")
+    assert(s.schema.fieldNames.toSeq == (doubles ++ longs).map(_._1))
   }
 }

@@ -52,9 +52,9 @@ class PipelineJobsSpec extends AnyFunSuite {
       for ((rows, keyed) <- Seq(plain -> plainKeyed, cold -> coldKeyed,
                                 resumed -> resumedKeyed))
         assert(rows.head.getAs[Long]("n_records") == keyed)
-      assert(plainJobs <= 22, s"no checkpoint: $plainJobs jobs")
-      assert(coldJobs <= 24, s"cold checkpoint: $coldJobs jobs")
-      assert(resumedJobs <= 9, s"resumed: $resumedJobs jobs")
+      assert(plainJobs <= 18, s"no checkpoint: $plainJobs jobs")
+      assert(coldJobs <= 20, s"cold checkpoint: $coldJobs jobs")
+      assert(resumedJobs <= 5, s"resumed: $resumedJobs jobs")
     } finally deleteRecursively(root)
   }
 }

@@ -17,4 +17,6 @@ object SparkTestSession {
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
+  /** The sf0.1 tables, beside the sf0.001 ones. */
+  val sf01: String = java.nio.file.Paths.get(sf0001).resolveSibling("sf0.1").toString
 }

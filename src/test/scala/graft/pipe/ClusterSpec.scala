@@ -1,6 +1,7 @@
 package graft.pipe
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, count, countDistinct, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -95,5 +96,17 @@ class ClusterSpec extends AnyFunSuite {
     assert(seen.size > 2)
     assert(seen.forall(_ == before))
     assert(spark.conf.getAll == before)
+  }
+
+  test("a cluster is counted by its member whose id is its label, on both branches") {
+    // 998 and 999 are isolated, 500 has only a self loop
+    val ids = (expected.keys.toSeq ++ Seq(998L, 999L, 500L)).toDF("id")
+    for (branch <- Seq(atRoundZero, never)) {
+      val cc = Cluster.components(edges, toDriver = branch)
+      val r = Cluster.assignFrom(ids, cc)
+        .agg(count(when(col("id") === col("cluster"), 1)), countDistinct("cluster")).head()
+      assert(r.getLong(0) == r.getLong(1), s"onDriver = ${cc.onDriver}")
+      assert(r.getLong(0) == expected.values.toSet.size + 3)
+    }
   }
 }
