@@ -1,20 +1,20 @@
 package graft
 
-import scala.collection.mutable.LinkedHashMap
+import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.eval.Metrics
-import graft.pipe.{Blocking, Cluster, Normalize, Threshold}
+import graft.pipe.{Blocking, Cluster, Splits}
 import graft.sim.Scorer
 
 /**
  * Benchmark main (driver contract): runs the flagship linkage pipeline
- * stage by stage on `SPARK_GRAFT_SF_DIR` at `local[SPARK_GRAFT_CPUS]`
- * and prints ONE JSON line. Headline metric: total seconds across
- * stages; also reports candidate-pairs-scored/sec (the north-rule
- * throughput unit).
+ * stage by stage ([[stages]]) on `SPARK_GRAFT_SF_DIR` in a
+ * [[Sessions.local]] session (`local[SPARK_GRAFT_CPUS]`, default every
+ * core), after the untimed [[Pipeline.warm]], and prints ONE JSON
+ * line. Headline metric: total seconds across stages; also reports
+ * candidate-pairs-scored/sec (the north-rule throughput unit).
  *
  * Scaling evidence (north rule: >=0.8 efficiency between N and 4N
  * cores): each probe width runs in its OWN FORKED JVM — round 2's
@@ -46,25 +46,6 @@ object Bench {
     "java.base/sun.nio.ch", "java.base/sun.nio.cs",
     "java.base/sun.security.action", "java.base/sun.util.calendar"
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus * 2).toString)
-      // pair scoring is CPU-bound per row, not byte-bound: AQE's
-      // byte-based coalescing would squeeze the scorer onto a couple
-      // of tasks, so keep the shuffle width explicit
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local testdata is one parquet file per table; split it so the
-      // scan+normalize stage parallelizes like a many-file prod table
-      .config("spark.sql.files.maxPartitionBytes", s"${512 * 1024}")
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
 
   /**
    * Pure-JVM, Spark-free, embarrassingly-parallel CPU baseline: a
@@ -120,8 +101,67 @@ object Bench {
     } finally pool.shutdown()
   }
 
+  /** One timed pass over the six stages: wall seconds per stage in
+    * order, the results the bench line reports, and the cached `keyed`
+    * and `scored` frames (the caller releases them) with the candidates
+    * for the plan dump. */
+  final case class Stages(
+      times: ListMap[String, Double], nRecords: Long, nPairs: Long,
+      theta: Double, nClusters: Long, f1: Double, mrr: Double,
+      keyed: DataFrame, candidates: DataFrame, scored: DataFrame) {
+    def total: Double = times.values.sum
+    /** The stage times as the bench line's `queries` JSON object. */
+    def queries: String = times.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+      .mkString("{", ",", "}")
+  }
+
   /**
-   * Fresh-JVM probe entry: `--probe <cpus> <sfDir> <sampleDen> <trials>`.
+   * The six timed flagship stages, one action each, built from the
+   * definitions [[Pipeline.run]] uses: the keyed records
+   * ([[Pipeline.keyRecords]]), the salted blocking join, the
+   * mapPartitions scorer (JW + Levenshtein + broadcast-matrix cosine,
+   * the throughput headline), the train-swept theta ([[Splits.theta]]),
+   * the match edges' connected components ([[Pipeline.edgesAt]],
+   * [[Cluster.assign]]) and the fused test-split eval, confusion and IR
+   * metrics in one pass ([[Splits.testEval]]). [[Bench]] and
+   * [[BenchExtra]] time this one graph.
+   */
+  def stages(spark: SparkSession, sfDir: String): Stages = {
+    var times = ListMap.empty[String, Double]
+    def time[T](name: String)(f: => T): T = {
+      val t0 = System.nanoTime()
+      val r = f
+      times = times.updated(name, (System.nanoTime() - t0) / 1e9)
+      r
+    }
+    val keyed = Pipeline.keyRecords(gen.Synth.records(spark, sfDir)).persist()
+    val nRecords = time("q_records_keyed")(keyed.count())
+
+    val cand = Blocking.candidates(keyed)
+    val nPairs = time("q_blocking_join")(cand.count())
+
+    val scored = Scorer.scoreDF(cand, Scorer.broadcastProjection(spark)).persist()
+    time("q_score_pairs")(scored.count())
+
+    val theta = time("q_threshold_sweep") {
+      Splits.theta(scored, Pipeline.dist, col("label"))
+    }
+
+    val nClusters = time("q_connected_components") {
+      Cluster.assign(keyed.select("id"), Pipeline.edgesAt(scored, theta))
+        .select(countDistinct("cluster")).head().getLong(0)
+    }
+
+    val evalRow = time("q_eval_metrics") {
+      Splits.testEval(scored, Pipeline.dist, col("label"), theta).head()
+    }
+    Stages(times, nRecords, nPairs, theta, nClusters,
+      evalRow.getAs[Double]("f1"), evalRow.getAs[Double]("mrr"), keyed, cand, scored)
+  }
+
+  /**
+   * Fresh-JVM probe entry: `--probe <cpus> <sfDir> <sampleDen> <trials>`,
+   * run with `SPARK_GRAFT_CPUS=<cpus>` (the session's width).
    * Prints one `PROBE {...}` line on stdout.
    *
    * Measures the throughput-headline stage — the mapPartitions pair
@@ -137,14 +177,16 @@ object Bench {
    */
   private def probeMain(cpus: Int, sfDir: String, sampleDen: Long,
                         trials: Int): Unit = {
+    require(Sessions.cpus == cpus,
+      s"probe width $cpus, but SPARK_GRAFT_CPUS gives ${Sessions.cpus}")
     // CPU control sampled at BOTH ends of the fork (before the session
     // exists and after it stops): a host-window shift between the
     // Spark trials and a single control sample would otherwise skew
     // the normalization quotient
     val basePre = cpuBaselineGops(cpus)
-    val spark = session(cpus)
-    val keyed = Blocking.withBlockKey(Normalize(gen.Synth.records(spark, sfDir)))
-      .persist()
+    val spark = Sessions.local()
+    Pipeline.warm(spark, sfDir)
+    val keyed = Pipeline.keyRecords(gen.Synth.records(spark, sfDir)).persist()
     keyed.count()
     val cand0 = Blocking.candidates(keyed)
     val cand = (if (sampleDen <= 1L) cand0
@@ -215,6 +257,7 @@ object Bench {
       "-cp", forkClasspath(), "graft.Bench",
       "--probe", cpus.toString, sfDir, sampleDen.toString, trials.toString))
     val pb = new ProcessBuilder(cmd: _*)
+    pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
     pb.redirectErrorStream(false)
     pb.redirectError(ProcessBuilder.Redirect.DISCARD) // Spark logs
     val p = pb.start()
@@ -238,55 +281,12 @@ object Bench {
       return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = session(cpus)
-
-    val times = LinkedHashMap[String, Double]()
-    def time[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      times(name) = (System.nanoTime() - t0) / 1e9
-      r
-    }
-
-    // Stage 1: synthetic records + normalization + sha + block keys
-    val keyed = Blocking.withBlockKey(Normalize(gen.Synth.records(spark, sfDir)))
-      .persist()
-    val nRecords = time("q_records_keyed")(keyed.count())
-
-    // Stage 2: salted blocking self-join (candidate generation)
-    val cand = Blocking.candidates(keyed)
-    val nPairs = time("q_blocking_join")(cand.count())
-
-    // Stage 3: pairwise scoring (mapPartitions: JW + Levenshtein +
-    // broadcast-matrix cosine) — the throughput headline
-    val scored = Scorer.scoreDF(cand, Scorer.broadcastProjection(spark)).persist()
-    time("q_score_pairs")(scored.count())
-
-    // Stage 4: single-pass threshold sweep on the train split
-    val dist = lit(1.0) - col("score")
-    val train = scored.filter(col("split_a") === "train" && col("split_b") === "train")
-    val theta = time("q_threshold_sweep")(
-      Threshold.bestThetaRobust(train, dist, col("label")))
-
-    // Stage 5: match edges + large-star/small-star connected components
-    val nClusters = time("q_connected_components") {
-      val edges = scored.filter(dist <= theta)
-        .select(col("idA").as("src"), col("idB").as("dst"))
-      Cluster.assign(keyed.select("id"), edges)
-        .select(countDistinct("cluster")).head().getLong(0)
-    }
-
-    // Stage 6: fused evaluation — confusion AND IR metrics in ONE pass
-    val test = scored.filter(col("split_a") === "test" && col("split_b") === "test")
-    val evalRow = time("q_eval_metrics") {
-      Metrics.fullEval(test, dist, col("label"), theta).head()
-    }
-    val f1 = evalRow.getAs[Double]("f1")
-    val mrr = evalRow.getAs[Double]("mrr")
-
-    val total = times.values.sum
-    val scoreSec = times("q_score_pairs")
+    val cpus = Sessions.cpus
+    val spark = Sessions.local()
+    Pipeline.warm(spark, sfDir)
+    val run = stages(spark, sfDir)
+    import run.{nClusters, nPairs, nRecords, theta}
+    val scoreSec = run.times("q_score_pairs")
     val pairsPerSec = if (scoreSec > 0) nPairs / scoreSec else 0.0
     spark.stop()
 
@@ -400,14 +400,12 @@ object Bench {
     val probeVsMain = ppsHigh / pairsPerSec
 
     def arr(xs: Seq[Double]) = xs.map(x => f"$x%.3f").mkString("[", ",", "]")
-    val qs = times.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
     val line =
-      s"""{"metric":"flagship_pipeline_total","value":$total,"unit":"sec",""" +
-      s""""queries":$qs,"sf":"$sfDir","cpus":$cpus,""" +
+      s"""{"metric":"flagship_pipeline_total","value":${run.total},"unit":"sec",""" +
+      s""""queries":${run.queries},"sf":"$sfDir","cpus":$cpus,""" +
       s""""n_records":$nRecords,"n_candidate_pairs":$nPairs,""" +
-      f""""pairs_scored_per_sec":$pairsPerSec%.1f,"theta":$theta,"test_f1":$f1%.6f,""" +
-      f""""test_mrr":$mrr%.6f,"n_clusters":$nClusters,""" +
+      f""""pairs_scored_per_sec":$pairsPerSec%.1f,"theta":$theta,"test_f1":${run.f1}%.6f,""" +
+      f""""test_mrr":${run.mrr}%.6f,"n_clusters":$nClusters,""" +
       f""""scaling":{"cpus_low":$cpusLow,"cpus_high":$cpus,""" +
       s""""sample_pairs":$nSampled,""" +
       s""""secs_low":${arr(secsLow)},"secs_high":${arr(secsHigh)},""" +

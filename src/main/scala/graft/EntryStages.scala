@@ -1,9 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Path, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -218,7 +215,7 @@ object EntryStages {
         Seq("keyed", "candidates", "scored", "clusters").flatMap { st =>
           graft.ckpt.Checkpoint.meta(root.toString, st).map(m => (st, m("rows").toLong))
         }
-      } finally deleteTree(root)
+      } finally graft.ckpt.Checkpoint.deleteTree(root)
     }
     rows.toDF("stage", "n_rows").orderBy("stage")
   }
@@ -227,14 +224,6 @@ object EntryStages {
     Paths.get(System.getProperty("java.io.tmpdir"),
       s"graft-ckpt-${spark.sparkContext.applicationId}-" +
         graft.ckpt.Checkpoint.fingerprint(sfDir))
-
-  private def deleteTree(root: Path): Unit =
-    if (Files.exists(root)) {
-      val walk = Files.walk(root)
-      try walk.sorted(Comparator.reverseOrder[Path]()).iterator().asScala
-        .foreach(Files.delete)
-      finally walk.close()
-    }
 
   def harmonizeLang(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._

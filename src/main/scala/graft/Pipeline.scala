@@ -22,16 +22,16 @@ import graft.sim.{Embed, Scorer}
  *
  * The stage decisions of this chain — the keyed recipe, the pair
  * distance and the edge projection — are defined here once;
- * [[BenchExtra]], [[EntryStages]] and the JIT warm in [[Synth]] call
- * them. The train-swept theta and the test metrics come from
- * [[Splits]]. [[Bench]] keeps a frozen copy.
+ * [[Bench.stages]] (the six stages [[Bench]] and [[BenchExtra]] time),
+ * [[EntryStages]] and [[warm]] call them. The train-swept theta and
+ * the test metrics come from [[Splits]].
  */
 object Pipeline {
 
   final case class Outputs(
       keyed: DataFrame, candidates: DataFrame,
       scored: DataFrame, theta: Double, edges: DataFrame,
-      clusters: DataFrame, testMetrics: DataFrame, summary: DataFrame)
+      clusters: DataFrame, summary: DataFrame)
 
   /** Records -> normalized content + block key. */
   def keyRecords(records: DataFrame): DataFrame =
@@ -102,7 +102,6 @@ object Pipeline {
       Cluster.assign(keyed.select("id"), edges)
     }
 
-    val testMetrics = Splits.testMetrics(scored, dist, col("label"), theta)
     // clusters has one row per record, and each cluster's label is one
     // of its members' ids (the component minimum, or a singleton's own)
     val c = clusters.agg(count(lit(1)), count(when(col("id") === col("cluster"), 1))).head()
@@ -113,8 +112,29 @@ object Pipeline {
       .toDF("theta", "test_f1", "test_precision", "test_recall",
         "tp", "fp", "fn", "n_candidate_pairs", "n_records", "n_clusters")
 
-    Outputs(keyed, candidates, scored, theta, edges, clusters,
-      testMetrics, summary)
+    Outputs(keyed, candidates, scored, theta, edges, clusters, summary)
+  }
+
+  /**
+   * Untimed JIT and codegen warm-up for a timed run in a fresh JVM.
+   * One keyed+blocking pass over `sfDir` caches `keyed`, writes the
+   * candidates to the noop sink and releases the cache, so the
+   * whole-stage classes the timed stages run are compiled and nothing
+   * is kept: every timed stage still computes from parquet. Then the
+   * driver-side scorer kernels are warmed ([[Scorer.warmKernels]]).
+   * [[Bench]] (each probe fork too) and [[BenchExtra]] call it before
+   * their timers start; no builder warms anything.
+   */
+  def warm(spark: SparkSession, sfDir: String): Unit = {
+    val sc = spark.sparkContext
+    sc.setJobDescription("warm: untimed keyed+blocking pass (JIT/codegen only)")
+    try {
+      val keyed = keyRecords(Synth.records(spark, sfDir)).persist()
+      keyed.count()
+      Blocking.candidates(keyed).write.format("noop").mode("overwrite").save()
+      keyed.unpersist(true)
+    } finally sc.setJobDescription(null)
+    Scorer.warmKernels()
   }
 
   /** Flagship entry: summary row (driver smoke-checks rows > 0). */

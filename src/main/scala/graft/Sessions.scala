@@ -3,22 +3,25 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /**
- * The local session every dev main builds ([[BenchExtra]], `RunOne`,
- * `RunEntry`): [[Bench]]'s session shape plus the
- * [[GraftExtensions]] SQL surface, so any registered query — `LINK
- * RECORDS FROM` included — runs as it does under [[Verify]]. The
- * frozen [[Bench]] and [[Verify]] build their own.
+ * The local session every main builds but [[Verify]] ([[Bench]] and
+ * its probe forks, [[BenchExtra]], `RunOne`, `RunEntry`): an explicit
+ * shuffle width, no AQE coalescing, UTC, split single-file parquet
+ * scans, plus the [[GraftExtensions]] SQL surface, so any registered
+ * query — `LINK RECORDS FROM` included — runs as it does under
+ * [[Verify]], which builds its own.
  */
 object Sessions {
 
-  /** A `local[N]` session, N = `SPARK_GRAFT_CPUS`, else every core of
-   * the host. */
+  /** The local width: `SPARK_GRAFT_CPUS`, else every core of the host. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** A `local[N]` session, N = [[cpus]]. */
   def local(): SparkSession = {
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val n = cpus
     val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus * 2).toString)
+      .master(s"local[$n]")
+      .config("spark.sql.shuffle.partitions", (n * 2).toString)
       // pair scoring is CPU-bound per row, not byte-bound: AQE's
       // byte-based coalescing would squeeze the scorer onto a couple
       // of tasks, so keep the shuffle width explicit

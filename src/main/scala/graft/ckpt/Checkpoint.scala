@@ -1,7 +1,9 @@
 package graft.ckpt
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.Comparator
 
+import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -44,6 +46,16 @@ import graft.Observed
 object Checkpoint {
 
   final case class StageResult(df: DataFrame, fromCache: Boolean)
+
+  /** Deletes `root` and everything under it, if it exists: a
+    * checkpoint root, a staging tree or a spec's temp root. */
+  def deleteTree(root: Path): Unit =
+    if (Files.exists(root)) {
+      val walk = Files.walk(root)
+      try walk.sorted(Comparator.reverseOrder[Path]()).iterator().asScala
+        .foreach(Files.delete)
+      finally walk.close()
+    }
 
   private def metaPath(root: String, stage: String) =
     Paths.get(s"$root/$stage._meta.json")

@@ -59,7 +59,11 @@ object Splits {
    * [[theta]], the test metrics at it and the pair count from one
    * `groupBy(bucket, class)` over `scored`, collected and finished on
    * the driver ([[Tally]]). Its counts and ratios equal
-   * [[testMetrics]]'s at that theta bit for bit.
+   * [[testMetrics]]'s at that theta bit for bit. Theta itself is picked
+   * by bucket, `ceil(dist * invStep) <= k`, as [[Threshold]] sweeps; the
+   * test counts use `dist <= theta`, and a pair on a grid point can fall
+   * on different sides of the two (dist 0.14 is in bucket 8, inside
+   * theta 7/50).
    */
   def decide(scored: DataFrame, dist: Column, label: Column,
              invStep: Int = 50): Decision = {

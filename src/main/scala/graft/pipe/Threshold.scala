@@ -17,6 +17,14 @@ import org.apache.spark.sql.functions._
  *
  * All F1 values derive from integer counts, so results are
  * bit-reproducible and oracle-comparable.
+ *
+ * The sweep counts a pair inside theta k / invStep when its bucket
+ * `ceil(dist * invStep) <= k`, which is not always the `dist <= theta`
+ * filter the edges and the test counts apply: dist 0.14 lands in bucket
+ * 8 (0.14 * 50 = 7.000000000000001) yet sits inside theta 7/50, and
+ * 1.0 - 0.18 lands in bucket 41 yet sits outside theta 41/50. The
+ * `threshold_*` oracles mirror the bucket sweep, so aligning the two is
+ * an oracle change of its own.
  */
 object Threshold {
 

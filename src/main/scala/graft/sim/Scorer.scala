@@ -42,51 +42,42 @@ object Scorer {
   final val WCos = 0.3
 
   /**
-   * One-time per-JVM JIT warm of the scorer kernels (driver-side, over
-   * SYNTHETIC in-memory strings — never input data, and nothing is
-   * kept). The C2 compiler needs ~10-20k invocations before the
-   * JW/Myers/trigram loops run at steady state; without this, the
-   * first timed scoring pass pays tens of seconds of interpreter/C1
-   * execution (the probe forks in [[graft.Bench]] warm exactly the
-   * same way, via two untimed passes). local[n] executors share the
-   * driver JVM, so a driver-side warm compiles the very methods the
-   * scoring tasks run.
+   * JIT warm of the scorer kernels, driver-side, over SYNTHETIC
+   * in-memory strings: never input data, and nothing is kept. The C2
+   * compiler needs ~10-20k invocations before the JW/Myers/trigram
+   * loops run at steady state; without a warm, the first timed scoring
+   * pass pays tens of seconds of interpreter/C1 execution. local[n]
+   * executors share the driver JVM, so a driver-side warm compiles the
+   * very methods the scoring tasks run. Called by
+   * [[graft.Pipeline.warm]] only.
    */
-  @volatile private var kernelsWarmed = false
-
   private[graft] def warmKernels(): Unit = {
-    if (kernelsWarmed) return
-    synchronized {
-      if (kernelsWarmed) return
-      val base = "fn c4129 mango open 2 high quark val 70583 k 4129 " +
-        "alpha anvil 8467 bravo basil 25189 cedar cobra 41911 delta " +
-        "dwell 58633 ember eagle 75355 futon fable 92077 gamma gusto 8799"
-      val variants = Array(
-        base,
-        base.replace(" val ", " value "),
-        base.substring(3) + " tail",
-        "fn c0 done zebra k 977")
-      val mat = Embed.projection()
-      var sink = 0.0
-      var i = 0
-      while (i < 6000) {
-        val a = variants(i & 3)
-        val b = variants((i + 1) & 3)
-        sink += StringSim.jaroWinkler(a, b) + StringSim.levSim(a, b) +
-          Embed.cosine(Embed.vector(a, mat), Embed.vector(b, mat))
-        i += 1
-      }
-      // keep `sink` observable so the warm loop cannot be eliminated
-      if (java.lang.Double.isNaN(sink)) throw new IllegalStateException("warm")
-      kernelsWarmed = true
+    val base = "fn c4129 mango open 2 high quark val 70583 k 4129 " +
+      "alpha anvil 8467 bravo basil 25189 cedar cobra 41911 delta " +
+      "dwell 58633 ember eagle 75355 futon fable 92077 gamma gusto 8799"
+    val variants = Array(
+      base,
+      base.replace(" val ", " value "),
+      base.substring(3) + " tail",
+      "fn c0 done zebra k 977")
+    val mat = Embed.projection()
+    var sink = 0.0
+    var i = 0
+    while (i < 6000) {
+      val a = variants(i & 3)
+      val b = variants((i + 1) & 3)
+      sink += StringSim.jaroWinkler(a, b) + StringSim.levSim(a, b) +
+        Embed.cosine(Embed.vector(a, mat), Embed.vector(b, mat))
+      i += 1
     }
+    // keep `sink` observable so the warm loop cannot be eliminated
+    if (java.lang.Double.isNaN(sink)) throw new IllegalStateException("warm")
   }
 
   def score(
       pairs: Dataset[CandPair],
       proj: Broadcast[Array[Array[Double]]]): Dataset[ScoredPair] = {
     import pairs.sparkSession.implicits._
-    warmKernels()
     pairs.mapPartitions { it =>
       val mat = proj.value
       // record vectors memoized per partition, keyed by side and record

@@ -3,9 +3,11 @@ package graft.sources
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /**
  * Parquet scan helper for coarse-row-group local tables (optimization
@@ -22,24 +24,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * parallelism, round-robin repartition right after the read (a few-MB
  * exchange that unlocks N-way parallelism for everything downstream).
  * On a production table with >= cores row groups the footer probe
- * short-circuits and nothing is paid at scale. Row order changes, but
- * no engine result depends on input order: the only positional id
- * assignment (GraphBuild's dictionary) sorts before zipWithIndex.
+ * short-circuits and nothing is paid at scale. The first footer also
+ * gives the read schema, so defining the frame submits no Spark job.
+ * Row order changes, but no engine result depends on input order: the
+ * only positional id assignment (GraphBuild's dictionary) sorts before
+ * zipWithIndex.
  */
 object Scan {
 
   def parquet(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
     val par = spark.sparkContext.defaultParallelism
-    if (rowGroupsBelow(spark, path, par)) df.repartition(par) else df
+    val (schema, groups) = footers(spark, path, par)
+    val df = schema.fold(spark.read)(spark.read.schema(_)).parquet(path)
+    if (groups < par) df.repartition(par) else df
   }
 
-  /** True iff the path's total parquet row-group count is < `par`.
-    * Reads at most `par` footers (driver-side, metadata only); any
-    * non-fatal metadata hiccup returns false so the scan is left
-    * untouched. */
-  private def rowGroupsBelow(spark: SparkSession, path: String,
-                             par: Int): Boolean =
+  /** The schema of the path's first data file, read from its footer as
+    * Spark's inference without schema merging reads it, but on the
+    * driver: inference would submit a Spark job each time the frame is
+    * defined. And the path's total row-group count, counted up to
+    * `par`. Reads at most `par` footers (metadata only); any non-fatal
+    * metadata hiccup gives `(None, par)`, so Spark infers the schema
+    * and the scan is left untouched. */
+  private def footers(spark: SparkSession, path: String,
+                      par: Int): (Option[StructType], Int) =
     try {
       val conf = spark.sparkContext.hadoopConfiguration
       val p = new Path(path)
@@ -51,17 +59,18 @@ object Scan {
             f.isFile && f.getLen > 0 && f.getPath.getName.endsWith(".parquet")
           }
         else Array(st)
-      // >= par non-empty files means >= par row groups: skip the probe
-      if (files.length >= par) return false
-      var groups = 0
-      var i = 0
-      while (i < files.length && groups < par) {
-        val in = ParquetFileReader.open(
-          HadoopInputFile.fromStatus(files(i), conf))
-        try groups += in.getRowGroups.size()
-        finally in.close()
-        i += 1
+      val read = files.iterator.map { f =>
+        val in = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try new Footer(f.getPath, in.getFooter) finally in.close()
       }
-      groups < par
-    } catch { case NonFatal(_) => false }
+      if (!read.hasNext) return (None, par)
+      val first = read.next()
+      val schema = ParquetFileFormat.readSchemaFromFooter(first,
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      // >= par non-empty files means >= par row groups: skip the probe
+      var groups = if (files.length >= par) par else first.getParquetMetadata.getBlocks.size
+      while (groups < par && read.hasNext)
+        groups += read.next().getParquetMetadata.getBlocks.size
+      (Some(schema), groups)
+    } catch { case NonFatal(_) => (None, par) }
 }

@@ -189,14 +189,7 @@ object StreamOps {
       spark.sparkContext.applicationId, key)
     def wiped(name: String): String = {
       val p = root.resolve(name)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        val walk = java.nio.file.Files.walk(p)
-        try walk.sorted(
-            java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-        finally walk.close()
-      }
+      graft.ckpt.Checkpoint.deleteTree(p)
       java.nio.file.Files.createDirectories(p)
       p.toString
     }

@@ -20,40 +20,42 @@ class CheckpointSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("stage computes once, resumes from parquet, recomputes on fingerprint change") {
-    val root = Files.createTempDirectory("graft-ckpt").toString
-    var computations = 0
-    def compute = {
-      computations += 1
-      Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    TempRoot("graft-ckpt") { root =>
+      var computations = 0
+      def compute = {
+        computations += 1
+        Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+      }
+      val r1 = Checkpoint.stage(spark, root, "s1", "fp-A")(compute)
+      assert(!r1.fromCache && computations == 1)
+      assert(r1.df.count() == 2)
+      // same fingerprint -> served from checkpoint, no recompute
+      val r2 = Checkpoint.stage(spark, root, "s1", "fp-A")(compute)
+      assert(r2.fromCache && computations == 1)
+      assert(r2.df.orderBy("id").as[(Long, String)].collect().toSeq ==
+        Seq((1L, "a"), (2L, "b")))
+      // changed fingerprint -> recompute + rewrite
+      val r3 = Checkpoint.stage(spark, root, "s1", "fp-B")(compute)
+      assert(!r3.fromCache && computations == 2)
+      // lineage columns present in the persisted parquet
+      val raw = spark.read.parquet(s"$root/s1")
+      assert(Seq("_stage", "_run_id", "_part_id", "_input_fingerprint")
+        .forall(raw.columns.contains))
+      assert(raw.select("_input_fingerprint").distinct().as[String].collect()
+        .toSeq == Seq("fp-B"))
     }
-    val r1 = Checkpoint.stage(spark, root, "s1", "fp-A")(compute)
-    assert(!r1.fromCache && computations == 1)
-    assert(r1.df.count() == 2)
-    // same fingerprint -> served from checkpoint, no recompute
-    val r2 = Checkpoint.stage(spark, root, "s1", "fp-A")(compute)
-    assert(r2.fromCache && computations == 1)
-    assert(r2.df.orderBy("id").as[(Long, String)].collect().toSeq ==
-      Seq((1L, "a"), (2L, "b")))
-    // changed fingerprint -> recompute + rewrite
-    val r3 = Checkpoint.stage(spark, root, "s1", "fp-B")(compute)
-    assert(!r3.fromCache && computations == 2)
-    // lineage columns present in the persisted parquet
-    val raw = spark.read.parquet(s"$root/s1")
-    assert(Seq("_stage", "_run_id", "_part_id", "_input_fingerprint")
-      .forall(raw.columns.contains))
-    assert(raw.select("_input_fingerprint").distinct().as[String].collect()
-      .toSeq == Seq("fp-B"))
   }
 
   test("pipeline resumes mid-run: cached stages are reused") {
-    val root = Files.createTempDirectory("graft-pipe-ckpt").toString
-    val out1 = Pipeline.run(spark, SparkTestSession.sf0001, Some(root))
-    val f1a = out1.summary.head().getAs[Double]("test_f1")
-    // second run must resume from the parquet checkpoints and agree
-    val out2 = Pipeline.run(spark, SparkTestSession.sf0001, Some(root))
-    val f1b = out2.summary.head().getAs[Double]("test_f1")
-    assert(f1a == f1b && out1.theta == out2.theta)
-    assert(Files.exists(java.nio.file.Paths.get(s"$root/scored._meta.json")))
+    TempRoot("graft-pipe-ckpt") { root =>
+      val out1 = Pipeline.run(spark, SparkTestSession.sf0001, Some(root))
+      val f1a = out1.summary.head().getAs[Double]("test_f1")
+      // second run must resume from the parquet checkpoints and agree
+      val out2 = Pipeline.run(spark, SparkTestSession.sf0001, Some(root))
+      val f1b = out2.summary.head().getAs[Double]("test_f1")
+      assert(f1a == f1b && out1.theta == out2.theta)
+      assert(Files.exists(java.nio.file.Paths.get(s"$root/scored._meta.json")))
+    }
   }
 
   private val lineage = Seq("_stage", "_run_id", "_part_id", "_input_fingerprint")
@@ -68,14 +70,15 @@ class CheckpointSpec extends AnyFunSuite {
   /** After `corrupt` damages a committed fp-A stage, the next fp-A run
     * recomputes and returns every row, then commits again. */
   private def recomputesAfter(corrupt: String => Unit): Unit = {
-    val root = Files.createTempDirectory("graft-ckpt-fault").toString
-    assert(!Checkpoint.stage(spark, root, "s", "fp-A")(idFrame).fromCache)
-    corrupt(root)
-    var computed = false
-    val r = Checkpoint.stage(spark, root, "s", "fp-A") { computed = true; idFrame }
-    assert(!r.fromCache && computed, "a damaged commit must not be served")
-    assert(r.df.orderBy("id").as[(Long, String)].collect().toSeq == ids)
-    assert(Checkpoint.stage(spark, root, "s", "fp-A")(idFrame).fromCache)
+    TempRoot("graft-ckpt-fault") { root =>
+      assert(!Checkpoint.stage(spark, root, "s", "fp-A")(idFrame).fromCache)
+      corrupt(root)
+      var computed = false
+      val r = Checkpoint.stage(spark, root, "s", "fp-A") { computed = true; idFrame }
+      assert(!r.fromCache && computed, "a damaged commit must not be served")
+      assert(r.df.orderBy("id").as[(Long, String)].collect().toSeq == ids)
+      assert(Checkpoint.stage(spark, root, "s", "fp-A")(idFrame).fromCache)
+    }
   }
 
   test("a write that fails mid-stage under another fingerprint is not served") {
@@ -113,26 +116,28 @@ class CheckpointSpec extends AnyFunSuite {
   }
 
   test("an empty stage commits 0 rows and is served") {
-    val root = Files.createTempDirectory("graft-ckpt-empty").toString
-    for ((empty, i) <- Seq(idFrame.filter(col("id") < 0),
-                           Seq.empty[(Long, String)].toDF("id", "v")).zipWithIndex) {
-      for (resumed <- Seq(false, true)) {
-        val r = Checkpoint.stage(spark, root, s"e$i", "fp")(empty)
-        assert(r.fromCache == resumed && r.df.count() == 0)
-        assert(r.df.columns.toSeq == Seq("id", "v"))
-        assert(Checkpoint.meta(root, s"e$i").get("rows") == "0")
+    TempRoot("graft-ckpt-empty") { root =>
+      for ((empty, i) <- Seq(idFrame.filter(col("id") < 0),
+                             Seq.empty[(Long, String)].toDF("id", "v")).zipWithIndex) {
+        for (resumed <- Seq(false, true)) {
+          val r = Checkpoint.stage(spark, root, s"e$i", "fp")(empty)
+          assert(r.fromCache == resumed && r.df.count() == 0)
+          assert(r.df.columns.toSeq == Seq("id", "v"))
+          assert(Checkpoint.meta(root, s"e$i").get("rows") == "0")
+        }
       }
     }
   }
 
   test("observed row counts leave the session serializable") {
-    val root = Files.createTempDirectory("graft-ckpt-ser").toString
-    Checkpoint.stage(spark, root, "s", "fp")(idFrame)
-    val (rows, n) = Observed.rows(idFrame)(_.collect())
-    assert(n == 200 && rows.length == 200)
-    // an MLlib model's training summary holds the session, and its
-    // transform closure ships the model to the tasks
-    new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream()).writeObject(spark)
+    TempRoot("graft-ckpt-ser") { root =>
+      Checkpoint.stage(spark, root, "s", "fp")(idFrame)
+      val (rows, n) = Observed.rows(idFrame)(_.collect())
+      assert(n == 200 && rows.length == 200)
+      // an MLlib model's training summary holds the session, and its
+      // transform closure ships the model to the tasks
+      new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream()).writeObject(spark)
+    }
   }
 
   private def sortedRows(df: DataFrame): Seq[String] =
@@ -141,17 +146,18 @@ class CheckpointSpec extends AnyFunSuite {
   for ((kind, partitionBy) <- Seq("unpartitioned" -> Nil,
                                   "partitioned" -> Seq("commit", "lang"))) {
     test(s"$kind stage contract: meta rows, read-back schema and rows, cold and resumed") {
-      val root = Files.createTempDirectory("graft-ckpt-contract").toString
-      val dir = s"$root/recs"
-      def compute = gen.Synth.records(spark, SparkTestSession.sf0001)
-      for (resumed <- Seq(false, true)) {
-        val r = Checkpoint.stage(spark, root, "recs", "fp", partitionBy)(compute)
-        assert(r.fromCache == resumed)
-        val inferred = spark.read.parquet(dir)
-        assert(Checkpoint.meta(root, "recs").get("rows").toLong == inferred.count())
-        def typed(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
-        assert(typed(r.df) == typed(inferred.drop(lineage: _*)))
-        assert(sortedRows(r.df) == sortedRows(compute.select(r.df.columns.map(col): _*)))
+      TempRoot("graft-ckpt-contract") { root =>
+        val dir = s"$root/recs"
+        def compute = gen.Synth.records(spark, SparkTestSession.sf0001)
+        for (resumed <- Seq(false, true)) {
+          val r = Checkpoint.stage(spark, root, "recs", "fp", partitionBy)(compute)
+          assert(r.fromCache == resumed)
+          val inferred = spark.read.parquet(dir)
+          assert(Checkpoint.meta(root, "recs").get("rows").toLong == inferred.count())
+          def typed(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
+          assert(typed(r.df) == typed(inferred.drop(lineage: _*)))
+          assert(sortedRows(r.df) == sortedRows(compute.select(r.df.columns.map(col): _*)))
+        }
       }
     }
   }

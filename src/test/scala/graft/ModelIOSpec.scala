@@ -24,72 +24,76 @@ class ModelIOSpec extends AnyFunSuite {
   private val cfg = RLTransE.Config(dim = 8, epochs = 12)
 
   test("RLTransE model round-trips bit-exactly through parquet") {
-    val dir = Files.createTempDirectory("graft-model").toString
-    val trained = RLTransE.train(spark, SparkTestSession.sf0001, cfg)
-    ModelIO.saveRLTransE(spark, dir, trained, "fp-test")
-    val restored = ModelIO.loadRLTransE(spark, dir)
-    assert(restored.maxValCount == trained.maxValCount)
-    assert(restored.vocab.toSeq == trained.vocab.toSeq)
-    assert(restored.lossByEpoch.toSeq == trained.lossByEpoch.toSeq)
-    assert(restored.ent.length == trained.ent.length &&
-      restored.rel.length == trained.rel.length)
-    // bit-exact: java.util.Arrays equality on every row
-    assert(restored.ent.indices.forall(i =>
-      java.util.Arrays.equals(restored.ent(i), trained.ent(i))))
-    assert(restored.rel.indices.forall(i =>
-      java.util.Arrays.equals(restored.rel(i), trained.rel(i))))
+    TempRoot("graft-model") { dir =>
+      val trained = RLTransE.train(spark, SparkTestSession.sf0001, cfg)
+      ModelIO.saveRLTransE(spark, dir, trained, "fp-test")
+      val restored = ModelIO.loadRLTransE(spark, dir)
+      assert(restored.maxValCount == trained.maxValCount)
+      assert(restored.vocab.toSeq == trained.vocab.toSeq)
+      assert(restored.lossByEpoch.toSeq == trained.lossByEpoch.toSeq)
+      assert(restored.ent.length == trained.ent.length &&
+        restored.rel.length == trained.rel.length)
+      // bit-exact: java.util.Arrays equality on every row
+      assert(restored.ent.indices.forall(i =>
+        java.util.Arrays.equals(restored.ent(i), trained.ent(i))))
+      assert(restored.rel.indices.forall(i =>
+        java.util.Arrays.equals(restored.rel(i), trained.rel(i))))
+    }
   }
 
   test("restored model scores candidate pairs identically to the trained one") {
-    val dir = Files.createTempDirectory("graft-model").toString
-    val trained = RLTransE.train(spark, SparkTestSession.sf0001, cfg)
-    ModelIO.saveRLTransE(spark, dir, trained, "fp-test")
-    val restored = ModelIO.loadRLTransE(spark, dir)
-    // every scored field of every candidate pair
-    val a = RLTransE.fieldScores(spark, SparkTestSession.sf0001, trained,
-      testOnly = false).orderBy("idA", "idB").collect()
-    val b = RLTransE.fieldScores(spark, SparkTestSession.sf0001, restored,
-      testOnly = false).orderBy("idA", "idB").collect()
-    assert(a.length == b.length && a.nonEmpty)
-    assert(a.sameElements(b))
+    TempRoot("graft-model") { dir =>
+      val trained = RLTransE.train(spark, SparkTestSession.sf0001, cfg)
+      ModelIO.saveRLTransE(spark, dir, trained, "fp-test")
+      val restored = ModelIO.loadRLTransE(spark, dir)
+      // every scored field of every candidate pair
+      val a = RLTransE.fieldScores(spark, SparkTestSession.sf0001, trained,
+        testOnly = false).orderBy("idA", "idB").collect()
+      val b = RLTransE.fieldScores(spark, SparkTestSession.sf0001, restored,
+        testOnly = false).orderBy("idA", "idB").collect()
+      assert(a.length == b.length && a.nonEmpty)
+      assert(a.sameElements(b))
+    }
   }
 
   test("TransE model round-trips bit-exactly through parquet") {
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-model-te").toString
-    val ents = graft.graph.GraphBuild.erEntities(spark, SparkTestSession.sf0001)
-    val triples = graft.graph.GraphBuild.erTriples(spark, SparkTestSession.sf0001)
-      .withColumn("idx", col("h") * 2654435761L + col("t"))
-    val trained = graft.sim.TransE.train(spark, triples, ents.count().toInt,
-      graft.graph.GraphBuild.Relations.size, graft.sim.TransE.Config(epochs = 2))
-    ModelIO.saveTransE(spark, dir, trained, "fp-te")
-    val restored = ModelIO.loadTransE(spark, dir)
-    assert(restored.lossByEpoch.toSeq == trained.lossByEpoch.toSeq)
-    assert(restored.ent.indices.forall(i =>
-      java.util.Arrays.equals(restored.ent(i), trained.ent(i))))
-    assert(restored.rel.indices.forall(i =>
-      java.util.Arrays.equals(restored.rel(i), trained.rel(i))))
-    assert(restored.wRel.indices.forall(i =>
-      java.util.Arrays.equals(restored.wRel(i), trained.wRel(i))))
-    assert(ModelIO.savedFingerprint(dir).contains("fp-te"))
-    intercept[RuntimeException](ModelIO.loadRLTransE(spark, dir))
+    TempRoot("graft-model-te") { dir =>
+      val ents = graft.graph.GraphBuild.erEntities(spark, SparkTestSession.sf0001)
+      val triples = graft.graph.GraphBuild.erTriples(spark, SparkTestSession.sf0001)
+        .withColumn("idx", col("h") * 2654435761L + col("t"))
+      val trained = graft.sim.TransE.train(spark, triples, ents.count().toInt,
+        graft.graph.GraphBuild.Relations.size, graft.sim.TransE.Config(epochs = 2))
+      ModelIO.saveTransE(spark, dir, trained, "fp-te")
+      val restored = ModelIO.loadTransE(spark, dir)
+      assert(restored.lossByEpoch.toSeq == trained.lossByEpoch.toSeq)
+      assert(restored.ent.indices.forall(i =>
+        java.util.Arrays.equals(restored.ent(i), trained.ent(i))))
+      assert(restored.rel.indices.forall(i =>
+        java.util.Arrays.equals(restored.rel(i), trained.rel(i))))
+      assert(restored.wRel.indices.forall(i =>
+        java.util.Arrays.equals(restored.wRel(i), trained.wRel(i))))
+      assert(ModelIO.savedFingerprint(dir).contains("fp-te"))
+      intercept[RuntimeException](ModelIO.loadRLTransE(spark, dir))
+    }
   }
 
   test("rlTransEOrTrain restores on fingerprint match, retrains on change") {
-    val dir = Files.createTempDirectory("graft-model").toString
-    val (m1, fromDisk1) =
-      ModelIO.rlTransEOrTrain(spark, SparkTestSession.sf0001, dir, cfg)
-    assert(!fromDisk1) // first call trains and saves
-    val (m2, fromDisk2) =
-      ModelIO.rlTransEOrTrain(spark, SparkTestSession.sf0001, dir, cfg)
-    assert(fromDisk2) // second call restores from parquet
-    assert(m2.ent.indices.forall(i =>
-      java.util.Arrays.equals(m2.ent(i), m1.ent(i))))
-    // config change -> stale fingerprint -> retrain (not restore)
-    val (_, fromDisk3) = ModelIO.rlTransEOrTrain(
-      spark, SparkTestSession.sf0001, dir, cfg.copy(epochs = 13))
-    assert(!fromDisk3)
-    assert(ModelIO.savedFingerprint(dir).isDefined)
+    TempRoot("graft-model") { dir =>
+      val (m1, fromDisk1) =
+        ModelIO.rlTransEOrTrain(spark, SparkTestSession.sf0001, dir, cfg)
+      assert(!fromDisk1) // first call trains and saves
+      val (m2, fromDisk2) =
+        ModelIO.rlTransEOrTrain(spark, SparkTestSession.sf0001, dir, cfg)
+      assert(fromDisk2) // second call restores from parquet
+      assert(m2.ent.indices.forall(i =>
+        java.util.Arrays.equals(m2.ent(i), m1.ent(i))))
+      // config change -> stale fingerprint -> retrain (not restore)
+      val (_, fromDisk3) = ModelIO.rlTransEOrTrain(
+        spark, SparkTestSession.sf0001, dir, cfg.copy(epochs = 13))
+      assert(!fromDisk3)
+      assert(ModelIO.savedFingerprint(dir).isDefined)
+    }
   }
 
   private def sameRows(a: Array[Array[Float]], b: Array[Array[Float]]): Boolean =
@@ -102,13 +106,14 @@ class ModelIOSpec extends AnyFunSuite {
     * under fp A, the next fp-A call retrains, returns matrices
     * bit-identical to a fresh fit, and commits again. */
   private def retrainsAfter(corrupt: String => Unit): Unit = {
-    val dir = Files.createTempDirectory("graft-model-fault").toString
-    assert(!ModelIO.rlTransEOrTrain(spark, SparkTestSession.sf0001, dir, cfg)._2)
-    corrupt(dir)
-    val (m, fromDisk) = ModelIO.rlTransEOrTrain(spark, SparkTestSession.sf0001, dir, cfg)
-    assert(!fromDisk, "a damaged save must not be restored")
-    assert(sameRows(m.ent, freshFit.ent) && sameRows(m.rel, freshFit.rel))
-    assert(ModelIO.rlTransEOrTrain(spark, SparkTestSession.sf0001, dir, cfg)._2)
+    TempRoot("graft-model-fault") { dir =>
+      assert(!ModelIO.rlTransEOrTrain(spark, SparkTestSession.sf0001, dir, cfg)._2)
+      corrupt(dir)
+      val (m, fromDisk) = ModelIO.rlTransEOrTrain(spark, SparkTestSession.sf0001, dir, cfg)
+      assert(!fromDisk, "a damaged save must not be restored")
+      assert(sameRows(m.ent, freshFit.ent) && sameRows(m.rel, freshFit.rel))
+      assert(ModelIO.rlTransEOrTrain(spark, SparkTestSession.sf0001, dir, cfg)._2)
+    }
   }
 
   test("a save under another fingerprint that fails in a task is not restored") {

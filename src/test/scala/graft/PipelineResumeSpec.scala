@@ -1,7 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
-import java.util.Comparator
+import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,49 +19,40 @@ import graft.ckpt.Checkpoint
 class PipelineResumeSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => { Files.delete(f); () })
-      finally walk.close()
-    }
-
   test("pipeline resumes mid-stream: upstream served, deleted stage recomputed, output identical") {
-    val root = Files.createTempDirectory("graft-resume").toString
-    val sf = "/root/testdata/sf0.001"
+    TempRoot("graft-resume") { root =>
+      val sf = SparkTestSession.sf0001
 
-    val out1 = Pipeline.run(spark, sf, Some(root))
-    val summary1 = out1.summary.collect().toSeq
-    def runId(stage: String): String =
-      Checkpoint.meta(root, stage).get("run_id")
-    val keyedRun1 = runId("keyed")
-    val candRun1 = runId("candidates")
-    val scoredRun1 = runId("scored")
+      val out1 = Pipeline.run(spark, sf, Some(root))
+      val summary1 = out1.summary.collect().toSeq
+      def runId(stage: String): String =
+        Checkpoint.meta(root, stage).get("run_id")
+      val keyedRun1 = runId("keyed")
+      val candRun1 = runId("candidates")
+      val scoredRun1 = runId("scored")
 
-    // lineage + metrics recorded per stage
-    for (st <- Seq("keyed", "candidates", "scored", "clusters")) {
-      val m = Checkpoint.meta(root, st).get
-      assert(m("rows").toLong > 0, s"$st rows")
-      assert(m("input_fingerprint").nonEmpty && m("run_id").nonEmpty)
+      // lineage + metrics recorded per stage
+      for (st <- Seq("keyed", "candidates", "scored", "clusters")) {
+        val m = Checkpoint.meta(root, st).get
+        assert(m("rows").toLong > 0, s"$st rows")
+        assert(m("input_fingerprint").nonEmpty && m("run_id").nonEmpty)
+      }
+
+      // kill the mid-pipeline 'scored' checkpoint (data + sidecar)
+      Checkpoint.deleteTree(Paths.get(s"$root/scored"))
+      Files.deleteIfExists(Paths.get(s"$root/scored._meta.json"))
+
+      val out2 = Pipeline.run(spark, sf, Some(root))
+      assert(runId("keyed") == keyedRun1, "keyed must resume from checkpoint")
+      assert(runId("candidates") == candRun1, "candidates must resume")
+      assert(runId("scored") != scoredRun1, "scored must be recomputed")
+      assert(out2.summary.collect().toSeq == summary1,
+        "resumed run must reproduce the first run bit-for-bit")
     }
-
-    // kill the mid-pipeline 'scored' checkpoint (data + sidecar)
-    deleteRecursively(java.nio.file.Paths.get(s"$root/scored"))
-    Files.deleteIfExists(java.nio.file.Paths.get(s"$root/scored._meta.json"))
-
-    val out2 = Pipeline.run(spark, sf, Some(root))
-    assert(runId("keyed") == keyedRun1, "keyed must resume from checkpoint")
-    assert(runId("candidates") == candRun1, "candidates must resume")
-    assert(runId("scored") != scoredRun1, "scored must be recomputed")
-    assert(out2.summary.collect().toSeq == summary1,
-      "resumed run must reproduce the first run bit-for-bit")
   }
 
   test("a scored checkpoint from another scorer is recomputed; keyed and candidates are served") {
-    val root = Files.createTempDirectory("graft-resume-fp").toString
     val sf = SparkTestSession.sf0001
-    def runId(stage: String): String = Checkpoint.meta(root, stage).get("run_id")
 
     // every folded scorer value moves the scored fingerprint, and only
     // it; every folded input value moves both
@@ -78,13 +68,14 @@ class PipelineResumeSpec extends AnyFunSuite {
       assert(otherInput != input && otherScored != scored, Pipeline.InputKey(i))
     }
 
-    try {
+    TempRoot("graft-resume-fp") { root =>
+      def runId(stage: String): String = Checkpoint.meta(root, stage).get("run_id")
       val summary1 = Pipeline.run(spark, sf, Some(root)).summary.collect().toSeq
       val (keyed1, cand1, scored1) = (runId("keyed"), runId("candidates"), runId("scored"))
       // the scored commit as a build with another JW weight would have left it
       val stale = Pipeline.fingerprints(sf, 64,
         Pipeline.ScorerKey.updated(0, s"w_jw=${graft.sim.Scorer.WJw + 0.05}"))._2
-      val meta = java.nio.file.Paths.get(s"$root/scored._meta.json")
+      val meta = Paths.get(s"$root/scored._meta.json")
       Files.writeString(meta, Files.readString(meta).replace(scored, stale))
       assert(Checkpoint.meta(root, "scored").get("input_fingerprint") == stale)
 
@@ -94,6 +85,6 @@ class PipelineResumeSpec extends AnyFunSuite {
       assert(runId("scored") != scored1, "scored must be recomputed")
       assert(Checkpoint.meta(root, "scored").get("input_fingerprint") == scored)
       assert(summary2 == summary1)
-    } finally deleteRecursively(java.nio.file.Paths.get(root))
+    }
   }
 }

@@ -45,20 +45,21 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("partitioned stage checkpoint prunes partitions on read") {
-    val root = java.nio.file.Files.createTempDirectory("graft-part").toString
-    ckpt.Checkpoint.stage(spark, root, "recs", "fp",
-      partitionBy = Seq("commit", "lang")) {
-      gen.Synth.records(spark, sf)
+    TempRoot("graft-part") { root =>
+      ckpt.Checkpoint.stage(spark, root, "recs", "fp",
+        partitionBy = Seq("commit", "lang")) {
+        gen.Synth.records(spark, sf)
+      }
+      val read = spark.read.parquet(s"$root/recs")
+        .filter(col("commit") === "c1" && col("lang") === "scala")
+      val plan = executed(read.select("id"))
+      assert(plan.contains("PartitionFilters"), plan)
+      assert(read.count() > 0)
+      // only the matching hive partition is scanned
+      val prunedOk = plan.linesIterator
+        .exists(l => l.contains("PartitionFilters") && l.contains("commit"))
+      assert(prunedOk, s"commit not in partition filters:\n$plan")
     }
-    val read = spark.read.parquet(s"$root/recs")
-      .filter(col("commit") === "c1" && col("lang") === "scala")
-    val plan = executed(read.select("id"))
-    assert(plan.contains("PartitionFilters"), plan)
-    assert(read.count() > 0)
-    // only the matching hive partition is scanned
-    val prunedOk = plan.linesIterator
-      .exists(l => l.contains("PartitionFilters") && l.contains("commit"))
-    assert(prunedOk, s"commit not in partition filters:\n$plan")
   }
 
   test("candidate join is a shuffled hash join; no literal hot-key list") {

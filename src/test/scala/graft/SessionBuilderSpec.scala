@@ -7,23 +7,24 @@ import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One local-session builder: the dev mains take [[Sessions.local]];
-  * only the frozen driver surfaces [[Bench]] and [[Verify]] build their
-  * own sessions. One gradient step: the distributed trainers reduce,
+/** One local-session builder: every main but [[Verify]] takes
+  * [[Sessions.local]]. One warm-up, [[Pipeline.warm]], so no builder
+  * runs hidden work. One gradient step: the distributed trainers reduce,
   * quantize and take the plain TransE hinge through
   * [[graft.sim.MicroGrad]] only. One RLTransE value table with its
   * offset term in `RLTransE.Model`, and one balanced-GD fit site in
   * `Weights`. One commit-record writer under `ckpt/`: [[graft.ckpt.Checkpoint]].
+  * One maker of spec temp directories: [[TempRoot]], which deletes them.
   * Stops per-file copies from growing back. */
 class SessionBuilderSpec extends AnyFunSuite {
 
-  /** Paths, relative to `src/main/scala`, of the sources matching `re`. */
-  private def scan(re: Regex): Set[String] = counts(re).keySet
+  /** Paths, relative to `src/<tree>/scala`, of the sources matching `re`. */
+  private def scan(re: Regex, tree: String = "main"): Set[String] = counts(re, tree).keySet
 
   /** Matches of `re` per source, keyed as in [[scan]]; sources without
     * a match are left out. */
-  private def counts(re: Regex): Map[String, Int] = {
-    val root = Paths.get(sys.props.getOrElse("user.dir", "."), "src", "main", "scala")
+  private def counts(re: Regex, tree: String = "main"): Map[String, Int] = {
+    val root = Paths.get(sys.props.getOrElse("user.dir", "."), "src", tree, "scala")
     assert(Files.isDirectory(root), s"no sources under $root")
     val walk = Files.walk(root)
     try walk.iterator().asScala
@@ -35,9 +36,9 @@ class SessionBuilderSpec extends AnyFunSuite {
       finally walk.close()
   }
 
-  test("SparkSession.builder() appears only in Sessions, Bench and Verify") {
+  test("SparkSession.builder() appears only in Sessions and Verify") {
     val found = scan("""SparkSession\s*\.\s*builder\b""".r)
-    val allowed = Set("graft/Sessions.scala", "graft/Bench.scala", "graft/Verify.scala")
+    val allowed = Set("graft/Sessions.scala", "graft/Verify.scala")
     assert(found.contains("graft/Sessions.scala"))
     assert((found -- allowed).isEmpty,
       s"build the session with graft.Sessions.local instead: ${(found -- allowed).toSeq.sorted}")
@@ -82,5 +83,21 @@ class SessionBuilderSpec extends AnyFunSuite {
     assert(found.contains(home))
     assert((found - home).isEmpty,
       s"commit through graft.ckpt.Checkpoint.stage instead: ${(found - home).toSeq.sorted}")
+  }
+
+  test("the noop warm sink and the kernel warm appear only in Pipeline") {
+    val home = "graft/Pipeline.scala"
+    val found = scan("""format\("noop"\)|(?<!def )\bwarmKernels\(""".r)
+    assert(found.contains(home))
+    assert((found - home).isEmpty,
+      s"warm up through graft.Pipeline.warm, untimed, instead: ${(found - home).toSeq.sorted}")
+  }
+
+  test("specs make temp directories only through TempRoot") {
+    val home = "graft/TempRoot.scala"
+    val found = scan("""Files\.createTempDirectory\(""".r, "test")
+    assert(found.contains(home))
+    assert((found - home).isEmpty,
+      s"make spec temp directories with graft.TempRoot instead: ${(found - home).toSeq.sorted}")
   }
 }

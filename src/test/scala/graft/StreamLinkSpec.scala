@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,58 +26,60 @@ class StreamLinkSpec extends AnyFunSuite {
   }
 
   test("multi-microbatch run (maxFilesPerTrigger=1) emits the same set: state carries across batches") {
-    val srcDir = Files.createTempDirectory("graft-slink-mb").toString
-    // split the source into several files -> several microbatches; pairs
-    // whose two sides land in different batches are matched via state
-    EntryStages.keyed(spark, SparkTestSession.sf0001)
-      .select(col("id"), col("side"), col("content_norm").as("content"),
-        col("block_key"))
-      .repartition(6).write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream
-      .schema("id BIGINT, side STRING, content STRING, block_key STRING")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-      .as[graft.streaming.LinkRec]
-    val outDir = Files.createTempDirectory("graft-slink-mb-out").toString
-    val ckpt = Files.createTempDirectory("graft-slink-mb-ckpt").toString
-    val q = StreamOps.streamingLink(stream, minJw = 0.9).writeStream
-      .outputMode("append").format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckpt).start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.read.parquet(outDir)
-      .select("idA", "idB", "jw").as[(Long, Long, Double)].collect().toSet
-    val batch = EntryStages.scoredp(spark, SparkTestSession.sf0001)
-      .filter(col("jw") >= 0.9)
-      .select("idA", "idB", "jw").as[(Long, Long, Double)].collect().toSet
-    assert(streamed == batch)
+    TempRoot("graft-slink-mb") { root =>
+      val srcDir = s"$root/src"
+      // split the source into several files -> several microbatches; pairs
+      // whose two sides land in different batches are matched via state
+      EntryStages.keyed(spark, SparkTestSession.sf0001)
+        .select(col("id"), col("side"), col("content_norm").as("content"),
+          col("block_key"))
+        .repartition(6).write.mode("overwrite").parquet(srcDir)
+      val stream = spark.readStream
+        .schema("id BIGINT, side STRING, content STRING, block_key STRING")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(srcDir)
+        .as[graft.streaming.LinkRec]
+      val (outDir, ckpt) = (s"$root/out", s"$root/ckpt")
+      val q = StreamOps.streamingLink(stream, minJw = 0.9).writeStream
+        .outputMode("append").format("parquet")
+        .option("path", outDir).option("checkpointLocation", ckpt).start()
+      try q.processAllAvailable() finally q.stop()
+      val streamed = spark.read.parquet(outDir)
+        .select("idA", "idB", "jw").as[(Long, Long, Double)].collect().toSet
+      val batch = EntryStages.scoredp(spark, SparkTestSession.sf0001)
+        .filter(col("jw") >= 0.9)
+        .select("idA", "idB", "jw").as[(Long, Long, Double)].collect().toSet
+      assert(streamed == batch)
+    }
   }
 
   test("maxPerSide cap keeps the newest records (hot-block memory bound)") {
-    val srcDir = Files.createTempDirectory("graft-slink-cap").toString
-    // one block; two A records arrive before the B record
-    Seq(
-      LinkRec(2L, "A", "match content one", "blk"),
-      LinkRec(4L, "A", "match content two", "blk"),
-      LinkRec(5L, "B", "match content two", "blk"))
-      .toDS().write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream
-      .schema("id BIGINT, side STRING, content STRING, block_key STRING")
-      .parquet(srcDir).as[LinkRec]
+    TempRoot("graft-slink-cap") { root =>
+      val srcDir = s"$root/src"
+      // one block; two A records arrive before the B record
+      Seq(
+        LinkRec(2L, "A", "match content one", "blk"),
+        LinkRec(4L, "A", "match content two", "blk"),
+        LinkRec(5L, "B", "match content two", "blk"))
+        .toDS().write.mode("overwrite").parquet(srcDir)
+      val stream = spark.readStream
+        .schema("id BIGINT, side STRING, content STRING, block_key STRING")
+        .parquet(srcDir).as[LinkRec]
 
-    def run(cap: Int): Set[(Long, Long)] = {
-      val outDir = Files.createTempDirectory("graft-slink-cap-out").toString
-      val ckpt = Files.createTempDirectory("graft-slink-cap-ckpt").toString
-      val q = StreamOps.streamingLink(stream, minJw = 0.0, maxPerSide = cap)
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt).start()
-      try q.processAllAvailable() finally q.stop()
-      spark.read.parquet(outDir)
-        .select("idA", "idB").as[(Long, Long)].collect().toSet
+      def run(cap: Int): Set[(Long, Long)] = {
+        val (outDir, ckpt) = (s"$root/out-$cap", s"$root/ckpt-$cap")
+        val q = StreamOps.streamingLink(stream, minJw = 0.0, maxPerSide = cap)
+          .writeStream.outputMode("append").format("parquet")
+          .option("path", outDir).option("checkpointLocation", ckpt).start()
+        try q.processAllAvailable() finally q.stop()
+        spark.read.parquet(outDir)
+          .select("idA", "idB").as[(Long, Long)].collect().toSet
+      }
+      // uncapped: B scores against both prior A records
+      assert(run(Int.MaxValue) == Set((2L, 5L), (4L, 5L)))
+      // cap 1: oldest A evicted before B arrives — only the newest matches
+      assert(run(1) == Set((4L, 5L)))
     }
-    // uncapped: B scores against both prior A records
-    assert(run(Int.MaxValue) == Set((2L, 5L), (4L, 5L)))
-    // cap 1: oldest A evicted before B arrives — only the newest matches
-    assert(run(1) == Set((4L, 5L)))
   }
 
   test("capped run equals the newest-K oracle formula where eviction fires") {
