@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.pipe.{Splits, Threshold}
+import graft.pipe.Splits
 import graft.sim.Scorer
 
 /**
@@ -53,8 +53,8 @@ object BenchExtra {
         dump("q_blocking_join", r.candidates)
         dump("q_score_pairs",
           Scorer.scoreDF(r.candidates, Scorer.broadcastProjection(spark)))
-        dump("q_threshold_sweep", Threshold.perBucket(
-          Splits.train(r.scored), Pipeline.dist, col("label")))
+        dump("q_threshold_sweep", Splits.Tally.frame(
+          r.scored, Pipeline.dist, col("label"), invStep = 50))
         dump("q_eval_metrics",
           Splits.testEval(r.scored, Pipeline.dist, col("label"), r.theta))
       }

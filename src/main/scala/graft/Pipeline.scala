@@ -28,9 +28,11 @@ import graft.sim.{Embed, Scorer}
  */
 object Pipeline {
 
+  /** What a run leaves to its caller: the keyed records, the scored
+    * pairs (cached by the run; the caller unpersists them), theta, the
+    * `(id, cluster)` assignment and the one-row summary (local). */
   final case class Outputs(
-      keyed: DataFrame, candidates: DataFrame,
-      scored: DataFrame, theta: Double, edges: DataFrame,
+      keyed: DataFrame, scored: DataFrame, theta: Double,
       clusters: DataFrame, summary: DataFrame)
 
   /** Records -> normalized content + block key. */
@@ -58,18 +60,19 @@ object Pipeline {
     s"proj_seed=${Embed.ProjSeed}", s"dim=${Embed.DefaultDim}")
 
   /** Checkpoint fingerprints `(keyed and candidates, scored)`: the
-    * first covers the source, the salts and `input`, the second also
-    * folds in `scorer`, so a scorer change recomputes `scored` (and
-    * `clusters`, keyed on it) while the stages before it are served. */
-  private[graft] def fingerprints(sfDir: String, salts: Int,
+    * first covers the source, the salts ([[Blocking.Salts]]) and
+    * `input`, the second also folds in `scorer`, so a scorer change
+    * recomputes `scored` (and `clusters`, keyed on it) while the stages
+    * before it are served. */
+  private[graft] def fingerprints(sfDir: String,
                                   scorer: Seq[String] = ScorerKey,
                                   input: Seq[String] = InputKey): (String, String) = {
-    val fpInput = Checkpoint.fingerprint(sfDir +: s"salts=$salts" +: input: _*)
+    val fpInput = Checkpoint.fingerprint(sfDir +: s"salts=${Blocking.Salts}" +: input: _*)
     (fpInput, Checkpoint.fingerprint(fpInput +: scorer: _*))
   }
 
   def run(spark: SparkSession, sfDir: String,
-          ckptRoot: Option[String] = None, salts: Int = 64): Outputs = {
+          ckptRoot: Option[String] = None): Outputs = {
 
     def ck(name: String, fp: String)(df: => DataFrame): DataFrame =
       ckptRoot match {
@@ -77,7 +80,7 @@ object Pipeline {
         case None => df
       }
 
-    val (fpInput, fpScored) = fingerprints(sfDir, salts)
+    val (fpInput, fpScored) = fingerprints(sfDir)
 
     // the records are read inside the stage, so a resumed run does not
     // touch the source
@@ -85,7 +88,7 @@ object Pipeline {
       keyRecords(Synth.records(spark, sfDir))
     }
     val candidates = ck("candidates", fpInput) {
-      Blocking.candidates(keyed, salts)
+      Blocking.candidates(keyed)
     }
     val proj = Scorer.broadcastProjection(spark)
     val scored = ck("scored", fpScored) {
@@ -97,9 +100,8 @@ object Pipeline {
     val d = Splits.decide(scored, dist, col("label"))
     val theta = d.theta
 
-    val edges = edgesAt(scored, theta)
     val clusters = ck("clusters", Checkpoint.fingerprint(fpScored, theta.toString)) {
-      Cluster.assign(keyed.select("id"), edges)
+      Cluster.assign(keyed.select("id"), edgesAt(scored, theta))
     }
 
     // clusters has one row per record, and each cluster's label is one
@@ -112,7 +114,7 @@ object Pipeline {
       .toDF("theta", "test_f1", "test_precision", "test_recall",
         "tp", "fp", "fn", "n_candidate_pairs", "n_records", "n_clusters")
 
-    Outputs(keyed, candidates, scored, theta, edges, clusters, summary)
+    Outputs(keyed, scored, theta, clusters, summary)
   }
 
   /**

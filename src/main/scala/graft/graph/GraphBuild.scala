@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.EntryStages
 import graft.pipe.Splits
+import graft.sim.Embed
 
 /**
  * Knowledge-graph encodings of the records table, the engine analogue
@@ -101,6 +102,31 @@ object GraphBuild {
         col("split_a"), col("split_b"))
       .join(recA.select(col("rid").as("idA"), col("ent_id").as("kA")), "idA")
       .join(recB.select(col("rid").as("idB"), col("ent_id").as("kB")), "idB")
+
+  /**
+   * The embedding trainers' one pair scorer: the cosine of each
+   * candidate pair's two trained entity rows, `cos(entA(kA), entB(kB))`,
+   * over [[candidateEntities]] (`recA`, `recB` map record ids to the
+   * matrices' rows). Both matrices go out in one broadcast and the
+   * pairs are scored in one mapPartitions pass. Returns (idA, idB,
+   * block_key, cos, label, split_a, split_b).
+   */
+  def cosinePairs(spark: SparkSession, sfDir: String,
+                  recA: DataFrame, entA: Array[Array[Float]],
+                  recB: DataFrame, entB: Array[Array[Float]]): DataFrame = {
+    import spark.implicits._
+    val ents = spark.sparkContext.broadcast((entA, entB))
+    candidateEntities(spark, sfDir, recA, recB)
+      .select(col("idA"), col("idB"), col("block_key"), col("kA"),
+        col("kB"), col("label"), col("split_a"), col("split_b"))
+      .as[(Long, Long, String, Long, Long, Long, String, String)]
+      .mapPartitions { it =>
+        val (ea, eb) = ents.value
+        it.map { case (a, b, bk, ka, kb, lbl, sa, sb) =>
+          (a, b, bk, Embed.cosine(ea(ka.toInt), eb(kb.toInt)), lbl, sa, sb)
+        }
+      }.toDF("idA", "idB", "block_key", "cos", "label", "split_a", "split_b")
+  }
 
   /** Entity dictionary: dense ids by sorted label (deterministic).
     * Memoized per (session, sfDir): half a dozen queries and every

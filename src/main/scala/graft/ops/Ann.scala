@@ -32,6 +32,24 @@ object Ann {
     embeddings(spark, sfDir).select(col("vec_id"), col("embedding")).as[Vec]
   }
 
+  /**
+   * The `k` best neighbors of each query in `scored` (query_id,
+   * neighbor_id, cos) as (query_id, rank, neighbor_id). Ranked on the
+   * micro-unit-rounded cosine, ties by neighbor_id: the oracle computes
+   * cosine with a different kernel (DuckDB list_cosine_similarity), and
+   * ranking raw doubles would let a one-ulp divergence between
+   * near-equal values flip ranks and fail the exact compare.
+   */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("cos_micros").desc, col("neighbor_id").asc)
+    scored
+      .withColumn("cos_micros", round(col("cos") * 1000000.0).cast("long"))
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .select("query_id", "rank", "neighbor_id")
+  }
+
   /** Exact top-k cosine neighbors for queries (vec_id < nQueries). */
   def bruteTopK(spark: SparkSession, sfDir: String,
                 nQueries: Int = 50, k: Int = 3): DataFrame = {
@@ -47,17 +65,7 @@ object Ann {
         }
       }
     }.toDF("query_id", "neighbor_id", "cos")
-    // rank on micro-unit-rounded cosine: the oracle computes cosine with
-    // a different kernel (DuckDB list_cosine_similarity); ranking raw
-    // doubles would let a one-ulp divergence between near-equal values
-    // flip ranks and fail the exact compare.
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_micros").desc, col("neighbor_id").asc)
-    scored
-      .withColumn("cos_micros", round(col("cos") * 1000000.0).cast("long"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id")
+    topK(scored, k)
   }
 
   final val LshTables = 16
@@ -163,15 +171,7 @@ object Ann {
       .mapPartitions(_.map { case (qid, qv, nid, nv) =>
         (qid, nid, Embed.cosine(qv, nv))
       }).toDF("query_id", "neighbor_id", "cos")
-    // rank on micro-rounded cosine for kernel-independent parity with
-    // the DuckDB oracle (see bruteTopK)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_micros").desc, col("neighbor_id").asc)
-    scored
-      .withColumn("cos_micros", round(col("cos") * 1000000.0).cast("long"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id")
+    topK(scored, k)
   }
 
   /**
@@ -229,14 +229,6 @@ object Ann {
           .map(q => (q.vec_id, vid, Embed.cosine(q.embedding, v)))
       }
     }.toDF("query_id", "neighbor_id", "cos")
-    // rank on micro-units (see bruteTopK: raw-double ranking would let
-    // one-ulp kernel divergence flip near-equal ranks vs the oracle)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_micros").desc, col("neighbor_id").asc)
-    scored
-      .withColumn("cos_micros", round(col("cos") * 1000000.0).cast("long"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id")
+    topK(scored, k)
   }
 }

@@ -42,6 +42,9 @@ object Blocking {
   /** The block-key token [[withBlockKey]] extracts. */
   final val KeyPattern = "c[0-9]+"
 
+  /** The salt fan-out of [[candidates]] for each hot key. */
+  final val Salts = 64
+
   /**
    * Candidate pairs (idA, idB, block_key) from a salted A x B equi-join.
    * Output is identical to the plain `a.join(b, "block_key")` (the
@@ -61,7 +64,7 @@ object Blocking {
    *                     only hot keys pay the B-side replication
    * @param hotThreshold A-side rows at which a block counts as hot
    */
-  def candidates(keyed: DataFrame, salts: Int = 64,
+  def candidates(keyed: DataFrame, salts: Int = Salts,
                  hotThreshold: Int = 500): DataFrame = {
     require(salts >= 1)
     val a = side(keyed, "A", col("block_key"))

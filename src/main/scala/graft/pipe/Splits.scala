@@ -115,7 +115,7 @@ object Splits {
     def pairs: Long = rows.map(_.n).sum
   }
 
-  private[pipe] object Tally {
+  private[graft] object Tally {
     /** Split classes: both train, other non-test, both test, the rest. */
     val Train = 0
     val NonTest = 1
@@ -125,23 +125,28 @@ object Splits {
     final case class Group(bucket: Int, cls: Int, n: Long, npos: Long,
                            posAt: Long, negAt: Long, posBelow: Long, negBelow: Long)
 
-    def apply(scored: DataFrame, dist: Column, label: Column, invStep: Int): Tally = {
+    /** The one distributed step: the `groupBy(bucket, class)` whose
+      * rows are the [[Group]]s, in their field order. */
+    private[graft] def frame(scored: DataFrame, dist: Column, label: Column,
+                             invStep: Int): DataFrame = {
       val cls = when(both("train"), Train)
         .when(noTestSide, NonTest)
         .when(both("test"), Test)
         .otherwise(Mixed)
       val (b, l, d) = (col("b"), col("l"), col("d"))
       def at(grid: Column, lbl: Int) = count(when(d <= grid / invStep.toDouble && l === lbl, 1))
-      val rows = scored
+      scored
         .select(Threshold.bucketOf(dist, invStep).as("b"), cls.as("c"),
           label.cast("long").as("l"), dist.as("d"))
         .groupBy(b, col("c"))
         .agg(count(lit(1)), sum(l), at(b, 1), at(b, 0), at(b - 1, 1), at(b - 1, 0))
-        .collect()
-        .map(r => Group(r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7)))
-      new Tally(rows.toSeq)
     }
+
+    private[pipe] def apply(scored: DataFrame, dist: Column, label: Column,
+                            invStep: Int): Tally =
+      new Tally(frame(scored, dist, label, invStep).collect().toSeq
+        .map(r => Group(r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))))
   }
 
   /** Test-split pair metrics ([[Metrics.pairMetrics]]'s schema) of the

@@ -33,8 +33,8 @@ object Threshold {
     ceil(dist * invStep).cast("int")
 
   /** The one distributed step: (bucket, n, npos) per non-empty bucket. */
-  private[graft] def perBucket(scored: DataFrame, dist: Column, label: Column,
-                               invStep: Int = 50): DataFrame =
+  private def perBucket(scored: DataFrame, dist: Column, label: Column,
+                        invStep: Int = 50): DataFrame =
     scored.select(bucketOf(dist, invStep).as("bucket"), label.cast("long").as("lbl"))
       .groupBy("bucket").agg(count(lit(1)).as("n"), sum("lbl").as("npos"))
 

@@ -363,7 +363,6 @@ object KrEar {
     * dictionaries stay cached until the row is collected. */
   def eval(spark: SparkSession, sfDir: String,
            cfg: Config = Config()): DataFrame = {
-    import spark.implicits._
     val (entIds, valIds, relT, attrT) = prepare(spark, sfDir)
     val model = train(spark, relT, attrT, entIds.count().toInt,
       valIds.count().toInt, cfg)
@@ -373,17 +372,7 @@ object KrEar {
       .select(col("rid"), col("ent_id").as("eid"))
       .join(entIds, "eid")
       .select(col("rid"), col("kid").as("ent_id"))
-    val entB = spark.sparkContext.broadcast(model.ent)
-    val all = GraphBuild.candidateEntities(spark, sfDir, recs, recs)
-      .select(col("idA"), col("idB"), col("kA"), col("kB"), col("label"),
-        col("split_a"), col("split_b"))
-      .as[(Long, Long, Long, Long, Long, String, String)]
-      .mapPartitions { it =>
-        val e = entB.value
-        it.map { case (a, bb, ka, kb, lbl, sa, sb) =>
-          (a, bb, Embed.cosine(e(ka.toInt), e(kb.toInt)), lbl, sa, sb)
-        }
-      }.toDF("idA", "idB", "cos", "label", "split_a", "split_b").persist()
+    val all = GraphBuild.cosinePairs(spark, sfDir, recs, model.ent, recs, model.ent).persist()
     val row = Splits.summary(all, lit(1.0) - col("cos"), cfg.dim, cfg.epochs)
     all.unpersist(); entIds.unpersist(); valIds.unpersist()
     row

@@ -272,7 +272,9 @@ object MTransE {
     Model(entA, entB, relA, relB, m, evolveVec, losses)
   }
 
-  /** Cosine pair scores of M e_a vs e_b over the candidate pairs. */
+  /** Cosine pair scores of M e_a vs e_b over the candidate pairs
+    * ([[GraphBuild.cosinePairs]]; M is applied to each A entity row
+    * once, on the driver). */
   def pairScores(spark: SparkSession, sfDir: String,
                  cfg: Config = Config()): DataFrame = {
     import spark.implicits._
@@ -304,18 +306,8 @@ object MTransE {
     }
     val model = train(spark, triplesA, triplesB, aligned, nA, nB,
       GraphBuild.Relations.size, cfg)
-    val mB = spark.sparkContext.broadcast((model.entA, model.entB, model.m))
-    GraphBuild.candidateEntities(spark, sfDir, recA, recB)
-      .select(col("idA"), col("idB"), col("kA"), col("kB"), col("label"),
-        col("split_a"), col("split_b"))
-      .as[(Long, Long, Long, Long, Long, String, String)]
-      .mapPartitions { it =>
-        val (ea, eb, mm) = mB.value
-        it.map { case (x, y, ka, kb, lbl, sa, sb) =>
-          (x, y, Embed.cosine(matVec(mm, ea(ka.toInt)), eb(kb.toInt)), lbl,
-            sa, sb)
-        }
-      }.toDF("idA", "idB", "cos", "label", "split_a", "split_b")
+    GraphBuild.cosinePairs(spark, sfDir,
+      recA, model.entA.map(matVec(model.m, _)), recB, model.entB)
   }
 
   /** Summary row (shared by mtranse_eval / etranse_eval): theta swept

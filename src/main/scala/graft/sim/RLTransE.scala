@@ -221,7 +221,6 @@ object RLTransE {
     * DuckDB replay reproduces it bit-for-bit. */
   def evalBatch(spark: SparkSession, sfDir: String,
                 cfg: TransE.Config = BatchCfg): DataFrame = {
-    import spark.implicits._
     val model = trainBatch(spark, sfDir, cfg)
     // per-field distances on the mq6 grid (floor(x*1e6 + 0.5)/1e6) —
     // the rltranse_batch_fields anchor's lattice, so the DuckDB twin
@@ -238,8 +237,7 @@ object RLTransE {
       .withColumn("dist",
         ScoredRels.map(r => col(s"f_$r")).reduce(_ + _))
       .persist()
-    val theta = Splits.theta(all, col("dist"), col("label"))
-    val m = Splits.testEval(all, col("dist"), col("label"), theta).head()
+    val row = Splits.summary(all, col("dist"), cfg.dim, cfg.epochs)
     val st = Splits.test(all).filter(col("label") === 1)
       .agg(sum(floor(col("f_st") * 1e6 + lit(0.5)).cast("long")).as("s"),
         count(lit(1)).as("n")).head()
@@ -247,11 +245,7 @@ object RLTransE {
       if (st.getLong(1) == 0) 0L
       else math.floor(st.getLong(0).toDouble / st.getLong(1) + 0.5).toLong
     all.unpersist()
-    Seq((cfg.dim.toLong, cfg.epochs.toLong, theta,
-      m.getAs[Double]("f1"), m.getAs[Double]("precision"),
-      m.getAs[Double]("recall"), m.getAs[Double]("mrr"), stMicros))
-      .toDF("dim", "epochs", "theta", "f1", "precision", "recall", "mrr",
-        "tp_st_dist_micros")
+    row.withColumn("tp_st_dist_micros", lit(stMicros))
   }
 
   /** Train over an explicit VEG triple set (val_a, val_b, r, n). */
@@ -533,7 +527,6 @@ object RLTransE {
     * evolution was actually learned). */
   def eval(spark: SparkSession, sfDir: String,
            cfg: Config = Config()): DataFrame = {
-    import spark.implicits._
     val model = train(spark, sfDir, cfg)
     val fieldCols = ScoredRels.map(r => col(s"f_$r"))
     val all = fieldScores(spark, sfDir, model, testOnly = false)
@@ -541,16 +534,10 @@ object RLTransE {
       .select(col("idA"), col("idB"), col("label"), col("dist"),
         col("f_st").as("st_dist"), col("split_a"), col("split_b"))
       .persist()
-    val theta = Splits.theta(all, col("dist"), col("label"))
-    val m = Splits.testEval(all, col("dist"), col("label"), theta).head()
+    val row = Splits.summary(all, col("dist"), cfg.dim, cfg.epochs)
     val tpSt = Splits.test(all).filter(col("label") === 1)
       .agg(avg("st_dist")).head().getDouble(0)
     all.unpersist()
-    Seq((cfg.dim.toLong, cfg.epochs.toLong, theta,
-      m.getAs[Double]("f1"), m.getAs[Double]("precision"),
-      m.getAs[Double]("recall"), m.getAs[Double]("mrr"),
-      math.round(tpSt * 1000000)))
-      .toDF("dim", "epochs", "theta", "f1", "precision", "recall", "mrr",
-        "tp_st_dist_micros")
+    row.withColumn("tp_st_dist_micros", lit(math.round(tpSt * 1000000)))
   }
 }

@@ -324,11 +324,11 @@ object TransE {
     (col("h") * nRel + col("r")) * nEnt + col("t")
 
   /**
-   * End-to-end TransE linkage eval over the ER graph: train, attach
-   * record entity ids by JOIN (the id map is data-sized — it never
-   * lands on the driver), broadcast the trained entity matrix,
-   * cosine-score candidate pairs in mapPartitions, sweep the threshold,
-   * report test F1/MRR.
+   * End-to-end TransE linkage eval over the ER graph: train, then
+   * cosine-score the candidate pairs over the trained entity matrix
+   * ([[graft.graph.GraphBuild.cosinePairs]]; the record id map is
+   * joined, never collected): (idA, idB, block_key, cos, label,
+   * split_a, split_b).
    */
   def pairScores(spark: SparkSession, sfDir: String,
                  cfg: Config = Config()): DataFrame = {
@@ -350,7 +350,6 @@ object TransE {
 
   private def pairScoresUncached(spark: SparkSession, sfDir: String,
                                  cfg: Config): DataFrame = {
-    import spark.implicits._
     val ents = graft.graph.GraphBuild.erEntities(spark, sfDir)
     val nEnt = ents.count().toInt
     val nRel = graft.graph.GraphBuild.Relations.size
@@ -358,18 +357,7 @@ object TransE {
       .withColumn("idx", packedIdx(nEnt.toLong, nRel.toLong))
     val model = train(spark, triples, nEnt, nRel, cfg)
     val recEnt = graft.graph.GraphBuild.recordIds(ents)
-    val entB = spark.sparkContext.broadcast(model.ent)
-    graft.graph.GraphBuild.candidateEntities(spark, sfDir, recEnt, recEnt)
-      .select(col("idA"), col("idB"), col("block_key"), col("kA"),
-        col("kB"), col("label"), col("split_a"), col("split_b"))
-      .as[(Long, Long, String, Long, Long, Long, String, String)]
-      .mapPartitions { it =>
-        val e = entB.value
-        it.map { case (a, b, bk, ea, eb, lbl, sa, sb) =>
-          (a, b, bk, Embed.cosine(e(ea.toInt), e(eb.toInt)), lbl, sa, sb)
-        }
-      }.toDF("idA", "idB", "block_key", "cos", "label",
-        "split_a", "split_b")
+    graft.graph.GraphBuild.cosinePairs(spark, sfDir, recEnt, model.ent, recEnt, model.ent)
   }
 
   /** Summary row: theta swept on the TRAIN-split pairs only, F1/MRR

@@ -54,53 +54,54 @@ object StreamOps {
    * batch, so rows still buffered at end-of-input are flushed with one
    * final max-timestamp nudge row (filtered back out of the result) —
    * the standard trick for draining append-mode windows in a finite
-   * test stream.
+   * test stream. The source, sink and checkpoint are [[staged]] per
+   * (application, sfDir), so a later call for the same sfDir replaces
+   * the sink this frame reads.
    */
-  def windowedCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    // the streaming file source wants a directory; stage a symlink
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream")
-    java.nio.file.Files.createSymbolicLink(
-      dir.resolve("part-00000.parquet"),
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"))
-    val outDir = java.nio.file.Files.createTempDirectory("graft-stream-out")
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft-stream-ckpt")
-    val stream = spark.readStream
-      .schema(eventsSchema)
-      .parquet(dir.toString)
-    val agg = stream
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(round(col("value") * 100).cast("long")).as("value_cents"))
-      .select(unix_timestamp(col("window.start")).as("window_epoch"),
-        col("event_type"), col("n"), col("value_cents"))
-    val q = agg.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir.toString)
-      .option("checkpointLocation", ckptDir.toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    // drain: push the watermark past every real window with one far-
-    // future row, process, then drop its window from the result
-    val maxEpoch = spark.read.parquet(s"$sfDir/events.parquet")
-      .agg(max(unix_timestamp(col("ts")))).head().getLong(0)
-    val nudge = spark.sql(
-      s"""SELECT CAST(-1 AS BIGINT) AS event_id,
-         timestamp_seconds(${maxEpoch + 3600}) AS ts,
-         CAST(-1 AS BIGINT) AS user_id, '__drain__' AS event_type,
-         CAST(0.0 AS DOUBLE) AS value, '' AS props""")
-    nudge.coalesce(1).write.mode("append").parquet(dir.toString)
-    val q2 = agg.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir.toString)
-      .option("checkpointLocation", ckptDir.toString)
-      .start()
-    try q2.processAllAvailable() finally q2.stop()
-    spark.read.parquet(outDir.toString)
-      .filter(col("event_type") =!= "__drain__")
-  }
+  def windowedCounts(spark: SparkSession, sfDir: String): DataFrame =
+    staged(spark, "windowed", sfDir) { wiped =>
+      val (dir, outDir, ckptDir) = (wiped("src"), wiped("out"), wiped("ckpt"))
+      // the streaming file source wants a directory; stage a symlink
+      java.nio.file.Files.createSymbolicLink(
+        java.nio.file.Paths.get(dir, "part-00000.parquet"),
+        java.nio.file.Paths.get(s"$sfDir/events.parquet"))
+      val stream = spark.readStream
+        .schema(eventsSchema)
+        .parquet(dir)
+      val agg = stream
+        .withWatermark("ts", "10 minutes")
+        .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(round(col("value") * 100).cast("long")).as("value_cents"))
+        .select(unix_timestamp(col("window.start")).as("window_epoch"),
+          col("event_type"), col("n"), col("value_cents"))
+      val q = agg.writeStream
+        .outputMode("append")
+        .format("parquet")
+        .option("path", outDir)
+        .option("checkpointLocation", ckptDir)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      // drain: push the watermark past every real window with one far-
+      // future row, process, then drop its window from the result
+      val maxEpoch = spark.read.parquet(s"$sfDir/events.parquet")
+        .agg(max(unix_timestamp(col("ts")))).head().getLong(0)
+      val nudge = spark.sql(
+        s"""SELECT CAST(-1 AS BIGINT) AS event_id,
+           timestamp_seconds(${maxEpoch + 3600}) AS ts,
+           CAST(-1 AS BIGINT) AS user_id, '__drain__' AS event_type,
+           CAST(0.0 AS DOUBLE) AS value, '' AS props""")
+      nudge.coalesce(1).write.mode("append").parquet(dir)
+      val q2 = agg.writeStream
+        .outputMode("append")
+        .format("parquet")
+        .option("path", outDir)
+        .option("checkpointLocation", ckptDir)
+        .start()
+      try q2.processAllAvailable() finally q2.stop()
+      spark.read.parquet(outDir)
+        .filter(col("event_type") =!= "__drain__")
+    }
 
   /**
    * Incremental (streaming) record linkage via
@@ -157,61 +158,73 @@ object StreamOps {
       }.toDF()
   }
 
-  /** Driver-query wrapper: stage the keyed records as a file stream,
-    * run [[streamingLink]] to completion, read the sink back.
-    *
-    * Staging dirs are FIXED per (application, sfDir, minJw) and wiped
-    * before each run — repeated invocations in a long-lived environment stay
-    * bounded at one dataset copy instead of accumulating a fresh temp
-    * tree per call. The sink is read back with an explicit schema so a
-    * zero-match run (metadata-only sink dir) returns an empty frame
-    * instead of failing schema inference.
-    */
-  /** Per-staging-key locks: two concurrent [[streamLinkPairs]] calls
-    * for the SAME sfDir in one application would otherwise wipe each
-    * other's src/out/ckpt trees mid-query. Different sfDirs get
-    * different keys (collision-resistant digest, not String.hashCode)
-    * and so never contend. */
+  /** Per-staging-key locks: two concurrent [[staged]] calls for the
+    * SAME key in one application would otherwise wipe each other's
+    * src/out/ckpt trees mid-query. Different keys get different digests
+    * (collision-resistant, not String.hashCode) and so never contend. */
   private val stagingLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  def streamLinkPairs(spark: SparkSession, sfDir: String,
-                      minJw: Double = 0.9,
-                      maxPerSide: Int = Int.MaxValue): DataFrame = {
-    import spark.implicits._
-    // collision-resistant key: Integer.toHexString(sfDir.hashCode) let
-    // two different sfDirs with colliding hashCodes share (and wipe)
-    // one staging tree
-    val key = graft.ckpt.Checkpoint.fingerprint(
-      "slink", sfDir, minJw.toString, maxPerSide.toString)
-    val root = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft-slink",
-      spark.sparkContext.applicationId, key)
+  /** Applications whose staging root is deleted when they end. */
+  private val cleanedApps = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /**
+   * Runs `body` under the lock of `key` with `wiped(name)`: the empty
+   * directory `<java.io.tmpdir>/graft-slink/<applicationId>/<digest of
+   * key>/<name>`. The directories are FIXED per (application, key) and
+   * wiped before each use, so repeated calls in a long-lived session
+   * stay bounded at one copy instead of accumulating a fresh temp tree
+   * per call; the application's root is deleted when it ends.
+   */
+  private def staged[T](spark: SparkSession, key: String*)(body: (String => String) => T): T = {
+    val sc = spark.sparkContext
+    val appRoot = java.nio.file.Paths.get(
+      System.getProperty("java.io.tmpdir"), "graft-slink", sc.applicationId)
+    if (cleanedApps.add(sc.applicationId))
+      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(
+            end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+          graft.ckpt.Checkpoint.deleteTree(appRoot)
+      })
+    val digest = graft.ckpt.Checkpoint.fingerprint(key: _*)
+    val root = appRoot.resolve(digest)
     def wiped(name: String): String = {
       val p = root.resolve(name)
       graft.ckpt.Checkpoint.deleteTree(p)
       java.nio.file.Files.createDirectories(p)
       p.toString
     }
-    val lock = stagingLocks.computeIfAbsent(key, _ => new Object)
-    lock.synchronized {
-    val (srcDir, outDir, ckptDir) = (wiped("src"), wiped("out"), wiped("ckpt"))
-    graft.EntryStages.keyed(spark, sfDir)
-      .select(col("id"), col("side"), col("content_norm").as("content"),
-        col("block_key"))
-      .write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream
-      .schema("id BIGINT, side STRING, content STRING, block_key STRING")
-      .parquet(srcDir)
-      .as[LinkRec]
-    val q = streamingLink(stream, minJw, maxPerSide).writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", ckptDir)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.read.schema("idA BIGINT, idB BIGINT, jw DOUBLE").parquet(outDir)
-    }
+    stagingLocks.computeIfAbsent(digest, _ => new Object).synchronized(body(wiped))
   }
+
+  /** Driver-query wrapper: stage the keyed records as a file stream,
+    * run [[streamingLink]] to completion, read the sink back. Staged
+    * per (application, sfDir, minJw, maxPerSide) ([[staged]]). The sink
+    * is read back with an explicit schema so a zero-match run
+    * (metadata-only sink dir) returns an empty frame instead of failing
+    * schema inference.
+    */
+  def streamLinkPairs(spark: SparkSession, sfDir: String,
+                      minJw: Double = 0.9,
+                      maxPerSide: Int = Int.MaxValue): DataFrame =
+    staged(spark, "slink", sfDir, minJw.toString, maxPerSide.toString) { wiped =>
+      import spark.implicits._
+      val (srcDir, outDir, ckptDir) = (wiped("src"), wiped("out"), wiped("ckpt"))
+      graft.EntryStages.keyed(spark, sfDir)
+        .select(col("id"), col("side"), col("content_norm").as("content"),
+          col("block_key"))
+        .write.mode("overwrite").parquet(srcDir)
+      val stream = spark.readStream
+        .schema("id BIGINT, side STRING, content STRING, block_key STRING")
+        .parquet(srcDir)
+        .as[LinkRec]
+      val q = streamingLink(stream, minJw, maxPerSide).writeStream
+        .outputMode("append")
+        .format("parquet")
+        .option("path", outDir)
+        .option("checkpointLocation", ckptDir)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      spark.read.schema("idA BIGINT, idB BIGINT, jw DOUBLE").parquet(outDir)
+    }
 }

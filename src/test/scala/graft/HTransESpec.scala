@@ -84,6 +84,10 @@ class HTransESpec extends AnyFunSuite {
 
   test("htranse_eval lands in the reference TransE-family band") {
     val row = HTransE.eval(spark, sf).head()
+    // bit-exact pin of theta, f1, precision, recall, mrr (TrainPins)
+    assert(TrainPins.evalBits(row) == TrainPins.bits(
+      0.36, 0.46215139442231074, 0.35876288659793815,
+      0.6492537313432836, 0.6799750932835821))
     val f1 = row.getAs[Double]("f1")
     val mrr = row.getAs[Double]("mrr")
     // thesis Tables 5.2-5.4: the HTransE tier is a weak-signal

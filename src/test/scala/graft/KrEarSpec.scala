@@ -31,6 +31,10 @@ class KrEarSpec extends AnyFunSuite {
     assert(math.abs(en - 1.0) < 1e-4 && math.abs(vn - 1.0) < 1e-4)
 
     val row = KrEar.eval(spark, sf, KrEar.Config(epochs = 5)).head()
+    // bit-exact pin of theta, f1, precision, recall, mrr (TrainPins)
+    assert(TrainPins.evalBits(row) == TrainPins.bits(
+      0.78, 0.45264452644526443, 0.3376146788990826,
+      0.6865671641791045, 0.6881218470149253))
     // the reference's EAR tier is weak (F1 ~0.15-0.2 on census); assert
     // the tier and a usable ranking signal, not more
     assert(row.getAs[Double]("f1") > 0.05, s"krear f1 ${row.get(3)}")

@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.JobCount
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.eval.Metrics
+import graft.pipe.Splits
 
 /**
  * Exact-value metric tests, fixture ported from the reference
@@ -68,6 +71,58 @@ class MetricsSpec extends AnyFunSuite {
     assert(f.getAs[Long]("n_queries") == ir.getAs[Long]("n_queries"))
     for (c <- Seq("mrr", "map", "p_at_1"))
       assert(f.getAs[Double](c) == ir.getAs[Double](c), c)
+  }
+
+  private val FactsCols = "idA BIGINT, n_candidates BIGINT NOT NULL, n_rel BIGINT, " +
+    "first_rel_rank BIGINT NOT NULL, hits_at_1 BIGINT, ap_micros BIGINT"
+  private val IrCols = "n_queries BIGINT NOT NULL, mrr DOUBLE, map DOUBLE, p_at_1 DOUBLE"
+  private val PAtKCols = "k BIGINT NOT NULL, n_queries BIGINT NOT NULL, mean_p_at_k DOUBLE NOT NULL"
+  private val PairCols = "tp BIGINT, fp BIGINT, fn BIGINT, tn BIGINT, precision DOUBLE, " +
+    "recall DOUBLE, f1 DOUBLE, accuracy DOUBLE"
+  private val EvalCols = "tp BIGINT, fp BIGINT, fn BIGINT, tn BIGINT, precision DOUBLE, " +
+    "recall DOUBLE, f1 DOUBLE, n_queries BIGINT, mrr DOUBLE, map DOUBLE, p_at_1 DOUBLE"
+
+  /** Each evaluator's columns (name, SQL type, NOT NULL) and its rows'
+    [[TrainPins.rowsSha]], over `scored`'s test pairs at `theta`:
+    irQueryFacts, irMetrics, pAtK, pairMetrics and Splits.testEval. */
+  private def evalPins(scored: DataFrame, theta: Double): Seq[(String, String)] = {
+    val (dist, label, test) = (col("dist"), col("label"), Splits.test(scored))
+    Seq(Metrics.irQueryFacts(test, dist, label), Metrics.irMetrics(test, dist, label),
+      Metrics.pAtK(test, dist, label),
+      Metrics.pairMetrics(test, (dist <= theta).cast("int"), label),
+      Splits.testEval(scored, dist, label, theta))
+      .map(df => (df.schema.map(f => s"${f.name} ${f.dataType.sql}" +
+          (if (f.nullable) "" else " NOT NULL")).mkString(", "),
+        TrainPins.rowsSha(df.collect().toSeq)))
+  }
+
+  test("the evaluators' rows are pinned on the sf0.001 test pairs") {
+    val sf = SparkTestSession.sf0001
+    val pins = evalPins(EntryStages.scoredp(spark, sf), EntryStages.theta(spark, sf))
+    assert(pins == Seq(
+      FactsCols -> "80a36ece74119c6256a3dc77995adbae52c61892680f5090a04f0614fdca98e5",
+      IrCols -> "a2646b6a2ecffe5a6bcc426011199dd2ecd77d281d5474509e5637d8ba41d11b",
+      PAtKCols -> "091000628ad7f39f6fab284d46b7da39fe6f7f72d2021d56c1fa1c9d8316fad6",
+      PairCols -> "085fdf6d7f1854fe43d7d48e0ad2f054c1b80febd0b047a793151b5ca3dd1824",
+      EvalCols -> "623436c0e0c0e71029343f0305f2fda8256e93af4c6a267ce3df7edd207ea498"))
+  }
+
+  test("the evaluators' rows are pinned on an empty input") {
+    val sf = SparkTestSession.sf0001
+    val pins = evalPins(EntryStages.scoredp(spark, sf).limit(0), 0.5)
+    // no rows for the facts; null ratios for irMetrics, 0.0 for pAtK
+    assert(pins == Seq(
+      FactsCols -> "e3b0c44298fc1c149afbf4c8996fb92427ae41e4649b934ca495991b7852b855",
+      IrCols -> "88ae3cd4d9672401a6210c32f4dae2de614f6ad13ce1cc9f8220527f45c7c50e",
+      PAtKCols -> "094e19273cb82e4d7ee62ae2173e8732abea12aca8cb32bd54e04db367255800",
+      PairCols -> "a0a91e157c065d0cb1a646ac74a4b77da105cd0f36a85de092eddc301d7f498a",
+      EvalCols -> "19bc414165247d42043bc7cdcc03e439f24980449e6ae7c0709330e7c8ecca68"))
+  }
+
+  test("defining pAtK's frame submits no Spark job") {
+    val test = Splits.test(EntryStages.scoredp(spark, SparkTestSession.sf0001))
+    val (_, jobs) = JobCount(spark.sparkContext)(Metrics.pAtK(test, col("dist"), col("label")))
+    assert(jobs == 0, s"$jobs jobs")
   }
 
   test("grid search sweeps every combination and ranks by F1") {

@@ -56,14 +56,14 @@ class PipelineResumeSpec extends AnyFunSuite {
 
     // every folded scorer value moves the scored fingerprint, and only
     // it; every folded input value moves both
-    val (input, scored) = Pipeline.fingerprints(sf, 64)
+    val (input, scored) = Pipeline.fingerprints(sf)
     for (i <- Pipeline.ScorerKey.indices) {
-      val (otherInput, otherScored) = Pipeline.fingerprints(sf, 64,
+      val (otherInput, otherScored) = Pipeline.fingerprints(sf,
         Pipeline.ScorerKey.updated(i, Pipeline.ScorerKey(i) + "1"))
       assert(otherInput == input && otherScored != scored, Pipeline.ScorerKey(i))
     }
     for (i <- Pipeline.InputKey.indices) {
-      val (otherInput, otherScored) = Pipeline.fingerprints(sf, 64, input =
+      val (otherInput, otherScored) = Pipeline.fingerprints(sf, input =
         Pipeline.InputKey.updated(i, Pipeline.InputKey(i) + "1"))
       assert(otherInput != input && otherScored != scored, Pipeline.InputKey(i))
     }
@@ -73,7 +73,7 @@ class PipelineResumeSpec extends AnyFunSuite {
       val summary1 = Pipeline.run(spark, sf, Some(root)).summary.collect().toSeq
       val (keyed1, cand1, scored1) = (runId("keyed"), runId("candidates"), runId("scored"))
       // the scored commit as a build with another JW weight would have left it
-      val stale = Pipeline.fingerprints(sf, 64,
+      val stale = Pipeline.fingerprints(sf,
         Pipeline.ScorerKey.updated(0, s"w_jw=${graft.sim.Scorer.WJw + 0.05}"))._2
       val meta = Paths.get(s"$root/scored._meta.json")
       Files.writeString(meta, Files.readString(meta).replace(scored, stale))

@@ -15,7 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * offset term in `RLTransE.Model`, and one balanced-GD fit site in
   * `Weights`. One commit-record writer under `ckpt/`: [[graft.ckpt.Checkpoint]].
   * One maker of spec temp directories: [[TempRoot]], which deletes them.
-  * Stops per-file copies from growing back. */
+  * One ranking window and one of each ratio projection in `Metrics`, and
+  * one candidate-pair cosine pass, `GraphBuild.cosinePairs`, for the
+  * embedding trainers. Stops per-file copies from growing back. */
 class SessionBuilderSpec extends AnyFunSuite {
 
   /** Paths, relative to `src/<tree>/scala`, of the sources matching `re`. */
@@ -91,6 +93,28 @@ class SessionBuilderSpec extends AnyFunSuite {
     assert(found.contains(home))
     assert((found - home).isEmpty,
       s"warm up through graft.Pipeline.warm, untimed, instead: ${(found - home).toSeq.sorted}")
+  }
+
+  test("Metrics writes its ranking window, per-query reduction and ratio projections once each") {
+    val home = "graft/eval/Metrics.scala"
+    val once = Seq(
+      """Window\s*\.\s*partitionBy\(\s*"idA"\s*\)""" -> "the ranking window",
+      """groupBy\(\s*"idA"\s*\)""" -> "the per-query IR reduction",
+      """\.as\(\s*"precision"\s*\)""" -> "the P/R/F1 projection",
+      """\.as\(\s*"mrr"\s*\)""" -> "the MRR/MAP/P@1 projection")
+    val faults = once.collect {
+      case (re, what) if counts(re.r).getOrElse(home, 0) != 1 =>
+        s"$what appears ${counts(re.r).getOrElse(home, 0)} times in $home"
+    }
+    assert(faults.isEmpty, faults.mkString("; "))
+  }
+
+  test("an entity-row cosine over candidateEntities appears only in GraphBuild") {
+    val home = "graft/graph/GraphBuild.scala"
+    val found = scan("""candidateEntities\(""".r) intersect scan("""Embed\.cosine\(""".r)
+    assert(found.contains(home))
+    assert((found - home).isEmpty,
+      s"score the pairs with GraphBuild.cosinePairs instead: ${(found - home).toSeq.sorted}")
   }
 
   test("specs make temp directories only through TempRoot") {

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,6 +25,21 @@ class StreamLinkSpec extends AnyFunSuite {
       .select("idA", "idB", "jw").as[(Long, Long, Double)].collect().toSet
     assert(batch.nonEmpty)
     assert(streamed == batch)
+  }
+
+  test("two windowedCounts calls return the same rows and leave no graft-stream temp directory") {
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def streamDirs(): Set[String] = {
+      val list = java.nio.file.Files.list(tmp)
+      try list.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("graft-stream")).toSet
+        finally list.close()
+    }
+    val before = streamDirs()
+    val first = StreamOps.windowedCounts(spark, SparkTestSession.sf0001).collect().toSet
+    val second = StreamOps.windowedCounts(spark, SparkTestSession.sf0001).collect().toSet
+    assert(first.nonEmpty && second == first)
+    assert((streamDirs() -- before).isEmpty, (streamDirs() -- before).toSeq.sorted)
   }
 
   test("multi-microbatch run (maxFilesPerTrigger=1) emits the same set: state carries across batches") {

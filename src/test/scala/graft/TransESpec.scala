@@ -45,6 +45,10 @@ class TransESpec extends AnyFunSuite {
 
   test("TransE linkage eval produces reference-tier quality") {
     val row = TransE.eval(spark, sf).head()
+    // bit-exact pin of theta, f1, precision, recall, mrr (TrainPins)
+    assert(TrainPins.evalBits(row) == TrainPins.bits(
+      0.98, 0.4930747922437673, 0.3276073619631902,
+      0.996268656716418, 0.684328328358209))
     // the reference's TransE scores F1 0.21-0.58 (BASELINE.md §2);
     // graph-only signals are weak by design - assert the tier, not more
     assert(row.getAs[Double]("f1") > 0.05)
@@ -69,6 +73,10 @@ class TransESpec extends AnyFunSuite {
     assert(dTo("done") < dTo("wait"), s"${dTo("done")} !< ${dTo("wait")}")
 
     val row = RLTransE.eval(spark, sf, RLTransE.Config(epochs = 30)).head()
+    // bit-exact pin of theta, f1, precision, recall, mrr (TrainPins)
+    assert(TrainPins.evalBits(row) == TrainPins.bits(
+      0.88, 1.0, 1.0, 1.0, 1.0))
+    assert(row.getAs[Long]("tp_st_dist_micros") == 360164L)
     // reference RLTransE census tier: F1 0.95 (BASELINE.md §2)
     assert(row.getAs[Double]("f1") >= 0.9, s"rltranse f1 ${row.get(3)}")
     // true pairs' evolving field must score far below the miss value 1.0
@@ -81,6 +89,10 @@ class TransESpec extends AnyFunSuite {
     // per-relation tail ranges — must land in the flagship band AND
     // learn the planted st translations (low true-pair st distance)
     val row = RLTransE.evalBatch(spark, sf).head()
+    // bit-exact pin of theta, f1, precision, recall, mrr (TrainPins)
+    assert(TrainPins.evalBits(row) == TrainPins.bits(
+      0.58, 1.0, 1.0, 1.0, 1.0))
+    assert(row.getAs[Long]("tp_st_dist_micros") == 110757L)
     assert(row.getAs[Double]("f1") >= 0.9, s"batch rltranse f1 ${row.get(3)}")
     assert(row.getAs[Double]("mrr") >= 0.9, s"batch rltranse mrr")
     assert(row.getAs[Long]("tp_st_dist_micros") < 500000L,
