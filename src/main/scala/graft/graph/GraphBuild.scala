@@ -64,15 +64,20 @@ object GraphBuild {
 
   /**
    * Dense ids 0..n-1 by sorted key: DISTRIBUTED sort + per-partition
-   * offset scan (`zipWithIndex` runs one count job over the sorted
-   * partitions, then assigns locally). Bit-identical to
-   * `row_number() OVER (ORDER BY key) - 1` — which is what the DuckDB
-   * oracle still computes — but a global window funnels the WHOLE
-   * dictionary through ONE task, the exact single-partition bottleneck
-   * that dies first at 100x.
+   * offset scan. EAGER: the call itself runs Spark jobs (the sort's
+   * range-bounds sample, the input's upstream stages under AQE, and
+   * `zipWithIndex`'s count over the sorted partitions), and the frame
+   * it returns reads the numbered RDD, so its plan stops here.
+   * Bit-identical to `row_number() OVER (ORDER BY key) - 1` — which is
+   * what the DuckDB oracle still computes — but a global window
+   * funnels the WHOLE dictionary through ONE task, the exact
+   * single-partition bottleneck that dies first at 100x. A lazy
+   * distributed form (range-partition, count each partition, join the
+   * running offsets back) must read its input twice, which doubles
+   * the plan of every frame built on the ids.
    */
-  private[graft] def denseIds(df: DataFrame, keyCol: String,
-                              idName: String): DataFrame = {
+  private[graft] def eagerDenseIds(df: DataFrame, keyCol: String,
+                                   idName: String): DataFrame = {
     val spark = df.sparkSession
     val schema = org.apache.spark.sql.types.StructType(
       df.schema.fields :+ org.apache.spark.sql.types.StructField(
@@ -136,7 +141,7 @@ object GraphBuild {
       val t = rawTriples(spark, sfDir)
       val labels = t.select(col("rec").as("label"))
         .union(t.select(col("value").as("label"))).distinct()
-      denseIds(labels, "label", "ent_id")
+      eagerDenseIds(labels, "label", "ent_id")
     }
 
   /** ER triples (h, t, r) with dictionary-encoded entity ids. */
@@ -220,7 +225,7 @@ object GraphBuild {
       val t = rawTriples(spark, sfDir, Some(side))
       val labels = t.select(col("rec").as("label"))
         .union(t.select(col("value").as("label"))).distinct()
-      denseIds(labels, "label", "ent_id")
+      eagerDenseIds(labels, "label", "ent_id")
     }
 
   /** Per-side ER triples with the side's own dictionary. */

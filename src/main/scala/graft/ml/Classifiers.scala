@@ -55,7 +55,8 @@ object Classifiers {
   /**
    * ECM: expectation-maximization over the (tiny) histogram of binary
    * feature patterns — the EM loop runs driver-side over <= 32
-   * aggregated counts (one distributed groupBy), exactly the right
+   * aggregated counts (one distributed groupBy, [[patternHist]]),
+   * exactly the right
    * split of work at any scale (/root/reference cites
    * recordlinkage.ECMClassifier; iterations fixed for determinism).
    */
@@ -67,9 +68,7 @@ object Classifiers {
     * when unrolled. */
   final val EcmFitIters = 120
 
-  def fitEcm(features: DataFrame, iters: Int = EcmFitIters): EcmModel = {
-    val hist = features.groupBy("pattern").count()
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+  def fitEcm(hist: Array[(Int, Long)], iters: Int = EcmFitIters): EcmModel = {
     val total = hist.map(_._2).sum.toDouble
     var p = 0.1
     var m = Array.fill(NFeatures)(0.9)
@@ -105,13 +104,20 @@ object Classifiers {
     EcmModel(p, m, u)
   }
 
+  /** The one ECM fit of the session per sfDir, with the pattern
+    * histogram it was fit on: fs_ecm_patterns and fs_ecm_metrics share
+    * it, as the k-means and logreg queries share theirs. */
+  private def ecmFit(spark: SparkSession,
+                     sfDir: String): (Array[(Int, Long)], EcmModel) =
+    EntryStages.memoModel(spark, sfDir, "fs_ecm") {
+      val hist = patternHist(withFeatures(EntryStages.scoredp(spark, sfDir)))
+      (hist, fitEcm(hist))
+    }
+
   /** Per-pattern table: n, posterior (micro-units), predicted flag. */
   def ecmPatterns(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val feats = withFeatures(EntryStages.scoredp(spark, sfDir))
-    val model = fitEcm(feats)
-    val hist = feats.groupBy("pattern").count()
-      .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+    val (hist, model) = ecmFit(spark, sfDir)
     hist.map { case (pat, n) =>
       val post = model.posterior(pat)
       (pat, n, math.round(post * 1000000), if (post >= 0.5) 1L else 0L)
@@ -121,7 +127,7 @@ object Classifiers {
   /** ECM predictions evaluated against truth on the test split. */
   def ecmMetrics(spark: SparkSession, sfDir: String): DataFrame = {
     val feats = withFeatures(EntryStages.scoredp(spark, sfDir))
-    val model = fitEcm(feats)
+    val (_, model) = ecmFit(spark, sfDir)
     val matchPatterns = (0 until (1 << NFeatures))
       .filter(p => model.posterior(p) >= 0.5)
     val predicted = col("pattern").isin(matchPatterns: _*).cast("int")
@@ -228,7 +234,9 @@ object Classifiers {
     KmModel(cm, cu)
   }
 
-  private def patternHist(feats: DataFrame): Array[(Int, Long)] =
+  /** The (pattern, n) histogram the deterministic fits run over,
+    * sorted by pattern. */
+  private[graft] def patternHist(feats: DataFrame): Array[(Int, Long)] =
     feats.groupBy("pattern").count()
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
 

@@ -14,7 +14,7 @@ import graft.sim.NegativeSampler.fnvMix
  *
  * - relational triples (record -> shared entity) train with the plain
  *   TransE margin loss `max(0, ||h+r-t||_1 - ||h+r-t'||_1 + m)`, one
- *   hinge per corrupted tail or relation: [[MicroGrad.hinge]];
+ *   hinge per corrupted tail or relation: [[MicroGrad.KgLoss]];
  * - attributional triples (record -> literal value) train with
  *   `score = ||tanh(h_proj + a) - v||_1` hinged against corrupted
  *   VALUES, where `h_proj = h - (h.n_a) n_a` projects the record onto
@@ -23,8 +23,8 @@ import graft.sim.NegativeSampler.fnvMix
  *   epoch (kr_ear.py train loop).
  *
  * Spark shape is [[MicroGrad]]'s exact step: the model (entity + value
- * + relation + attribute + projection matrices) broadcasts per epoch,
- * each loss runs one mapPartitions pass emitting sparse gradients in
+ * + relation + attribute + projection matrices) broadcasts per pass,
+ * each loss runs one [[MicroGrad.Layout.pass]] emitting sparse gradients in
  * exact integer micro-units, gradients reduce by row id in one shuffle
  * (order-independent -> bit-deterministic), and only model-sized rows
  * reach the driver. Entity/value rows re-normalize per epoch as the
@@ -94,14 +94,15 @@ object KrEar {
     val relT = ear.filter(col("is_attr") === 0)
     val attrT = ear.filter(col("is_attr") === 1)
     // entity ids: heads (records) + relational tails, densely packed —
-    // distributed sort+zipWithIndex, not a single-task global window;
-    // cached before the remap joins and the callers' counts read them
-    val entIds = GraphBuild.denseIds(
+    // distributed sort+zipWithIndex, not a single-task global window
+    // (each dictionary runs its jobs here); cached for the remap joins
+    // and the callers' counts
+    val entIds = GraphBuild.eagerDenseIds(
       relT.select(col("h").as("eid"))
         .union(attrT.select(col("h").as("eid")))
         .union(relT.select(col("t").as("eid"))).distinct(),
       "eid", "kid").persist()
-    val valIds = GraphBuild.denseIds(
+    val valIds = GraphBuild.eagerDenseIds(
       attrT.select(col("t").as("eid")).distinct(), "eid", "kid").persist()
     def remapRel(df: DataFrame, idx: Map[Long, Int]): DataFrame = {
       val m = typedLit(idx.map { case (k, v) => (k, v.toLong) })
@@ -121,6 +122,63 @@ object KrEar {
     relP.count(); attrP.count()
     ear.unpersist()
     (entIds, valIds, relP, attrP)
+  }
+
+  /** `||tanhQ(h_proj + a) - v||_1`, `h_proj = h - (h.n) n` (quantized
+    * tanh — see [[tanhQ]]). */
+  private def attrScore(h: Array[Float], n: Array[Float], a: Array[Float],
+                        v: Array[Float]): Double = {
+    val dim = h.length
+    var hn = 0.0
+    var i = 0
+    while (i < dim) { hn += h(i).toDouble * n(i); i += 1 }
+    var s = 0.0
+    i = 0
+    while (i < dim) {
+      val hp = h(i).toDouble - hn * n(i)
+      s += math.abs(tanhQ(hp + a(i)) - v(i))
+      i += 1
+    }
+    s
+  }
+
+  /** Signed gradient of [[attrScore]] of (entity h, attribute at,
+    * value v) into `acc` — used by the attribute-corruption hinge,
+    * whose pos and neg terms live on DIFFERENT attribute hyperplanes
+    * (unlike the value-corruption arm, which shares one h_proj + a
+    * for both terms). */
+  private def accumAttrGrad(lay: MicroGrad.Layout, m: Array[Array[Array[Float]]],
+                            acc: MicroGrad.Acc, h: Long, at: Long, v: Long,
+                            sign: Double): Unit = {
+    val eh = m(0)(h.toInt); val ev = m(1)(v.toInt)
+    val ea = m(3)(at.toInt); val nv = m(4)(at.toInt)
+    val dim = eh.length
+    val gh = acc.row(h); val gv = acc.row(lay.off(1) + v)
+    val ga = acc.row(lay.off(3) + at); val gp = acc.row(lay.off(4) + at)
+    var hn = 0.0
+    var i = 0
+    while (i < dim) { hn += eh(i).toDouble * nv(i); i += 1 }
+    val gHp = new Array[Double](dim)
+    i = 0
+    while (i < dim) {
+      val hp = eh(i).toDouble - hn * nv(i)
+      val z = tanhQ(hp + ea(i))
+      val s = math.signum(z - ev(i))
+      val dz = (1.0 - z * z) * s * sign
+      gHp(i) = dz
+      ga(i) += microQ(dz)
+      gv(i) += microQ(-s * sign)
+      i += 1
+    }
+    var gnd = 0.0
+    i = 0
+    while (i < dim) { gnd += gHp(i) * nv(i); i += 1 }
+    i = 0
+    while (i < dim) {
+      gh(i) += microQ(gHp(i) - gnd * nv(i))
+      gp(i) += microQ(-(gnd * eh(i).toDouble + hn * gHp(i)))
+      i += 1
+    }
   }
 
   def train(spark: SparkSession, relTriples: DataFrame,
@@ -151,193 +209,97 @@ object KrEar {
     val attrPackedB = MicroGrad.rejectionIndex(attrData, nAttr.toLong,
       nVal.toLong, cfg.negRelRate > 0)
 
+    // relational encoder: plain TransE over the entity space
+    val relKg = new MicroGrad.KgLoss(lay, ent = 0, rel = 2, hyper = None,
+      cfg.margin, cfg.negRate, nEnt.toLong, new MicroGrad.RelCorruption(
+        cfg.negRelRate, nRel.toLong, nEnt.toLong, 0x27220a95L + _, relPackedB))
+    // attribute corruption: (h, v, a') with a' != a — corrupts the
+    // attribute VECTOR and its HYPERPLANE together, rejecting real
+    // (h, v, a') triples
+    val attrRels = new MicroGrad.RelCorruption(cfg.negRelRate, nAttr.toLong,
+      nVal.toLong, 0x5851f42dL + _, attrPackedB)
     val relLoss = new Array[Double](cfg.epochs)
     val attrLoss = new Array[Double](cfg.epochs)
 
     var epoch = 0
     while (epoch < cfg.epochs) {
-      val b = spark.sparkContext.broadcast((ent, value, rel, attr, proj))
       val ep = epoch
       val negRate = cfg.negRate
       val margin = cfg.margin
-      val nEntL = nEnt.toLong
       val nValL = nVal.toLong
-
-      val negRelRate = cfg.negRelRate
-      val nRelL = nRel.toLong
-      val nAttrL = nAttr.toLong
-      // ---- relational encoder: plain TransE over entity space ----
-      val relRows = relData.mapPartitions { it =>
-        val (e, _, r, _, _) = b.value
-        val relSorted = relPackedB.value
-        val acc = new MicroGrad.Acc(dim)
-        it.foreach { case (h, t, rl) =>
-          // relation corruption: (h, t, r') with r' != r, rejecting
-          // real triples (seeded, replayable)
-          var jr = 0
-          while (jr < negRelRate && nRelL > 1) {
-            val rNeg = MicroGrad.corruptRel(h * 31 + t,
-              att => 0x27220a95L + (ep.toLong * negRelRate + jr) * 31 + att,
-              h, t, rl, nRelL, nEntL, relSorted)
-            if (rNeg >= 0)
-              MicroGrad.hinge(acc, margin, lay.off(0), lay.off(2),
-                h, rl, t, rNeg, t, e(h.toInt), r(rl.toInt), e(t.toInt),
-                r(rNeg.toInt), e(t.toInt))
-            jr += 1
-          }
-          var j = 0
-          while (j < negRate) {
-            val tNeg = {
-              val d = fnvMix(h * 31 + t, ep.toLong * negRate + j)
-              ((d % nEntL) + nEntL) % nEntL
-            }
-            if (tNeg != t)
-              MicroGrad.hinge(acc, margin, lay.off(0), lay.off(2),
-                h, rl, t, rl, tNeg, e(h.toInt), r(rl.toInt), e(t.toInt),
-                r(rl.toInt), e(tNeg.toInt))
-            j += 1
-          }
-        }
-        acc.rows
+      relLoss(ep) = lay.pass(relData, cfg.lr) { case (m, acc, (h, t, rl)) =>
+        relKg(m, acc, ep, h * 31 + t, h, t, rl)
       }
-      relLoss(ep) = lay.step(relRows, cfg.lr)
       ent.foreach(Embed.l2normalize)
 
       // ---- attributional encoder: |tanh(h_proj + a) - v| hinge ----
-      val b2 = spark.sparkContext.broadcast((ent, value, rel, attr, proj))
-      val attrRows = attrData.mapPartitions { it =>
-        val (e, vv, _, av, pj) = b2.value
-        val acc = new MicroGrad.Acc(dim)
-        // score of ||tanhQ(hp + a) - v||_1 (quantized tanh — see tanhQ)
-        def attrScore(h: Array[Float], n: Array[Float], a: Array[Float],
-                      v: Array[Float]): Double = {
-          var hn = 0.0
-          var i = 0
-          while (i < dim) { hn += h(i).toDouble * n(i); i += 1 }
-          var s = 0.0
-          i = 0
-          while (i < dim) {
-            val hp = h(i).toDouble - hn * n(i)
-            s += math.abs(tanhQ(hp + a(i)) - v(i))
-            i += 1
-          }
-          s
-        }
-        // signed gradient of attrScore(e(h), pj(at), av(at), vv(v))
-        // into the accumulators — used by the attribute-corruption
-        // hinge, whose pos and neg terms live on DIFFERENT attribute
-        // hyperplanes (unlike the value-corruption loop below, which
-        // shares one h_proj + a for both terms)
-        def accumAttrGrad(h: Long, at: Long, v: Long, sign: Double): Unit = {
+      attrLoss(ep) = lay.pass(attrData, cfg.lr) { case (m, acc, (h, v, at)) =>
+        val e = m(0); val vv = m(1); val av = m(3); val pj = m(4)
+        attrRels.foreach(ep, h * 37 + v, h, v, at) { aNeg =>
           val eh = e(h.toInt); val ev = vv(v.toInt)
-          val ea = av(at.toInt); val nv = pj(at.toInt)
-          val gh = acc.row(h); val gv = acc.row(lay.off(1) + v)
-          val ga = acc.row(lay.off(3) + at); val gp = acc.row(lay.off(4) + at)
-          var hn = 0.0
-          var i = 0
-          while (i < dim) { hn += eh(i).toDouble * nv(i); i += 1 }
-          val gHp = new Array[Double](dim)
-          i = 0
-          while (i < dim) {
-            val hp = eh(i).toDouble - hn * nv(i)
-            val z = tanhQ(hp + ea(i))
-            val s = math.signum(z - ev(i))
-            val dz = (1.0 - z * z) * s * sign
-            gHp(i) = dz
-            ga(i) += microQ(dz)
-            gv(i) += microQ(-s * sign)
-            i += 1
-          }
-          var gnd = 0.0
-          i = 0
-          while (i < dim) { gnd += gHp(i) * nv(i); i += 1 }
-          i = 0
-          while (i < dim) {
-            gh(i) += microQ(gHp(i) - gnd * nv(i))
-            gp(i) += microQ(-(gnd * eh(i).toDouble + hn * gHp(i)))
-            i += 1
+          val pos = attrScore(eh, pj(at.toInt), av(at.toInt), ev)
+          val neg = attrScore(eh, pj(aNeg.toInt), av(aNeg.toInt), ev)
+          val l = pos - neg + margin
+          if (l > 0) {
+            acc.addLoss(microQ(l))
+            accumAttrGrad(lay, m, acc, h, at, v, 1.0)
+            accumAttrGrad(lay, m, acc, h, aNeg, v, -1.0)
           }
         }
-        val attrSorted = attrPackedB.value
-        it.foreach { case (h, v, at) =>
-          // attribute corruption: (h, v, a') with a' != a — corrupts
-          // the attribute VECTOR and its HYPERPLANE together, rejecting
-          // real (h, v, a') triples
-          var jr = 0
-          while (jr < negRelRate && nAttrL > 1) {
-            val aNeg = MicroGrad.corruptRel(h * 37 + v,
-              att => 0x5851f42dL + (ep.toLong * negRelRate + jr) * 31 + att,
-              h, v, at, nAttrL, nValL, attrSorted)
-            if (aNeg >= 0) {
-              val eh = e(h.toInt); val ev = vv(v.toInt)
-              val pos = attrScore(eh, pj(at.toInt), av(at.toInt), ev)
-              val neg = attrScore(eh, pj(aNeg.toInt), av(aNeg.toInt), ev)
-              val l = pos - neg + margin
-              if (l > 0) {
-                acc.addLoss(microQ(l))
-                accumAttrGrad(h, at, v, 1.0)
-                accumAttrGrad(h, aNeg, v, -1.0)
+        var j = 0
+        while (j < negRate) {
+          val vNeg = {
+            val d = fnvMix(h * 37 + v, (ep.toLong + 7919) * negRate + j)
+            ((d % nValL) + nValL) % nValL
+          }
+          if (vNeg != v) {
+            val eh = e(h.toInt); val ev = vv(v.toInt)
+            val en = vv(vNeg.toInt); val ea = av(at.toInt)
+            val nv = pj(at.toInt)
+            val pos = attrScore(eh, nv, ea, ev)
+            val neg = attrScore(eh, nv, ea, en)
+            val l = pos - neg + margin
+            if (l > 0) {
+              acc.addLoss(microQ(l))
+              val gh = acc.row(h); val gv = acc.row(lay.off(1) + v)
+              val gn = acc.row(lay.off(1) + vNeg)
+              val ga = acc.row(lay.off(3) + at)
+              val gp = acc.row(lay.off(4) + at)
+              var hn = 0.0
+              var i = 0
+              while (i < dim) { hn += eh(i).toDouble * nv(i); i += 1 }
+              // accumulate d(loss)/d(hp) to backprop through the
+              // hyperplane projection in a second pass
+              val gHp = new Array[Double](dim)
+              i = 0
+              while (i < dim) {
+                val hp = eh(i).toDouble - hn * nv(i)
+                val z = tanhQ(hp + ea(i))
+                val sP = math.signum(z - ev(i))
+                val sN = math.signum(z - en(i))
+                val dz = 1.0 - z * z // same h_proj + a for pos and neg
+                val dHpA = dz * sP - dz * sN
+                gHp(i) = dHpA
+                ga(i) += microQ(dHpA)
+                gv(i) += microQ(-sP)
+                gn(i) += microQ(sN)
+                i += 1
+              }
+              // h gradient through (I - n n^T); n gradient
+              var gn_dot = 0.0
+              i = 0
+              while (i < dim) { gn_dot += gHp(i) * nv(i); i += 1 }
+              i = 0
+              while (i < dim) {
+                gh(i) += microQ(gHp(i) - gn_dot * nv(i))
+                gp(i) += microQ(-(gn_dot * eh(i).toDouble + hn * gHp(i)))
+                i += 1
               }
             }
-            jr += 1
           }
-          var j = 0
-          while (j < negRate) {
-            val vNeg = {
-              val d = fnvMix(h * 37 + v, (ep.toLong + 7919) * negRate + j)
-              ((d % nValL) + nValL) % nValL
-            }
-            if (vNeg != v) {
-              val eh = e(h.toInt); val ev = vv(v.toInt)
-              val en = vv(vNeg.toInt); val ea = av(at.toInt)
-              val nv = pj(at.toInt)
-              val pos = attrScore(eh, nv, ea, ev)
-              val neg = attrScore(eh, nv, ea, en)
-              val l = pos - neg + margin
-              if (l > 0) {
-                acc.addLoss(microQ(l))
-                val gh = acc.row(h); val gv = acc.row(lay.off(1) + v)
-                val gn = acc.row(lay.off(1) + vNeg)
-                val ga = acc.row(lay.off(3) + at)
-                val gp = acc.row(lay.off(4) + at)
-                var hn = 0.0
-                var i = 0
-                while (i < dim) { hn += eh(i).toDouble * nv(i); i += 1 }
-                // accumulate d(loss)/d(hp) to backprop through the
-                // hyperplane projection in a second pass
-                val gHp = new Array[Double](dim)
-                i = 0
-                while (i < dim) {
-                  val hp = eh(i).toDouble - hn * nv(i)
-                  val z = tanhQ(hp + ea(i))
-                  val sP = math.signum(z - ev(i))
-                  val sN = math.signum(z - en(i))
-                  val dz = 1.0 - z * z // same h_proj + a for pos and neg
-                  val dHpA = dz * sP - dz * sN
-                  gHp(i) = dHpA
-                  ga(i) += microQ(dHpA)
-                  gv(i) += microQ(-sP)
-                  gn(i) += microQ(sN)
-                  i += 1
-                }
-                // h gradient through (I - n n^T); n gradient
-                var gn_dot = 0.0
-                i = 0
-                while (i < dim) { gn_dot += gHp(i) * nv(i); i += 1 }
-                i = 0
-                while (i < dim) {
-                  gh(i) += microQ(gHp(i) - gn_dot * nv(i))
-                  gp(i) += microQ(-(gn_dot * eh(i).toDouble + hn * gHp(i)))
-                  i += 1
-                }
-              }
-            }
-            j += 1
-          }
+          j += 1
         }
-        acc.rows
       }
-      attrLoss(ep) = lay.step(attrRows, cfg.lr)
       ent.foreach(Embed.l2normalize)
       value.foreach(Embed.l2normalize)
       proj.foreach(Embed.l2normalize)
@@ -348,7 +310,6 @@ object KrEar {
         rel.foreach(Embed.l2normalize)
         attr.foreach(Embed.l2normalize)
       }
-      b.destroy(); b2.destroy()
       epoch += 1
     }
     relData.unpersist(); attrData.unpersist()

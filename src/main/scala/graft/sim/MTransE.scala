@@ -14,8 +14,8 @@ import graft.sim.NegativeSampler.fnvMix
  * /root/reference/ERER/etranse.py:60-110,300-340):
  *
  * - KG A and KG B each train a plain TransE margin loss over their OWN
- *   entity/relation tables (disjoint dictionaries): [[MicroGrad.hinge]]
- *   at each side's row offsets;
+ *   entity/relation tables (disjoint dictionaries): [[MicroGrad.KgLoss]]
+ *   at each side's layout slots;
  * - an ALIGNMENT model learns a dim x dim translation matrix M over
  *   the prior pairs: hinge on ||M e_a - e_b||_1 against corrupted
  *   partners (mtranse.py _calc_alignment);
@@ -26,9 +26,9 @@ import graft.sim.NegativeSampler.fnvMix
  *
  * The epoch alternates the optimizers exactly like the reference's
  * train loop (A pass, B pass, alignment pass, evolution pass). Spark
- * shape is [[MicroGrad]]'s exact step: model broadcast per epoch, sparse
- * gradients in integer micro-units, one reduce-by-row shuffle per pass,
- * only model-sized rows on the driver.
+ * shape is [[MicroGrad]]'s exact step, one [[MicroGrad.Layout.pass]]
+ * each: model broadcast, sparse gradients in integer micro-units, one
+ * reduce-by-row shuffle, only model-sized rows on the driver.
  */
 object MTransE {
 
@@ -106,61 +106,29 @@ object MTransE {
     val packedB = MicroGrad.rejectionIndex(dataB, nRel.toLong, nEntB.toLong,
       cfg.negRelRate > 0)
 
+    // per-KG TransE passes (side 0 = A, 1 = B): entities at layout
+    // slot `side`, relations at `2 + side`
+    val kgs = Seq((dataA, nEntA, packedA), (dataB, nEntB, packedB))
+      .zipWithIndex.map { case ((data, n, packed), side) =>
+        (data, side, new MicroGrad.KgLoss(lay, ent = side, rel = 2 + side,
+          hyper = None, cfg.margin, cfg.negRate, n.toLong,
+          new MicroGrad.RelCorruption(cfg.negRelRate, nRel.toLong, n.toLong,
+            0x9e3779b9L + _, packed)))
+      }
     val losses = new Array[Double](cfg.epochs)
 
     var epoch = 0
     while (epoch < cfg.epochs) {
       val ep = epoch
       val negRate = cfg.negRate
-      val negRelRate = cfg.negRelRate
-      val nRelL = nRel.toLong
       val margin = cfg.margin
       val evolve = cfg.evolve
 
-      // --- per-KG TransE pass (side = 0 for A, 1 for B) ---
-      def kgPass(data: Dataset[(Long, Long, Long)], side: Int): Double = {
-        val bb = spark.sparkContext.broadcast((entA, entB, relA, relB))
-        val nEntL = (if (side == 0) nEntA else nEntB).toLong
-        val packed = if (side == 0) packedA else packedB
-        val rows = data.mapPartitions { it =>
-          val (ea, eb, ra, rb) = bb.value
-          val e = if (side == 0) ea else eb
-          val r = if (side == 0) ra else rb
-          val acc = new MicroGrad.Acc(dim)
-          val sorted = packed.value
-          it.foreach { case (h, t, rl) =>
-            // relation corruption: (h, t, r'), rejecting real triples
-            var jr = 0
-            while (jr < negRelRate && nRelL > 1) {
-              val rNeg = MicroGrad.corruptRel(h * 31 + t + side * 131,
-                att => 0x9e3779b9L + (ep.toLong * negRelRate + jr) * 31 + att,
-                h, t, rl, nRelL, nEntL, sorted)
-              if (rNeg >= 0)
-                MicroGrad.hinge(acc, margin, lay.off(side), lay.off(2 + side),
-                  h, rl, t, rNeg, t, e(h.toInt), r(rl.toInt), e(t.toInt),
-                  r(rNeg.toInt), e(t.toInt))
-              jr += 1
-            }
-            var j = 0
-            while (j < negRate) {
-              val d = fnvMix(h * 31 + t + side * 131, ep.toLong * negRate + j)
-              val tNeg = ((d % nEntL) + nEntL) % nEntL
-              if (tNeg != t)
-                MicroGrad.hinge(acc, margin, lay.off(side), lay.off(2 + side),
-                  h, rl, t, rl, tNeg, e(h.toInt), r(rl.toInt), e(t.toInt),
-                  r(rl.toInt), e(tNeg.toInt))
-              j += 1
-            }
-          }
-          acc.rows
+      val kgLoss = kgs.map { case (data, side, loss) =>
+        lay.pass(data, cfg.lr) { case (m, acc, (h, t, rl)) =>
+          loss(m, acc, ep, h * 31 + t + side * 131, h, t, rl)
         }
-        val l = lay.step(rows, cfg.lr)
-        bb.destroy()
-        l
-      }
-
-      val lossA = kgPass(dataA, 0)
-      val lossB = kgPass(dataB, 1)
+      }.sum
       entA.foreach(Embed.l2normalize)
       entB.foreach(Embed.l2normalize)
       // sphere-project relation rows under relation corruption (each
@@ -172,99 +140,92 @@ object MTransE {
       }
 
       // --- alignment (+ evolution) pass over (a, b, r) pairs ---
-      val bb = spark.sparkContext.broadcast((entA, entB, m, evolveVec))
       val nEntBL = nEntB.toLong
-      val rows = dataAl.mapPartitions { it =>
-        val (ea, eb, mm, ev) = bb.value
-        val acc = new MicroGrad.Acc(dim)
-        it.foreach { case (a, b, rl) =>
-          val va = ea(a.toInt)
-          val ma = matVec(mm, va)
-          val vec = if (rl >= 0 && evolve) ev(rl.toInt) else null
-          def score(bi: Long): Double = {
-            val vb = eb(bi.toInt)
-            var s = 0.0
-            var i = 0
-            while (i < dim) {
-              val z = ma(i).toDouble +
-                (if (vec != null) vec(i).toDouble else 0.0) - vb(i)
-              s += math.abs(z)
-              i += 1
-            }
-            s
-          }
-          var j = 0
-          var negSum = 0.0
-          val sigma = new Array[Double](dim) // sp - mean(sn)
-          val vb = eb(b.toInt)
+      val lossAl = lay.pass(dataAl, cfg.lr) { case (mats, acc, (a, b, rl)) =>
+        val ea = mats(0); val eb = mats(1); val mm = mats(4); val ev = mats(5)
+        val va = ea(a.toInt)
+        val ma = matVec(mm, va)
+        val vec = if (rl >= 0 && evolve) ev(rl.toInt) else null
+        def score(bi: Long): Double = {
+          val vb = eb(bi.toInt)
+          var s = 0.0
           var i = 0
           while (i < dim) {
-            sigma(i) = math.signum(ma(i).toDouble +
-              (if (vec != null) vec(i).toDouble else 0.0) - vb(i))
+            val z = ma(i).toDouble +
+              (if (vec != null) vec(i).toDouble else 0.0) - vb(i)
+            s += math.abs(z)
             i += 1
           }
-          val negIds = new Array[Long](negRate)
-          var nNeg = 0
-          while (j < negRate) {
-            val d = fnvMix(a * 53 + b, (ep.toLong + 104729) * negRate + j)
-            val bNeg = ((d % nEntBL) + nEntBL) % nEntBL
-            if (bNeg != b) { negIds(nNeg) = bNeg; nNeg += 1; negSum += score(bNeg) }
-            j += 1
-          }
-          if (nNeg > 0) {
-            val pos = score(b)
-            val negMean = negSum / nNeg
-            val l = pos - negMean + margin
-            if (l > 0) {
-              acc.addLoss(microQ(l))
-              val inv = 1.0 / nNeg
-              // effective sign vector: sigma_pos - mean_j sigma_negj —
-              // exact multiples of 1/nNeg (nNeg <= 2), so every
-              // contribution below micro-quantizes exactly
-              val eff = new Array[Double](dim)
-              i = 0
-              while (i < dim) { eff(i) = sigma(i); i += 1 }
-              j = 0
-              while (j < nNeg) {
-                val vn = eb(negIds(j).toInt)
-                val gn = acc.row(lay.off(1) + negIds(j))
-                i = 0
-                while (i < dim) {
-                  val sn = math.signum(ma(i).toDouble +
-                    (if (vec != null) vec(i).toDouble else 0.0) - vn(i)) * inv
-                  eff(i) -= sn
-                  gn(i) += microQ(sn) // corrupted partner pushed away
-                  i += 1
-                }
-                j += 1
-              }
-              val gb = acc.row(lay.off(1) + b)
-              val gaRow = acc.row(a)
-              val gv = if (vec != null) acc.row(lay.off(5) + rl) else null
+          s
+        }
+        var j = 0
+        var negSum = 0.0
+        val sigma = new Array[Double](dim) // sp - mean(sn)
+        val vb = eb(b.toInt)
+        var i = 0
+        while (i < dim) {
+          sigma(i) = math.signum(ma(i).toDouble +
+            (if (vec != null) vec(i).toDouble else 0.0) - vb(i))
+          i += 1
+        }
+        val negIds = new Array[Long](negRate)
+        var nNeg = 0
+        while (j < negRate) {
+          val d = fnvMix(a * 53 + b, (ep.toLong + 104729) * negRate + j)
+          val bNeg = ((d % nEntBL) + nEntBL) % nEntBL
+          if (bNeg != b) { negIds(nNeg) = bNeg; nNeg += 1; negSum += score(bNeg) }
+          j += 1
+        }
+        if (nNeg > 0) {
+          val pos = score(b)
+          val negMean = negSum / nNeg
+          val l = pos - negMean + margin
+          if (l > 0) {
+            acc.addLoss(microQ(l))
+            val inv = 1.0 / nNeg
+            // effective sign vector: sigma_pos - mean_j sigma_negj —
+            // exact multiples of 1/nNeg (nNeg <= 2), so every
+            // contribution below micro-quantizes exactly
+            val eff = new Array[Double](dim)
+            i = 0
+            while (i < dim) { eff(i) = sigma(i); i += 1 }
+            j = 0
+            while (j < nNeg) {
+              val vn = eb(negIds(j).toInt)
+              val gn = acc.row(lay.off(1) + negIds(j))
               i = 0
               while (i < dim) {
-                gb(i) -= microQ(sigma(i))
-                if (gv != null) gv(i) += microQ(eff(i))
-                // grad_a = M^T eff ; grad_M(row i) = eff_i * a
-                var s = 0.0
-                var k2 = 0
-                while (k2 < dim) { s += mm(k2)(i).toDouble * eff(k2); k2 += 1 }
-                gaRow(i) += microQ(s)
-                val gm = acc.row(lay.off(4) + i)
-                k2 = 0
-                while (k2 < dim) { gm(k2) += microQ(eff(i) * va(k2)); k2 += 1 }
+                val sn = math.signum(ma(i).toDouble +
+                  (if (vec != null) vec(i).toDouble else 0.0) - vn(i)) * inv
+                eff(i) -= sn
+                gn(i) += microQ(sn) // corrupted partner pushed away
                 i += 1
               }
+              j += 1
+            }
+            val gb = acc.row(lay.off(1) + b)
+            val gaRow = acc.row(a)
+            val gv = if (vec != null) acc.row(lay.off(5) + rl) else null
+            i = 0
+            while (i < dim) {
+              gb(i) -= microQ(sigma(i))
+              if (gv != null) gv(i) += microQ(eff(i))
+              // grad_a = M^T eff ; grad_M(row i) = eff_i * a
+              var s = 0.0
+              var k2 = 0
+              while (k2 < dim) { s += mm(k2)(i).toDouble * eff(k2); k2 += 1 }
+              gaRow(i) += microQ(s)
+              val gm = acc.row(lay.off(4) + i)
+              k2 = 0
+              while (k2 < dim) { gm(k2) += microQ(eff(i) * va(k2)); k2 += 1 }
+              i += 1
             }
           }
         }
-        acc.rows
       }
-      val lossAl = lay.step(rows, cfg.lr)
-      bb.destroy()
       entA.foreach(Embed.l2normalize)
       entB.foreach(Embed.l2normalize)
-      losses(epoch) = lossA + lossB + lossAl
+      losses(epoch) = kgLoss + lossAl
       epoch += 1
     }
     dataA.unpersist(); dataB.unpersist(); dataAl.unpersist()
@@ -277,6 +238,16 @@ object MTransE {
     * once, on the driver). */
   def pairScores(spark: SparkSession, sfDir: String,
                  cfg: Config = Config()): DataFrame = {
+    val model = fit(spark, sfDir, cfg)
+    GraphBuild.cosinePairs(spark, sfDir,
+      GraphBuild.recordIds(GraphBuild.ererEntities(spark, sfDir, "A")),
+      model.entA.map(matVec(model.m, _)),
+      GraphBuild.recordIds(GraphBuild.ererEntities(spark, sfDir, "B")), model.entB)
+  }
+
+  /** [[train]] on sfDir's two KGs: each side's triples, the record
+    * priors and, when `cfg.evolve`, the evolution value pairs. */
+  private[graft] def fit(spark: SparkSession, sfDir: String, cfg: Config): Model = {
     import spark.implicits._
     val entsA = GraphBuild.ererEntities(spark, sfDir, "A")
     val entsB = GraphBuild.ererEntities(spark, sfDir, "B")
@@ -304,10 +275,8 @@ object MTransE {
         .select(col("a"), col("b"), col("r"))
       priors.unionByName(evo)
     }
-    val model = train(spark, triplesA, triplesB, aligned, nA, nB,
+    train(spark, triplesA, triplesB, aligned, nA, nB,
       GraphBuild.Relations.size, cfg)
-    GraphBuild.cosinePairs(spark, sfDir,
-      recA, model.entA.map(matVec(model.m, _)), recB, model.entB)
   }
 
   /** Summary row (shared by mtranse_eval / etranse_eval): theta swept

@@ -1,7 +1,10 @@
 package graft.sim
 
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
+
+import graft.sim.NegativeSampler.fnvMix
 
 /**
  * The one exact gradient step of the distributed trainers ([[TransE]],
@@ -10,8 +13,12 @@ import org.apache.spark.sql.Dataset
  * triples into an [[Acc]], the sparse gradient rows REDUCE BY MODEL ROW
  * in one shuffle, and only the reduced (model-sized) rows reach the
  * driver, which applies one float update per touched row
- * ([[Layout.step]]). The plain TransE hinge all three train is here
- * ([[hinge]]); their other kernels stay in their trainers. This module
+ * ([[Layout.step]]). [[Layout.pass]] is that whole pass, written once;
+ * the trainers hand it a per-row kernel. The TransE-family loss of one
+ * triple all three train is here too: [[KgLoss]] draws the tail and
+ * relation corruptions and scores each with [[hinge]] (plain TransE)
+ * or [[hingeH]] (TransH's tail arm). KR-EAR's attribute encoder and
+ * MTransE's alignment pass keep their own kernels. This module
  * owns the replay discipline they share with the DuckDB oracles:
  *  - init is FNV-seeded per (matrix, row, dim) — [[TransE.initComponent]];
  *  - every per-triple gradient contribution is quantized to integer
@@ -74,23 +81,38 @@ object MicroGrad {
   }
 
   /**
-   * Seeded relation corruption (neg_rel_rate): the first of up to 16
-   * draws `c = fnvMix(x, y(att)) mod nRel` with `c != r` whose
-   * corrupted triple `(h, t, c)` is not in `index` ([[rejectionIndex]]),
-   * or -1 when all 16 are rejected.
+   * A trainer's relation-corruption stream (neg_rel_rate): for one
+   * triple (h, t, r) with instance seed `seed`, `negRelRate` draws per
+   * epoch. Draw `jr` of epoch `ep` is the first of up to 16 attempts
+   * `c = fnvMix(seed, salt((ep * negRelRate + jr) * 31 + att)) mod nRel`
+   * with `c != r` whose corrupted triple (h, t, c) is not in `index`
+   * ([[rejectionIndex]], read only when `negRelRate > 0`); a draw whose
+   * 16 attempts are all rejected yields nothing. The salt is the
+   * trainer's own: each stream is replayed by its oracle.
    */
-  def corruptRel(x: Long, y: Int => Long, h: Long, t: Long, r: Long,
-                 nRel: Long, nEnt: Long, index: Array[Long]): Long = {
-    var neg = -1L
-    var att = 0
-    while (neg < 0 && att < 16) {
-      val d = NegativeSampler.fnvMix(x, y(att))
-      val c = ((d % nRel) + nRel) % nRel
-      if (c != r && java.util.Arrays.binarySearch(
-          index, (h * nRel + c) * nEnt + t) < 0) neg = c
-      att += 1
+  final class RelCorruption(negRelRate: Int, nRel: Long, nEnt: Long,
+                            salt: Long => Long, index: Broadcast[Array[Long]])
+      extends Serializable {
+    /** `f` of each accepted corruption r', in draw order. */
+    def foreach(ep: Int, seed: Long, h: Long, t: Long, r: Long)
+               (f: Long => Unit): Unit = {
+      var jr = 0
+      while (jr < negRelRate && nRel > 1) {
+        val base = (ep.toLong * negRelRate + jr) * 31
+        val packed = index.value
+        var neg = -1L
+        var att = 0
+        while (neg < 0 && att < 16) {
+          val d = fnvMix(seed, salt(base + att))
+          val c = ((d % nRel) + nRel) % nRel
+          if (c != r && java.util.Arrays.binarySearch(
+              packed, (h * nRel + c) * nEnt + t) < 0) neg = c
+          att += 1
+        }
+        if (neg >= 0) f(neg)
+        jr += 1
+      }
     }
-    neg
   }
 
   /**
@@ -105,8 +127,7 @@ object MicroGrad {
    *  - relation (h, r', t): pass `tNeg = t`, `etn = et`; h gets
    *    `sp - sn`, t gets `sn - sp`, r gets `+sp`, r' gets `-sn`.
    * The id a corruption keeps names one gradient row, where the two
-   * integer terms merge. The negative draws (seeds, salts, tail ranges)
-   * stay with each trainer: each is its own oracle-replayed stream.
+   * integer terms merge. [[KgLoss]] draws the corruptions.
    */
   def hinge(acc: Acc, margin: Double, entOff: Long, relOff: Long,
             h: Long, r: Long, t: Long, rNeg: Long, tNeg: Long,
@@ -134,6 +155,125 @@ object MicroGrad {
         gr(i) += sp; grn(i) -= sn
         gt(i) -= sp; gtn(i) += sn
         i += 1
+      }
+    }
+  }
+
+  /**
+   * The TransH tail hinge of (h, r, t) against (h, r, t'): each side
+   * is `|v|_1` with `v = (h - t) - (w.(h - t)) w + d_r`, projected on
+   * the relation's hyperplane normal `w` (d_r is `er`). Loss and
+   * micro-quantized subgradients go to `acc` at rows `entOff + x`,
+   * `relOff + r` and `hypOff + r` (the normal's row).
+   */
+  def hingeH(acc: Acc, margin: Double, entOff: Long, relOff: Long,
+             hypOff: Long, h: Long, r: Long, t: Long, tNeg: Long,
+             eh: Array[Float], er: Array[Float], et: Array[Float],
+             en: Array[Float], w: Array[Float]): Unit = {
+    val dim = eh.length
+    var wduP = 0.0; var wduN = 0.0
+    var i = 0
+    while (i < dim) {
+      wduP += w(i).toDouble * (eh(i).toDouble - et(i))
+      wduN += w(i).toDouble * (eh(i).toDouble - en(i))
+      i += 1
+    }
+    var pos = 0.0; var neg = 0.0
+    i = 0
+    while (i < dim) {
+      pos += math.abs(eh(i).toDouble - et(i) - wduP * w(i) + er(i))
+      neg += math.abs(eh(i).toDouble - en(i) - wduN * w(i) + er(i))
+      i += 1
+    }
+    val l = pos - neg + margin
+    if (l > 0) {
+      acc.addLoss(microQ(l))
+      var swP = 0.0; var swN = 0.0
+      i = 0
+      while (i < dim) {
+        swP += math.signum(
+          eh(i).toDouble - et(i) - wduP * w(i) + er(i)) * w(i)
+        swN += math.signum(
+          eh(i).toDouble - en(i) - wduN * w(i) + er(i)) * w(i)
+        i += 1
+      }
+      val gh = acc.row(entOff + h); val gt = acc.row(entOff + t)
+      val gn = acc.row(entOff + tNeg)
+      val gr = acc.row(relOff + r)
+      val gw = acc.row(hypOff + r)
+      i = 0
+      while (i < dim) {
+        val sp = math.signum(
+          eh(i).toDouble - et(i) - wduP * w(i) + er(i))
+        val sn = math.signum(
+          eh(i).toDouble - en(i) - wduN * w(i) + er(i))
+        val projP = sp - swP * w(i)
+        val projN = sn - swN * w(i)
+        gh(i) += microQ(projP - projN)
+        gt(i) -= microQ(projP)
+        gn(i) += microQ(projN)
+        gr(i) += microQ(sp - sn)
+        gw(i) += microQ(-(swP * (eh(i).toDouble - et(i)) + wduP * sp)
+          + (swN * (eh(i).toDouble - en(i)) + wduN * sn))
+        i += 1
+      }
+    }
+  }
+
+  /**
+   * The TransE-family margin loss of one triple (h, t, r), shared by
+   * [[TransE]], KR-EAR's relational encoder and MTransE's per-KG
+   * passes: `negRate` tail corruptions, each scored by [[hinge]] (or by
+   * [[hingeH]] when `hyper` names a hyperplane matrix), then
+   * the relation corruptions of `rels` ([[RelCorruption]]), each scored by
+   * [[hinge]] (a TransH trainer has none: [[TransE.train]] refuses
+   * `negRelRate > 0` with `transH`). Within a triple the order of the
+   * hinges is free: [[Acc]] sums exact integers.
+   *
+   * The draw streams are the trainer's, each replayed by its oracle:
+   * the per-triple `seed` (passed to [[apply]]) keys the tail draws
+   * `fnvMix(seed, ep * negRate + j)` and the relation draws of `rels`;
+   * `tailRanges` restricts a relation's tails to its own id range
+   * (`cnt <= 1` draws none).
+   *
+   * @param ent, rel, hyper [[Layout]] slots of the entity, relation
+   *        and (TransH only) hyperplane matrices
+   */
+  final class KgLoss(lay: Layout, ent: Int, rel: Int, hyper: Option[Int],
+                     margin: Double, negRate: Int, nEnt: Long,
+                     rels: RelCorruption,
+                     tailRanges: Option[Array[(Long, Long)]] = None)
+      extends Serializable {
+    def apply(mats: Array[Array[Array[Float]]], acc: Acc, ep: Int,
+              seed: Long, h: Long, t: Long, r: Long): Unit = {
+      val e = mats(ent); val rm = mats(rel)
+      val eh = e(h.toInt); val et = e(t.toInt); val er = rm(r.toInt)
+      val entOff = lay.off(ent); val relOff = lay.off(rel)
+      var j = 0
+      while (j < negRate) {
+        val draw = fnvMix(seed, ep.toLong * negRate + j)
+        val tNeg = tailRanges match {
+          case Some(rs) =>
+            val (base, cnt) = rs(r.toInt)
+            if (cnt <= 1L) -1L else base + (((draw % cnt) + cnt) % cnt)
+          case None => ((draw % nEnt) + nEnt) % nEnt
+        }
+        if (tNeg >= 0 && tNeg != t) {
+          val en = e(tNeg.toInt)
+          hyper match {
+            case None =>
+              hinge(acc, margin, entOff, relOff, h, r, t, r, tNeg,
+                eh, er, et, er, en)
+            case Some(w) =>
+              hingeH(acc, margin, entOff, relOff, lay.off(w), h, r, t, tNeg,
+                eh, er, et, en, mats(w)(r.toInt))
+          }
+        }
+        j += 1
+      }
+      rels.foreach(ep, seed, h, t, r) { rNeg =>
+        hinge(acc, margin, entOff, relOff, h, r, t, rNeg, t,
+          eh, er, et, rm(rNeg.toInt), et)
       }
     }
   }
@@ -171,13 +311,36 @@ object MicroGrad {
    * Global gradient row ids over a trainer's matrices, laid end to end
    * in argument order: row `i` of matrix `k` is `off(k) + i`. Kernels
    * capture the layout for [[off]]; only the offsets ship, the
-   * matrices stay on the driver for [[step]].
+   * matrices stay on the driver for [[step]] and reach the tasks as
+   * [[pass]]'s broadcast.
    */
   final class Layout(@transient private val mats: Array[Array[Float]]*)
       extends Serializable {
     private val offs: Array[Long] = mats.scanLeft(0L)(_ + _.length).toArray
+    private val dim: Int = mats.find(_.nonEmpty).fold(0)(_.head.length)
 
     def off(k: Int): Long = offs(k)
+
+    /**
+     * One training pass, the single broadcast-model /
+     * reduce-sparse-gradient iteration: BROADCASTS the layout's
+     * matrices (slot `k` is `mats(k)`), runs `kernel(mats, acc, row)`
+     * over every row of `data`, one fresh [[Acc]] per partition, then
+     * [[step]]s at `lr`, destroys the broadcast and returns the pass's
+     * loss.
+     */
+    def pass[T](data: Dataset[T], lr: Double)
+               (kernel: (Array[Array[Array[Float]]], Acc, T) => Unit): Double = {
+      val b = data.sparkSession.sparkContext.broadcast(mats.toArray)
+      val width = dim
+      try step(data.rdd.mapPartitions { it =>
+          val m = b.value
+          val acc = new Acc(width)
+          it.foreach(kernel(m, acc, _))
+          acc.rows
+        }, lr)
+      finally b.destroy()
+    }
 
     /**
      * ONE shuffle: exact element-wise long sums per model row — RDD
@@ -187,8 +350,7 @@ object MicroGrad {
      * partitioning. Applies `x = x - lr * g` to each touched row
      * exactly once, float-rounded, and returns the pass's loss.
      */
-    def step(rows: Dataset[(Long, Array[Long])], lr: Double): Double = {
-      val grads = rows.rdd
+    private def step(grads: RDD[(Long, Array[Long])], lr: Double): Double = {
       val reduced = grads.reduceByKey({ (a, b) =>
         val s = new Array[Long](a.length)
         var i = 0

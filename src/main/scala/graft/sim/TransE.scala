@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.pipe.Splits
-import graft.sim.MicroGrad.{Micro, microQ}
 import graft.sim.NegativeSampler.fnvMix
 
 /**
@@ -35,7 +34,7 @@ import graft.sim.NegativeSampler.fnvMix
  *    accumulation order (the SQL unrolls the same literal chains);
  *  - for plain TransE ([[MicroGrad.hinge]]) the gradient contributions
  *    are signum sums, already integers; the floor(x*1e6+0.5) quantizer
- *    only matters for TransH;
+ *    only matters for TransH ([[MicroGrad.hingeH]]);
  *  - model values are also FLOAT-rounded after each normalize, so both
  *    engines walk the identical float lattice.
  *
@@ -58,6 +57,9 @@ object TransE {
    *        in the graph (rejection against a broadcast packed-triple
    *        index) — the reference's `neg_rel_rate`
    *        (/root/reference/common.py:117-127).
+   *        Plain TransE only: [[train]] refuses `transH` with
+   *        `negRelRate > 0`, since TransH trains (and its oracle
+   *        replays) tail corruptions only.
    */
   // epochs = 6: the graph-only TransE/TransH tiers plateau inside the
   // reference's published F1 band (0.21-0.58, BASELINE.md §2) well
@@ -118,6 +120,9 @@ object TransE {
    */
   def train(spark: SparkSession, triples: DataFrame, nEnt: Int, nRel: Int,
             cfg: Config = Config()): Model = {
+    require(!(cfg.transH && cfg.negRelRate > 0),
+      "TransE.train: TransH trains on tail corruptions only; " +
+        s"negRelRate must be 0 with transH (got ${cfg.negRelRate})")
     import spark.implicits._
     val ent = MicroGrad.init(0, nEnt, cfg.dim, cfg.seed)
     ent.foreach(Embed.l2normalize)
@@ -134,168 +139,18 @@ object TransE {
       .as[(Long, Long, Long, Long)])
     val packedB = MicroGrad.rejectionIndex(data, nRel.toLong, nEnt.toLong,
       cfg.negRelRate > 0)
+    val loss = new MicroGrad.KgLoss(lay, ent = 0, rel = 1,
+      hyper = if (cfg.transH) Some(2) else None, cfg.margin, cfg.negRate,
+      nEnt.toLong, new MicroGrad.RelCorruption(cfg.negRelRate, nRel.toLong,
+        nEnt.toLong, RelCorruptSalt ^ _, packedB), cfg.tailRanges)
     val losses = new Array[Double](cfg.epochs)
 
     var epoch = 0
     while (epoch < cfg.epochs) {
-      val entB = spark.sparkContext.broadcast((ent, rel, wRel))
       val ep = epoch
-      val dim = cfg.dim
-      val margin = cfg.margin
-      val negRate = cfg.negRate
-      val negRelRate = cfg.negRelRate
-      val transH = cfg.transH
-      val tailRanges = cfg.tailRanges
-      val nEntL = nEnt.toLong
-      val nRelL = nRel.toLong
-      val grads = data.mapPartitions { it =>
-        val (e, r, wv) = entB.value
-        val sortedPacked = packedB.value
-        val acc = new MicroGrad.Acc(dim)
-        it.foreach { case (h, t, rl, idx) =>
-          var j = 0
-          while (j < negRate) {
-            val draw = fnvMix(idx, ep.toLong * negRate + j)
-            val tNeg = tailRanges match {
-              case Some(rs) =>
-                val (base, cnt) = rs(rl.toInt)
-                if (cnt <= 1L) -1L else base + (((draw % cnt) + cnt) % cnt)
-              case None => ((draw % nEntL) + nEntL) % nEntL
-            }
-            if (tNeg >= 0 && tNeg != t) {
-              val eh = e(h.toInt); val et = e(t.toInt)
-              val en = e(tNeg.toInt); val er = r(rl.toInt)
-              if (!transH)
-                MicroGrad.hinge(acc, margin, lay.off(0), lay.off(1),
-                  h, rl, t, rl, tNeg, eh, er, et, er, en)
-              else {
-                // TransH: v = (h - t) - (w.(h - t)) w + d_r, L1 margin
-                val w = wv(rl.toInt)
-                var wduP = 0.0; var wduN = 0.0
-                var i = 0
-                while (i < dim) {
-                  wduP += w(i).toDouble * (eh(i).toDouble - et(i))
-                  wduN += w(i).toDouble * (eh(i).toDouble - en(i))
-                  i += 1
-                }
-                var pos = 0.0; var neg = 0.0
-                i = 0
-                while (i < dim) {
-                  pos += math.abs(eh(i).toDouble - et(i) - wduP * w(i) + er(i))
-                  neg += math.abs(eh(i).toDouble - en(i) - wduN * w(i) + er(i))
-                  i += 1
-                }
-                val l = pos - neg + margin
-                if (l > 0) {
-                  acc.addLoss(microQ(l))
-                  var swP = 0.0; var swN = 0.0
-                  i = 0
-                  while (i < dim) {
-                    swP += math.signum(
-                      eh(i).toDouble - et(i) - wduP * w(i) + er(i)) * w(i)
-                    swN += math.signum(
-                      eh(i).toDouble - en(i) - wduN * w(i) + er(i)) * w(i)
-                    i += 1
-                  }
-                  val gh = acc.row(h); val gt = acc.row(t)
-                  val gn = acc.row(tNeg)
-                  val gr = acc.row(lay.off(1) + rl)
-                  val gw = acc.row(lay.off(2) + rl)
-                  i = 0
-                  while (i < dim) {
-                    val sp = math.signum(
-                      eh(i).toDouble - et(i) - wduP * w(i) + er(i))
-                    val sn = math.signum(
-                      eh(i).toDouble - en(i) - wduN * w(i) + er(i))
-                    val projP = sp - swP * w(i)
-                    val projN = sn - swN * w(i)
-                    gh(i) += microQ(projP - projN)
-                    gt(i) -= microQ(projP)
-                    gn(i) += microQ(projN)
-                    gr(i) += microQ(sp - sn)
-                    gw(i) += microQ(-(swP * (eh(i).toDouble - et(i)) + wduP * sp)
-                      + (swN * (eh(i).toDouble - en(i)) + wduN * sn))
-                    i += 1
-                  }
-                }
-              }
-            }
-            j += 1
-          }
-          // relation corruption (neg_rel_rate): (h, t, r') negatives
-          // with r' != r and (h, t, r') not a real triple (seeded
-          // rejection against the broadcast packed index)
-          var jr = 0
-          while (jr < negRelRate && nRelL > 1) {
-            val rNeg = MicroGrad.corruptRel(idx,
-              att => RelCorruptSalt ^ (ep.toLong * negRelRate + jr) * 31 + att,
-              h, t, rl, nRelL, nEntL, sortedPacked)
-            if (rNeg >= 0) {
-              val eh = e(h.toInt); val et = e(t.toInt)
-              val er = r(rl.toInt); val ern = r(rNeg.toInt)
-              if (!transH)
-                MicroGrad.hinge(acc, margin, lay.off(0), lay.off(1),
-                  h, rl, t, rNeg, t, eh, er, et, ern, et)
-              else {
-                // TransH with relation-corrupted negative: pos uses
-                // (w_r, d_r), neg uses (w_r', d_r') on the SAME (h, t)
-                val w = wv(rl.toInt); val w2 = wv(rNeg.toInt)
-                var wduP = 0.0; var wduN = 0.0
-                var i = 0
-                while (i < dim) {
-                  wduP += w(i).toDouble * (eh(i).toDouble - et(i))
-                  wduN += w2(i).toDouble * (eh(i).toDouble - et(i))
-                  i += 1
-                }
-                var pos = 0.0; var neg = 0.0
-                i = 0
-                while (i < dim) {
-                  pos += math.abs(eh(i).toDouble - et(i) - wduP * w(i) + er(i))
-                  neg += math.abs(eh(i).toDouble - et(i) - wduN * w2(i) + ern(i))
-                  i += 1
-                }
-                val l = pos - neg + margin
-                if (l > 0) {
-                  acc.addLoss(microQ(l))
-                  var swP = 0.0; var swN = 0.0
-                  i = 0
-                  while (i < dim) {
-                    swP += math.signum(
-                      eh(i).toDouble - et(i) - wduP * w(i) + er(i)) * w(i)
-                    swN += math.signum(
-                      eh(i).toDouble - et(i) - wduN * w2(i) + ern(i)) * w2(i)
-                    i += 1
-                  }
-                  val gh = acc.row(h); val gt = acc.row(t)
-                  val gr = acc.row(lay.off(1) + rl)
-                  val grn = acc.row(lay.off(1) + rNeg)
-                  val gw = acc.row(lay.off(2) + rl)
-                  val gw2 = acc.row(lay.off(2) + rNeg)
-                  i = 0
-                  while (i < dim) {
-                    val sp = math.signum(
-                      eh(i).toDouble - et(i) - wduP * w(i) + er(i))
-                    val sn = math.signum(
-                      eh(i).toDouble - et(i) - wduN * w2(i) + ern(i))
-                    val projP = sp - swP * w(i)
-                    val projN = sn - swN * w2(i)
-                    gh(i) += microQ(projP - projN)
-                    gt(i) -= microQ(projP - projN)
-                    gr(i) += (sp * Micro).toLong
-                    grn(i) -= (sn * Micro).toLong
-                    gw(i) += microQ(-(swP * (eh(i).toDouble - et(i)) + wduP * sp))
-                    gw2(i) += microQ(swN * (eh(i).toDouble - et(i)) + wduN * sn)
-                    i += 1
-                  }
-                }
-              }
-            }
-            jr += 1
-          }
-        }
-        acc.rows
+      losses(epoch) = lay.pass(data, cfg.lr) { case (m, acc, (h, t, r, idx)) =>
+        loss(m, acc, ep, idx, h, t, r)
       }
-      losses(epoch) = lay.step(grads, cfg.lr)
       ent.foreach(Embed.l2normalize)
       // forced under relation corruption: every relation row receives
       // a hinge term from EVERY triple of that relation per epoch
@@ -305,7 +160,6 @@ object TransE {
       if (cfg.normalizeRel || cfg.negRelRate > 0)
         rel.foreach(Embed.l2normalize)
       if (cfg.transH) wRel.foreach(Embed.l2normalize)
-      entB.destroy()
       epoch += 1
     }
     data.unpersist()

@@ -41,6 +41,22 @@ class KrEarSpec extends AnyFunSuite {
     assert(row.getAs[Double]("mrr") > 0.1)
   }
 
+  test("eagerDenseIds numbers keys like row_number, running its jobs at the call") {
+    import org.apache.spark.JobCount
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val keys = graft.graph.GraphBuild.erTriples(spark, sf)
+      .select(concat(lit("k"), col("t")).as("eid")).distinct()
+    val (ids, jobs) = JobCount(spark.sparkContext)(
+      graft.graph.GraphBuild.eagerDenseIds(keys, "eid", "kid"))
+    assert(jobs > 0, "the call is eager: it samples the sort and counts partitions")
+    assert(ids.schema("kid").dataType.typeName == "long" && !ids.schema("kid").nullable)
+    val ref = keys.select(col("eid"),
+      (row_number().over(Window.orderBy("eid")) - 1).cast("long").as("kid"))
+    assert(ids.count() == ref.count())
+    assert(ids.exceptAll(ref).isEmpty && ref.exceptAll(ids).isEmpty)
+  }
+
   test("KR-EAR neg_rel_rate: rel+attr corruption adds bounded hinge terms") {
     val (entIds, valIds, relT, attrT) = KrEar.prepare(spark, sf)
     val nEnt = entIds.count().toInt

@@ -47,6 +47,20 @@ class MTransESpec extends AnyFunSuite {
     assert(evoRow.getAs[Long]("evolve") == 1L)
   }
 
+  test("MTransE's trained floats and losses are pinned") {
+    def pin(cfg: MTransE.Config): String = {
+      val m = MTransE.fit(spark, sf, cfg)
+      TrainPins.sha(Seq(m.entA, m.entB, m.relA, m.relB, m.m, m.evolveVec),
+        Seq(m.lossByEpoch))
+    }
+    assert(pin(MTransE.Config()) ==
+      "ffdbaa7aa588de42f8773adee51f315cc6bea7e8ad218aa476e8fa7b42a00121")
+    assert(pin(MTransE.Config(evolve = true)) ==
+      "b6a126e1d86f95e4218daf57e2d72a73569b702cc6518a625024ec10cf0b33cb")
+    assert(pin(MTransE.Config(negRelRate = 1)) ==
+      "e2f478f288a80f092af76b88be93988e7e4005d8d1cbe01eee2c9b9056aab31c")
+  }
+
   test("MTransE neg_rel_rate: per-KG relation corruption, bounded and additive") {
     val nrr = MTransE.eval(spark, sf,
       MTransE.Config(epochs = 4, negRelRate = 1)).head()

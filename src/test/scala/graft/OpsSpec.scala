@@ -146,7 +146,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("ECM separates an obviously separable pattern space") {
     val feats = ml.Classifiers.withFeatures(EntryStages.scoredp(spark, sf))
-    val model = ml.Classifiers.fitEcm(feats)
+    val model = ml.Classifiers.fitEcm(ml.Classifiers.patternHist(feats))
     // all-ones pattern (exact dup) must classify as match,
     // all-zeros as non-match
     assert(model.posterior(31) > 0.5)

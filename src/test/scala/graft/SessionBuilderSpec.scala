@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[Sessions.local]]. One warm-up, [[Pipeline.warm]], so no builder
   * runs hidden work. One gradient step: the distributed trainers reduce,
   * quantize and take the plain TransE hinge through
-  * [[graft.sim.MicroGrad]] only. One RLTransE value table with its
+  * [[graft.sim.MicroGrad]] only, and TransE, KR-EAR and MTransE run
+  * their passes and triple losses through its `Layout.pass` and
+  * `KgLoss`. One RLTransE value table with its
   * offset term in `RLTransE.Model`, and one balanced-GD fit site in
   * `Weights`. One commit-record writer under `ckpt/`: [[graft.ckpt.Checkpoint]].
   * One maker of spec temp directories: [[TempRoot]], which deletes them.
@@ -61,6 +63,15 @@ class SessionBuilderSpec extends AnyFunSuite {
     assert(found.contains(home))
     assert((found - home).isEmpty,
       s"call graft.sim.MicroGrad.hinge instead: ${(found - home).toSeq.sorted}")
+  }
+
+  test("TransE, KrEar and MTransE train through MicroGrad's pass and KG loss") {
+    val trainers = Set("TransE", "KrEar", "MTransE").map(t => s"graft/sim/$t.scala")
+    val found = scan(("""sparkContext\s*\.\s*broadcast\(|new\s+MicroGrad\.Acc\b|""" +
+      """MicroGrad\.corruptRel\(|\blay\.step\(""").r) intersect trainers
+    assert(found.isEmpty,
+      s"run the pass through MicroGrad.Layout.pass and the triple loss through " +
+        s"MicroGrad.KgLoss instead: ${found.toSeq.sorted}")
   }
 
   test("the RLTransE value table, its offset term and the balanced-GD fit have one site each") {

@@ -43,6 +43,17 @@ class TransESpec extends AnyFunSuite {
       "c54936b812fa140f5e16eaae618f2de6723751ab6aae6433b519edb447126f1c")
   }
 
+  test("TransE.train refuses TransH with relation corruption") {
+    val nEnt = graph.GraphBuild.erEntities(spark, sf).count().toInt
+    val triples = graph.GraphBuild.erTriples(spark, sf)
+      .withColumn("idx", col("h") * 2654435761L + col("t"))
+    val ex = intercept[IllegalArgumentException] {
+      TransE.train(spark, triples, nEnt, graph.GraphBuild.Relations.size,
+        TransE.Config(epochs = 1, transH = true, negRelRate = 1))
+    }
+    assert(ex.getMessage.contains("negRelRate must be 0 with transH"), ex.getMessage)
+  }
+
   test("TransE linkage eval produces reference-tier quality") {
     val row = TransE.eval(spark, sf).head()
     // bit-exact pin of theta, f1, precision, recall, mrr (TrainPins)
